@@ -42,6 +42,15 @@ import org.apache.spark.util.SerializableConfiguration
   * Output schema: `file string, offset long, record string`; `offset` is the
   * byte offset of the record's first line in the (decompressed) stream.
   * Column pruning is pushed into the scan.
+  *
+  * Head matching ([[HeadMatcher]]): a pattern in the byte-level subset
+  * (ASCII literals and escaped metacharacters, `\d`, `\s`, positive ASCII
+  * bracket classes, `?`/`{n}`/`{n,m}` on one atom, a leading `^`, plain,
+  * named and non-capturing groups, alternation, a trailing `.*` after no
+  * top-level `|`) compiles to a DFA over each line's UTF-8 bytes; any other
+  * pattern decodes the line and runs `java.util.regex`. Both give
+  * `Pattern.matches()` results on the decoded line. No option selects the
+  * matcher: the pattern does.
   */
 final class LogfileDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "logfile"

@@ -1,7 +1,5 @@
 package graft.sources.logfile
 
-import java.util.regex.Pattern
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.Text
@@ -18,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Invariants (re-expressed from `LogfileRecordReader.java:200-319`, see
   * SURVEY.md §1.4):
   *   1. a line is a record head iff the regex FULLY matches it (`matches()`,
-  *      not `find()` — reference `:272-274`);
+  *      not `find()` — reference `:272-274`), decided by [[HeadMatcher]]
+  *      on the line's bytes;
   *   2. a record is owned by the split in which its head line starts
   *      (`[start, end)`): a reader with `start > 0` seeks to `start-1`,
   *      discards the (possibly partial) line it lands in, then discards
@@ -41,7 +40,7 @@ final class LogfilePartitionReader(
     countOnly: Boolean = false)
   extends PartitionReader[InternalRow] {
 
-  private val headMatcher = Pattern.compile(split.pattern).matcher("")
+  private val head = HeadMatcher.compile(split.pattern)
   private val hadoopPath = new Path(split.path)
 
   private var decompressor: Decompressor = _
@@ -82,9 +81,12 @@ final class LogfilePartitionReader(
   // reads too (must precede the `locally` block below in declaration order)
   private val basePos: Long = pos
 
-  private val line = new Text
+  private var line = new Text
   private var finished = false
-  private var pendingHead: Array[Byte] = _ // head line's UTF-8 bytes
+  // the next record's head line: `line` and `pendingHead` swap buffers when
+  // a head is held, so holding one copies and allocates nothing
+  private var pendingHead = new Text
+  private var hasPendingHead = false
   private var pendingHeadPos: Long = 0L
 
   private var recordsAssembled = 0L
@@ -94,30 +96,39 @@ final class LogfilePartitionReader(
   // (they belong to the previous split; for start==0, leading junk before the
   // file's first head is dropped — reference quirk, SURVEY.md §1.4 notes).
   locally {
-    if (split.start > 0) {
-      val n = reader.readLine(line)
-      pos += n
-      if (n == 0) finished = true
-    }
+    if (split.start > 0) readLine()
     advanceToNextHead()
   }
 
-  /** Scan forward to the next head line starting before `end`; sets
-    * `pendingHead`/`pendingHeadPos` or `finished`.
+  /** Reads the next line into `line`; false, and `finished`, at EOF. */
+  private def readLine(): Boolean = {
+    val n = reader.readLine(line)
+    pos += n
+    if (n == 0) finished = true
+    n > 0
+  }
+
+  /** The head test, the only one in the reader: does `line` fully match? */
+  private def lineIsHead: Boolean = head.matches(line.getBytes, line.getLength)
+
+  /** Holds `line`, starting at `start`, as the next record's head. */
+  private def holdHead(start: Long): Unit = {
+    val t = pendingHead
+    pendingHead = line
+    line = t
+    hasPendingHead = true
+    pendingHeadPos = start
+  }
+
+  /** Scan forward to the next head line starting before `end`; holds it or
+    * sets `finished`.
     */
   private def advanceToNextHead(): Unit = {
-    pendingHead = null
-    while (pendingHead == null && !finished) {
-      if (pos >= end) { finished = true; return } // next head is the next split's
-      val lineStart = pos
-      val n = reader.readLine(line)
-      if (n == 0) finished = true
+    while (!hasPendingHead && !finished) {
+      if (pos >= end) finished = true // next head is the next split's
       else {
-        pos += n
-        if (headMatcher.reset(line.toString).matches()) {
-          pendingHead = java.util.Arrays.copyOf(line.getBytes, line.getLength)
-          pendingHeadPos = lineStart
-        }
+        val lineStart = pos
+        if (readLine() && lineIsHead) holdHead(lineStart)
       }
     }
   }
@@ -128,8 +139,7 @@ final class LogfilePartitionReader(
   // --- record assembly buffer: raw UTF-8 bytes appended straight from the
   // line reader's Text, so the record column never round-trips through
   // java.lang.String (decode + char copies + re-encode — the per-record CPU
-  // tax of the scan at 100 TB). Only the head-match still decodes each line
-  // (the regex needs chars). Reused across records; grows geometrically.
+  // tax of the scan at 100 TB). Reused across records; grows geometrically.
   private var recBuf = new Array[Byte](1 << 16)
   private var recLen = 0
   private def appendLine(bytes: Array[Byte], len: Int, newline: Boolean): Unit = {
@@ -148,31 +158,25 @@ final class LogfilePartitionReader(
     // pushed-down (partial) limit: stop assembling -- and stop READING the
     // underlying stream -- once this partition has emitted `limit` records
     if (limit.exists(recordsAssembled >= _)) return false
-    if (pendingHead == null) return false
+    if (!hasPendingHead) return false
     curOffset = pendingHeadPos
     recLen = 0
-    if (!countOnly) appendLine(pendingHead, pendingHead.length, newline = false)
-    pendingHead = null
+    if (!countOnly) appendLine(pendingHead.getBytes, pendingHead.getLength, newline = false)
+    hasPendingHead = false
     var assembling = true
     var spanned = false
     while (assembling) {
       val lineStart = pos
-      val n = reader.readLine(line)
-      if (n == 0) { finished = true; assembling = false }
-      else {
-        pos += n
-        if (headMatcher.reset(line.toString).matches()) {
-          if (lineStart < end) { // next record is ours
-            pendingHead = java.util.Arrays.copyOf(line.getBytes, line.getLength)
-            pendingHeadPos = lineStart
-          } else finished = true // head at/past end → next split emits it
-          assembling = false
-        } else {
-          // continuation at/past split end ⇒ this record spans the boundary
-          // (invariant 3); MaxValue end (whole-file codec split) never spans
-          if (lineStart >= end) spanned = true
-          if (!countOnly) appendLine(line.getBytes, line.getLength, newline = true)
-        }
+      if (!readLine()) assembling = false
+      else if (lineIsHead) {
+        if (lineStart < end) holdHead(lineStart) // next record is ours
+        else finished = true // head at/past end → next split emits it
+        assembling = false
+      } else {
+        // continuation at/past split end ⇒ this record spans the boundary
+        // (invariant 3); MaxValue end (whole-file codec split) never spans
+        if (lineStart >= end) spanned = true
+        if (!countOnly) appendLine(line.getBytes, line.getLength, newline = true)
       }
     }
     recordsAssembled += 1

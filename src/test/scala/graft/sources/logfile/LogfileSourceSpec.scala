@@ -270,6 +270,60 @@ class LogfileSourceSpec extends SparkTestBase {
       "empty lines are continuations of the open record")
   }
 
+  test("hostile lines: invalid UTF-8, U+0085, U+2028/9 and lone CR decide heads as Pattern.matches") {
+    val dir = tmpDir("logfile-hostile")
+    def utf(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+    val bad = Array(0xC3, 0x28, 0xFF, 0xE2, 0x80).map(_.toByte)
+    val content = Array.concat(
+      utf("junk before the first head \u2028\n"),
+      utf("2017-01-01 00:00:00,001 INFO plain\n"),
+      utf("2017-01-01 00:00:00,002 INFO invalid "), bad, utf("\n"),
+      utf("continuation "), bad, utf("\r"),
+      utf("2017-01-01 00:00:00,003 INFO next line \u0085 inside\n"),
+      utf("2017-01-01 00:00:00,004 INFO line separator \u2028 inside\r"),
+      utf("2017-01-01 00:00:00,005 INFO paragraph separator \u2029 inside\r\n"),
+      bad, utf("2017-01-01 00:00:00,006 INFO after invalid bytes\n"),
+      utf("2017-01-01 00:00:00,007 INFO \u00e9\u65e5\ud83d\ude00\r"),
+      utf("\u0085\r\r\n"),
+      utf("2017-01-01 00:00:00,008 INFO cut by a lone\rCR\n"),
+      utf("2017-01-01 00:00:00,009 INFO last"), bad)
+    Files.write(new File(dir, "h.log").toPath, content)
+
+    // lines as Hadoop's LineReader cuts them: at \r\n, \r or \n
+    val lines = {
+      val out = Seq.newBuilder[(Long, Array[Byte])]
+      var from = 0
+      var i = 0
+      while (i < content.length) {
+        val b = content(i)
+        if (b == '\n' || b == '\r') {
+          out += from.toLong -> content.slice(from, i)
+          if (b == '\r' && i + 1 < content.length && content(i + 1) == '\n') i += 1
+          from = i + 1
+        }
+        i += 1
+      }
+      if (from < content.length) out += from.toLong -> content.drop(from)
+      out.result()
+    }
+    // one byte-level pattern and one that takes the regex fallback ($)
+    for (pattern <- Seq(TsPat, TsPat + "$")) {
+      val regex = java.util.regex.Pattern.compile(pattern)
+      val expected = lines.foldLeft(Vector.empty[(Long, Seq[Byte])]) { case (recs, (off, l)) =>
+        if (regex.matcher(new org.apache.hadoop.io.Text(l).toString).matches()) recs :+ (off -> l.toSeq)
+        else if (recs.isEmpty) recs
+        else recs.init :+ (recs.last._1 -> (recs.last._2 ++ Seq('\n'.toByte) ++ l))
+      }
+      assert(expected.length == 5, s"$pattern: ${expected.map(_._1)}")
+      for (vec <- Seq(true, false); split <- Seq(0L, 37L)) {
+        val got = read(dir, pattern, maxSplit = split, extra = Map("vectorized" -> vec.toString))
+          .select(col("offset"), col("record").cast("binary")).collect()
+          .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).sortBy(_._1).toSeq
+        assert(got == expected, s"pattern=$pattern vectorized=$vec split=$split")
+      }
+    }
+  }
+
   test("zero-byte files (plain AND gz) are skipped at planning, not EOF-crashed") {
     val dir = tmpDir("logfile-empty-gz")
     write(dir, "real.log", "2017-01-01 00:00:00,001 INFO x\n")
