@@ -64,9 +64,6 @@ final class LogfileColumnarReader(
 
   override def get(): ColumnarBatch = batch
 
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    inner.currentMetricsValues()
-
   override def close(): Unit = {
     batch.close() // closes the vectors
     inner.close()

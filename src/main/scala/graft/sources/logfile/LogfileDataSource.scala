@@ -5,15 +5,20 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, GlobPattern, Path}
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, GlobPattern, Path}
 import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.graftbridge.GraftConfBridge
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.util.SerializableConfiguration
 
 /** `spark.read.format("logfile")` — a DataSource V2 scan over (possibly
@@ -25,16 +30,27 @@ import org.apache.spark.util.SerializableConfiguration
   * a line is a record head iff the regex fully matches it; a record belongs
   * to the split where its head line starts; readers realign at split start
   * and read past split end for boundary-spanning records; non-splittable
-  * codecs (gzip) get exactly one whole-file partition; splittable compressed
+  * codecs (gzip) get exactly one whole-file split; splittable compressed
   * input is rejected.
+  *
+  * Tasks: a scan task reads one or more consecutive splits, in order, each
+  * through its own [[LogfilePartitionReader]] ([[LogfileChainReader]]).
+  * The batch planner packs splits into tasks by Spark's `FilePartition`
+  * rule and settings (`spark.sql.files.maxPartitionBytes`,
+  * `spark.sql.files.openCostInBytes`, `spark.sql.files.minPartitionNum`),
+  * so a directory of small rotated files costs a few core-sized tasks, not
+  * one task per file. Splits of `spark.sql.files.maxPartitionBytes` or more
+  * stay one per task. The Hadoop conf ships to executors once per scan, as
+  * a broadcast.
   *
   * Options:
   *   - `pattern` (required): default first-line regex.
   *   - `pattern.<glob>`: per-file override, glob matched against the file
   *     name and full path (reference's per-path dispatch,
   *     `LogfileInputFormat.java:85-101`). Keys are case-insensitive.
-  *   - `maxsplitbytes`: target split size for uncompressed files (default
-  *     `spark.sql.files.maxPartitionBytes`).
+  *   - `maxsplitbytes`: split size for uncompressed files (default
+  *     `spark.sql.files.maxPartitionBytes`). The split, not the task, is
+  *     the unit of record ownership.
   *   - `vectorized` (default true): emit `ColumnarBatch`es from the scan
   *     instead of one `InternalRow` per record (same assembly core either
   *     way; set false only to A/B the row path).
@@ -165,16 +181,16 @@ final class LogfileScanBuilder(options: CaseInsensitiveStringMap)
   private var limit: Option[Int] = None
   private var countPushed = false
 
-  /** PARTIAL limit pushdown: each partition reader stops assembling after
-    * `limit` records, so `df.limit(5)` on a 10 GB file reads a few KB
-    * instead of the whole file. Partial because partitions are independent
-    * (k partitions can emit up to k*limit rows) -- `isPartiallyPushed`
+  /** PARTIAL limit pushdown: each task stops assembling, and opens no
+    * further split, after `limit` records, so `df.limit(5)` on a 10 GB file
+    * reads a few KB instead of the whole file. Partial because tasks are
+    * independent (k tasks can emit up to k*limit rows) -- `isPartiallyPushed`
     * keeps Spark's global limit above the scan for exactness.
     */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
   override def isPartiallyPushed(): Boolean = true
 
-  /** COUNT(*) pushdown (PARTIAL: one partial count per partition, Spark
+  /** COUNT(*) pushdown (PARTIAL: one partial count per task, Spark
     * sums them). Record COUNTING still requires the multiline head-machine
     * -- a record is "a line matching the pattern plus its continuations",
     * so every line is still read and matched -- but the reader skips
@@ -296,7 +312,10 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
   /** Driver-side split planning — the DSv2 analog of
     * `FileInputFormat.getSplits` + `isSplitable` (`LogfileInputFormat.java:112-119`):
     * uncompressed files are carved into `maxSplitBytes` ranges, files with a
-    * (non-splittable) codec become exactly one whole-file partition.
+    * (non-splittable) codec become exactly one whole-file split. The splits,
+    * in (path, start) order, are then packed into tasks
+    * ([[LogfileSplits.pack]]) with the target size Spark's own file scans
+    * use.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
@@ -304,16 +323,20 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
     val codecs = new CompressionCodecFactory(conf)
     val maxSplit = Option(options.get("maxsplitbytes")).map(_.toLong)
       .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
-    require(maxSplit > 0, "maxSplitBytes must be positive")
 
-    listFiles().flatMap { st =>
+    val carved = listFiles().flatMap { st =>
       val pattern = LogfileOptions.resolvePattern(options, st.getPath)
-      LogfileSplits.forFile(st, pattern, conf, codecs, maxSplit)
-    }.toArray
+      LogfileSplits.carve(st, pattern, conf, codecs, maxSplit)
+    }
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val target = FilePartition.maxSplitBytes(spark, carved.map(_.diskBytes + openCost).sum)
+    LogfileSplits.pack(carved, target, openCost).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf())
+    val spark = SparkSession.active
+    val conf = GraftConfBridge.broadcast(
+      spark.sparkContext, spark.sessionState.newHadoopConf())
     val vectorized = Option(options.get("vectorized")).forall(_.toBoolean)
     new LogfileReaderFactory(conf, required, limit, countPushed, vectorized)
   }
@@ -321,7 +344,7 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
   /** Scan observability (bytes read, records assembled, boundary-spanning
     * records) — the `getProgress` parity item
     * (`LogfileRecordReader.java:331-337`); values aggregate per-task via
-    * [[LogfilePartitionReader.currentMetricsValues]].
+    * [[LogfileChainReader.currentMetricsValues]].
     */
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     LogfileMetrics.supported
@@ -335,6 +358,9 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
   * reference inherits from `FileInputFormat.getSplits`
   * (`LogfileInputFormat.java:112-119`). Empty on filesystems without
   * block topology.
+  *
+  * A bare split is one task (the micro-batch planner emits these); the
+  * batch planner packs splits into [[LogfileSplitGroup]]s.
   */
 final case class LogfilePartition(path: String, start: Long, end: Long, pattern: String,
     locations: Array[String] = Array.empty)
@@ -342,34 +368,86 @@ final case class LogfilePartition(path: String, start: Long, end: Long, pattern:
   override def preferredLocations(): Array[String] = locations
 }
 
+/** One scan task of consecutive splits, read in order by a
+  * [[LogfileChainReader]]. `locations` rank hosts by their block overlap
+  * summed over the splits.
+  */
+final case class LogfileSplitGroup(splits: Array[LogfilePartition], locations: Array[String])
+  extends InputPartition {
+  override def preferredLocations(): Array[String] = locations
+}
+
+object LogfileSplitGroup {
+  /** The splits a task reads: a bare split is a group of one. */
+  def splitsOf(p: InputPartition): Array[LogfilePartition] = p match {
+    case g: LogfileSplitGroup => g.splits
+    case s: LogfilePartition => Array(s)
+  }
+}
+
 /** The one split-carving rule, shared by the batch planner and the streaming
   * micro-batch planner so a big plain file parallelizes identically in both:
   * uncompressed files become `maxSplit`-byte [start, end) ranges; codec'd
-  * files exactly one whole-file partition (splittable-compressed is rejected
+  * files exactly one whole-file split (splittable-compressed is rejected
   * at read); empty files vanish (a 0-byte .gz would EOF in the decompressor).
   */
 private[logfile] object LogfileSplits {
+  /** A split with what packing needs: the on-disk byte range it covers
+    * (the whole file for a codec'd one) and its file's block report.
+    */
+  final case class Carved(split: LogfilePartition, diskStart: Long, diskBytes: Long,
+      blocks: Array[BlockLocation])
+
   def forFile(st: FileStatus, pattern: String, conf: Configuration,
-      codecs: CompressionCodecFactory, maxSplit: Long): Seq[LogfilePartition] = {
+      codecs: CompressionCodecFactory, maxSplit: Long): Seq[LogfilePartition] =
+    carve(st, pattern, conf, codecs, maxSplit).map(_.split)
+
+  def carve(st: FileStatus, pattern: String, conf: Configuration,
+      codecs: CompressionCodecFactory, maxSplit: Long): Seq[Carved] = {
     require(maxSplit > 0, "maxSplitBytes must be positive")
     if (st.getLen == 0) Seq.empty
     else {
+      val path = st.getPath.toString
       val fs = st.getPath.getFileSystem(conf)
       // one block-location RPC per FILE (as FileInputFormat.getSplits
       // does), then slice locally per split — not one RPC per split
       val blocks = Option(fs.getFileBlockLocations(st, 0L, st.getLen))
         .getOrElse(Array.empty)
-      if (codecs.getCodec(st.getPath) != null) {
-        Seq(LogfilePartition(st.getPath.toString, 0L, Long.MaxValue, pattern,
-          LogfileLocality.rank(blocks, 0L, st.getLen)))
-      } else {
-        (0L until st.getLen by maxSplit).map { start =>
-          val end = math.min(start + maxSplit, st.getLen)
-          LogfilePartition(st.getPath.toString, start, end, pattern,
-            LogfileLocality.rank(blocks, start, end - start))
-        }
+      def carved(start: Long, end: Long, diskEnd: Long) = Carved(
+        LogfilePartition(path, start, end, pattern,
+          LogfileLocality.rank(blocks, start, diskEnd - start)),
+        start, diskEnd - start, blocks)
+      if (codecs.getCodec(st.getPath) != null) Seq(carved(0L, Long.MaxValue, st.getLen))
+      else (0L until st.getLen by maxSplit).map { start =>
+        val end = math.min(start + maxSplit, st.getLen)
+        carved(start, end, end)
       }
     }
+  }
+
+  /** Spark's `FilePartition.getFilePartitions` rule over splits kept in
+    * their given order (next-fit): a group closes when the next split's
+    * bytes would take it past `target`; each split adds its bytes plus
+    * `openCost`. Groups never reorder or merge splits, so record ownership
+    * stays with the split.
+    */
+  def pack(carved: Seq[Carved], target: Long, openCost: Long): Seq[LogfileSplitGroup] = {
+    val groups = Seq.newBuilder[LogfileSplitGroup]
+    val current = scala.collection.mutable.ArrayBuffer.empty[Carved]
+    var size = 0L
+    def close(): Unit = if (current.nonEmpty) {
+      groups += LogfileSplitGroup(current.map(_.split).toArray,
+        LogfileLocality.rank(current.map(c => (c.blocks, c.diskStart, c.diskBytes)).toSeq))
+      current.clear()
+      size = 0L
+    }
+    carved.foreach { c =>
+      if (size + c.diskBytes > target) close()
+      size += c.diskBytes + openCost
+      current += c
+    }
+    close()
+    groups.result()
   }
 }
 
@@ -377,10 +455,15 @@ private[logfile] object LogfileLocality {
   /** Rank hosts by overlapping byte count with [start, start+len); ties keep
     * block order (deterministic for a stable block report).
     */
-  def rank(blocks: Array[org.apache.hadoop.fs.BlockLocation],
-      start: Long, len: Long): Array[String] = {
+  def rank(blocks: Array[BlockLocation], start: Long, len: Long): Array[String] =
+    rank(Seq((blocks, start, len)))
+
+  /** Rank hosts by overlap summed over several (blocks, start, len) ranges;
+    * ties keep first-seen order.
+    */
+  def rank(ranges: Seq[(Array[BlockLocation], Long, Long)]): Array[String] = {
     val byHost = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    blocks.foreach { b =>
+    for ((blocks, start, len) <- ranges; b <- blocks) {
       val overlap = math.min(b.getOffset + b.getLength, start + len) - math.max(b.getOffset, start)
       if (overlap > 0)
         b.getHosts.foreach(h => byHost.update(h, byHost.getOrElse(h, 0L) + overlap))
@@ -390,22 +473,29 @@ private[logfile] object LogfileLocality {
 }
 
 object LogfileScan {
-  /** Output schema when COUNT(*) is pushed: one partial count per split. */
+  /** Output schema when COUNT(*) is pushed: one partial count per task. */
   val CountSchema: StructType =
     StructType(Seq(StructField("count(*)", LongType, nullable = false)))
 }
 
-final class LogfileReaderFactory(conf: SerializableConfiguration, required: StructType,
-    limit: Option[Int] = None, countPushed: Boolean = false, vectorized: Boolean = true)
+/** Builds each task's [[LogfileChainReader]] over its splits. The Hadoop
+  * conf arrives as one broadcast per scan rather than a copy in every task.
+  */
+final class LogfileReaderFactory(conf: Broadcast[SerializableConfiguration],
+    required: StructType, limit: Option[Int] = None, countPushed: Boolean = false,
+    vectorized: Boolean = true)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     // a pushed limit must never cap a pushed COUNT(*): Spark doesn't plan
     // both today (limit stays above the aggregate), but if it ever did,
     // an early-stopped count would silently undercount
-    val inner = new LogfilePartitionReader(
-      partition.asInstanceOf[LogfilePartition], conf.value, required,
-      if (countPushed) None else limit, countOnly = countPushed)
-    if (countPushed) new LogfileCountReader(inner) else inner
+    val rows = new LogfileChainReader[InternalRow](LogfileSplitGroup.splitsOf(partition),
+      if (countPushed) None else limit, { (split, left) =>
+        val r = new LogfilePartitionReader(split, conf.value.value, required, left,
+          countOnly = countPushed)
+        (r, r)
+      })
+    if (countPushed) new LogfileCountReader(rows) else rows
   }
 
   /** Vectorized path (everything except the one-row COUNT(*) partial, where
@@ -415,19 +505,20 @@ final class LogfileReaderFactory(conf: SerializableConfiguration, required: Stru
   override def supportColumnarReads(partition: InputPartition): Boolean =
     vectorized && !countPushed
 
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[LogfilePartition]
-    val inner = new LogfilePartitionReader(p, conf.value, required, limit)
-    new LogfileColumnarReader(inner, required, p.path)
-  }
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new LogfileChainReader[ColumnarBatch](LogfileSplitGroup.splitsOf(partition), limit,
+      { (split, left) =>
+        val r = new LogfilePartitionReader(split, conf.value.value, required, left)
+        (r, new LogfileColumnarReader(r, required, split.path))
+      })
 }
 
 /** Drains the (string-skipping) inner reader and emits ONE row: this
-  * split's record count -- the partial side of pushed COUNT(*).
+  * task's record count, summed over its splits -- the partial side of
+  * pushed COUNT(*).
   */
-final class LogfileCountReader(inner: LogfilePartitionReader)
-    extends PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
+final class LogfileCountReader(inner: LogfileChainReader[InternalRow])
+    extends PartitionReader[InternalRow] {
   private var emitted = false
   private var count = 0L
   override def next(): Boolean = {
@@ -437,7 +528,7 @@ final class LogfileCountReader(inner: LogfilePartitionReader)
     emitted = true
     true
   }
-  override def get(): org.apache.spark.sql.catalyst.InternalRow =
+  override def get(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](count))
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =

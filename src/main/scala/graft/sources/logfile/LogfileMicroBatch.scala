@@ -8,9 +8,9 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
+import org.apache.spark.sql.graftbridge.GraftConfBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming (micro-batch) face of the logfile source: each trigger scans the
   * input paths and emits records from files that are new since the previous
@@ -45,7 +45,7 @@ final class LogfileMicroBatchStream(
   extends MicroBatchStream with SupportsAdmissionControl {
 
   private val spark = SparkSession.active
-  private val confSer = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+  private val conf = spark.sessionState.newHadoopConf()
 
   private val maxFilesPerTrigger: Option[Int] =
     Option(options.get("maxfilespertrigger")).map { v =>
@@ -59,7 +59,6 @@ final class LogfileMicroBatchStream(
     Option(options.get("settletimems")).map(_.toLong).getOrElse(0L)
 
   private def listFiles(): Seq[FileStatus] = {
-    val conf = confSer.value
     LogfileOptions.paths(options).flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
@@ -120,10 +119,10 @@ final class LogfileMicroBatchStream(
     * planner ([[LogfileSplits]]): one producer dropping a single 10 GB plain
     * file must not single-thread the whole trigger. Splitting is a pure
     * function of the (immutable-by-contract) file length, so a replayed
-    * batch re-carves the identical partitions.
+    * batch re-carves the identical partitions. Each split is its own task:
+    * unlike the batch planner, this one does not pack splits.
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val conf = confSer.value
     val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
     val maxSplit = Option(options.get("maxsplitbytes")).map(_.toLong)
       .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
@@ -135,8 +134,9 @@ final class LogfileMicroBatchStream(
     }.toArray
   }
 
+  /** One conf broadcast per micro-batch, not a copy in every task. */
   override def createReaderFactory(): PartitionReaderFactory =
-    new LogfileReaderFactory(confSer, required)
+    new LogfileReaderFactory(GraftConfBridge.broadcast(spark.sparkContext, conf), required)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -209,11 +209,14 @@ final class LogfilePartitionReader(
     row
   }
 
-  /** Task-level scan metrics, polled by Spark per-batch and on task end;
-    * aggregated driver-side by [[LogfileMetrics.supported]].
-    */
-  /** Records assembled so far -- the partial COUNT(*) LogfileCountReader emits. */
+  // --- this split's scan metrics so far; [[LogfileChainReader]] sums them
+  // over a task's splits and reports them to Spark
+  /** Records assembled -- this split's share of the partial COUNT(*). */
   private[logfile] def assembledCount: Long = recordsAssembled
+  /** Logical bytes consumed, realignment reads included. */
+  private[logfile] def bytesRead: Long = pos - basePos
+  /** Records whose assembly read past the split end. */
+  private[logfile] def spanningCount: Long = recordsSpanning
 
   // --- raw access for the columnar reader: the current record's offset and
   // assembly buffer (valid until the next next() call) — the batch filler
@@ -222,12 +225,6 @@ final class LogfilePartitionReader(
   private[logfile] def currentOffset: Long = curOffset
   private[logfile] def recordBuffer: Array[Byte] = recBuf
   private[logfile] def recordLength: Int = recLen
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(
-      LogfileMetrics.TaskMetric(LogfileMetrics.BytesRead, pos - basePos),
-      LogfileMetrics.TaskMetric(LogfileMetrics.RecordsAssembled, recordsAssembled),
-      LogfileMetrics.TaskMetric(LogfileMetrics.RecordsSpanningSplits, recordsSpanning))
 
   override def close(): Unit = {
     reader.close()

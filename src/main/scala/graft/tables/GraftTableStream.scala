@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -15,6 +16,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.graftbridge.GraftConfBridge
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -165,7 +167,7 @@ private[tables] final class GraftTableMicroBatchStream(
   GraftParquetReaderFactory.requireSupported(schema)
 
   private val spark = SparkSession.active
-  private val confSer = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+  private val hadoopConf = spark.sessionState.newHadoopConf()
   // one handle for the stream's lifetime: commit parses memoize, so each
   // trigger replays only the commits landed since the last one
   private val table: GraftTable = GraftTable.at(spark, location)
@@ -362,7 +364,10 @@ private[tables] final class GraftTableMicroBatchStream(
     // files store PHYSICAL names (stable across renames): look fields up
     // physically — through the ANCHORED colmap, pinned with the schema —
     // and emit rows positionally under the stream's logical schema
-    new GraftParquetReaderFactory(confSer, table.physicalSchemaOf(schema, anchoredColmap))
+    // (one conf broadcast per micro-batch, not a copy in every task)
+    new GraftParquetReaderFactory(
+      GraftConfBridge.broadcast(spark.sparkContext, hadoopConf),
+      table.physicalSchemaOf(schema, anchoredColmap))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -401,7 +406,7 @@ private[tables] final case class GraftFilePartition(path: String) extends InputP
   * reads). Flat atomic types only, checked loud at stream construction.
   */
 private[tables] final class GraftParquetReaderFactory(
-    confSer: SerializableConfiguration, schema: StructType)
+    conf: Broadcast[SerializableConfiguration], schema: StructType)
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -410,7 +415,7 @@ private[tables] final class GraftParquetReaderFactory(
       private val reader: ParquetReader[Group] = {
         val support = new GroupReadSupport()
         @annotation.nowarn("cat=deprecation")
-        val b = ParquetReader.builder(support, new Path(p.path)).withConf(confSer.value)
+        val b = ParquetReader.builder(support, new Path(p.path)).withConf(conf.value.value)
         b.build()
       }
       private var current: Group = _

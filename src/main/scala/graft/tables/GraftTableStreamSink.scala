@@ -2,16 +2,19 @@ package graft.tables
 
 import java.util.UUID
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.graftbridge.GraftConfBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -100,8 +103,8 @@ private[tables] final class GraftStreamingWrite(
     }
   }
 
-  private val confSer = new SerializableConfiguration(
-    SparkSession.active.sessionState.newHadoopConf())
+  // driver-side only; each epoch's writer factory broadcasts it
+  @transient private val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
 
   // ONE driver-side handle for the whole query run: commit parses memoize
   // per GraftTable instance, so epoch N+1 replays only the commits landed
@@ -172,8 +175,10 @@ private[tables] final class GraftStreamingWrite(
     // executors write files under PHYSICAL names (same contract as the
     // batch writeData path); rows arrive positionally, so only the field
     // names change — the bound constraint checks stay valid (ordinals)
-    new GraftStreamWriterFactory(location,
-      table.physicalSchemaOf(schema, anchoredColmap), confSer, constraintChecks)
+    // (one conf broadcast per epoch, not a copy in every task)
+    new GraftStreamWriterFactory(location, table.physicalSchemaOf(schema, anchoredColmap),
+      GraftConfBridge.broadcast(SparkSession.active.sparkContext, hadoopConf),
+      constraintChecks)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     checkColmap()
@@ -196,7 +201,7 @@ private[tables] final class GraftStreamingWrite(
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(location).getFileSystem(confSer.value)
+    val fs = new Path(location).getFileSystem(hadoopConf)
     messages.foreach {
       case m: GraftFileCommitMessage =>
         try fs.delete(new Path(location, m.path), false)
@@ -218,13 +223,13 @@ private[tables] final case class GraftRowCheck(name: String, sql: String,
   bound: org.apache.spark.sql.catalyst.expressions.Expression)
 
 private[tables] final class GraftStreamWriterFactory(
-    location: String, schema: StructType, confSer: SerializableConfiguration,
+    location: String, schema: StructType, conf: Broadcast[SerializableConfiguration],
     checks: Seq[GraftRowCheck] = Nil)
   extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new GraftParquetDataWriter(location, schema, confSer, checks)
+    new GraftParquetDataWriter(location, schema, conf.value.value, checks)
 }
 
 /** One immutable parquet file per (partition, epoch) task attempt; empty
@@ -233,7 +238,7 @@ private[tables] final class GraftStreamWriterFactory(
   * committed and age out through the vacuum retention window.
   */
 private[tables] final class GraftParquetDataWriter(
-    location: String, schema: StructType, confSer: SerializableConfiguration,
+    location: String, schema: StructType, conf: Configuration,
     checks: Seq[GraftRowCheck] = Nil)
   extends DataWriter[InternalRow] {
 
@@ -265,7 +270,7 @@ private[tables] final class GraftParquetDataWriter(
   private val writer = {
     @annotation.nowarn("cat=deprecation")
     val b = ExampleParquetWriter.builder(filePath)
-      .withConf(confSer.value)
+      .withConf(conf)
       .withType(parquetSchema)
     b.build()
   }
@@ -335,7 +340,7 @@ private[tables] final class GraftParquetDataWriter(
 
   override def commit(): WriterCommitMessage = {
     writer.close()
-    val fs = filePath.getFileSystem(confSer.value)
+    val fs = filePath.getFileSystem(conf)
     val bytes = fs.getFileStatus(filePath).getLen
     if (rows == 0L) fs.delete(filePath, false) // nothing to reference
     GraftFileCommitMessage(fileName, rows, bytes,
@@ -344,7 +349,7 @@ private[tables] final class GraftParquetDataWriter(
 
   override def abort(): Unit = {
     try writer.close() catch { case _: Throwable => () }
-    try filePath.getFileSystem(confSer.value).delete(filePath, false)
+    try filePath.getFileSystem(conf).delete(filePath, false)
     catch { case _: java.io.IOException => () }
   }
 

@@ -29,6 +29,15 @@ class LogfileSourceSpec extends SparkTestBase {
     r.load(dir)
   }
 
+  /** Every split the scan planned, across its tasks, in task order. */
+  private def plannedSplits(df: DataFrame): Seq[LogfilePartition] =
+    scanOf(df).inputPartitions.flatMap(LogfileSplitGroup.splitsOf).toSeq
+
+  private def scanOf(df: DataFrame) =
+    df.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail("no BatchScanExec in plan"))
+
   // ---- invariant 1: full-match head detection, multiline assembly ----
 
   test("multiline records assemble; continuation lines never split records") {
@@ -157,14 +166,20 @@ class LogfileSourceSpec extends SparkTestBase {
   test("gz file is exactly one partition; plain file splits") {
     val dir = tmpDir("logfile-parts")
     LogfileFixture.ensure(dir, files = 1, recordsPerFile = 2000, seed = 5L)
-    val parts = read(dir, LogfileFixture.PatternA, maxSplit = 4096)
-      .rdd.getNumPartitions
+    val plainLen = new File(dir).listFiles().filter(_.getName.endsWith(".log")).head.length
+    // asserted over the planned splits, not the task count: packing puts
+    // several splits in one task, and how many depends on the core count
+    val splits = plannedSplits(read(dir, LogfileFixture.PatternA, maxSplit = 4096))
+    val (gz, plain) = splits.partition(_.path.endsWith(".gz"))
+    assert(gz.map(s => (s.start, s.end)) == Seq((0L, Long.MaxValue)), s"gz splits: $gz")
+    assert(plain.map(_.start) == (0L until plainLen by 4096L), s"plain splits: $plain")
+    assert(plain.length > 1)
     val gzOnly = {
       new File(dir).listFiles().filter(_.getName.endsWith(".log")).foreach(_.delete())
-      read(dir, LogfileFixture.PatternA, maxSplit = 4096).rdd.getNumPartitions
+      read(dir, LogfileFixture.PatternA, maxSplit = 4096)
     }
-    assert(parts > gzOnly, s"plain+gz parts=$parts, gz-only parts=$gzOnly")
-    assert(gzOnly == 1)
+    assert(plannedSplits(gzOnly).map(s => (s.start, s.end)) == Seq((0L, Long.MaxValue)))
+    assert(gzOnly.rdd.getNumPartitions == 1)
   }
 
   // ---- per-path dispatch + error parity ----
@@ -372,8 +387,10 @@ class LogfileSourceSpec extends SparkTestBase {
     val all = read(dir, LogfileFixture.PatternA,
       extra = Map("pattern.*_1.log*" -> LogfileFixture.PatternB))
     val plainOnly = all.filter(col("file").endsWith(".log"))
-    // planner must not create partitions for the .gz twins
-    assert(plainOnly.rdd.getNumPartitions < all.rdd.getNumPartitions)
+    // planner must not plan a split of the .gz twins
+    val plainSplits = plannedSplits(plainOnly)
+    assert(plainSplits.nonEmpty && plainSplits.forall(_.path.endsWith(".log")), plainSplits)
+    assert(plannedSplits(all).count(_.path.endsWith(".gz")) == 2)
     val scanDesc = plainOnly.queryExecution.executedPlan.toString()
     assert(scanDesc.contains("PushedFileFilters=[StringEndsWith(file,.log)]"), scanDesc)
     // and results equal the post-scan-filter semantics
@@ -462,18 +479,23 @@ class LogfileSourceSpec extends SparkTestBase {
     assert(LogfileLocality.rank(blocks, 80L, 100L).toSeq == Seq("h2", "h3", "h1"))
     // no overlap → empty
     assert(LogfileLocality.rank(blocks, 200L, 50L).isEmpty)
+    // a task of several splits sums overlap over them: [80, 180) above
+    // gives h1 20, h2 100, h3 80; [0, 100) of another file on h4/h1 adds
+    // h4 100 and h1 100 → h1 120, then the h2/h4 tie in first-seen order
+    val other = Array(new BlockLocation(Array("h4:1", "h1:1"), Array("h4", "h1"), 0L, 150L))
+    assert(LogfileLocality.rank(Seq((blocks, 80L, 100L), (other, 0L, 100L))).toSeq ==
+      Seq("h1", "h2", "h4", "h3"))
 
     // end-to-end: local FS reports localhost for every block; the planner
-    // must attach it to each partition (the FileInputFormat.getSplits parity)
+    // must attach it to each split and each task of splits (the
+    // FileInputFormat.getSplits parity)
     val dir = tmpDir("logfile-locality")
     LogfileFixture.ensure(dir, files = 1, recordsPerFile = 200, seed = 9L)
     val df = read(dir, LogfileFixture.PatternA, maxSplit = 4096)
-    val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
-    val parts = scan.inputPartitions
-    assert(parts.length > 1, "expected a multi-split plan")
-    parts.foreach { p =>
+    val parts = scanOf(df).inputPartitions
+    val splits = parts.flatMap(LogfileSplitGroup.splitsOf)
+    assert(splits.length > 1, "expected a multi-split plan")
+    (parts ++ splits).foreach { p =>
       assert(p.preferredLocations().contains("localhost"),
         s"partition $p missing local-FS block host")
     }
