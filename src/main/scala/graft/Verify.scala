@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +12,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional dev-loop filter: only dump the named queries (driver passes 2 args)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the engine's own session factory: UTC + AQE + nanos-parquet configs
-    // plus GraftExtensions (the SQL UPDATE / MERGE INTO rewrite and the
-    // graft functions need analyzer/planner injection at session build)
-    val spark = GraftSession.attach(GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    // the harness's session: GraftExtensions included (the SQL UPDATE /
+    // MERGE INTO rewrite and the graft functions need analyzer/planner
+    // injection at session build)
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -30,21 +26,16 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     spark.stop()
+  }
+
+  /** `oracle_sql.json`: query name → DuckDB SQL. Full JSON string escaping
+    * (backslash, quote, ALL control chars): one tab or CR in a query's SQL
+    * would otherwise make the whole file unparseable for the oracle compare.
+    */
+  def oracleJson(sql: Map[String, String]): String = {
+    def q(s: String): String = "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+    sql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{BlockLocation, FileStatus, GlobPattern, Path}
 import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
@@ -51,9 +52,10 @@ import org.apache.spark.util.SerializableConfiguration
   *   - `maxsplitbytes`: split size for uncompressed files (default
   *     `spark.sql.files.maxPartitionBytes`). The split, not the task, is
   *     the unit of record ownership.
-  *   - `vectorized` (default true): emit `ColumnarBatch`es from the scan
-  *     instead of one `InternalRow` per record (same assembly core either
-  *     way; set false only to A/B the row path).
+  *
+  * Emission: a record scan emits `ColumnarBatch`es ([[LogfileColumnarReader]]);
+  * the pushed COUNT(*) partial, one row per task, takes the row reader. No
+  * option selects the path.
   *
   * Output schema: `file string, offset long, record string`; `offset` is the
   * byte offset of the record's first line in the (decompressed) stream.
@@ -103,43 +105,10 @@ final class LogfileTable(options: CaseInsensitiveStringMap)
 private object LogfileOptions {
   /** DataFrameReader.load(paths*) passes "path" or a JSON-array "paths". */
   def paths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val multi = Option(options.get("paths")).toSeq.flatMap { js =>
-      // JSON string-array parse honoring escapes — a naive split(",") would
-      // corrupt paths containing commas or quotes
-      val m = java.util.regex.Pattern.compile("\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(js)
-      val out = Seq.newBuilder[String]
-      while (m.find()) out += unescapeJson(m.group(1))
-      out.result()
-    }
+    val multi = Option(options.get("paths")).toSeq
+      .flatMap(js => new ObjectMapper().readValue(js, classOf[Array[String]]).toSeq)
     val single = Option(options.get("path")).toSeq
     (multi ++ single).distinct
-  }
-
-  /** Full JSON string-escape decoding (Jackson may emit \t, \n, \uXXXX for
-    * control characters in file names, not just \" and \\).
-    */
-  private def unescapeJson(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case '/' => sb.append('/'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 'b' => sb.append('\b'); i += 2
-          case 'f' => sb.append('\f'); i += 2
-          case 'u' if i + 6 <= s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   def defaultPattern(options: CaseInsensitiveStringMap): String = {
@@ -337,8 +306,7 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
     val spark = SparkSession.active
     val conf = GraftConfBridge.broadcast(
       spark.sparkContext, spark.sessionState.newHadoopConf())
-    val vectorized = Option(options.get("vectorized")).forall(_.toBoolean)
-    new LogfileReaderFactory(conf, required, limit, countPushed, vectorized)
+    new LogfileReaderFactory(conf, required, limit, countPushed)
   }
 
   /** Scan observability (bytes read, records assembled, boundary-spanning
@@ -482,28 +450,25 @@ object LogfileScan {
   * conf arrives as one broadcast per scan rather than a copy in every task.
   */
 final class LogfileReaderFactory(conf: Broadcast[SerializableConfiguration],
-    required: StructType, limit: Option[Int] = None, countPushed: Boolean = false,
-    vectorized: Boolean = true)
+    required: StructType, limit: Option[Int] = None, countPushed: Boolean = false)
     extends PartitionReaderFactory {
+  /** The pushed COUNT(*) partial, the one scan that reads rows. No limit
+    * applies: an early-stopped count would silently undercount.
+    */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    // a pushed limit must never cap a pushed COUNT(*): Spark doesn't plan
-    // both today (limit stays above the aggregate), but if it ever did,
-    // an early-stopped count would silently undercount
-    val rows = new LogfileChainReader[InternalRow](LogfileSplitGroup.splitsOf(partition),
-      if (countPushed) None else limit, { (split, left) =>
-        val r = new LogfilePartitionReader(split, conf.value.value, required, left,
-          countOnly = countPushed)
+    require(countPushed, "a logfile record scan is columnar")
+    new LogfileCountReader(new LogfileChainReader[InternalRow](
+      LogfileSplitGroup.splitsOf(partition), None, { (split, _) =>
+        val r = new LogfilePartitionReader(split, conf.value.value, required, None, countOnly = true)
         (r, r)
-      })
-    if (countPushed) new LogfileCountReader(rows) else rows
+      }))
   }
 
   /** Vectorized path (everything except the one-row COUNT(*) partial, where
     * a batch is pointless): record bytes go straight from the assembly
     * buffer into reused column vectors — no per-record row or UTF8String.
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    vectorized && !countPushed
+  override def supportColumnarReads(partition: InputPartition): Boolean = !countPushed
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new LogfileChainReader[ColumnarBatch](LogfileSplitGroup.splitsOf(partition), limit,

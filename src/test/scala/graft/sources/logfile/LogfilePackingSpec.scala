@@ -24,12 +24,11 @@ class LogfilePackingSpec extends SparkTestBase {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
-  private def read(dir: String, maxSplit: Long, vectorized: Boolean = true): DataFrame =
+  private def read(dir: String, maxSplit: Long): DataFrame =
     spark.read.format("logfile")
       .option("pattern", LogfileFixture.PatternA)
       .option("pattern.*_1.log*", LogfileFixture.PatternB)
       .option("maxsplitbytes", maxSplit.toString)
-      .option("vectorized", vectorized.toString)
       .load(dir)
 
   private def scanOf(df: DataFrame): BatchScanExec =
@@ -93,41 +92,39 @@ class LogfilePackingSpec extends SparkTestBase {
     assert(fewer < more, s"minPartitionNum 1: $fewer tasks, 64: $more tasks")
   }
 
-  for (vectorized <- Seq(true, false)) {
-    test(s"a packed task reads what its splits read one by one, with summed metrics (vectorized=$vectorized)") {
-      val dir = tmpDir("logfile-pack-union")
-      val truth = LogfileFixture.ensure(dir, files = 2, recordsPerFile = 600, seed = 62L)
-      // plus a file of three-line records, so records span split boundaries
-      Files.write(new File(dir, "stack.log").toPath, (0 until 300).map(i =>
-        f"2017-01-01 00:00:${i % 60}%02d,${i % 1000}%03d ERROR boom $i\n" +
-          "\tat a.B.c(B.java:1)\n\tat d.E.f(E.java:2)\n").mkString.getBytes(StandardCharsets.UTF_8))
-      val df = read(dir, maxSplit = 700, vectorized = vectorized)
-      val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
-      val scan = scanOf(df)
-      val groups = scan.inputPartitions.map(_.asInstanceOf[LogfileSplitGroup])
-      assert(groups.exists(_.splits.length > 1), "expected at least one task of several splits")
+  test("a packed task reads what its splits read one by one, with summed metrics") {
+    val dir = tmpDir("logfile-pack-union")
+    val truth = LogfileFixture.ensure(dir, files = 2, recordsPerFile = 600, seed = 62L)
+    // plus a file of three-line records, so records span split boundaries
+    Files.write(new File(dir, "stack.log").toPath, (0 until 300).map(i =>
+      f"2017-01-01 00:00:${i % 60}%02d,${i % 1000}%03d ERROR boom $i\n" +
+        "\tat a.B.c(B.java:1)\n\tat d.E.f(E.java:2)\n").mkString.getBytes(StandardCharsets.UTF_8))
+    val df = read(dir, maxSplit = 700)
+    val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    val scan = scanOf(df)
+    val groups = scan.inputPartitions.map(_.asInstanceOf[LogfileSplitGroup])
+    assert(groups.exists(_.splits.length > 1), "expected at least one task of several splits")
 
-      val conf = spark.sessionState.newHadoopConf()
-      val direct = mutable.ArrayBuffer.empty[(String, Long, String)]
-      var bytes, assembled, spanning = 0L
-      for (g <- groups; split <- g.splits) {
-        val r = new LogfilePartitionReader(split, conf, LogfileTable.Schema)
-        try while (r.next()) {
-          val row = r.get()
-          direct += ((row.getUTF8String(0).toString, row.getLong(1), row.getUTF8String(2).toString))
-        } finally r.close()
-        bytes += r.bytesRead
-        assembled += r.assembledCount
-        spanning += r.spanningCount
-      }
-      assert(got.length == truth.total * 2 + 300)
-      assert(got == direct.sorted.toSeq)
-      assert(spanning > 0, "700-byte splits of multiline records must span boundaries")
-      val m = scan.metrics
-      assert(m(LogfileMetrics.RecordsAssembled).value == assembled)
-      assert(m(LogfileMetrics.RecordsSpanningSplits).value == spanning)
-      assert(m(LogfileMetrics.BytesRead).value == bytes)
+    val conf = spark.sessionState.newHadoopConf()
+    val direct = mutable.ArrayBuffer.empty[(String, Long, String)]
+    var bytes, assembled, spanning = 0L
+    for (g <- groups; split <- g.splits) {
+      val r = new LogfilePartitionReader(split, conf, LogfileTable.Schema)
+      try while (r.next()) {
+        val row = r.get()
+        direct += ((row.getUTF8String(0).toString, row.getLong(1), row.getUTF8String(2).toString))
+      } finally r.close()
+      bytes += r.bytesRead
+      assembled += r.assembledCount
+      spanning += r.spanningCount
     }
+    assert(got.length == truth.total * 2 + 300)
+    assert(got == direct.sorted.toSeq)
+    assert(spanning > 0, "700-byte splits of multiline records must span boundaries")
+    val m = scan.metrics
+    assert(m(LogfileMetrics.RecordsAssembled).value == assembled)
+    assert(m(LogfileMetrics.RecordsSpanningSplits).value == spanning)
+    assert(m(LogfileMetrics.BytesRead).value == bytes)
   }
 
   test("a pushed limit caps the task: the chain opens no split after `limit` records") {

@@ -64,29 +64,35 @@ class LogfileSourceSpec extends SparkTestBase {
     assert(r2.length == 1 && r2(0).getAs[String]("record").contains("not-a-head"))
   }
 
-  test("scan is columnar by default; row path (vectorized=false) is bit-identical") {
+  test("scan is columnar; its records are bit-identical to LogfilePartitionReader driven split by split") {
     val dir = tmpDir("logfile-columnar")
     // >4096 records per split forces multiple ColumnarBatches from one reader
     val truth = LogfileFixture.ensure(dir, files = 1, recordsPerFile = 6000, seed = 23L)
-    def load(vec: Boolean) = spark.read.format("logfile")
-      .option("pattern", LogfileFixture.PatternA)
-      .option("vectorized", vec.toString)
-      .load(dir)
-    // the vectorized reader path must actually engage (LogfileColumnarReader)
-    val colPlan = load(true).queryExecution.executedPlan.toString
-    assert(colPlan.contains("ColumnarToRow"),
-      s"expected a columnar scan (ColumnarToRow) in:\n$colPlan")
-    val rowPlan = load(false).queryExecution.executedPlan.toString
-    assert(!rowPlan.contains("ColumnarToRow"), "vectorized=false must use the row path")
-    // A/B: every (file, offset, record) triple identical across the two paths
-    def all(vec: Boolean) = load(vec).collect()
+    val df = spark.read.format("logfile").option("pattern", LogfileFixture.PatternA).load(dir)
+    // the columnar reader path must actually engage (LogfileColumnarReader)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), s"expected a columnar scan (ColumnarToRow) in:\n$plan")
+    // A/B: every (file, offset, record) triple identical to the row reader's,
+    // each planned split read on its own
+    val conf = spark.sessionState.newHadoopConf()
+    val direct = plannedSplits(df).flatMap { split =>
+      val r = new LogfilePartitionReader(split, conf, LogfileTable.Schema)
+      val out = Seq.newBuilder[(String, Long, String)]
+      try while (r.next()) {
+        val row = r.get()
+        out += ((row.getUTF8String(0).toString, row.getLong(1), row.getUTF8String(2).toString))
+      } finally r.close()
+      out.result()
+    }.sortBy(t => (t._1, t._2))
+    val col = df.collect()
       .map(r => (r.getAs[String]("file"), r.getAs[Long]("offset"), r.getAs[String]("record")))
       .sortBy(t => (t._1, t._2)).toSeq
-    val (col, row) = (all(true), all(false))
     assert(col.size == truth.total * 2, s"plain+gz twins: ${col.size} vs ${truth.total * 2}")
-    assert(col == row)
-    // COUNT(*) pushdown still bypasses the columnar path (single-row partial)
-    assert(load(true).count() == truth.total * 2)
+    assert(col == direct)
+    // COUNT(*) pushdown bypasses the columnar path (single-row partial)
+    val countPlan = df.groupBy().count().queryExecution.executedPlan.toString
+    assert(!countPlan.contains("ColumnarToRow"), s"expected a row scan for COUNT(*) in:\n$countPlan")
+    assert(df.count() == truth.total * 2)
   }
 
   test("offsets are byte positions of the head line") {
@@ -330,11 +336,11 @@ class LogfileSourceSpec extends SparkTestBase {
         else recs.init :+ (recs.last._1 -> (recs.last._2 ++ Seq('\n'.toByte) ++ l))
       }
       assert(expected.length == 5, s"$pattern: ${expected.map(_._1)}")
-      for (vec <- Seq(true, false); split <- Seq(0L, 37L)) {
-        val got = read(dir, pattern, maxSplit = split, extra = Map("vectorized" -> vec.toString))
+      for (split <- Seq(0L, 37L)) {
+        val got = read(dir, pattern, maxSplit = split)
           .select(col("offset"), col("record").cast("binary")).collect()
           .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).sortBy(_._1).toSeq
-        assert(got == expected, s"pattern=$pattern vectorized=$vec split=$split")
+        assert(got == expected, s"pattern=$pattern split=$split")
       }
     }
   }
@@ -362,6 +368,12 @@ class LogfileSourceSpec extends SparkTestBase {
     val df2 = spark.read.format("logfile").option("pattern", TsPat)
       .load(s"$dir1/a.log", s"$dir3/c.log")
     assert(df2.count() == 2, "path containing a comma was corrupted")
+    // and so must a quote and a tab, which JSON escapes
+    val dir4 = tmpDir("logfile-quote\"tab\tdir")
+    write(dir4, "d.log", "2017-01-01 00:00:00,004 INFO four\n")
+    val df3 = spark.read.format("logfile").option("pattern", TsPat)
+      .load(s"$dir1/a.log", s"$dir4/d.log")
+    assert(df3.count() == 2, "path containing a quote and a tab was corrupted")
   }
 
   test("splittable compressed input (bzip2) is rejected — reference :163-165 parity") {
