@@ -2817,15 +2817,18 @@ object Advanced extends QueryPack {
           // under CBO the CATALOG relation's optimized stats must carry
           // rowCount and the analyzed per-attribute distinctCount (the
           // column-stats path runs through the V2 scan, so the pin reads
-          // through a throwaway catalog over the table's parent dir)
+          // through a throwaway catalog over the table's parent dir). The
+          // session keeps a catalog it once loaded under its name, root
+          // included, so each run registers a name of its own.
+          val cat = s"q331cat_${java.util.UUID.randomUUID().toString.replace("-", "")}"
           val cboKey = "spark.sql.cbo.enabled"
           val prevCbo = s.conf.getOption(cboKey)
           s.conf.set(cboKey, "true")
-          s.conf.set("spark.sql.catalog.q331cat", "graft.tables.GraftCatalog")
-          s.conf.set("spark.sql.catalog.q331cat.root", root.getAbsolutePath)
+          s.conf.set(s"spark.sql.catalog.$cat", "graft.tables.GraftCatalog")
+          s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
           val statsInPlan =
             try {
-              val st = s.table("q331cat.t").queryExecution.optimizedPlan.stats
+              val st = s.table(s"$cat.t").queryExecution.optimizedPlan.stats
               st.rowCount.isDefined && st.attributeStats.exists {
                 case (a, cs) =>
                   a.name == "nat" && cs.distinctCount.contains(BigInt(ndv("nat")))
@@ -2835,8 +2838,8 @@ object Advanced extends QueryPack {
                 case Some(v) => s.conf.set(cboKey, v)
                 case None => s.conf.unset(cboKey)
               }
-              s.conf.unset("spark.sql.catalog.q331cat")
-              s.conf.unset("spark.sql.catalog.q331cat.root")
+              s.conf.unset(s"spark.sql.catalog.$cat")
+              s.conf.unset(s"spark.sql.catalog.$cat.root")
             }
           val exact = t.snapshot().agg(
             count_distinct(col("nat")), count_distinct(col("seg"))).head()

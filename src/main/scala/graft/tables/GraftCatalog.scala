@@ -153,7 +153,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def tablePath(ident: Identifier): Path =
     pathOf(ident.namespace.toIndexedSeq :+ ident.name)
 
-  private def isTableDir(p: Path): Boolean = fs.exists(new Path(p, "_graft_log"))
+  private def isTableDir(p: Path): Boolean = new GraftLog(p, () => fs).exists
 
   // ---- tables ----------------------------------------------------------
 
@@ -226,14 +226,15 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           StructField("created_ts", LongType),
           StructField("last_modified_ts", LongType)))
         Some(new GraftMetadataTable(identString(ident), schema, () => {
-          val files = t.currentFiles
+          val s = t.log.snapshot()
+          val m = s.meta
           val hist = t.history
-          val (rf, wf) = t.features
-          Seq(Row(t.location, t.version, files.size.toLong,
-            files.map(GraftTable.liveRows).sum, files.map(_.bytes).sum,
-            t.keyCol.orNull, t.partitionBy, t.constraints,
-            t.colmapNow, t.sortOrder, t.bloomFilterColumns, t.listBranches,
-            rf, wf, t.columnNdv, hist.head.ts, hist.last.ts))
+          Seq(Row(t.location, s.version, s.files.size.toLong,
+            s.files.map(GraftTable.liveRows).sum, s.files.map(_.bytes).sum,
+            t.keyCol.orNull, t.partitionBy, m.constraints,
+            m.colmap, m.logicalSort, m.byLogical(m.bloom), t.listBranches,
+            m.readerFeatures.toSeq.sorted, m.writerFeatures.toSeq.sorted,
+            m.byLogical(m.ndv), hist.head.ts, hist.last.ts))
         }))
       case "branches" =>
         // live (unpublished) WAP branches: name, the main version they were
@@ -749,18 +750,18 @@ private[tables] final class GraftSqlTable(
   override def name(): String =
     ident + asOf.map(v => s" VERSION AS OF $v").getOrElse("")
 
-  // snapshot ISOLATION per loadTable: the version is pinned ONCE per Table
-  // instance (lazily, at first scan build), and Spark's analyzer resolves
-  // duplicate references to one table in a single query to the same
-  // relation — so a self-join/union over the live table reads one
-  // consistent version even if a commit lands mid-query. A fresh statement
-  // resolves a fresh Table and sees the latest commit.
-  private lazy val pinnedRead: Long = asOf.getOrElse(gt.version)
+  // snapshot ISOLATION per loadTable: ONE log listing and replay per Table
+  // instance (lazily, at first use) serves its schema, scan, statistics
+  // and aggregate pushdown, and Spark's analyzer resolves duplicate
+  // references to one table in a single query to the same relation — so a
+  // self-join/union over the live table reads one consistent version even
+  // if a commit lands mid-query. A fresh statement resolves a fresh Table
+  // and sees the latest commit.
+  private lazy val pinned: Snapshot = gt.log.snapshot(asOf)
 
-  override def schema(): StructType = asOf match {
-    case Some(v) => gt.snapshot(Some(v)).schema
-    case None => gt.schema
-  }
+  override def schema(): StructType =
+    if (asOf.isDefined) gt.read(pinned, timeTravel = true).schema
+    else pinned.meta.schema
 
   /** The table's partition specs as V2 transforms — what the analyzer
     * validates `INSERT OVERWRITE … PARTITION (...)` clauses and SHOW
@@ -802,7 +803,7 @@ private[tables] final class GraftSqlTable(
       TableCapability.OVERWRITE_DYNAMIC, TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(gt, pinnedRead, asOf.isDefined, schema(), options)
+    new GraftScanBuilder(gt, pinned, asOf.isDefined, schema(), options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty, s"$name is a time-travel read; writes must target the live table")
@@ -842,7 +843,7 @@ private[tables] final class GraftSqlTable(
   *   - any pushed filter, grouping, or DISTINCT blocks the push.
   */
 private[tables] final class GraftScanBuilder(
-    gt: GraftTable, pinned: Long, timeTravel: Boolean, full: StructType,
+    gt: GraftTable, pinned: Snapshot, timeTravel: Boolean, full: StructType,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
   extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
@@ -892,7 +893,7 @@ private[tables] final class GraftScanBuilder(
       : Option[(StructType, org.apache.spark.sql.Row, String)] = {
     import org.apache.spark.sql.types._
     if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty) return None
-    val files = gt.filesAt(pinned)
+    val files = pinned.files
     val dataFiles = files.filter(GraftTable.liveRows(_) > 0)
     // a file with a DELETION VECTOR makes its logged footer stats an
     // over-approximation of the live rows (the deleted rows might have
@@ -940,7 +941,7 @@ private[tables] final class GraftScanBuilder(
     // per-consumer soundness rules instead of a blanket refusal.
     def statsOf(c: String): Option[Seq[(GraftTable.AddFile, GraftTable.KeyStats)]] = {
       val ss = dataFiles.map(f =>
-        (if (isPart(c)) pvStats(f, c) else gt.logicalStats(pinned, f, c)).map(f -> _))
+        (if (isPart(c)) pvStats(f, c) else f.cs.get(pinned.meta.physName(c))).map(f -> _))
       if (ss.forall(_.isDefined)) Some(ss.flatten) else None
     }
     // integral/date zone maps are exact ("long" kind); partition-sourced
@@ -1083,7 +1084,7 @@ private[tables] final class GraftScanBuilder(
             org.apache.spark.sql.connector.expressions.NamedReference,
             org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
           if (pushedAgg.isEmpty) {
-            val ndv = gt.columnNdvAt(pinned)
+            val ndv = pinned.meta.byLogical(pinned.meta.ndv)
             required.fieldNames.foreach { c =>
               ndv.get(c).foreach { n =>
                 m.put(
@@ -1119,15 +1120,15 @@ private[tables] final class GraftScanBuilder(
               // query never even opens the files it cannot match
               val preds = pushed.toIndexedSeq.map(V1FilterConverter.toColumn(_).get)
               val filtered =
-                if (preds.isEmpty) gt.snapshot(Some(pinned))
-                else gt.scan(preds.reduce(_ && _), Some(pinned))
+                if (preds.isEmpty) gt.read(pinned, timeTravel = true)
+                else gt.scanOf(pinned, preds.reduce(_ && _), timeTravel = true)
               filtered.select(required.fieldNames.toIndexedSeq.map(col): _*).rdd
           }
       }
       relation.asInstanceOf[T]
     }
     override def description(): String =
-      s"graft-table ${gt.location}" + (if (timeTravel) s"@v$pinned" else "") +
+      s"graft-table ${gt.location}" + (if (timeTravel) s"@v${pinned.version}" else "") +
         pushedAgg.fold("")(a => s" PushedAggregates: [${a._3}]")
 
     // `spark.readStream.table("graft.ns.t")` — the same micro-batch
@@ -1296,9 +1297,9 @@ private[tables] final class GraftStagedTable(
   override def commitStagedChanges(): Unit = {
     val df = captured.getOrElse(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema))
-    val logDir = new Path(path, "_graft_log")
-    val exists = logDir.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(logDir)
+    val root = new Path(path)
+    val exists = new GraftLog(root,
+      () => root.getFileSystem(spark.sessionState.newHadoopConf())).exists
     val t =
       if (exists) {
         GraftTable.at(spark, path).replaceWith(df, keyCol, partCols, cons)

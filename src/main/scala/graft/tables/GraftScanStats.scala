@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, 
   * The catalog's read face is a [[org.apache.spark.sql.connector.read.V1Scan]]
   * (full type support through the public JDBC-v2 bridge), and that scan now
   * reports REAL statistics — zone-map-pruned file bytes, deletion-vector
-  * adjusted, column-ratio scaled ([[GraftTable.estimatedScanBytes]]). But
+  * adjusted, column-ratio scaled ([[GraftTable.estimatedScan]]). But
   * `V2ScanRelationPushDown` wraps every V1Scan in a `V1ScanWrapper` that
   * does NOT forward `SupportsReportStatistics`, so by the time JoinSelection
   * reads the relation's stats it sees `defaultSizeInBytes` (effectively

@@ -4,7 +4,6 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -55,7 +54,6 @@ final class GraftTable private (
     val location: String,
     spark: SparkSession,
     val keyCol: Option[String],
-    schemaJson: String,
     val partitionBy: Seq[String] = Nil) {
 
   import GraftTable._
@@ -87,56 +85,14 @@ final class GraftTable private (
     */
   private def partSourceCols: Seq[String] = partSpecs.map(_.sourceCol)
 
-  /** The schema is versioned WITH the data: every commit's metadata carries
-    * the schema in force at that version, so time travel reads old versions
-    * with their own (pre-evolution) schema.
+  /** The table's commit log ([[GraftLog]]). Every public statement lists
+    * it ONCE: it takes a [[Snapshot]] — version, metadata and (replayed on
+    * first use) active files — and derives everything else from it; the
+    * OCC retry loops take a fresh snapshot per attempt.
     */
-  // commit files are immutable once written (vacuum never touches the
-  // log), so parsed commits memoize safely — snapshot assembly stays one
-  // file-read per NEW version instead of O(versions) re-reads per op
-  private val commitCache =
-    scala.collection.concurrent.TrieMap.empty[Long, (Map[String, Any], Seq[AddFile], Seq[String])]
-  private def cachedCommit(v: Long): (Map[String, Any], Seq[AddFile], Seq[String]) =
-    commitCache.getOrElseUpdate(v, readCommit(fs, logDir, v))
+  private[tables] val log = new GraftLog(new Path(location), () => fs)
 
-  private def schemaAt(v: Long): StructType =
-    DataType.fromJson(cachedCommit(v)._1
-      .get("schema").map(_.toString).getOrElse(schemaJson)).asInstanceOf[StructType]
-
-  /** COLUMN MAPPING (rename support): each commit's metadata carries the
-    * logical→physical name map in force at that version (non-identity
-    * entries only; absent = identity, so pre-mapping logs read unchanged).
-    * PHYSICAL names — what parquet files store — are assigned when a
-    * column first appears and NEVER change; `renameColumn` only rebinds the
-    * logical name in a metadata commit. Files written in any era therefore
-    * resolve by their stable physical names, and time travel reads each
-    * version under its own logical names. This is the published lakehouse
-    * column-mapping design (name-mode), scoped to renames: DROP stays loud,
-    * and the key/partition columns cannot be renamed (their names are load-
-    * bearing in the log's stats and partition tuples).
-    */
-  private def colmapAt(v: Long): Map[String, String] =
-    cachedCommit(v)._1.get("colmap") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, pv) => k -> pv.toString }.toMap
-      case _ => Map.empty
-    }
-
-  private def currentColmap: Map[String, String] =
-    listVersions(fs, logDir).lastOption.map(colmapAt).getOrElse(Map.empty)
-
-  /** ANALYZE-computed per-column NDV (approx distinct counts) in force at
-    * a version, keyed by PHYSICAL name (rename-stable). Advisory planner
-    * statistics — staleness affects plan quality, never correctness.
-    */
-  private def ndvAt(v: Long): Map[String, Long] =
-    cachedCommit(v)._1.get("ndv") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, n) => k -> n.asInstanceOf[Number].longValue }.toMap
-      case _ => Map.empty
-    }
+  private def latest(): Snapshot = log.snapshot()
 
   /** ANALYZE: compute per-column approximate distinct counts in ONE pass
     * (`approx_count_distinct`, the HLL sketch — at 100 TB a single scan,
@@ -152,8 +108,8 @@ final class GraftTable private (
     * file moves. Returns the NDV map by LOGICAL name.
     */
   def analyze(columns: Seq[String] = Nil): Map[String, Long] = {
-    val v = version
-    val schema = schemaAt(v)
+    val s = latest()
+    val schema = s.meta.schema
     val atomic = schema.fields.filterNot(f => f.dataType match {
       case _: org.apache.spark.sql.types.ArrayType |
            _: org.apache.spark.sql.types.MapType | _: StructType => true
@@ -162,39 +118,23 @@ final class GraftTable private (
     val cols = if (columns.isEmpty) atomic else columns
     cols.foreach(c => require(atomic.contains(c),
       s"analyze: no atomic column '$c' in ${schema.fieldNames.mkString(",")}"))
-    val row = labeled("analyze")(snapshot(Some(v))
+    val row = labeled("analyze")(read(s, timeTravel = true)
       .agg(count(lit(1)).as("__n"),
         cols.map(c => approx_count_distinct(col(c)).as(c)): _*).head())
-    val cm = colmapAt(v)
     val byLogical = cols.zipWithIndex
       .map { case (c, i) => c -> row.getLong(i + 1) }.toMap
-    val byPhys = byLogical.map { case (c, n) => physName(cm, c) -> n }
-    commit(v, "analyze", Nil, Nil, dataChange = false,
-      newNdv = Some(ndvAt(v) ++ byPhys))
+    val byPhys = byLogical.map { case (c, n) => s.meta.physName(c) -> n }
+    commit(s, "analyze", Nil, Nil,
+      edit = m => m.copy(ndv = m.ndv ++ byPhys, dataChange = false))
     byLogical
   }
 
   /** The ANALYZE statistics in force, by LOGICAL column name (dropped
     * columns' stale entries are not surfaced).
     */
-  def columnNdv: Map[String, Long] = columnNdvAt(version)
-
-  private[tables] def columnNdvAt(v: Long): Map[String, Long] = {
-    val cm = colmapAt(v)
-    val n = ndvAt(v)
-    schemaAt(v).fieldNames.toSeq
-      .flatMap(l => n.get(physName(cm, l)).map(l -> _)).toMap
-  }
-
-  /** The (readerFeatures, writerFeatures) sets a version's commit carries —
-    * empty for legacy commits predating the protocol gate.
-    */
-  private def featuresAt(v: Long): (Set[String], Set[String]) = {
-    def get(k: String): Set[String] = cachedCommit(v)._1.get(k) match {
-      case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSet
-      case _ => Set.empty
-    }
-    (get("readerFeatures"), get("writerFeatures"))
+  def columnNdv: Map[String, Long] = {
+    val m = latest().meta
+    m.byLogical(m.ndv)
   }
 
   /** The protocol feature sets in force at the current version (reader,
@@ -202,76 +142,15 @@ final class GraftTable private (
     * [[GraftTable.SupportedReaderFeatures]]).
     */
   def features: (Seq[String], Seq[String]) = {
-    val (r, w) = featuresAt(version)
-    (r.toSeq.sorted, w.toSeq.sorted)
+    val m = latest().meta
+    (m.readerFeatures.toSeq.sorted, m.writerFeatures.toSeq.sorted)
   }
-
-  /** Physical names RETIRED by DROP COLUMN, carried forward in every
-    * commit's metadata: dropped columns' values still live in old files,
-    * so a later column must never bind the same physical name — by-name
-    * parquet resolution would resurface the dead values. `addColumns`
-    * assigns a fresh physical name on collision; the commit invariant
-    * below rejects any other path that would reuse one.
-    */
-  private def retiredAt(v: Long): Seq[String] =
-    cachedCommit(v)._1.get("retired") match {
-      case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSeq
-      case _ => Nil
-    }
-
-  /** CHECK constraints (name → predicate SQL) in force at a version,
-    * carried forward in commit metadata like the column mapping.
-    */
-  private def constraintsAt(v: Long): Map[String, String] =
-    cachedCommit(v)._1.get("constraints") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, pv) => k -> pv.toString }.toMap
-      case _ => Map.empty
-    }
 
   /** The live CHECK constraints (name → predicate SQL). */
-  def constraints: Map[String, String] =
-    listVersions(fs, logDir).lastOption.map(constraintsAt).getOrElse(Map.empty)
-
-  /** BLOOM FILTER INDEX config (PHYSICAL column name → expected NDV) in
-    * force at a version, carried forward in commit metadata like the
-    * column mapping. Physical names keep the config stable across
-    * renames; see [[BloomIndex]] for the design.
-    */
-  private def bloomAt(v: Long): Map[String, Long] =
-    cachedCommit(v)._1.get("bloom") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, n) => k -> n.asInstanceOf[Number].longValue }.toMap
-      case _ => Map.empty
-    }
-
-  private def currentBloom: Map[String, Long] =
-    listVersions(fs, logDir).lastOption.map(bloomAt).getOrElse(Map.empty)
-
-  /** WRITE-TIME SORT ORDER (physical column names) in force at a version,
-    * carried forward in commit metadata like the bloom config. See
-    * [[setSortOrder]].
-    */
-  private def sortAt(v: Long): Seq[String] =
-    cachedCommit(v)._1.get("sort") match {
-      case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSeq
-      case _ => Nil
-    }
-
-  private def currentSort: Seq[String] =
-    listVersions(fs, logDir).lastOption.map(sortAt).getOrElse(Nil)
+  def constraints: Map[String, String] = latest().meta.constraints
 
   /** The live write-time sort order, keyed by LOGICAL column name. */
-  def sortOrder: Seq[String] = {
-    val v = version
-    val cm = colmapAt(v)
-    val srt = sortAt(v)
-    val byPhys = schemaAt(v).fieldNames.toIndexedSeq
-      .map(l => physName(cm, l) -> l).toMap
-    srt.flatMap(byPhys.get)
-  }
+  def sortOrder: Seq[String] = latest().meta.logicalSort
 
   /** Declare a WRITE-TIME SORT ORDER in ONE metadata commit (the Iceberg
     * sorted-table + range-write-distribution contract): every user-facing
@@ -294,9 +173,8 @@ final class GraftTable private (
     * optimize stream-fed tables to recover the layout.
     */
   def setSortOrder(cols: Seq[String]): Long = {
-    val v = version
-    val schema = schemaAt(v)
-    val cm = colmapAt(v)
+    val s = latest()
+    val schema = s.meta.schema
     require(cols.distinct == cols, "duplicate sort columns")
     val phys = cols.map { l =>
       val f = schema.fields.find(_.name == l).getOrElse(
@@ -310,25 +188,15 @@ final class GraftTable private (
             "(orderable atomic columns only)")
         case _ => ()
       }
-      physName(cm, l)
+      s.meta.physName(l)
     }
-    commit(v, "setSortOrder", Nil, Nil, newSort = Some(phys))
+    commit(s, "setSortOrder", Nil, Nil, edit = _.copy(sort = phys))
   }
-
-  /** The partition spec strings in force at a version (every commit
-    * carries them — see metaMap). Backs the stale-handle commit guard and
-    * [[setPartitioning]].
-    */
-  private def partitionByAt(v: Long): Seq[String] =
-    GraftTable.decodePartitionBy(cachedCommit(v)._1.get("partitionBy"))
 
   /** The live bloom-index config keyed by LOGICAL column name. */
   def bloomFilterColumns: Map[String, Long] = {
-    val v = version
-    val cm = colmapAt(v)
-    val bl = bloomAt(v)
-    schemaAt(v).fieldNames.toIndexedSeq
-      .flatMap(l => bl.get(physName(cm, l)).map(l -> _)).toMap
+    val m = latest().meta
+    m.byLogical(m.bloom)
   }
 
   /** Configure the table's bloom filter index in ONE metadata commit:
@@ -342,9 +210,8 @@ final class GraftTable private (
     * timestamp literals is not a probeable point domain here).
     */
   def setBloomFilter(cols: Map[String, Long]): Long = {
-    val v = version
-    val schema = schemaAt(v)
-    val cm = colmapAt(v)
+    val s = latest()
+    val schema = s.meta.schema
     val phys = cols.map { case (l, ndv) =>
       require(ndv > 0, s"expected NDV for '$l' must be positive, got $ndv")
       val f = schema.fields.find(_.name == l).getOrElse(throw new IllegalArgumentException(
@@ -356,9 +223,9 @@ final class GraftTable private (
           s"bloom filter on '$l': unsupported type ${dt.simpleString} " +
             "(integral, string and date columns only)")
       }
-      physName(cm, l) -> ndv
+      s.meta.physName(l) -> ndv
     }
-    commit(v, "setBloomFilter", Nil, Nil, newBloom = Some(phys))
+    commit(s, "setBloomFilter", Nil, Nil, edit = _.copy(bloom = phys))
   }
 
   /** Per-(file, physical column) bloom bitsets, one entry per row group
@@ -406,26 +273,26 @@ final class GraftTable private (
         s"'${GraftTable.ReservedConstraintPrefix}' prefix (engine-internal " +
         "checks — generated-column validation, partition-scope guards — " +
         "live in that namespace)")
-    val v = version
-    val cur = constraintsAt(v)
+    val s = latest()
+    val cur = s.meta.constraints
     require(!cur.contains(name),
       s"constraint '$name' already exists (${cur(name)})")
     val pred = expr(predicateSql) // resolution fails loud on bad references
     val bad = labeled("constraint scan")(
-      snapshot().where(!coalesce(pred, lit(true))).limit(1).count())
+      read(s, timeTravel = false).where(!coalesce(pred, lit(true))).limit(1).count())
     require(bad == 0,
       s"cannot add constraint '$name': existing row(s) violate ($predicateSql)")
-    commit(v, "addConstraint", Nil, Nil,
-      newConstraints = Some(cur + (name -> predicateSql)))
+    commit(s, "addConstraint", Nil, Nil,
+      edit = _.copy(constraints = cur + (name -> predicateSql)))
   }
 
   /** Drop a CHECK constraint (metadata commit, loud when unknown). */
   def dropConstraint(name: String): Long = {
-    val v = version
-    val cur = constraintsAt(v)
+    val s = latest()
+    val cur = s.meta.constraints
     require(cur.contains(name),
       s"no constraint '$name' (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
-    commit(v, "dropConstraint", Nil, Nil, newConstraints = Some(cur - name))
+    commit(s, "dropConstraint", Nil, Nil, edit = _.copy(constraints = cur - name))
   }
 
   /** GENERATED ALWAYS AS columns of the current schema (name → generation
@@ -444,7 +311,7 @@ final class GraftTable private (
     * makes the column trustworthy for partition transforms and data
     * skipping.
     */
-  def generatedColumns: Map[String, String] = GraftTable.generatedOf(tableSchema)
+  def generatedColumns: Map[String, String] = GraftTable.generatedOf(schema)
 
   /** Resolve + vet a generation expression: must resolve over the base
     * (non-generated) columns only and be deterministic — a generated
@@ -491,21 +358,7 @@ final class GraftTable private (
     * row assigns it a fresh value (replace = delete + insert).
     */
   def identityColumns: Map[String, IdentitySpec] =
-    GraftTable.identityOf(tableSchema)
-
-  /** Identity high-water marks (name → furthest assigned value) at a
-    * version, carried in commit metadata like the column mapping.
-    */
-  private def idHwmAt(v: Long): Map[String, Long] =
-    cachedCommit(v)._1.get("idhwm") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, n) => k -> n.asInstanceOf[Number].longValue }.toMap
-      case _ => Map.empty
-    }
-
-  private def currentIdHwm: Map[String, Long] =
-    listVersions(fs, logDir).lastOption.map(idHwmAt).getOrElse(Map.empty)
+    GraftTable.identityOf(schema)
 
   /** Whether this table enforces UNIQUE merge keys on every write (opt-in
     * at create). The merge/CDF machinery ASSUMES snapshot-unique keys
@@ -517,8 +370,10 @@ final class GraftTable private (
     * write does not replace — at 100 TB a clustered key prunes that probe
     * to a sliver; a hash-spread key should carry a bloom index).
     */
-  def uniqueKeyEnforced: Boolean = keyCol.exists(k =>
-    tableSchema.fields.find(_.name == k).exists(f =>
+  def uniqueKeyEnforced: Boolean = uniqueKeyIn(schema)
+
+  private def uniqueKeyIn(schema: StructType): Boolean = keyCol.exists(k =>
+    schema.fields.find(_.name == k).exists(f =>
       f.metadata.contains(GraftTable.KeyUniqueKey) &&
         f.metadata.getBoolean(GraftTable.KeyUniqueKey)))
 
@@ -528,9 +383,9 @@ final class GraftTable private (
     * write removes). Runs BEFORE anything is written — a violation
     * commits nothing and writes nothing.
     */
-  private def requireUniqueKeys(df: DataFrame, excludePaths: Set[String],
+  private def requireUniqueKeys(s: Snapshot, df: DataFrame, excludePaths: Set[String],
       what: String): Unit = {
-    if (!uniqueKeyEnforced) return
+    if (!uniqueKeyIn(s.meta.schema)) return
     val k = keyCol.get
     val agg = labeled("unique-key probe")(
       df.agg(count(lit(1)).as("n"), count(col(k)).as("nn"),
@@ -543,14 +398,13 @@ final class GraftTable private (
       s"$what violates UNIQUE KEY '$k': " +
         s"${agg.getLong(1) - agg.getLong(2)} duplicate key(s) in the batch")
     if (agg.getLong(0) == 0) return
-    val v = version
-    val candidates = activeFiles(v)
+    val candidates = s.files
       .filterNot(f => excludePaths.contains(f.path))
       .filter(f => f.rows > 0 &&
         f.stats.forall(_.intersects(agg.get(3), agg.get(4))))
     if (candidates.isEmpty) return
     val hits = labeled("unique-key existence")(
-      readFiles(candidates, v).select(col(k))
+      readFiles(candidates, s.meta).select(col(k))
         .join(df.select(col(k)).distinct(), Seq(k), "left_semi")
         .limit(1).count())
     require(hits == 0,
@@ -576,9 +430,11 @@ final class GraftTable private (
     * and cannot coalesce-compute, so a stream must SUPPLY generated
     * values exactly; a mismatch aborts the epoch like any CHECK).
     */
-  private[tables] def rowCheckSqls: Map[String, String] =
-    constraints ++ generatedColumns.map { case (n, e) =>
+  private[tables] def rowCheckSqls: Map[String, String] = {
+    val m = latest().meta
+    m.constraints ++ GraftTable.generatedOf(m.schema).map { case (n, e) =>
       s"${GraftTable.ReservedConstraintPrefix}generated_$n" -> s"$n <=> ($e)" }
+  }
 
   /** UPDATE-recompute semantics for generated columns (the Delta
     * behavior): an assignment set that writes a generated column's SOURCE
@@ -587,15 +443,17 @@ final class GraftTable private (
     * from the NEW values. Setting it explicitly (including to a value that
     * must match) is validated per row like any supplied value.
     */
-  private def withAutoGenerated(assigns: Map[String, Column]): Map[String, Column] =
-    assigns ++ generatedColumns.collect {
+  private def withAutoGenerated(assigns: Map[String, Column],
+      schema: StructType): Map[String, Column] =
+    assigns ++ GraftTable.generatedOf(schema).collect {
       case (n, e) if !assigns.contains(n) &&
           constraintRefs(e).exists(r => assigns.keys.exists(_.equalsIgnoreCase(r))) =>
         n -> lit(null)
     }
 
-  private def requireNoGeneratedOn(colName: String, op: String): Unit =
-    generatedColumns.foreach { case (n, sql) =>
+  private def requireNoGeneratedOn(colName: String, op: String,
+      schema: StructType): Unit =
+    GraftTable.generatedOf(schema).foreach { case (n, sql) =>
       require(n == colName || !constraintRefs(sql).exists(_.equalsIgnoreCase(colName)),
         s"cannot $op column '$colName': generated column '$n' ($sql) " +
           s"derives from it — drop '$n' first")
@@ -609,24 +467,17 @@ final class GraftTable private (
           a.nameParts.head
       }
 
-  private def requireNoConstraintOn(colName: String, op: String): Unit =
+  private def requireNoConstraintOn(colName: String, op: String,
+      constraints: Map[String, String]): Unit =
     constraints.foreach { case (nm, sql) =>
       require(!constraintRefs(sql).exists(_.equalsIgnoreCase(colName)),
         s"cannot $op column '$colName': CHECK constraint '$nm' ($sql) " +
           "references it — drop the constraint first")
     }
 
-  private def physName(cm: Map[String, String], c: String): String =
-    cm.getOrElse(c, c)
-
   /** The logical schema with field names swapped to their physical names
     * (order and types unchanged — a positional rename away from logical).
-    */
-  private def physicalSchema(logical: StructType, cm: Map[String, String]): StructType =
-    if (cm.isEmpty) logical
-    else StructType(logical.fields.map(f => f.copy(name = physName(cm, f.name))))
-
-  /** The stream faces read/write raw parquet against physical names —
+    * The stream faces read/write raw parquet against physical names —
     * resolved through a colmap the STREAM anchors at construction (not the
     * current one: a column renamed before stream start and renamed again
     * mid-stream would otherwise fall back to a name that is neither logical
@@ -634,11 +485,13 @@ final class GraftTable private (
     * fails loud on drift instead, the published non-additive-schema-change
     * contract).
     */
-  private[tables] def physicalSchemaOf(logical: StructType,
-      cm: Map[String, String]): StructType = physicalSchema(logical, cm)
+  private[tables] def physicalSchema(logical: StructType,
+      cm: Map[String, String]): StructType =
+    if (cm.isEmpty) logical
+    else StructType(logical.fields.map(f => f.copy(name = cm.getOrElse(f.name, f.name))))
 
   /** The colmap in force right now (for streams to anchor / drift-check). */
-  private[tables] def colmapNow: Map[String, String] = currentColmap
+  private[tables] def colmapNow: Map[String, String] = latest().meta.colmap
 
   /** Read table files under version `asOf`'s schema: physical names on the
     * parquet scan (stable across renames), logical names on the result.
@@ -647,12 +500,12 @@ final class GraftTable private (
     * [[GraftTable.FileNameCol]] / [[GraftTable.RowIdxCol]] — the exact
     * touched-file and DV-position vocabulary the DML paths need.
     */
-  private def readFiles(files: Seq[AddFile], asOf: Long,
+  private def readFiles(files: Seq[AddFile], meta: TableMeta,
       withMeta: Boolean = false): DataFrame = {
-    val logical = schemaAt(asOf)
-    val phys = physicalSchema(logical, colmapAt(asOf))
-    val df = readPhysical(files, phys, withMeta, bucketSpecFor(files, asOf),
-      partitionLayoutFor(files, asOf))
+    val logical = meta.schema
+    val phys = physicalSchema(logical, meta.colmap)
+    val df = readPhysical(files, phys, withMeta, bucketSpecFor(files, meta),
+      partitionLayoutFor(files, meta))
     val outNames = logical.fieldNames.toIndexedSeq ++
       (if (withMeta) Seq(FileNameCol, RowIdxCol) else Nil)
     df.toDF(outNames: _*)
@@ -671,9 +524,9 @@ final class GraftTable private (
     * simply disables the claim: the read stays correct, it just shuffles
     * like an unbucketed one.
     */
-  private def bucketSpecFor(fset: Seq[AddFile], asOf: Long)
+  private def bucketSpecFor(fset: Seq[AddFile], meta: TableMeta)
       : Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
-    val byKey = partitionByAt(asOf)
+    val byKey = meta.partitionBy
       .map(s => s -> PartitionTransforms.parse(s))
     byKey.collectFirst {
       case (key, b: PartitionTransforms.Bucket) => (key, b)
@@ -686,7 +539,7 @@ final class GraftTable private (
       }
       if (pure)
         Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-          b.n, Seq(physName(colmapAt(asOf), b.sourceCol)), Nil))
+          b.n, Seq(meta.physName(b.sourceCol)), Nil))
       else None
     }
   }
@@ -711,16 +564,15 @@ final class GraftTable private (
     * default-partition token conflates NULL and the empty string, which
     * pruning may treat as "unknown" but a substituting read must not.
     */
-  private def partitionLayoutFor(fset: Seq[AddFile], asOf: Long)
+  private def partitionLayoutFor(fset: Seq[AddFile], meta: TableMeta)
       : Option[(StructType, AddFile => org.apache.spark.sql.catalyst.InternalRow)] = {
     import org.apache.spark.sql.types._
-    val schema = schemaAt(asOf)
-    val cm = colmapAt(asOf)
-    val ids = partitionByAt(asOf).map(s => s -> PartitionTransforms.parse(s))
+    val schema = meta.schema
+    val ids = meta.partitionBy.map(s => s -> PartitionTransforms.parse(s))
       .collect { case (key, PartitionTransforms.Identity(c)) => (key, c) }
     if (ids.isEmpty || fset.isEmpty) return None
     val cols = ids.flatMap { case (key, c) =>
-      schema.fields.find(_.name == c).map(f => (key, physName(cm, c), f.dataType))
+      schema.fields.find(_.name == c).map(f => (key, meta.physName(c), f.dataType))
     }
     if (cols.size != ids.size) return None
     val exactRoundTrip = cols.forall {
@@ -855,18 +707,8 @@ final class GraftTable private (
     }
   }
 
-  // pre-first-commit (inside create) the log is empty: use the
-  // construction-time schema
-  private def tableSchema: StructType =
-    listVersions(fs, logDir).lastOption.map(schemaAt)
-      .getOrElse(DataType.fromJson(schemaJson).asInstanceOf[StructType])
-
   /** The table's current schema (latest committed version's). */
-  def schema: StructType = tableSchema
-
-  // the streaming source plans batches straight off the commit log
-  private[tables] def commitActions(v: Long): (Map[String, Any], Seq[AddFile], Seq[String]) =
-    cachedCommit(v)
+  def schema: StructType = latest().meta.schema
 
   /** The table as a Structured Streaming micro-batch source (offsets =
     * versions; append-only contract — see [[GraftTableStreamSource]]).
@@ -885,7 +727,6 @@ final class GraftTable private (
 
   private def conf: Configuration = spark.sessionState.newHadoopConf()
   private def fs: FileSystem = new Path(location).getFileSystem(conf)
-  private def logDir = new Path(location, LogDirName)
 
   /** Label the Spark jobs an internal op submits (the guide's job-
     * description practice — a 30-job table operation is unreadable in the
@@ -921,29 +762,27 @@ final class GraftTable private (
   }
 
   /** Latest committed version (≥ 1 — creation is version 1). */
-  def version: Long = listVersions(fs, logDir).lastOption.getOrElse(
-    throw new IllegalStateException(s"no commits under $logDir"))
+  def version: Long = log.listing().versions.lastOption.getOrElse(
+    throw new IllegalStateException(s"no commits under ${log.dir}"))
 
-  /** Active data files at `asOf` (defaults to latest): replay the log from
-    * the newest checkpoint at-or-before `asOf` (full replay when none) —
-    * cold snapshot assembly reads one checkpoint + the commit tail, not
-    * every commit since table creation.
+  /** Time travel needs the files a version references: fail LOUD (one
+    * root listing, only on the time-travel path) naming the vacuumed files,
+    * not with a mid-job FileNotFoundException.
     */
-  private def activeFiles(asOf: Long): Seq[AddFile] = {
-    val all = listVersions(fs, logDir)
-    require(all.contains(asOf),
-      s"version $asOf does not exist under $logDir (have ${all.mkString(",")})")
-    val cp = listCheckpoints(fs, logDir).filter(_ <= asOf).lastOption
-    val active = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    cp.foreach { v =>
-      readCheckpoint(fs, logDir, v).foreach(a => active(a.path) = a)
-    }
-    all.filter(v => v <= asOf && cp.forall(v > _)).foreach { v =>
-      val (_, adds, removes) = cachedCommit(v)
-      removes.foreach(active.remove)
-      adds.foreach(a => active(a.path) = a)
-    }
-    active.values.toSeq
+  private def requireOnDisk(v: Long, files: Seq[AddFile]): Unit = {
+    val gone = missing(files.map(_.path))
+    if (gone.nonEmpty) throw new IllegalStateException(
+      s"version $v references ${gone.size} file(s) reclaimed by vacuum() " +
+        s"(e.g. ${gone.head}); time travel to it is no longer possible — " +
+        "the oldest fully-materialized version is the current one")
+  }
+
+  /** `s`'s rows under its own schema and logical names (physical
+    * resolution inside readFiles); `timeTravel` adds the vacuum check.
+    */
+  private[tables] def read(s: Snapshot, timeTravel: Boolean): DataFrame = {
+    if (timeTravel) requireOnDisk(s.version, s.files)
+    readFiles(s.files, s.meta)
   }
 
   /** Snapshot read; `versionAsOf` replays the log to a past version (time
@@ -952,20 +791,8 @@ final class GraftTable private (
     * FileNotFoundException: one root listing, only on the time-travel path,
     * names the vacuumed files and the surviving horizon).
     */
-  def snapshot(versionAsOf: Option[Long] = None): DataFrame = {
-    val asOf = versionAsOf.getOrElse(version)
-    val files = activeFiles(asOf)
-    if (versionAsOf.isDefined) {
-      val gone = missing(files.map(_.path))
-      if (gone.nonEmpty) throw new IllegalStateException(
-        s"version $asOf references ${gone.size} file(s) reclaimed by vacuum() " +
-          s"(e.g. ${gone.head}); time travel to it is no longer possible — " +
-          "the oldest fully-materialized version is the current one")
-    }
-    // pre-evolution versions read with THEIR schema (and THEIR logical
-    // names — physical resolution inside readFiles)
-    readFiles(files, asOf)
-  }
+  def snapshot(versionAsOf: Option[Long] = None): DataFrame =
+    read(log.snapshot(versionAsOf), versionAsOf.isDefined)
 
   /** Partition-pruned snapshot: `partitionPred` may reference ONLY the
     * table's partition columns (any other reference fails analysis loud —
@@ -987,22 +814,16 @@ final class GraftTable private (
       "snapshotWhere takes predicates over identity partition COLUMNS; " +
         "transform-partitioned tables prune point lookups on the source " +
         "column automatically through scan(pred)")
-    val asOf = versionAsOf.getOrElse(version)
-    val files = activeFiles(asOf)
-    val schema = schemaAt(asOf)
+    val s = log.snapshot(versionAsOf)
+    val files = s.files
     // files from a pre-evolution spec may lack the current partition keys:
     // they are KEPT unconditionally (the re-applied row filter below makes
     // the result exact) — partition evolution must never lose their rows
     val (tupled, legacy) = files.partition(f => partitionBy.forall(f.pv.contains))
-    val kept = prunePartitions(tupled.map(_.pv).distinct, partitionPred, schema)
+    val kept = prunePartitions(tupled.map(_.pv).distinct, partitionPred, s.meta.schema)
     val sel = tupled.filter(f => kept(f.pv)) ++ legacy
-    if (versionAsOf.isDefined) { // same loud vacuum contract as snapshot()
-      val gone = missing(sel.map(_.path))
-      if (gone.nonEmpty) throw new IllegalStateException(
-        s"version $asOf references ${gone.size} file(s) reclaimed by vacuum() " +
-          s"(e.g. ${gone.head}); time travel to it is no longer possible")
-    }
-    readFiles(sel, asOf).where(partitionPred)
+    if (versionAsOf.isDefined) requireOnDisk(s.version, sel)
+    readFiles(sel, s.meta).where(partitionPred)
   }
 
   /** Evaluate `pred` over the distinct partition tuples with Catalyst: build
@@ -1044,16 +865,13 @@ final class GraftTable private (
     * files whose ranges overlap it — compaction and Z-order layout (q95)
     * exist precisely to keep those ranges tight.
     */
-  def scan(pred: Column, versionAsOf: Option[Long] = None): DataFrame = {
-    val asOf = versionAsOf.getOrElse(version)
-    val sel = scanCandidates(pred, asOf)
-    if (versionAsOf.isDefined) { // same loud vacuum contract as snapshot()
-      val gone = missing(sel.map(_.path))
-      if (gone.nonEmpty) throw new IllegalStateException(
-        s"version $asOf references ${gone.size} file(s) reclaimed by vacuum() " +
-          s"(e.g. ${gone.head}); time travel to it is no longer possible")
-    }
-    readFiles(sel, asOf).where(pred)
+  def scan(pred: Column, versionAsOf: Option[Long] = None): DataFrame =
+    scanOf(log.snapshot(versionAsOf), pred, versionAsOf.isDefined)
+
+  private[tables] def scanOf(s: Snapshot, pred: Column, timeTravel: Boolean): DataFrame = {
+    val sel = scanCandidates(pred, s)
+    if (timeTravel) requireOnDisk(s.version, sel)
+    readFiles(sel, s.meta).where(pred)
   }
 
   /** The candidate files a `scan(pred)` of version `asOf` would read:
@@ -1062,9 +880,12 @@ final class GraftTable private (
     * ([[BloomIndex]]). Package-private so specs pin the pruning itself,
     * not just result equality.
     */
-  private[tables] def scanCandidates(pred: Column, asOf: Long): Seq[AddFile] = {
-    val files = activeFiles(asOf)
-    val schema = schemaAt(asOf)
+  private[tables] def scanCandidates(pred: Column, asOf: Long): Seq[AddFile] =
+    scanCandidates(pred, log.snapshot(Some(asOf)))
+
+  private def scanCandidates(pred: Column, s: Snapshot): Seq[AddFile] = {
+    val files = s.files
+    val schema = s.meta.schema
     // Resolve the predicate against the table schema by analyzing it over
     // an empty relation (also validates column references, loud), then
     // constant-fold so type-coercion casts around literals collapse back to
@@ -1087,9 +908,8 @@ final class GraftTable private (
     // a zero-row file (e.g. a create from an empty frame) can never hold a
     // match — drop it before interval analysis, it carries no stats to
     // prune on
-    val cm = colmapAt(asOf)
     val sel = files.filter(_.rows > 0)
-      .filter(f => FilePruning.possible(predExpr, intervalsOf(f, schema, cm)))
+      .filter(f => FilePruning.possible(predExpr, intervalsOf(f, s.meta)))
     val pointLookups = BloomIndex.pointLookups(predExpr)
     // HIDDEN-PARTITIONING prune: an equality / IN conjunct on a transform's
     // SOURCE column admits only files whose logged partition value equals
@@ -1120,11 +940,11 @@ final class GraftTable private (
     // bloom refutation runs AFTER the interval pass (fewer footers to
     // probe) and ONLY when the predicate carries an equality conjunct on
     // an indexed column — any other scan pays nothing
-    val bl = bloomAt(asOf)
+    val bl = s.meta.bloom
     if (bl.isEmpty) selP
     else {
       val lookups = pointLookups.flatMap { case (l, vs) =>
-        val p = physName(cm, l)
+        val p = s.meta.physName(l)
         if (bl.contains(p)) Some(p -> vs) else None
       }
       if (lookups.isEmpty) selP
@@ -1134,35 +954,25 @@ final class GraftTable private (
     }
   }
 
-  /** Log-estimated LIVE bytes a scan of version `asOf` under `preds` would
+  /** Log-estimated LIVE (bytes, rows) a scan of `s` under `preds` would
     * read: the zone-map-pruned file set's on-disk sizes, scaled down by
-    * each file's deletion-vector fraction. Drives the catalog relation's
-    * `sizeInBytes` — Spark's planner auto-BROADCASTS a small (or
-    * selectively-filtered) graft table in joins instead of assuming the
-    * unknown-source default (effectively infinite, which forces a shuffle
-    * join however small the table is). O(files) driver metadata; a
-    * legacy file with no logged size estimates from its row count, and an
-    * unresolvable predicate simply doesn't prune — estimates only ever err
-    * HIGH, never low, so a broadcast decision is never tricked upward.
+    * each file's deletion-vector fraction, and its live rows. Drives the
+    * catalog relation's `sizeInBytes` — Spark's planner auto-BROADCASTS a
+    * small (or selectively-filtered) graft table in joins instead of
+    * assuming the unknown-source default (effectively infinite, which
+    * forces a shuffle join however small the table is). O(files) driver
+    * metadata; a legacy file with no logged size estimates from its row
+    * count, and an unresolvable predicate simply doesn't prune — both
+    * figures are UPPER bounds, so a broadcast or CBO decision is never
+    * tricked upward. The row bound is what gives filtered scans a
+    * `rowCount` at all: the optimizer pushes inferred `isnotnull` join-key
+    * filters into every join's scans, and a rowless relation disables CBO
+    * join estimation (and reordering) entirely.
     */
-  private[tables] def estimatedScanBytes(preds: Seq[Column], asOf: Long): Long =
-    estimatedScan(preds, asOf)._1
-
-  /** (bytes, rows) the zone-map-pruned, DV-adjusted scan would read — both
-    * UPPER bounds (an unresolvable or unprunable predicate simply doesn't
-    * shrink them), so a broadcast or CBO decision is never tricked upward.
-    * The row bound is what gives filtered scans a `rowCount` at all: the
-    * optimizer pushes inferred `isnotnull` join-key filters into every
-    * join's scans, and a rowless relation disables CBO join estimation
-    * (and reordering) entirely.
-    */
-  private[tables] def estimatedScan(preds: Seq[Column], asOf: Long): (Long, Long) = {
-    val files = activeFiles(asOf)
-    val schema = schemaAt(asOf)
-    val cm = colmapAt(asOf)
-    val kept = preds.foldLeft(files.filter(_.rows > 0)) { (fs0, pred) =>
-      resolveJoined(pred, schema, StructType(Nil)) match {
-        case Some(p) => fs0.filter(f => FilePruning.possible(p, intervalsOf(f, schema, cm)))
+  private[tables] def estimatedScan(preds: Seq[Column], s: Snapshot): (Long, Long) = {
+    val kept = preds.foldLeft(s.files.filter(_.rows > 0)) { (fs0, pred) =>
+      resolveJoined(pred, s.meta.schema, StructType(Nil)) match {
+        case Some(p) => fs0.filter(f => FilePruning.possible(p, intervalsOf(f, s.meta)))
         case None => fs0
       }
     }
@@ -1181,8 +991,8 @@ final class GraftTable private (
     * values carry no interval — sound, since no interval means no pruning
     * on that column).
     */
-  private def intervalsOf(f: AddFile, schema: StructType,
-      cm: Map[String, String]): Map[String, KeyStats] = {
+  private def intervalsOf(f: AddFile, meta: TableMeta): Map[String, KeyStats] = {
+    val schema = meta.schema
     val pvIv = f.pv.toSeq.flatMap { case (c, v) =>
       v.flatMap { s =>
         schema.fields.find(_.name == c).map(_.dataType) match {
@@ -1196,8 +1006,7 @@ final class GraftTable private (
         }
       }
     }
-    val logicalCs = schema.fieldNames.toIndexedSeq
-      .flatMap(l => f.cs.get(physName(cm, l)).map(l -> _)).toMap
+    val logicalCs = meta.byLogical(f.cs)
     logicalCs ++ keyCol.flatMap(k => f.stats.map(k -> _)) ++ pvIv
   }
 
@@ -1252,15 +1061,17 @@ final class GraftTable private (
     * files OUT of the candidate set directly.
     */
   private[tables] def mergeCandidateFiles(source: DataFrame,
-      extraOn: Option[Column], asOf: Option[Long] = None): Seq[AddFile] = {
+      extraOn: Option[Column]): Seq[AddFile] = mergeCandidateFiles(source, extraOn, latest())
+
+  // pinned by the caller (mergeInto passes ITS snapshot so candidates,
+  // reads, and the commit CAS all see one version even under a concurrent
+  // commit)
+  private def mergeCandidateFiles(source: DataFrame, extraOn: Option[Column],
+      s: Snapshot): Seq[AddFile] = {
     val k = keyCol.getOrElse(throw new IllegalArgumentException(
       "merge candidate pruning needs a table created with keyCol = Some(...)"))
-    // pinned by the caller (mergeInto passes ITS version so candidates,
-    // reads, and the commit CAS all see one snapshot even under a
-    // concurrent commit); default = latest, for the spec's direct pins
-    val v = asOf.getOrElse(version)
-    val files = activeFiles(v)
-    val schema = schemaAt(v)
+    val files = s.files
+    val schema = s.meta.schema
     val bounds = source.agg(min(col(k)), max(col(k))).head()
     val prefixedSchema = StructType(
       source.schema.fields.map(f => f.copy(name = s"__src_${f.name}")))
@@ -1287,7 +1098,7 @@ final class GraftTable private (
     if (bounds.isNullAt(0)) Seq.empty // empty source: no file can match
     else files.filter(_.stats.forall(_.intersects(bounds.get(0), bounds.get(1))))
       .filter(f => targetPrune.forall(p =>
-        f.rows == 0 || FilePruning.possible(p, intervalsOf(f, schema, colmapAt(v)))))
+        f.rows == 0 || FilePruning.possible(p, intervalsOf(f, s.meta))))
       .filter(f => bucketAdmit.forall { case (key, admit) =>
         f.pv.get(key) match {
           case Some(Some(s)) => admit(s)
@@ -1322,7 +1133,8 @@ final class GraftTable private (
   def replacePartitions(df: DataFrame): Long = {
     require(partitionBy.nonEmpty,
       "replacePartitions needs a partitioned table; use overwrite() otherwise")
-    val aligned = alignSchema(df)
+    val s = latest()
+    val aligned = alignSchema(df, s.meta.schema)
     // O(distinct partitions) collect — the same bound the commit log holds;
     // the tuple values come from the SAME shadow expressions the writer
     // uses, so transform partitions replace whole transform cells
@@ -1335,19 +1147,18 @@ final class GraftTable private (
       .distinct().collect()
       .map(r => partSpecs.zipWithIndex
         .map { case (sp, i) => sp.render -> Option(r.getString(i)) }.toMap).toSet
-    val v = version
     // partition evolution makes "replace the whole partition" ambiguous for
     // files still laid out under an older spec — those files' rows may
     // belong to a touched cell without carrying its key. Loud, with the
     // migration path named.
-    val unmigrated = activeFiles(v).filter(_.rows > 0)
+    val unmigrated = s.files.filter(_.rows > 0)
       .filterNot(f => partitionBy.forall(f.pv.contains))
     require(unmigrated.isEmpty,
       s"replacePartitions after partition evolution: ${unmigrated.size} " +
         "file(s) predate the current spec; optimize() first to migrate them")
-    val removes = activeFiles(v).filter(f => touched(f.pv)).map(_.path)
-    requireUniqueKeys(aligned, removes.toSet, "replacePartitions")
-    commit(v, "replacePartitions", writeData(aligned, idStrict = true), removes)
+    val removes = s.files.filter(f => touched(f.pv)).map(_.path)
+    requireUniqueKeys(s, aligned, removes.toSet, "replacePartitions")
+    commit(s, "replacePartitions", writeData(aligned, s.meta, idStrict = true), removes)
   }
 
   /** Row-level change feed between two versions: for every commit `v` in
@@ -1380,11 +1191,12 @@ final class GraftTable private (
       throw new IllegalArgumentException(
         "changes(classifyUpdates = true) needs a table created with keyCol " +
           "= Some(...) — update pairing happens on the merge key")))
-    val all = listVersions(fs, logDir)
+    val head = latest()
+    val all = head.listing.versions
     require(fromVersion >= 0 && toVersion >= fromVersion,
       s"need 0 <= fromVersion <= toVersion, got ($fromVersion, $toVersion]")
     require(all.contains(toVersion) && (fromVersion == 0 || all.contains(fromVersion)),
-      s"versions must exist under $logDir (have ${all.mkString(",")})")
+      s"versions must exist under ${log.dir} (have ${all.mkString(",")})")
     // changes(0, …) folds from the creation commit — impossible once
     // expireHistory dropped the prefix (the deleted commits' diffs are
     // gone; the horizon checkpoint holds only their NET state)
@@ -1392,7 +1204,8 @@ final class GraftTable private (
       s"history before version ${all.headOption.getOrElse(0L)} has been " +
         s"expired; changes($fromVersion, …) is no longer reconstructible — " +
         s"the oldest available start is ${all.headOption.getOrElse(0L)}")
-    val outSchema = schemaAt(toVersion)
+    val toMeta = head.at(toVersion).meta
+    val outSchema = toMeta.schema
     // physical→logical under the TO version, built from the LIVE columns
     // only: a column renamed inside the range still unions into ONE output
     // column (physical identity is stable; per-version logical names would
@@ -1401,9 +1214,8 @@ final class GraftTable private (
     // name must never rebind to a same-named live column (re-added after a
     // drop, the live column has a FRESH physical name; the dead values
     // stay dead)
-    val cmTo = colmapAt(toVersion)
     val liveTo: Map[String, String] =
-      outSchema.fieldNames.toIndexedSeq.map(l => physName(cmTo, l) -> l).toMap
+      outSchema.fieldNames.toIndexedSeq.map(l => toMeta.physName(l) -> l).toMap
     def outNameOf(p: String): String = liveTo.getOrElse(p, s"__graft_dead_$p")
     // the diff of commit v needs each REMOVED file's full log entry as it
     // stood at v-1 (its deletion vector in particular: a DV-delete commit
@@ -1412,9 +1224,9 @@ final class GraftTable private (
     // from `fromVersion` once, O(range) instead of O(range × log replay)
     var act: Map[String, AddFile] =
       if (fromVersion == 0) Map.empty
-      else activeFiles(fromVersion).map(f => f.path -> f).toMap
+      else head.at(fromVersion).files.map(f => f.path -> f).toMap
     val perVersion = all.filter(v => v > fromVersion && v <= toVersion).flatMap { v =>
-      val (meta, adds, removes) = cachedCommit(v)
+      val GraftLog.Commit(meta, adds, removes) = log.commit(v)
       val removedFiles = removes.map(p => act.getOrElse(p, AddFile(p, 0L, None)))
       act = act -- removes ++ adds.map(a => a.path -> a)
       // a LAYOUT-ONLY commit (compact/optimize: rows unchanged, files
@@ -1423,7 +1235,7 @@ final class GraftTable private (
       // reading a single rewritten file (at 100 TB, a compacted table's
       // change feed must not re-diff every compaction; this also keeps
       // the feed reconstructible after such commits' inputs are vacuumed)
-      if (meta.get("dataChange").contains(false)) None
+      if (!meta.dataChange) None
       else Some {
         // removed files were active at v-1; the file set is O(commit), and
         // the schema each file was WRITTEN under may be older still —
@@ -1433,13 +1245,13 @@ final class GraftTable private (
           s"changes($fromVersion, $toVersion) needs ${gone.size} file(s) " +
             s"reclaimed by vacuum() (e.g. ${gone.head}); the feed for commit " +
             s"$v is no longer reconstructible")
-        def readAs(fset: Seq[AddFile], v: Long): DataFrame = {
-          val phys = physicalSchema(schemaAt(v), colmapAt(v))
+        def readAs(fset: Seq[AddFile]): DataFrame = {
+          val phys = physicalSchema(meta.schema, meta.colmap)
           readPhysical(fset, phys, withMeta = false)
             .toDF(phys.fieldNames.toIndexedSeq.map(outNameOf): _*)
         }
-        val added = readAs(adds, v)
-        val removed = readAs(removedFiles, v)
+        val added = readAs(adds)
+        val removed = readAs(removedFiles)
         // SINGLE-PASS NET DIFF. The multiset algebra here is exactly what
         // Catalyst's RewriteExceptAll lowers each `exceptAll` to (±1 tag →
         // union → aggregate over every column → sign filter → row
@@ -1506,12 +1318,12 @@ final class GraftTable private (
     } ++ Seq(col("_change"), col("_version").cast(LongType)): _*)
 
   /** The current snapshot's active files as logged (metadata only). */
-  private[tables] def currentFiles: Seq[AddFile] = activeFiles(version)
+  private[tables] def currentFiles: Seq[AddFile] = latest().files
 
   /** Active files at a version (metadata only) — the catalog's aggregate
     * pushdown answers COUNT/MIN/MAX from these O(files) log entries.
     */
-  private[tables] def filesAt(v: Long): Seq[AddFile] = activeFiles(v)
+  private[tables] def filesAt(v: Long): Seq[AddFile] = log.snapshot(Some(v)).files
 
   /** The logged zone-map interval of `colName` per CURRENT data file:
     * (path, physical rows, min, max) — the operational view of what data
@@ -1520,9 +1332,9 @@ final class GraftTable private (
     * (integral values parse as longs).
     */
   def fileRanges(colName: String): Seq[(String, Long, String, String)] = {
-    val v = version
-    activeFiles(v).flatMap(f =>
-      logicalStats(v, f, colName).map(ks => (f.path, f.rows, ks.min, ks.max)))
+    val s = latest()
+    s.files.flatMap(f =>
+      f.cs.get(s.meta.physName(colName)).map(ks => (f.path, f.rows, ks.min, ks.max)))
   }
 
   /** How many data files a [[scan]] under `pred` would actually read after
@@ -1530,14 +1342,7 @@ final class GraftTable private (
     * prune?" probe (vs [[currentFiles]].size for the total). Driver
     * metadata only, O(files).
     */
-  def scanFileCount(pred: Column): Long = scanCandidates(pred, version).size.toLong
-
-  /** A file's logged zone map for a LOGICAL column name at a version
-    * (resolved through that version's column mapping — stats are keyed by
-    * the stable physical names).
-    */
-  private[tables] def logicalStats(v: Long, f: AddFile, logical: String): Option[KeyStats] =
-    f.cs.get(physName(colmapAt(v), logical))
+  def scanFileCount(pred: Column): Long = scanCandidates(pred, latest()).size.toLong
 
   /** The newest version whose commit timestamp is `<= tsMillis` — the
     * `TIMESTAMP AS OF` resolution rule (Delta semantics: you read the table
@@ -1545,12 +1350,11 @@ final class GraftTable private (
     * commit is loud). O(versions) over memoized log metadata.
     */
   def versionAt(tsMillis: Long): Long = {
-    val vs = listVersions(fs, logDir)
-    val at = vs.filter(v => cachedCommit(v)._1.get("ts")
-      .exists(_.asInstanceOf[Number].longValue <= tsMillis))
-    at.lastOption.getOrElse(throw new IllegalArgumentException(
-      s"no commit at or before timestamp $tsMillis; the table was created at " +
-        cachedCommit(vs.head)._1.get("ts").map(_.toString).getOrElse("?")))
+    val vs = log.listing().versions
+    vs.filter(log.commit(_).meta.ts <= tsMillis).lastOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"no commit at or before timestamp $tsMillis; the table was created at " +
+          log.commit(vs.head).meta.ts))
   }
 
   /** Commit metadata for every version, oldest first — one forward fold
@@ -1560,14 +1364,12 @@ final class GraftTable private (
     */
   def history: Seq[CommitInfo] = {
     var act = Map.empty[String, AddFile]
-    listVersions(fs, logDir).map { v =>
-      val (meta, adds, removes) = cachedCommit(v)
+    log.listing().versions.map { v =>
+      val GraftLog.Commit(meta, adds, removes) = log.commit(v)
       val rowsRemoved = removes.flatMap(act.get).map(liveRows).sum
       act = act -- removes ++ adds.map(a => a.path -> a)
-      CommitInfo(v, meta.getOrElse("op", "?").toString,
-        meta.get("ts").map(_.asInstanceOf[Number].longValue).getOrElse(0L),
-        adds.size, removes.size, adds.map(liveRows).sum,
-        rowsRemoved, adds.map(_.bytes).sum)
+      CommitInfo(v, meta.op, meta.ts, adds.size, removes.size,
+        adds.map(liveRows).sum, rowsRemoved, adds.map(_.bytes).sum)
     }
   }
 
@@ -1581,12 +1383,11 @@ final class GraftTable private (
     * so time travel keeps each version's own schema.
     */
   def append(df: DataFrame, mergeSchema: Boolean = false): Long = {
-    val v = version
-    val cur = schemaAt(v)
-    val validatedUnder = constraintsAt(v)
+    val s = latest()
+    val cur = s.meta.schema
     val (aligned, newSchema) = alignEvolving(df, cur, mergeSchema)
-    requireUniqueKeys(aligned, Set.empty, "append")
-    val adds = writeData(aligned, idStrict = true)
+    requireUniqueKeys(s, aligned, Set.empty, "append")
+    val adds = writeData(aligned, s.meta, idStrict = true)
     // OPTIMISTIC-CONCURRENCY retry (the Delta ConflictChecker design for
     // BLIND appends): an append reads nothing, so losing the version race
     // to another writer is not a logical conflict — the already-written
@@ -1598,24 +1399,24 @@ final class GraftTable private (
     // (commit's stale-handle guards) — each fails loud instead of retrying.
     // At 100 TB this is what lets a thousand ingest writers share a table
     // without serializing on anything but the log-rename itself.
-    var expected = v
+    var base = s
     var attempt = 0
     while (true) {
-      try return commit(expected, "append", adds, Nil, None, Some(newSchema))
+      try return commit(base, "append", adds, Nil, edit = _.copy(schemaJson = newSchema.json))
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
           if (attempt >= 50) throw e
-          val head = version
-          requireConstraintsUnchanged(validatedUnder)
-          if (schemaAt(head).json != cur.json || colmapAt(head) != colmapAt(v))
+          val head = latest()
+          requireSameConstraints(s.meta.constraints, head.meta.constraints)
+          if (!head.meta.sameLayout(s.meta))
             throw new IllegalStateException(
               "append lost the race to a concurrent schema change; the " +
                 "written files were laid out under the previous schema — " +
                 "re-run the append against the new definition")
           // identity values were assigned from the hwm at write time; a
           // winner that advanced it may have claimed the same values
-          if (GraftTable.identityOf(cur).nonEmpty && idHwmAt(head) != idHwmAt(v))
+          if (GraftTable.identityOf(cur).nonEmpty && head.meta.idHwm != s.meta.idHwm)
             throw new IllegalStateException(
               "append lost the race to a concurrent identity-assigning " +
                 "write; the assigned values could collide — re-run the append")
@@ -1624,18 +1425,16 @@ final class GraftTable private (
           // re-validate by re-running. Layout-only winners (compact/
           // optimize, dataChange=false) and empty commits cannot introduce
           // keys, so routine background maintenance rebases cleanly.
-          if (uniqueKeyEnforced) {
-            val rowBearing = ((expected + 1) to head).exists { w =>
-              val (meta, wAdds, wRemoves) = cachedCommit(w)
-              !meta.get("dataChange").contains(false) &&
-                (wAdds.exists(_.rows > 0) || wRemoves.nonEmpty)
+          if (uniqueKeyIn(head.meta.schema)) {
+            val rowBearing = base.commitsUntil(head).exists { case (_, w) =>
+              w.meta.dataChange && (w.adds.exists(_.rows > 0) || w.removes.nonEmpty)
             }
             if (rowBearing) throw new IllegalStateException(
               "append lost the race on a UNIQUE KEY table to a concurrent " +
                 "row-changing commit; re-run the append so uniqueness " +
                 "re-validates against the new head")
           }
-          expected = head
+          base = head
       }
     }
     -1L // unreachable
@@ -1681,50 +1480,46 @@ final class GraftTable private (
     * background compaction share one table without serializing whole
     * operations on each other — only true logical conflicts surface.
     */
-  private def commitWithConflictCheck(readVersion: Long, op: String,
+  private def commitWithConflictCheck(read: Snapshot, op: String,
       adds: Seq[AddFile], removes: Seq[String],
       addsCouldMatch: AddFile => Boolean,
-      validatedUnder: Map[String, String],
-      newSchema: Option[StructType] = None,
-      dataChange: Boolean = true,
+      edit: TableMeta => TableMeta = identity,
       checkConstraints: Boolean = true,
       checkSchema: Boolean = true,
       assignsIdentity: Boolean = false): Long = {
-    var expected = readVersion
+    var base = read
     var attempt = 0
     while (true) {
-      try return commit(expected, op, adds, removes, None, newSchema,
-        dataChange = dataChange)
+      try return commit(base, op, adds, removes, edit = edit)
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
           if (attempt >= 50) throw e
-          val head = version
-          if (checkConstraints) requireConstraintsUnchanged(validatedUnder)
-          // an op that ASSIGNED identity values did so from readVersion's
-          // hwm — a winner advancing it may have claimed the same values
-          // (rewrites only carry existing values and pass false here)
-          if (assignsIdentity && idHwmAt(head) != idHwmAt(readVersion))
+          val head = latest()
+          if (checkConstraints)
+            requireSameConstraints(read.meta.constraints, head.meta.constraints)
+          // an op that ASSIGNED identity values did so from the read
+          // version's hwm — a winner advancing it may have claimed the same
+          // values (rewrites only carry existing values and pass false here)
+          if (assignsIdentity && head.meta.idHwm != read.meta.idHwm)
             throw new IllegalStateException(
               s"$op lost the race to a concurrent identity-assigning " +
                 "write; the assigned values could collide — re-run")
-          if (checkSchema && (schemaAt(head).json != schemaAt(readVersion).json ||
-              colmapAt(head) != colmapAt(readVersion)))
+          if (checkSchema && !head.meta.sameLayout(read.meta))
             throw new IllegalStateException(
               s"$op lost the race to a concurrent schema change; its output " +
                 "was computed under the previous schema — re-run against " +
                 "the new definition")
           val mine = removes.toSet
-          ((expected + 1) to head).foreach { w =>
-            val (meta, wAdds, wRemoves) = cachedCommit(w)
-            val wOp = meta.getOrElse("op", "?").toString
+          base.commitsUntil(head).foreach { case (w, GraftLog.Commit(meta, wAdds, wRemoves)) =>
+            val wOp = meta.op
             val overlap =
               (wRemoves.filter(mine) ++ wAdds.map(_.path).filter(mine)).distinct
             if (overlap.nonEmpty) throw new ConcurrentCommitException(
               s"$op conflicts with concurrent '$wOp' (version $w): it " +
                 s"modified ${overlap.size} file(s) this operation rewrites " +
                 s"(e.g. ${overlap.head}) — re-run on a fresh snapshot")
-            if (!meta.get("dataChange").contains(false)) {
+            if (meta.dataChange) {
               val hot = wAdds.filter(a =>
                 a.rows > 0 && !mine(a.path) && addsCouldMatch(a))
               if (hot.nonEmpty) throw new ConcurrentCommitException(
@@ -1734,7 +1529,7 @@ final class GraftTable private (
                   "re-run on a fresh snapshot")
             }
           }
-          expected = head
+          base = head
       }
     }
     -1L // unreachable
@@ -1749,8 +1544,8 @@ final class GraftTable private (
     */
   def addColumns(fields: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(fields.nonEmpty, "addColumns needs at least one column")
-    val v = version
-    val cur = schemaAt(v)
+    val s = latest()
+    val cur = s.meta.schema
     fields.foreach(f => require(!cur.fieldNames.contains(f.name),
       s"column '${f.name}' already exists in ${cur.fieldNames.mkString(",")}"))
     require(fields.map(_.name).distinct.size == fields.size, "duplicate new column names")
@@ -1760,15 +1555,14 @@ final class GraftTable private (
     // name through the mapping — re-adding a dropped column's name yields
     // an all-null column, never the dead values (the column-mapping
     // contract; spec-pinned)
-    val cm = colmapAt(v)
-    val unavailable = (cur.fieldNames.toSeq.map(physName(cm, _)) ++ retiredAt(v)).toSet
+    val unavailable = (cur.fieldNames.toSeq.map(s.meta.physName) ++ s.meta.retired).toSet
     val fresh = fields.collect {
       case f if unavailable.contains(f.name) =>
         f.name -> s"${f.name}_r${java.util.UUID.randomUUID().toString.replace("-", "").take(8)}"
     }.toMap
     val evolved = StructType(cur.fields.toIndexedSeq ++ fields.map(_.copy(nullable = true)))
-    commit(v, "addColumns", Nil, Nil, None, Some(evolved),
-      if (fresh.isEmpty) None else Some(cm ++ fresh))
+    commit(s, "addColumns", Nil, Nil,
+      edit = m => m.copy(schemaJson = evolved.json, colmap = m.colmap ++ fresh))
   }
 
   /** DROP a column in ONE metadata-only commit (no file touched, O(1) at
@@ -1782,24 +1576,23 @@ final class GraftTable private (
     * tuples), and the last column cannot be dropped — all loud.
     */
   def dropColumn(name: String): Long = {
-    val v = version
-    val cur = schemaAt(v)
-    val cm = colmapAt(v)
+    val s = latest()
+    val cur = s.meta.schema
     require(cur.fieldNames.contains(name),
       s"no column '$name' in ${cur.fieldNames.mkString(",")}")
     require(!keyCol.contains(name), "cannot drop the merge key column")
     require(!partSourceCols.contains(name),
       "cannot drop a partition (source) column")
     require(cur.fields.length > 1, "cannot drop the table's last column")
-    requireNoConstraintOn(name, "drop")
-    requireNoGeneratedOn(name, "drop")
+    requireNoConstraintOn(name, "drop", s.meta.constraints)
+    requireNoGeneratedOn(name, "drop", cur)
     val evolved = StructType(cur.fields.toIndexedSeq.filterNot(_.name == name))
-    commit(v, "dropColumn", Nil, Nil, None, Some(evolved), Some(cm - name),
-      Some((retiredAt(v) :+ physName(cm, name)).distinct),
+    val p = s.meta.physName(name)
+    commit(s, "dropColumn", Nil, Nil, edit = m => m.copy(schemaJson = evolved.json,
+      colmap = m.colmap - name, retired = (m.retired :+ p).distinct,
       // a dropped column's bloom/sort entries go with it (advisory
       // metadata — no guard needed, unlike constraints)
-      newBloom = Some(bloomAt(v) - physName(cm, name)),
-      newSort = Some(sortAt(v).filterNot(_ == physName(cm, name))))
+      bloom = m.bloom - p, sort = m.sort.filterNot(_ == p)))
   }
 
   /** Idempotent append for exactly-once streaming sinks: `txnId` (e.g.
@@ -1812,22 +1605,22 @@ final class GraftTable private (
     */
   def appendIfAbsent(txnId: String, df: DataFrame): Long = {
     require(txnId.nonEmpty, "txnId must be non-empty")
-    if (committedTxns.contains(txnId)) version
+    val s = latest()
+    if (s.txns.contains(txnId)) s.version
     else {
-      val v = version
-      val validatedUnder = constraintsAt(v)
-      val aligned = alignSchema(df)
-      requireUniqueKeys(aligned, Set.empty, "append")
-      try commit(v, "append", writeData(aligned, idStrict = true), Nil, Some(txnId))
+      val aligned = alignSchema(df, s.meta.schema)
+      requireUniqueKeys(s, aligned, Set.empty, "append")
+      try commit(s, "append", writeData(aligned, s.meta, idStrict = true), Nil, Some(txnId))
       catch {
         case e: ConcurrentCommitException =>
-          if (committedTxns.contains(txnId)) version
+          val head = latest()
+          if (head.txns.contains(txnId)) head.version
           else {
-            // the data was validated against v's constraints; if the
+            // the data was validated against s's constraints; if the
             // concurrent commit CHANGED them, a blind caller retry would
             // commit rows the new constraint never saw — fail loud with
             // the reason instead of the bare version race
-            requireConstraintsUnchanged(validatedUnder)
+            requireSameConstraints(s.meta.constraints, head.meta.constraints)
             throw e
           }
       }
@@ -1838,14 +1631,16 @@ final class GraftTable private (
     * constraints at write time — a retry after a concurrent constraint
     * change must fail loud, not commit unvalidated data.
     */
-  private def requireConstraintsUnchanged(validatedUnder: Map[String, String]): Unit = {
-    val now = constraints
+  private def requireConstraintsUnchanged(validatedUnder: Map[String, String]): Unit =
+    requireSameConstraints(validatedUnder, constraints)
+
+  private def requireSameConstraints(validatedUnder: Map[String, String],
+      now: Map[String, String]): Unit =
     if (now != validatedUnder) throw new IllegalStateException(
       s"the table's CHECK constraints changed concurrently (validated under " +
         s"${validatedUnder.keys.toSeq.sorted.mkString(",")}, now " +
         s"${now.keys.toSeq.sorted.mkString(",")}); re-run the write so the " +
         "new constraints validate it")
-  }
 
   /** Commit already-written files under a transaction id — the streaming
     * sink's epoch commit ([[GraftStreamingWrite]]): a replayed txn is a
@@ -1855,49 +1650,34 @@ final class GraftTable private (
     */
   private[tables] def commitFiles(op: String, adds: Seq[AddFile],
       txnId: Option[String], maxAttempts: Int = 50): Long = {
-    if (txnId.exists(committedTxns.contains)) return version
+    var s = latest()
+    if (txnId.exists(s.txns.contains)) return s.version
     // the files were validated (sink per-row checks) under the constraint
     // set in force when the epoch started — a retry must not sail past a
     // concurrent constraint change (the new constraint never saw the rows)
-    val validatedUnder = constraints
+    val validatedUnder = s.meta.constraints
     var attempt = 0
     while (true) {
       attempt += 1
-      val v = version
-      requireConstraintsUnchanged(validatedUnder)
-      try return commit(v, op, adds, Nil, txnId)
+      requireSameConstraints(validatedUnder, s.meta.constraints)
+      try return commit(s, op, adds, Nil, txnId)
       catch {
         case e: ConcurrentCommitException =>
-          if (txnId.exists(committedTxns.contains)) return version
+          s = latest()
+          if (txnId.exists(s.txns.contains)) return s.version
           if (attempt >= maxAttempts) throw e
       }
     }
     -1L // unreachable
   }
 
-  private def txnOf(v: Long): Option[String] =
-    cachedCommit(v)._1.get("txn").flatMap(Option(_)).map(_.toString)
-
-  private def committedTxns: Set[String] = {
-    val all = listVersions(fs, logDir)
-    // a txn-carrying checkpoint is COMPLETE for its prefix — scan only the
-    // tail (and after history expiration the prefix commits are GONE, so
-    // the carried set is the only record of their txns); a legacy
-    // checkpoint without the line means nothing was expired: full scan
-    val carried = listCheckpoints(fs, logDir).lastOption
-      .flatMap(cp => readCheckpointTxns(fs, logDir, cp).map(cp -> _))
-    carried match {
-      case Some((cp, txns)) => txns ++ all.filter(_ > cp).flatMap(txnOf)
-      case None => all.flatMap(txnOf).toSet
-    }
-  }
-
   /** Replace the whole table contents (snapshot-atomic). */
   def overwrite(df: DataFrame): Long = {
-    val v = version
-    val aligned = alignSchema(df)
-    requireUniqueKeys(aligned, activeFiles(v).map(_.path).toSet, "overwrite")
-    commit(v, "overwrite", writeData(aligned, idStrict = true), activeFiles(v).map(_.path))
+    val s = latest()
+    val aligned = alignSchema(df, s.meta.schema)
+    val removes = s.files.map(_.path)
+    requireUniqueKeys(s, aligned, removes.toSet, "overwrite")
+    commit(s, "overwrite", writeData(aligned, s.meta, idStrict = true), removes)
   }
 
   /** STATIC partition overwrite — the SQL `INSERT OVERWRITE … PARTITION
@@ -1918,9 +1698,9 @@ final class GraftTable private (
     require(partSpecs.forall(_.isInstanceOf[PartitionTransforms.Identity]),
       "overwriteWhere takes predicates over identity partition COLUMNS; " +
         "transform-partitioned tables reload whole cells via replacePartitions")
-    val v = version
-    val schema = schemaAt(v)
-    val files = activeFiles(v)
+    val s = latest()
+    val schema = s.meta.schema
+    val files = s.files
     // same partition-evolution guard as replacePartitions: a file laid out
     // under an older spec has no defined cell membership here
     val unmigrated = files.filter(_.rows > 0)
@@ -1936,14 +1716,12 @@ final class GraftTable private (
     // row with a NULL partition value does not belong to the replaced
     // partitions, so letting it through would write it into the surviving
     // null partition — duplicating rows the overwrite never removed
-    val scoped = constraints.toSeq.sortBy(_._1) :+
-      (s"${GraftTable.ReservedConstraintPrefix}overwrite_partition_scope" ->
-        s"coalesce(($predSql), false)")
-    val alignedOw = alignSchema(df)
-    requireUniqueKeys(alignedOw, removes.toSet, "partition overwrite")
-    val adds = writeData(alignedOw, consOverride = Some(scoped),
-      idStrict = true)
-    commit(v, "overwritePartitions", adds, removes)
+    val scope = s"${GraftTable.ReservedConstraintPrefix}overwrite_partition_scope" ->
+      s"coalesce(($predSql), false)"
+    val alignedOw = alignSchema(df, schema)
+    requireUniqueKeys(s, alignedOw, removes.toSet, "partition overwrite")
+    val adds = writeData(alignedOw, s.meta, extraChecks = Seq(scope), idStrict = true)
+    commit(s, "overwritePartitions", adds, removes)
   }
 
   /** Upsert by `keyCol`: target rows whose key appears in `source` are
@@ -1960,12 +1738,12 @@ final class GraftTable private (
   def merge(source: DataFrame, mergeSchema: Boolean = false): Long = {
     val k = keyCol.getOrElse(throw new IllegalArgumentException(
       "merge needs a table created with keyCol = Some(...)"))
-    // pin the version BEFORE reading the schema: evolving from a schema
-    // read earlier than the pinned version could silently commit a stale
-    // schema over a concurrent ADD/RENAME (the commit CAS only guards the
-    // version read here)
-    val v = version
-    val cur = schemaAt(v)
+    // one snapshot pins the version and the schema together: evolving
+    // from a schema read earlier than the pinned version could silently
+    // commit a stale schema over a concurrent ADD/RENAME (the commit CAS
+    // only guards the version)
+    val s = latest()
+    val cur = s.meta.schema
     // a merge source must not carry a GENERATED ALWAYS identity column
     // (replaced rows would smuggle caller-chosen values past assignment)
     requireIdentityInsertable(source.columns.toSeq, cur,
@@ -1987,7 +1765,7 @@ final class GraftTable private (
     require(uniq.getLong(1) == uniq.getLong(2),
       s"merge source has ${uniq.getLong(1) - uniq.getLong(2)} duplicate '$k' keys")
 
-    val files = activeFiles(v)
+    val files = s.files
     // footer-stats prune: only files whose key range intersects the
     // source's key range can contain a matched key (lo/hi ride the same
     // aggregate row, positions 3/4)
@@ -2000,7 +1778,7 @@ final class GraftTable private (
     // reads only pruned candidates; result is O(files), driver-safe)
     val touched: Set[String] =
       if (candidates.isEmpty) Set.empty
-      else labeled("merge touched-files")(readFiles(candidates, v, withMeta = true)
+      else labeled("merge touched-files")(readFiles(candidates, s.meta, withMeta = true)
         .select(col(k), col(FileNameCol))
         .join(src.select(col(k)).distinct(), Seq(k), "left_semi")
         .select(col(FileNameCol)).distinct()
@@ -2009,7 +1787,7 @@ final class GraftTable private (
 
     val survivors =
       if (rewritten.isEmpty) None
-      else Some(readFiles(rewritten, v)
+      else Some(readFiles(rewritten, s.meta)
         .join(src.select(col(k)), Seq(k), "left_anti")
         // rewritten files were read under the PRE-evolution schema; widen
         // survivors to the evolved width (new columns null) so the union
@@ -2019,15 +1797,14 @@ final class GraftTable private (
           else lit(null).cast(f.dataType).as(f.name)
         }: _*))
     val newData = survivors.fold(src)(_.unionByName(src))
-    val validatedUnder = constraintsAt(v)
     // a winner-added file whose key range the source's bounds intersect
     // could hold keys this merge decided about without seeing — conflict;
     // a file with no key stats can't be refuted (conservative)
     val couldMatch: AddFile => Boolean =
       if (srcEmpty) _ => false
       else f => f.stats.forall(_.intersects(srcLo, srcHi))
-    commitWithConflictCheck(v, "merge", writeData(newData),
-      rewritten.map(_.path), couldMatch, validatedUnder, Some(evolved),
+    commitWithConflictCheck(s, "merge", writeData(newData, s.meta),
+      rewritten.map(_.path), couldMatch, _.copy(schemaJson = evolved.json),
       assignsIdentity = GraftTable.identityOf(cur).nonEmpty)
   }
 
@@ -2077,7 +1854,8 @@ final class GraftTable private (
       "mergeInto needs a table created with keyCol = Some(...)"))
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "mergeInto needs at least one clause")
-    val schema = tableSchema
+    val s = latest()
+    val schema = s.meta.schema
     (matched.flatMap(_._2).flatMap(_.keys) ++ notMatched.flatMap(_._2.keys) ++
         notMatchedBySource.flatMap(_._2).flatMap(_.keys))
       .foreach(c => require(schema.fieldNames.contains(c),
@@ -2097,15 +1875,14 @@ final class GraftTable private (
     require(uniq.getLong(1) == uniq.getLong(2),
       s"merge source has ${uniq.getLong(1) - uniq.getLong(2)} duplicate '$k' keys")
 
-    val v = version
-    val files = activeFiles(v)
+    val files = s.files
     // source columns disambiguated as __src_<name> for every expression
     val prefixed = source.select(source.columns.toIndexedSeq.map(c =>
       col(c).as(s"__src_$c")): _*)
     val srcK = col(s"__src_$k")
     // the full match condition: key equality AND the compound-ON residue
     val matchCond = extraOn.fold(col(k) === srcK)(col(k) === srcK && _)
-    val candidates = mergeCandidateFiles(source, extraOn, Some(v))
+    val candidates = mergeCandidateFiles(source, extraOn, s)
     // a NOT-MATCHED-BY-SOURCE clause can fire on any row of any file —
     // every active file becomes a rewrite candidate (the clause's
     // inherent cost); otherwise only files that HOLD a fully-matched row
@@ -2114,7 +1891,7 @@ final class GraftTable private (
       if (notMatchedBySource.nonEmpty) files
       else if (candidates.isEmpty) Seq.empty
       else {
-        val touched = readFiles(candidates, v, withMeta = true)
+        val touched = readFiles(candidates, s.meta, withMeta = true)
           .join(prefixed, matchCond, "left_semi")
           .select(col(FileNameCol)).distinct()
           .collect().map(_.getString(0)).toSet
@@ -2137,10 +1914,10 @@ final class GraftTable private (
         // they touch (withAutoGenerated) — Delta's update-recompute rule
         val clauses: Seq[(Column, Option[Map[String, Column]])] =
           matched.map { case (c, a) =>
-            (srcK.isNotNull && c.getOrElse(lit(true)), a.map(withAutoGenerated)) } ++
+            (srcK.isNotNull && c.getOrElse(lit(true)), a.map(withAutoGenerated(_, schema))) } ++
           notMatchedBySource.map { case (c, a) =>
-            (srcK.isNull && c.getOrElse(lit(true)), a.map(withAutoGenerated)) }
-        val joined = readFiles(rewritten, v)
+            (srcK.isNull && c.getOrElse(lit(true)), a.map(withAutoGenerated(_, schema))) }
+        val joined = readFiles(rewritten, s.meta)
           .join(prefixed, matchCond, "left")
           .withColumn("__action", actionIdx(clauses.map(_._1)))
         val deleteIdx = clauses.zipWithIndex.collect {
@@ -2174,7 +1951,7 @@ final class GraftTable private (
           if (candidates.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               StructType(schema.fields.filter(f => needed.contains(f.name))))
-          else readFiles(candidates, v)
+          else readFiles(candidates, s.meta)
             .select(needed.map(col): _*)
         val unmatched = prefixed.join(candRows, matchCond, "left_anti")
           .withColumn("__action",
@@ -2193,20 +1970,19 @@ final class GraftTable private (
       }
 
     (survivors, inserts) match {
-      case (None, None) => v // nothing touched, nothing to insert
-      case (s, i) =>
-        val newData = (s.toSeq ++ i.toSeq).reduce(_.unionByName(_))
+      case (None, None) => s.version // nothing touched, nothing to insert
+      case (sv, ins) =>
+        val newData = (sv.toSeq ++ ins.toSeq).reduce(_.unionByName(_))
         // insert clauses may assign ANY key expression — under UNIQUE KEY
         // the merged output must still be globally unique
-        requireUniqueKeys(newData, rewritten.map(_.path).toSet, "merge")
-        val validatedUnder = constraintsAt(v)
+        requireUniqueKeys(s, newData, rewritten.map(_.path).toSet, "merge")
         // source key bounds computed only if a race actually happens
         lazy val bounds = source.agg(min(col(k)), max(col(k))).head()
         val couldMatch: AddFile => Boolean = f =>
           !bounds.isNullAt(0) &&
             f.stats.forall(_.intersects(bounds.get(0), bounds.get(1)))
-        commitWithConflictCheck(v, "merge", writeData(newData),
-          rewritten.map(_.path), couldMatch, validatedUnder,
+        commitWithConflictCheck(s, "merge", writeData(newData, s.meta),
+          rewritten.map(_.path), couldMatch,
           assignsIdentity = GraftTable.identityOf(schema).nonEmpty)
     }
   }
@@ -2226,9 +2002,9 @@ final class GraftTable private (
     * dropped files). Position collection is bounded: only dv-classified
     * files' positions transit the driver, ≤ DvMaxPositionsPerFile each.
     */
-  private def routeDml(files: Seq[AddFile], v: Long, hit: Column,
+  private def routeDml(files: Seq[AddFile], meta: TableMeta, hit: Column,
       allowDrop: Boolean): (Seq[AddFile], Seq[AddFile], Seq[AddFile]) =
-    routeDmlMarked(files, v, _.where(hit), allowDrop)
+    routeDmlMarked(files, meta, _.where(hit), allowDrop)
 
   /** [[routeDml]] generalized over how hits are MARKED: `mark` narrows a
     * snapshot frame to its matched rows — a predicate for deleteWhere/
@@ -2236,7 +2012,7 @@ final class GraftTable private (
     * a subquery may be arbitrarily large, so it must never become a
     * collected literal list).
     */
-  private def routeDmlMarked(files: Seq[AddFile], v: Long,
+  private def routeDmlMarked(files: Seq[AddFile], meta: TableMeta,
       mark: DataFrame => DataFrame,
       allowDrop: Boolean): (Seq[AddFile], Seq[AddFile], Seq[AddFile]) = {
     // ONE pass over the touched snapshot computes both routing inputs: the
@@ -2249,7 +2025,7 @@ final class GraftTable private (
     val posAgg = org.apache.spark.sql.functions
       .udaf(graft.functions.BoundedPosAgg(DvMaxPositionsPerFile))
     val hitInfo: Map[String, (Long, Option[Seq[Long]])] =
-      labeled("dml route")(mark(readFiles(files, v, withMeta = true))
+      labeled("dml route")(mark(readFiles(files, meta, withMeta = true))
         .groupBy(col(FileNameCol)).agg(posAgg(col(RowIdxCol)).as("cp"))
         .select(col(FileNameCol), col("cp._1").as("n"), col("cp._2").as("pos"))
         .collect()).map { r =>
@@ -2291,21 +2067,20 @@ final class GraftTable private (
     * accumulated vectors by materializing the live rows.
     */
   def deleteWhere(cond: Column): Long = {
-    val v = version
-    val files = activeFiles(v)
-    if (files.isEmpty) return v
+    val s = latest()
+    val files = s.files
+    if (files.isEmpty) return s.version
     val hit = coalesce(cond, lit(false))
-    val (dvAdds, rewrite, dropped) = routeDml(files, v, hit, allowDrop = true)
-    if (dvAdds.isEmpty && rewrite.isEmpty && dropped.isEmpty) return v
-    val validatedUnder = constraintsAt(v)
+    val (dvAdds, rewrite, dropped) = routeDml(files, s.meta, hit, allowDrop = true)
+    if (dvAdds.isEmpty && rewrite.isEmpty && dropped.isEmpty) return s.version
     val keepAdds =
       if (rewrite.isEmpty) Nil
-      else writeData(readFiles(rewrite, v).where(not(hit)), distribute = false)
+      else writeData(readFiles(rewrite, s.meta).where(not(hit)), s.meta, distribute = false)
     // predicate DML tolerates concurrent blind appends (rebased state ==
     // delete-first serial order, the WriteSerializable contract); only a
     // winner touching a file this delete rewrites/DVs/drops conflicts
-    commitWithConflictCheck(v, "delete", dvAdds ++ keepAdds,
-      (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false, validatedUnder)
+    commitWithConflictCheck(s, "delete", dvAdds ++ keepAdds,
+      (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false)
   }
 
   /** KEYED DELETE (the `DELETE … WHERE col IN (SELECT …)` primitive, e.g.
@@ -2322,8 +2097,8 @@ final class GraftTable private (
     */
   def deleteMatching(keys0: DataFrame, on: String,
       residue: Column = lit(true)): Long = {
-    val v = version
-    val schema = schemaAt(v)
+    val s = latest()
+    val schema = s.meta.schema
     require(schema.fieldNames.contains(on),
       s"no column '$on' in ${schema.fieldNames.mkString(",")}")
     require(keys0.columns.length == 1,
@@ -2354,35 +2129,34 @@ final class GraftTable private (
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val bounds = keys.agg(min(col(kc)), max(col(kc))).head()
-      if (bounds.isNullAt(0)) return v // empty key set: nothing can match
-      val phys = physName(colmapAt(v), on)
-      val files = activeFiles(v).filter { f =>
+      if (bounds.isNullAt(0)) return s.version // empty key set: nothing can match
+      val phys = s.meta.physName(on)
+      val files = s.files.filter { f =>
         f.rows > 0 && f.cs.get(phys).forall(
           _.intersects(bounds.get(0), bounds.get(1)))
       }
-      if (files.isEmpty) return v
+      if (files.isEmpty) return s.version
       val hitPred = coalesce(residue, lit(false))
       val onCmp = col(on).cast(cmpType)
       val mark: DataFrame => DataFrame =
         df => df.where(hitPred).join(keys, onCmp === col(kc), "left_semi")
       val (dvAdds, rewrite, dropped) =
-        routeDmlMarked(files, v, mark, allowDrop = true)
-      if (dvAdds.isEmpty && rewrite.isEmpty && dropped.isEmpty) return v
-      val validatedUnder = constraintsAt(v)
+        routeDmlMarked(files, s.meta, mark, allowDrop = true)
+      if (dvAdds.isEmpty && rewrite.isEmpty && dropped.isEmpty) return s.version
       val keepAdds =
         if (rewrite.isEmpty) Nil
         else {
           // survivors = NOT (residue AND member): one left join against the
           // distinct key frame marks membership without duplicating rows
-          val marked = readFiles(rewrite, v)
+          val marked = readFiles(rewrite, s.meta)
             .join(keys.withColumn("__graft_in_hit", lit(true)),
               onCmp === col(kc), "left")
           writeData(marked
             .where(!(hitPred && coalesce(col("__graft_in_hit"), lit(false))))
-            .drop(kc, "__graft_in_hit"), distribute = false)
+            .drop(kc, "__graft_in_hit"), s.meta, distribute = false)
         }
-      commitWithConflictCheck(v, "delete", dvAdds ++ keepAdds,
-        (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false, validatedUnder)
+      commitWithConflictCheck(s, "delete", dvAdds ++ keepAdds,
+        (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false)
     } finally keys.unpersist()
   }
 
@@ -2399,21 +2173,21 @@ final class GraftTable private (
     */
   def update(assignments0: Map[String, Column], cond: Column): Long = {
     require(assignments0.nonEmpty, "update needs at least one assignment")
-    val schema = tableSchema
+    val s = latest()
+    val schema = s.meta.schema
     assignments0.keys.foreach(k => require(schema.fieldNames.contains(k),
       s"update column '$k' not in ${schema.fieldNames.mkString(",")}"))
     requireIdentityInsertable(assignments0.keys.toSeq, schema, "assigned by UPDATE")
-    keyCol.filter(_ => uniqueKeyEnforced).foreach(k =>
+    keyCol.filter(_ => uniqueKeyIn(schema)).foreach(k =>
       require(!assignments0.contains(k),
         s"cannot reassign the UNIQUE merge key '$k' via UPDATE — " +
           "use merge (or delete + insert)"))
-    val assignments = withAutoGenerated(assignments0)
-    val v = version
-    val files = activeFiles(v)
-    if (files.isEmpty) return v
+    val assignments = withAutoGenerated(assignments0, schema)
+    val files = s.files
+    if (files.isEmpty) return s.version
     val hit = coalesce(cond, lit(false))
-    val (dvAdds, rewrite, _) = routeDml(files, v, hit, allowDrop = false)
-    if (dvAdds.isEmpty && rewrite.isEmpty) return v
+    val (dvAdds, rewrite, _) = routeDml(files, s.meta, hit, allowDrop = false)
+    if (dvAdds.isEmpty && rewrite.isEmpty) return s.version
     def applied(df: DataFrame, onlyHits: Boolean): DataFrame = {
       val base = if (onlyHits) df.where(hit) else df
       base.select(schema.fields.toIndexedSeq.map { f =>
@@ -2428,15 +2202,14 @@ final class GraftTable private (
     // versions append as fresh files. rewrite-routed files: full rewrite.
     val dvSrc = dvAdds.map(a => files.find(_.path == a.path).get)
     val pieces =
-      Seq(if (dvSrc.isEmpty) None else Some(applied(readFiles(dvSrc, v), onlyHits = true)),
-        if (rewrite.isEmpty) None else Some(applied(readFiles(rewrite, v), onlyHits = false)))
+      Seq(if (dvSrc.isEmpty) None else Some(applied(readFiles(dvSrc, s.meta), onlyHits = true)),
+        if (rewrite.isEmpty) None else Some(applied(readFiles(rewrite, s.meta), onlyHits = false)))
         .flatten
-    val validatedUnder = constraintsAt(v)
     val newAdds = if (pieces.isEmpty) Nil
-      else writeData(pieces.reduce(_.unionByName(_)), distribute = false)
+      else writeData(pieces.reduce(_.unionByName(_)), s.meta, distribute = false)
     // same WriteSerializable contract as deleteWhere: blind appends rebase
-    commitWithConflictCheck(v, "update", dvAdds ++ newAdds,
-      (dvAdds ++ rewrite).map(_.path), _ => false, validatedUnder)
+    commitWithConflictCheck(s, "update", dvAdds ++ newAdds,
+      (dvAdds ++ rewrite).map(_.path), _ => false)
   }
 
   /** Coalesce small files — the operational fix for the small-files
@@ -2451,22 +2224,22 @@ final class GraftTable private (
     */
   def compact(smallFileBytes: Long = 32L << 20, targetBytes: Long = 128L << 20): Long = {
     require(smallFileBytes > 0 && targetBytes > 0, "thresholds must be positive")
-    val v = version
+    val s = latest()
     // a file carrying a deletion vector is always a candidate regardless of
     // size: compaction is what PURGES accumulated vectors (the rewrite
     // materializes the live rows, so subsequent reads drop the anti-join)
-    val small = activeFiles(v).filter(f => f.bytes < smallFileBytes || f.dv.isDefined)
-    if (small.size < 2 && !small.exists(_.dv.isDefined)) return v
+    val small = s.files.filter(f => f.bytes < smallFileBytes || f.dv.isDefined)
+    if (small.size < 2 && !small.exists(_.dv.isDefined)) return s.version
     val nOut = math.max(1L, (small.map(_.bytes).sum + targetBytes - 1) / targetBytes).toInt
-    val merged = readFiles(small, v).coalesce(nOut)
+    val merged = readFiles(small, s.meta).coalesce(nOut)
     // maintenance must not die to unrelated ingest: a concurrent blind
     // append rebases (the new small files just miss this compaction); only
     // a winner touching a compaction INPUT conflicts. Rows are unchanged
     // table-wide, so neither the constraint nor the schema guard applies
     // (a concurrent ADD CONSTRAINT validated these very rows; ADD COLUMN
     // null-fills the rewrite exactly like its inputs).
-    commitWithConflictCheck(v, "compact", writeData(merged, distribute = false),
-      small.map(_.path), _ => false, Map.empty, dataChange = false,
+    commitWithConflictCheck(s, "compact", writeData(merged, s.meta, distribute = false),
+      small.map(_.path), _ => false, _.copy(dataChange = false),
       checkConstraints = false, checkSchema = false)
   }
 
@@ -2520,7 +2293,8 @@ final class GraftTable private (
       "optimize clusters on 1 (range sort) to 4 (z-order) columns")
     require(clusterBy.distinct == clusterBy, "duplicate cluster columns")
     require(targetBytes > 0, "targetBytes must be positive")
-    val schema = tableSchema
+    val s = latest()
+    val schema = s.meta.schema
     val types = clusterBy.map { c =>
       val dt = schema.fields.find(_.name == c).map(_.dataType).getOrElse(
         throw new IllegalArgumentException(
@@ -2542,20 +2316,19 @@ final class GraftTable private (
       dt
     }
     val integral = Seq(ByteType, ShortType, IntegerType, LongType)
-    val v = version
     // OPTIMIZE WHERE: with a partition predicate, only the selected
     // partitions' files are rewritten (driver-side prune over the log's
     // partition tuples, same machinery as snapshotWhere) — at 100 TB you
     // optimize the day that just closed, not three years
     val files0 = partitionPred match {
-      case None => activeFiles(v)
+      case None => s.files
       case Some(pred) =>
         require(partitionBy.nonEmpty,
           "optimize with a partition predicate needs a partitioned table")
         require(partSpecs.forall(_.isInstanceOf[PartitionTransforms.Identity]),
           "optimize's partition predicate addresses identity partition " +
             "columns; on a transform-partitioned table optimize without it")
-        val all = activeFiles(v)
+        val all = s.files
         // pre-evolution files (no current partition keys) are INCLUDED in
         // the rewrite: optimize is how old-spec files migrate to the
         // current layout (rows unchanged — layout-only)
@@ -2565,14 +2338,14 @@ final class GraftTable private (
     }
     // incremental: skip files a prior optimize stamped with this exact
     // spec — physical names, so the mark survives renames with the policy
-    val physSpec = clusterBy.map(physName(colmapAt(v), _))
+    val physSpec = clusterBy.map(s.meta.physName)
     val files =
       if (!onlyUnclustered) files0
       else files0.filterNot(_.cb.contains(physSpec))
-    if (files.isEmpty) return v
+    if (files.isEmpty) return s.version
     val nOut = math.max(1L,
       (files.map(_.bytes).sum + targetBytes - 1) / targetBytes).toInt
-    val df = readFiles(files, v)
+    val df = readFiles(files, s.meta)
     val clustered = clusterBy match {
       case Seq(c) =>
         df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
@@ -2604,11 +2377,11 @@ final class GraftTable private (
     // long-running OPTIMIZE — at 100 TB the clustering rewrite takes long
     // enough that ingest WILL land during it. Outputs are STAMPED with the
     // spec that produced them so a later incremental run can skip them.
-    commitWithConflictCheck(v, "optimize",
-      writeData(clustered, distribute = false)
+    commitWithConflictCheck(s, "optimize",
+      writeData(clustered, s.meta, distribute = false)
         .map(_.copy(cb = Some(physSpec))),
       files.map(_.path),
-      _ => false, Map.empty, dataChange = false,
+      _ => false, _.copy(dataChange = false),
       checkConstraints = false, checkSchema = false)
   }
 
@@ -2669,38 +2442,38 @@ final class GraftTable private (
     * the revived data against them (enforcement is write-time).
     */
   def restore(versionAsOf: Long): Long = {
-    val v = version
-    require(versionAsOf != v, s"table is already at version $v")
-    val target = activeFiles(versionAsOf) // loud if the version is unknown
+    val s = latest()
+    require(versionAsOf != s.version, s"table is already at version ${s.version}")
+    val past = s.at(versionAsOf) // loud if the version is unknown
+    val target = past.files
     val gone = missing(target.map(_.path))
     if (gone.nonEmpty) throw new IllegalStateException(
       s"restore to version $versionAsOf needs ${gone.size} file(s) reclaimed " +
         s"by vacuum() (e.g. ${gone.head}); that version is no longer " +
         "materializable")
-    val cur = activeFiles(v)
+    val cur = s.files
     val curByPath = cur.map(f => f.path -> f).toMap
     val targetByPath = target.map(f => f.path -> f).toMap
     // a column DROPPED after `versionAsOf` is revived by the restore: its
     // physical binding is live again, so it must leave the retired list —
     // otherwise the commit invariant would (wrongly) refuse the restore
-    val restoredSchema = schemaAt(versionAsOf)
-    val restoredCm = colmapAt(versionAsOf)
-    val revived = restoredSchema.fieldNames.toSeq.map(physName(restoredCm, _)).toSet
+    val restored = past.meta
+    val revived = restored.schema.fieldNames.toSeq.map(restored.physName).toSet
     // diff by FULL entry, not by path: a file present in both versions with
     // a different deletion vector (or stats) must be re-added with the
     // target version's entry — a path-level diff would silently keep the
     // current vector and the restore would not bring the rows back
     // (remove + re-add of one path in one commit = replace)
-    commit(v, "restore",
+    commit(s, "restore",
       target.filterNot(f => curByPath.get(f.path).contains(f)),
       cur.filterNot(f => targetByPath.get(f.path).contains(f)).map(_.path),
-      None, Some(restoredSchema), Some(restoredCm),
-      Some(retiredAt(v).filterNot(revived.contains)),
-      // bloom/sort config is write POLICY, not data state: it carries
-      // forward across the restore, minus entries whose column the
-      // restored schema no longer has
-      newBloom = Some(bloomAt(v).view.filterKeys(revived.contains).toMap),
-      newSort = Some(sortAt(v).filter(revived.contains)))
+      edit = m => m.copy(schemaJson = restored.schemaJson, colmap = restored.colmap,
+        retired = m.retired.filterNot(revived.contains),
+        // bloom/sort config is write POLICY, not data state: it carries
+        // forward across the restore, minus entries whose column the
+        // restored schema no longer has
+        bloom = m.bloom.view.filterKeys(revived.contains).toMap,
+        sort = m.sort.filter(revived.contains)))
   }
 
   /** A constraint predicate must RESOLVE against the given schema (loud
@@ -2739,38 +2512,31 @@ final class GraftTable private (
       s"keyCol $k not in ${df.columns.mkString(",")}"))
     PartitionTransforms.validate(
       newPartitionBy.map(PartitionTransforms.parse), df.schema)
-    val v = version
+    val s = latest()
     val newSchema = df.schema
     val cons = newConstraints.toSeq.sortBy(_._1)
     cons.foreach { case (n, sql) => validateConstraintSql(n, sql, newSchema) }
     // physical bindings retired by the OLD lineage stay unavailable (their
     // values live on in time-travelable files): a new column with such a
     // name gets a fresh physical through the mapping
-    val retired = retiredAt(v)
+    val retired = s.meta.retired
     val cm = newSchema.fieldNames.toIndexedSeq.collect {
       case n if retired.contains(n) =>
         n -> s"${n}_r${UUID.randomUUID().toString.replace("-", "").take(8)}"
     }.toMap
+    // a REPLACE defines a fresh table: no write policy, and no statistics
+    // (they describe the REPLACED data)
+    val redefine: TableMeta => TableMeta = _.copy(schemaJson = newSchema.json,
+      colmap = cm, constraints = newConstraints, keyCol = newKeyCol,
+      partitionBy = newPartitionBy, bloom = Map.empty, sort = Nil, ndv = Map.empty)
+    GraftTable.generatedOf(newSchema).foreach { case (n, e) =>
+      validateGeneratedSql(n, e, newSchema) }
+    GraftTable.vetIdentityTypes(newSchema)
     // write the new data under the NEW definition while the log still
     // carries the old one — the swap is the one commit below
-    val t2 = new GraftTable(location, spark, newKeyCol, newSchema.json, newPartitionBy)
-    GraftTable.generatedOf(newSchema).foreach { case (n, e) =>
-      t2.validateGeneratedSql(n, e, newSchema) }
-    GraftTable.vetIdentityTypes(newSchema)
-    val adds = t2.writeData(df.select(newSchema.fieldNames.toIndexedSeq.map(col): _*),
-      consOverride = Some(cons), colmapOverride = Some(cm),
-      statsSchemaOverride = Some(newSchema),
-      keyColOverride = Some(newKeyCol), partitionByOverride = Some(newPartitionBy),
-      bloomOverride = Some(Map.empty), // a REPLACE defines a fresh table
-      genOverride = Some(GraftTable.generatedOf(newSchema)),
-      idOverride = Some(GraftTable.identityOf(newSchema)), idStrict = true,
-      sortOverride = Some(Nil))
-    commit(v, "replace", adds, activeFiles(v).map(_.path),
-      newSchema = Some(newSchema), newColmap = Some(cm),
-      newRetired = Some(retired), newConstraints = Some(newConstraints),
-      newKeyCol = Some(newKeyCol), newPartitionBy = Some(newPartitionBy),
-      newBloom = Some(Map.empty), newSort = Some(Nil),
-      newNdv = Some(Map.empty)) // stats describe the REPLACED data
+    val adds = writeData(df.select(newSchema.fieldNames.toIndexedSeq.map(col): _*),
+      redefine(s.meta), idStrict = true)
+    commit(s, "replace", adds, s.files.map(_.path), edit = redefine)
   }
 
   /** EXPIRE HISTORY: physically delete the commit-log files (and
@@ -2791,7 +2557,8 @@ final class GraftTable private (
     * metadata + storage. Returns the number of expired commits.
     */
   def expireHistory(beforeVersion: Long, dryRun: Boolean = false): Int = {
-    val all = listVersions(fs, logDir)
+    val s = latest()
+    val all = s.listing.versions
     require(all.contains(beforeVersion),
       s"version $beforeVersion does not exist (have ${all.head}..${all.last})")
     // a live TAG pins its version readable: expiring past it would break
@@ -2808,20 +2575,7 @@ final class GraftTable private (
     // materialize the self-sufficiency checkpoint — touching NOTHING
     if (dryRun) return victims.size
     if (victims.isEmpty) return 0
-    // self-sufficiency first: the horizon checkpoint must carry the txn
-    // set; a legacy txn-less checkpoint at the horizon is replaced (its
-    // content is a pure function of the log prefix, plus the txns line)
-    val txns = committedTxns
-    val cpP = checkpointPath(logDir, beforeVersion)
-    if (fs.exists(cpP) &&
-        txns.nonEmpty && readCheckpointTxns(fs, logDir, beforeVersion).isEmpty)
-      fs.delete(cpP, false)
-    if (!fs.exists(cpP))
-      writeCheckpoint(fs, logDir, beforeVersion, activeFiles(beforeVersion), txns)
-    require(fs.exists(cpP), s"could not materialize checkpoint at $beforeVersion")
-    victims.foreach(v => fs.delete(logPath(logDir, v), false))
-    listCheckpoints(fs, logDir).filter(_ < beforeVersion)
-      .foreach(v => fs.delete(checkpointPath(logDir, v), false))
+    log.expire(s, beforeVersion, victims)
     victims.size
   }
 
@@ -2845,40 +2599,33 @@ final class GraftTable private (
     * `compact()`/`optimize()` on the clone to cut the dependency.
     */
   def cloneTo(dest: String, versionAsOf: Option[Long] = None): GraftTable =
-    cloneInternal(dest, versionAsOf.getOrElse(version), "clone", Map.empty)
+    cloneInternal(dest, log.snapshot(versionAsOf), "clone", None)
 
-  private def cloneInternal(dest: String, asOf: Long, op: String,
-      extraMeta: Map[String, Any]): GraftTable = {
-    val files = activeFiles(asOf)
+  private def cloneInternal(dest: String, src: Snapshot, op: String,
+      branchPoint: Option[Long]): GraftTable = {
+    val files = src.files
     val gone = missing(files.map(_.path))
     if (gone.nonEmpty) throw new IllegalStateException(
-      s"clone of version $asOf needs ${gone.size} file(s) reclaimed by " +
+      s"clone of version ${src.version} needs ${gone.size} file(s) reclaimed by " +
         s"vacuum() (e.g. ${gone.head})")
     val rootQ = fs.makeQualified(new Path(location))
     val refs = files.map(f => f.copy(path =
       if (f.path.contains("/")) f.path // a re-cloned reference stays as-is
       else new Path(rootQ, f.path).toString))
     val destPath = new Path(dest)
-    val dfs = destPath.getFileSystem(conf)
-    val destLog = new Path(destPath, LogDirName)
-    require(!dfs.exists(destLog), s"table already exists at $dest")
-    dfs.mkdirs(destLog)
+    val destLog = new GraftLog(destPath, () => destPath.getFileSystem(conf))
+    destLog.create(dest)
     // the clone inherits the source's sticky features (its referenced
     // files may carry DVs, its schema the declarations); a BRANCH
     // additionally declares the 'branches' writer feature on ITS log —
     // an engine without branch support must not commit into a branch dir
     // (it could not publish or respect the publish protocol)
-    val cloneFeatures = {
-      val (r, w) = featuresAt(asOf)
-      (r, if (extraMeta.contains("branchPoint")) w + "branches" else w)
-    }
-    writeCommit(dfs, destLog, 1L,
-      metaMap(op, keyCol, schemaAt(asOf).json, None, partitionBy,
-        colmapAt(asOf), retiredAt(asOf), constraintsAt(asOf),
-        bloom = bloomAt(asOf), idHwm = idHwmAt(asOf),
-        sort = sortAt(asOf), priorFeatures = cloneFeatures,
-        adds = refs) ++ extraMeta,
-      refs, Nil)
+    val m = src.meta
+    destLog.write(1L, m.copy(op = op, ts = System.currentTimeMillis(), keyCol = keyCol,
+      schemaJson = m.schema.json, partitionBy = partitionBy, ndv = Map.empty,
+      txn = None, dataChange = true, branchPoint = branchPoint,
+      writerFeatures = m.writerFeatures ++ branchPoint.map(_ => "branches"))
+      .withFeatures(refs), refs, Nil)
     GraftTable.at(spark, dest)
   }
 
@@ -2920,14 +2667,13 @@ final class GraftTable private (
     require(!location.contains(s"/${GraftTable.BranchDirName}/"),
       "cannot branch a branch: publish or drop this branch first, then " +
         "branch the main table")
-    val v = version
+    val s = latest()
     require(!fs.exists(branchDir(name)),
       s"branch '$name' already exists (drop it or pick another name)")
     require(!fs.exists(tagPath(name)),
       s"a tag is named '$name' — VERSION AS OF '<name>' would be " +
         "ambiguous; dropTag it or pick another branch name")
-    cloneInternal(branchDir(name).toString, v, "createBranch",
-      Map("branchPoint" -> v))
+    cloneInternal(branchDir(name).toString, s, "createBranch", Some(s.version))
   }
 
   /** Open an existing branch as a table handle (its own log/history).
@@ -2945,10 +2691,11 @@ final class GraftTable private (
   }
 
   /** The main-table version a branch was cut at. */
-  def branchPoint(name: String): Long =
-    branch(name).cachedCommit(1L)._1.get("branchPoint")
-      .map(_.asInstanceOf[Number].longValue).getOrElse(
-        throw new IllegalStateException(s"'$name' is not a branch (no branch point)"))
+  def branchPoint(name: String): Long = branchPointOf(name, branch(name))
+
+  private def branchPointOf(name: String, b: GraftTable): Long =
+    b.log.commit(1L).meta.branchPoint.getOrElse(
+      throw new IllegalStateException(s"'$name' is not a branch (no branch point)"))
 
   /** Drop an (unpublished) branch: its local files and log go with it.
     * Replays a crashed publish first, so files a crashed attempt moved
@@ -2978,24 +2725,22 @@ final class GraftTable private (
     */
   def fastForward(name: String): Long = {
     val b = branch(name)
-    val bHead = b.version
-    val bp = branchPoint(name)
-    val head = version
-    require(head == bp,
+    val bs = b.latest()
+    val bp = branchPointOf(name, b)
+    val s = latest()
+    require(s.version == bp,
       s"cannot fast-forward '$name': main advanced from version $bp to " +
-        s"$head since the branch was cut — re-branch from the new head " +
+        s"${s.version} since the branch was cut — re-branch from the new head " +
         "and re-apply the changes")
     // DDL parity: a publish carries data, not definitions — and not write
     // POLICY either (bloom/sort config changed on the branch would
     // otherwise vanish silently in the diff-publish)
-    require(b.schemaAt(bHead).json == schemaAt(bp).json &&
-        b.colmapAt(bHead) == colmapAt(bp) &&
-        b.constraintsAt(bHead) == constraintsAt(bp) &&
+    require(bs.meta.sameLayout(s.meta) && bs.meta.constraints == s.meta.constraints &&
         b.keyCol == keyCol && b.partitionBy == partitionBy,
       s"cannot fast-forward '$name': the branch changed the table " +
         "DEFINITION (schema/column mapping/constraints/key/partitioning); " +
         "apply DDL on the main table, then re-branch")
-    require(b.bloomAt(bHead) == bloomAt(bp) && b.sortAt(bHead) == sortAt(bp),
+    require(bs.meta.bloom == s.meta.bloom && bs.meta.sort == s.meta.sort,
       s"cannot fast-forward '$name': the branch changed write policy " +
         "(bloom index / sort order) — a diff-publish cannot carry it; " +
         "apply the policy on the main table, then re-branch")
@@ -3007,8 +2752,8 @@ final class GraftTable private (
       if (!p.contains("/")) None // branch-local
       else if (p.startsWith(rootQ + "/")) Some(p.substring(rootQ.length + 1))
       else Some(p) // inherited absolute ref beyond this root (re-clone)
-    val bFiles = b.filesAt(bHead)
-    val mainNow = activeFiles(bp).map(f => f.path -> f).toMap
+    val bFiles = bs.files
+    val mainNow = s.files.map(f => f.path -> f).toMap
     // CRASH SAFETY: record the publish intent (branch point + every
     // branch-local file about to move) BEFORE the first rename. A process
     // crash anywhere in the window [first rename, branch-dir delete]
@@ -3022,14 +2767,14 @@ final class GraftTable private (
       val mp = new Path(branchDir(name), GraftTable.PublishManifestName)
       val tmp = new Path(branchDir(name), s".tmp-manifest-${UUID.randomUUID()}")
       val out = fs.create(tmp, false)
-      try out.write(GraftTable.mapper.writeValueAsString(Map(
+      try out.write(GraftLog.mapper.writeValueAsString(Map(
         "branchPoint" -> bp, "files" -> toMove.asJava).asJava)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       require(fs.rename(tmp, mp), s"could not write publish manifest $mp")
     }
     val moved = scala.collection.mutable.ListBuffer.empty[String]
-    try {
+    val published = try {
       val adds = bFiles.flatMap { f =>
         toMain(f.path) match {
           case Some(mp) =>
@@ -3050,7 +2795,7 @@ final class GraftTable private (
       val covered = bFiles.flatMap(f => toMain(f.path)).toSet
       val removes = mainNow.keys.filterNot(covered).toSeq ++
         adds.map(_.path).filter(mainNow.contains) // changed entries re-add
-      commit(bp, "fastForward", adds, removes)
+      commit(s, "fastForward", adds, removes)
     } catch {
       case e: Throwable =>
         // the publish did not land: return moved files to the branch so it
@@ -3064,7 +2809,7 @@ final class GraftTable private (
     val hook = onPublishAfterCommit
     if (hook != null) { onPublishAfterCommit = null; hook() }
     fs.delete(branchDir(name), true)
-    version
+    published
   }
 
   // ---- TAG refs (immutable named versions) -------------------------------
@@ -3089,8 +2834,8 @@ final class GraftTable private (
     require(!listBranches.contains(name),
       s"a live branch is named '$name' — VERSION AS OF '<name>' would be " +
         "ambiguous; publish/drop the branch or pick another tag name")
-    val v = atVersion.getOrElse(version)
-    val all = listVersions(fs, logDir)
+    val all = log.listing().versions
+    val v = atVersion.getOrElse(all.last)
     require(all.contains(v),
       s"version $v does not exist (have ${all.headOption.getOrElse(0L)}.." +
         s"${all.lastOption.getOrElse(0L)})")
@@ -3101,7 +2846,7 @@ final class GraftTable private (
     // temp + rename: a reader never sees a torn tag file
     val tmp = new Path(tagsRoot, s".tmp-tag-${UUID.randomUUID()}")
     val out = fs.create(tmp, false)
-    try out.write(GraftTable.mapper.writeValueAsString(Map(
+    try out.write(GraftLog.mapper.writeValueAsString(Map(
       "version" -> v, "ts" -> System.currentTimeMillis()).asJava)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -3131,8 +2876,8 @@ final class GraftTable private (
   def tagVersion(name: String): Long = {
     require(fs.exists(tagPath(name)),
       s"no tag '$name' (have: ${listTags.map(_._1).mkString(", ")})")
-    GraftTable.mapper.readValue(
-      GraftTable.readFully(fs, tagPath(name)),
+    GraftLog.mapper.readValue(
+      GraftLog.readFully(fs, tagPath(name)),
       classOf[java.util.Map[String, Object]])
       .get("version").asInstanceOf[Number].longValue
   }
@@ -3140,9 +2885,9 @@ final class GraftTable private (
   /** Root-local files any live TAG's pinned version references — excluded
     * from vacuum while the tag lives. O(tags × files) driver metadata.
     */
-  private def tagReferencedLocal(): Set[String] =
+  private def tagReferencedLocal(s: Snapshot): Set[String] =
     listTags.flatMap { case (_, v) =>
-      activeFiles(v).map(_.path).filterNot(_.contains("/"))
+      s.at(v).files.map(_.path).filterNot(_.contains("/"))
     }.toSet
 
   /** Replay a publish manifest a crashed [[fastForward]] left behind.
@@ -3157,14 +2902,13 @@ final class GraftTable private (
   private def recoverCrashedPublish(name: String): Unit = {
     val mp = new Path(branchDir(name), GraftTable.PublishManifestName)
     if (!fs.exists(mp)) return
-    val node = GraftTable.mapper.readValue(
-      GraftTable.readFully(fs, mp), classOf[java.util.Map[String, Object]])
+    val node = GraftLog.mapper.readValue(
+      GraftLog.readFully(fs, mp), classOf[java.util.Map[String, Object]])
     val bp = node.get("branchPoint").asInstanceOf[Number].longValue
     val movedFiles = node.get("files").asInstanceOf[java.util.List[Object]]
       .asScala.map(_.toString).toSet
-    val head = version
-    val landed = (bp + 1 to head).exists { v =>
-      cachedCommit(v)._2.exists(a => movedFiles.contains(a.path))
+    val landed = log.listing().versions.filter(_ > bp).exists { v =>
+      log.commit(v).adds.exists(a => movedFiles.contains(a.path))
     }
     if (landed) fs.delete(branchDir(name), true)
     else {
@@ -3179,19 +2923,15 @@ final class GraftTable private (
     }
   }
 
-  /** Root-local main-table files referenced by any LIVE branch — excluded
-    * from vacuum: a branch's inherited references must survive until the
-    * branch publishes or drops. O(branches × their logs), driver-side.
+  /** Root-local main-table files referenced by any version of any LIVE
+    * branch — excluded from vacuum: a branch's inherited references must
+    * survive until the branch publishes or drops. O(branches × their
+    * logs), driver-side.
     */
   private def branchReferencedLocal(): Set[String] = {
     val rootQ = fs.makeQualified(new Path(location)).toString
     listBranches.flatMap { n =>
-      val bLog = new Path(branchDir(n), LogDirName)
-      val versions = listVersions(fs, bLog)
-      val fromCp = listCheckpoints(fs, bLog)
-        .flatMap(v => readCheckpoint(fs, bLog, v))
-      val fromCommits = versions.flatMap(v => readCommit(fs, bLog, v)._2)
-      (fromCp ++ fromCommits).map(_.path)
+      new GraftLog(branchDir(n), () => fs).referencedPaths
         .filter(_.startsWith(rootQ + "/")).map(_.substring(rootQ.length + 1))
     }.toSet
   }
@@ -3216,8 +2956,9 @@ final class GraftTable private (
     // TAG's pinned version likewise (the reproducibility contract: a
     // tagged training-data snapshot stays bit-readable until the tag is
     // dropped)
-    val live = activeFiles(version).map(_.path).toSet ++
-      branchReferencedLocal() ++ tagReferencedLocal()
+    val s = latest()
+    val live = s.files.map(_.path).toSet ++
+      branchReferencedLocal() ++ tagReferencedLocal(s)
     val horizon = System.currentTimeMillis() - retentionMs
     val orphans = fs.listStatus(new Path(location)).toSeq
       .filter { st =>
@@ -3231,13 +2972,7 @@ final class GraftTable private (
     // and touch NOTHING
     if (dryRun) return orphans
     orphans.foreach(n => fs.delete(new Path(location, n), false))
-    // crashed writers can also strand `.tmp-*` staging files in the log
-    // dir (a commit/checkpoint written but never renamed); they are never
-    // referenced, so sweep them past the same horizon
-    fs.listStatus(logDir).toSeq
-      .filter(st => st.getPath.getName.startsWith(".tmp-") &&
-        st.getModificationTime <= horizon)
-      .foreach(st => fs.delete(st.getPath, false))
+    log.sweepStaged(s.listing, horizon)
     orphans
   }
 
@@ -3255,8 +2990,7 @@ final class GraftTable private (
         d.withColumn(n, lit(null).cast(dt))
       }
 
-  private def alignSchema(df: DataFrame): DataFrame = {
-    val schema = tableSchema
+  private def alignSchema(df: DataFrame, schema: StructType): DataFrame = {
     val filled = fillGenerated(df, schema)
     require(filled.columns.toSet == schema.fieldNames.toSet,
       s"schema mismatch: table has ${schema.fieldNames.mkString(",")}, " +
@@ -3304,7 +3038,7 @@ final class GraftTable private (
           require(!partSourceCols.contains(f.name),
             s"cannot auto-widen partition (source) column '${f.name}': " +
               "transform hashes are type-dependent")
-          requireNoGeneratedOn(f.name, "auto-widen")
+          requireNoGeneratedOn(f.name, "auto-widen", cur)
           require(!GraftTable.generatedOf(cur).contains(f.name),
             s"cannot auto-widen generated column '${f.name}'")
           f.copy(dataType = g.dataType)
@@ -3349,22 +3083,15 @@ final class GraftTable private (
     * scaffolding that dies with the tmp dir — partition identity lives in
     * the LOG, the object-store-friendly design.
     */
-  private def writeData(dfLogical: DataFrame,
-      consOverride: Option[Seq[(String, String)]] = None,
-      colmapOverride: Option[Map[String, String]] = None,
-      statsSchemaOverride: Option[StructType] = None,
-      keyColOverride: Option[Option[String]] = None,
-      partitionByOverride: Option[Seq[String]] = None,
-      bloomOverride: Option[Map[String, Long]] = None,
-      genOverride: Option[Map[String, String]] = None,
-      idOverride: Option[Map[String, IdentitySpec]] = None,
+  private def writeData(dfLogical: DataFrame, target: TableMeta,
+      extraChecks: Seq[(String, String)] = Nil,
       idStrict: Boolean = false,
-      distribute: Boolean = true,
-      sortOverride: Option[Seq[String]] = None): Seq[AddFile] = {
-    // the overrides serve REPLACE TABLE: the data is written under the NEW
-    // definition (schema/colmap/constraints/key/partitioning) while the log
-    // still carries the old one — the swap lands in the same commit
-    val partitionBy = partitionByOverride.getOrElse(this.partitionBy)
+      distribute: Boolean = true): Seq[AddFile] = {
+    // `target` is the definition the files are written under: the read
+    // snapshot's for every write, the NEW one for CREATE and REPLACE TABLE
+    // (the log does not carry it until the commit lands)
+    val partitionBy = target.partitionBy
+    val schema = target.schema
     // GENERATED ALWAYS AS columns, enforced at the ONE place every write
     // funnels through: a NULL slot is computed from the expression (the
     // [[generatedColumns]] contract — SQL null-fill, unassigned merge
@@ -3380,9 +3107,9 @@ final class GraftTable private (
     // question, answered by a pre-fill observe metric in the same write
     // pass. Rewrite paths (update/delete/compact survivors) legitimately
     // carry values and pass idStrict = false.
-    val idSpecs0 = idOverride.getOrElse(GraftTable.identityOf(tableSchema))
+    val idSpecs = GraftTable.identityOf(schema)
       .toSeq.sortBy(_._1).filter { case (n, _) => dfLogical.columns.contains(n) }
-    val strictIds = if (!idStrict) Nil else idSpecs0.filterNot(_._2.allowExplicit)
+    val strictIds = if (!idStrict) Nil else idSpecs.filterNot(_._2.allowExplicit)
     val obsId =
       if (strictIds.isEmpty) None
       else Some(new org.apache.spark.sql.Observation())
@@ -3391,7 +3118,7 @@ final class GraftTable private (
         sum(when(col(n).isNotNull, 1L).otherwise(0L)).as(n) }
       dfLogical.observe(o, ms.head, ms.tail: _*)
     }
-    val gens = genOverride.getOrElse(GraftTable.generatedOf(tableSchema))
+    val gens = GraftTable.generatedOf(schema)
       .toSeq.sortBy(_._1).filter { case (n, _) => dfLogical.columns.contains(n) }
     val dfGen0 = gens.foldLeft(dfStrict) { case (d, (n, e)) =>
       val dt = d.schema.fields.find(_.name == n).get.dataType
@@ -3401,10 +3128,8 @@ final class GraftTable private (
     // hwm + (mid+1)×step — unique within the write, gappy by design
     // (monotonically_increasing_id encodes the partition in the high
     // bits); rewrite paths carry non-null values through untouched
-    val idSpecs = idSpecs0
-    val hwm0 = currentIdHwm
     val dfGen = idSpecs.foldLeft(dfGen0) { case (d, (n, spec)) =>
-      val base = hwm0.getOrElse(n, spec.start - spec.step)
+      val base = target.idHwm.getOrElse(n, spec.start - spec.step)
       val dt = d.schema.fields.find(_.name == n).get.dataType
       d.withColumn(n, coalesce(col(n),
         (lit(base) + (monotonically_increasing_id() + lit(1L)) * lit(spec.step))
@@ -3425,7 +3150,7 @@ final class GraftTable private (
     // null-filling semantics (merge-insert unassigned columns, evolution
     // null-fill) depend on it — declare NOT NULL explicitly as a CHECK
     // constraint (`c IS NOT NULL`, the q303 surface) to enforce it.
-    val cons = consOverride.getOrElse(constraints.toSeq.sortBy(_._1)) ++
+    val cons = target.constraints.toSeq.sortBy(_._1) ++ extraChecks ++
       // post-coalesce the check only fires on supplied values that
       // CONTRADICT the expression (computed slots match trivially)
       gens.map { case (n, e) =>
@@ -3440,14 +3165,13 @@ final class GraftTable private (
     // files store PHYSICAL column names (stable across renames): a version
     // race against a concurrent rename loses the commit and retries, so a
     // file can never land under a stale mapping
-    val cm = colmapOverride.getOrElse(currentColmap)
     val df =
-      if (cm.isEmpty) guarded
-      else guarded.toDF(guarded.columns.toIndexedSeq.map(physName(cm, _)): _*)
+      if (target.colmap.isEmpty) guarded
+      else guarded.toDF(guarded.columns.toIndexedSeq.map(target.physName): _*)
     // BLOOM INDEX: configured columns ride parquet's own per-column
     // bloom-filter writer options (physical names — what the files store);
     // readers probe the resulting footer bitsets, see [[BloomIndex]]
-    val bloomOpts = bloomOverride.getOrElse(currentBloom).flatMap {
+    val bloomOpts = target.bloom.flatMap {
       case (p, ndv) => Seq(
         s"parquet.bloom.filter.enabled#$p" -> "true",
         s"parquet.bloom.filter.expected.ndv#$p" -> ndv.toString)
@@ -3465,8 +3189,7 @@ final class GraftTable private (
     // (distribute = false) carry a layout of their own — an optimize's
     // clustering, a survivor file's row order — that must reach the
     // writer untouched.
-    val sortCols = sortOverride.getOrElse(currentSort)
-      .filter(df.columns.contains)
+    val sortCols = target.sort.filter(df.columns.contains)
     def sorted(d: DataFrame): DataFrame =
       if (!distribute || sortCols.isEmpty) d
       else d.sortWithinPartitions(sortCols.map(col): _*)
@@ -3563,15 +3286,15 @@ final class GraftTable private (
         // O(cells) × latency per commit (at 100 TB: thousands of files
         // against object-store round trips). Bounded by the JVM's common
         // pool; results keep `found` order (commit content is order-
-        // independent, this just keeps logs deterministic).
+        // independent, this just keeps logs deterministic). Every file
+        // settles before the first failure is rethrown: the finally below
+        // must not delete the staging dir under a rename still running.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val statsSchema = statsSchemaOverride.getOrElse(tableSchema)
-        val keyC = keyColOverride.getOrElse(keyCol)
-        val prio = idSpecs.map { case (n, _) => physName(cm, n) }.toSet
-        Await.result(Future.traverse(found.toList) { st => Future {
-          val pv = parsePartitionValues(tmp, st.getPath)
+        val prio = idSpecs.map { case (n, _) => target.physName(n) }.toSet
+        Await.result(Future.traverse(found.toList) { st => Future(scala.util.Try {
+          val pv = parsePartitionValues(tmp, st.getPath, partitionBy)
           val bsuf = bucketKey.flatMap(pv.get).flatten
             .flatMap(v => scala.util.Try(v.toInt).toOption)
             .fold("")(id => f"_$id%05d")
@@ -3579,12 +3302,12 @@ final class GraftTable private (
           val dest = new Path(location, name)
           require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
           val (rows, stats, cs) =
-            footerStats(dest, keyC, statsSchema,
+            footerStats(dest, target.keyCol, schema,
               // identity hwm is recovered from these stats at commit time —
               // the columns must never fall off the stats column cap
               prio)
           AddFile(name, rows, stats, st.getLen, pv, cs)
-        } }, Duration.Inf)
+        }) }, Duration.Inf).map(_.get)
       }
     } finally fs.delete(tmp, true)
   }
@@ -3594,7 +3317,8 @@ final class GraftTable private (
     * `__HIVE_DEFAULT_PARTITION__` for null — and, a Hive quirk the shadow
     * cast inherits, for the empty string).
     */
-  private def parsePartitionValues(tmp: Path, file: Path): Map[String, Option[String]] = {
+  private def parsePartitionValues(tmp: Path, file: Path,
+      partitionBy: Seq[String]): Map[String, Option[String]] = {
     if (partitionBy.isEmpty) return Map.empty
     val rel = file.toString.stripPrefix(tmp.toString).stripPrefix("/")
     val dirs = rel.split('/').dropRight(1)
@@ -3750,9 +3474,6 @@ final class GraftTable private (
       .take(MaxStatsColumns + priorityCols.size).toMap
   }
 
-  // package-private: the spec drives a stale-version commit directly to
-  // pin the create-new collision guard (the public ops re-read the version,
-  // so the race window can't be staged from outside)
   /** Every `checkpointInterval`-th commit also writes a full active-state
     * checkpoint next to the log (overridable for tests; the write is
     * best-effort idempotent — a racing handle producing the identical
@@ -3760,69 +3481,68 @@ final class GraftTable private (
     */
   private[tables] var checkpointInterval: Int = DefaultCheckpointInterval
 
-  private[tables] def commit(expected: Long, op: String,
+  /** Commit `adds`/`removes` as version `base.version + 1`. The new
+    * metadata is `base`'s carried forward under this handle's identity,
+    * with the operation's `edit` applied; everything a commit must derive
+    * is derived here — the writer-feature gate, the stale-handle guards,
+    * the physical-name invariants, the identity high-water marks and the
+    * sticky features. Loses the version race with
+    * [[GraftTable.ConcurrentCommitException]]. Every `checkpointInterval`-th
+    * version also writes a checkpoint, computed from `base`'s files plus
+    * this commit's actions (no re-listing).
+    */
+  private[tables] def commit(base: Snapshot, op: String,
       adds: Seq[AddFile], removes: Seq[String],
-      txn: Option[String] = None, newSchema: Option[StructType] = None,
-      newColmap: Option[Map[String, String]] = None,
-      newRetired: Option[Seq[String]] = None,
-      newConstraints: Option[Map[String, String]] = None,
-      dataChange: Boolean = true,
-      newKeyCol: Option[Option[String]] = None,
-      newPartitionBy: Option[Seq[String]] = None,
-      newBloom: Option[Map[String, Long]] = None,
-      newSort: Option[Seq[String]] = None,
-      newNdv: Option[Map[String, Long]] = None): Long = {
-    val next = expected + 1
-    val schema = newSchema.getOrElse(schemaAt(expected))
-    val cm = newColmap.getOrElse(colmapAt(expected))
-    val retired = newRetired.getOrElse(retiredAt(expected))
-    val cons = newConstraints.getOrElse(constraintsAt(expected))
-    val bloom = newBloom.getOrElse(bloomAt(expected))
-    val srt = newSort.getOrElse(sortAt(expected))
-    val ndvs = newNdv.getOrElse(ndvAt(expected))
+      txn: Option[String] = None,
+      edit: TableMeta => TableMeta = identity): Long = {
+    val prior = base.meta
+    val next = base.version + 1
     // WRITER feature gate: refuse to commit to a table whose log declares
     // writer features this engine does not implement — an unaware commit
     // would corrupt the invariant the feature maintains (skip a CHECK
     // constraint, reuse a retired physical name, …). Reads of such a
     // table stay allowed; only writes are refused. (Unknown READER
-    // features already failed loud in readCommit before reaching here.)
-    val prior = featuresAt(expected)
-    val unknownW = prior._2.diff(SupportedWriterFeatures)
+    // features already failed loud when the log was read.)
+    val unknownW = prior.writerFeatures.diff(SupportedWriterFeatures)
     if (unknownW.nonEmpty) throw new IllegalStateException(
       s"table at $location uses writer feature(s) " +
         s"${unknownW.toSeq.sorted.mkString(", ")} this engine does not " +
         "implement — refusing to write (an unaware commit would corrupt " +
         "what the feature maintains); upgrade the engine to write here")
-    // STALE-HANDLE guard: the partitioning this handle would record must
-    // match what the log says is in force at `expected` — after a
-    // setPartitioning / REPLACE from another handle, writing through THIS
-    // one would lay files out under the retired spec (and log a lie about
-    // the current one). Version conflicts catch racing writers; this
-    // catches the same-log sequential case.
-    if (newPartitionBy.isEmpty)
-      require(partitionByAt(expected) == partitionBy,
+    // every commit carries the table identity (key + partitioning) so
+    // `at()` can read the LATEST definition — REPLACE TABLE may change both
+    val edited = edit(prior.copy(op = op, ts = System.currentTimeMillis(),
+      keyCol = keyCol, partitionBy = partitionBy, txn = txn, dataChange = true,
+      branchPoint = None))
+    // STALE-HANDLE guards: a commit that keeps this handle's partitioning
+    // must find the log still carrying it — after a setPartitioning /
+    // REPLACE from another handle, writing through THIS one would lay files
+    // out under the retired spec (and log a lie about the current one).
+    // Version conflicts catch racing writers; this catches the same-log
+    // sequential case. Same for the merge key: AddFile key stats are keyed
+    // to it — committing stats computed for the OLD key under a NEW one
+    // would make merge's file pruning read them as the wrong column.
+    if (edited.partitionBy == partitionBy)
+      require(prior.partitionBy == partitionBy,
         s"stale table handle: partitioning changed from " +
           s"[${partitionBy.mkString(",")}] to " +
-          s"[${partitionByAt(expected).mkString(",")}] since this handle " +
+          s"[${prior.partitionBy.mkString(",")}] since this handle " +
           "was opened; re-open with GraftTable.at(...)")
-    // same guard for the merge key: AddFile key stats are keyed to it —
-    // committing stats computed for the OLD key under a NEW one would make
-    // merge's file pruning read them as the wrong column (unsound)
-    if (newKeyCol.isEmpty)
-      require(cachedCommit(expected)._1.get("keyCol")
-          .flatMap(Option(_)).map(_.toString) == keyCol,
+    if (edited.keyCol == keyCol)
+      require(prior.keyCol == keyCol,
         "stale table handle: the merge key changed since this handle was " +
           "opened; re-open with GraftTable.at(...)")
     // physical-uniqueness invariant: a NEW logical column whose name equals
     // a renamed column's retired physical name would collide in the files —
     // fail the commit, not the next read. Same for names RETIRED by DROP
     // COLUMN: old files still hold their values.
-    val phys = schema.fieldNames.toIndexedSeq.map(physName(cm, _))
+    val schema = edited.schema
+    val phys = schema.fieldNames.toIndexedSeq.map(edited.physName)
     require(phys.distinct.size == phys.size,
       s"physical column collision: ${phys.diff(phys.distinct).distinct.mkString(",")} " +
         "— a column name retired by RENAME COLUMN cannot be reused while the " +
         "mapping is live")
-    val reused = phys.filter(retired.contains)
+    val reused = phys.filter(edited.retired.contains)
     require(reused.isEmpty,
       s"physical column collision with DROPPED column(s): ${reused.mkString(",")} " +
         "— old files still hold their values; bind a fresh physical name")
@@ -3831,34 +3551,28 @@ final class GraftTable private (
     // assignments move it) and are carried forward FOREVER — restore /
     // replace never reuse a value. Identity columns are exempt from the
     // stats cap, so the adds always carry the needed per-file max/min.
-    val idHwm: Map[String, Long] = {
-      val prev = idHwmAt(expected)
-      val specs = GraftTable.identityOf(schema)
-      if (specs.isEmpty) prev
-      else prev ++ specs.flatMap { case (n, spec) =>
-        val assigned = adds.flatMap(_.cs.get(physName(cm, n)))
-          .map(ks => if (spec.step > 0) ks.max.toLong else ks.min.toLong)
-        val all = prev.get(n).toSeq ++ assigned
-        if (all.isEmpty) None
-        else Some(n -> (if (spec.step > 0) all.max else all.min))
-      }
-    }
+    val meta = edited.copy(schemaJson = schema.json,
+      idHwm = advanceIdHwm(edited.idHwm, schema, edited.colmap, adds)).withFeatures(adds)
     // one-shot test hook: lets specs land a concurrent commit between this
-    // attempt's version read and its log write, making OCC races
-    // deterministic (never set outside tests)
+    // attempt's snapshot and its log write, making OCC races deterministic
+    // (never set outside tests)
     val hook = onNextCommitAttempt
     if (hook != null) { onNextCommitAttempt = null; hook() }
-    // every commit carries the table identity (key + partitioning) so
-    // `at()` can read the LATEST definition — REPLACE TABLE may change both
-    writeCommit(fs, logDir, next,
-      metaMap(op, newKeyCol.getOrElse(keyCol), schema.json, txn,
-        newPartitionBy.getOrElse(partitionBy), cm, retired, cons, dataChange,
-        bloom, idHwm, srt, priorFeatures = prior, adds = adds, ndv = ndvs),
-      adds, removes)
-    if (checkpointInterval > 0 && next % checkpointInterval == 0)
-      writeCheckpoint(fs, logDir, next, activeFiles(next), committedTxns)
+    log.write(next, meta, adds, removes)
+    if (checkpointInterval > 0 && next % checkpointInterval == 0) {
+      val active = scala.collection.mutable.LinkedHashMap(base.files.map(f => f.path -> f): _*)
+      GraftLog.applyActions(active, adds, removes)
+      log.writeCheckpoint(next, active.values.toSeq, base.txns ++ txn)
+    }
     next
   }
+
+  // package-private: the spec drives a stale-version commit directly to
+  // pin the create-new collision guard (the public ops re-read the version,
+  // so the race window can't be staged from outside)
+  private[tables] def commit(expected: Long, op: String, adds: Seq[AddFile],
+      removes: Seq[String]): Long =
+    commit(log.snapshot(Some(expected)), op, adds, removes)
 
   /** PARTITION EVOLUTION (the published Iceberg partition-spec-evolution
     * design): change the table's partitioning in ONE metadata-only commit —
@@ -3874,12 +3588,12 @@ final class GraftTable private (
     * guard fails it loud) — re-open with `GraftTable.at(...)`.
     */
   def setPartitioning(specs: Seq[String]): Long = {
-    val v = version
+    val s = latest()
     val parsed = specs.map(PartitionTransforms.parse)
-    PartitionTransforms.validate(parsed, schemaAt(v))
-    require(specs != partitionByAt(v),
+    PartitionTransforms.validate(parsed, s.meta.schema)
+    require(specs != s.meta.partitionBy,
       s"partitioning is already [${specs.mkString(",")}]")
-    commit(v, "setPartitioning", Nil, Nil, newPartitionBy = Some(specs))
+    commit(s, "setPartitioning", Nil, Nil, edit = _.copy(partitionBy = specs))
   }
 
   /** TYPE WIDENING (the published Delta type-widening contract): change a
@@ -3906,8 +3620,8 @@ final class GraftTable private (
     * contract). The merge key CAN widen — its stats are type-stable.
     */
   def widenColumn(name: String, newType: DataType): Long = {
-    val v = version
-    val cur = schemaAt(v)
+    val s = latest()
+    val cur = s.meta.schema
     val f = cur.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"no column '$name' in ${cur.fieldNames.mkString(",")}"))
@@ -3919,13 +3633,13 @@ final class GraftTable private (
     require(!partSourceCols.contains(name),
       s"cannot widen partition (source) column '$name': transform hashes " +
         "are type-dependent, so old files' cell membership would diverge")
-    requireNoGeneratedOn(name, "widen")
+    requireNoGeneratedOn(name, "widen", cur)
     require(!GraftTable.generatedOf(cur).contains(name),
       s"cannot widen generated column '$name': its type follows its " +
         "generation expression")
     val evolved = StructType(cur.fields.toIndexedSeq.map(x =>
       if (x.name == name) x.copy(dataType = newType) else x))
-    commit(v, "widenColumn", Nil, Nil, None, Some(evolved))
+    commit(s, "widenColumn", Nil, Nil, edit = _.copy(schemaJson = evolved.json))
   }
 
   /** Rename a column in ONE metadata-only commit (no file touched, O(1) at
@@ -3939,33 +3653,32 @@ final class GraftTable private (
   def renameColumn(oldName: String, newName: String): Long = {
     require(oldName != newName, "rename to the same name is a no-op; refusing")
     require(newName.nonEmpty, "new column name must be non-empty")
-    val v = version
-    val cur = schemaAt(v)
-    val cm = colmapAt(v)
+    val s = latest()
+    val cur = s.meta.schema
+    val cm = s.meta.colmap
     require(cur.fieldNames.contains(oldName),
       s"no column '$oldName' in ${cur.fieldNames.mkString(",")}")
     require(!cur.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"column '$newName' already exists")
-    require(!retiredAt(v).contains(newName),
+    require(!s.meta.retired.contains(newName),
       s"'$newName' is the retired physical name of a DROPPED column; " +
         "old files still hold its values — pick a different name")
     require(!keyCol.contains(oldName), "cannot rename the merge key column")
     require(!partSourceCols.contains(oldName),
       "cannot rename a partition (source) column")
-    requireNoConstraintOn(oldName, "rename")
-    requireNoGeneratedOn(oldName, "rename")
+    requireNoConstraintOn(oldName, "rename", s.meta.constraints)
+    requireNoGeneratedOn(oldName, "rename", cur)
     val evolved = StructType(cur.fields.toIndexedSeq.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
-    val p = physName(cm, oldName)
+    val p = s.meta.physName(oldName)
     val newCm = (cm - oldName) ++
       (if (newName == p) Map.empty[String, String] else Map(newName -> p))
-    commit(v, "renameColumn", Nil, Nil, None, Some(evolved), Some(newCm))
+    commit(s, "renameColumn", Nil, Nil,
+      edit = _.copy(schemaJson = evolved.json, colmap = newCm))
   }
 }
 
 object GraftTable {
-
-  private val LogDirName = "_graft_log"
 
   /** Per-table directory holding live (unpublished) branch tables. */
   private val BranchDirName = "_graft_branches"
@@ -3983,7 +3696,6 @@ object GraftTable {
     * dir, with no repair path.
     */
   private val PublishManifestName = "_graft_publish_manifest.json"
-  private val mapper = new ObjectMapper()
 
   /** Internal metadata column names exposed by `readFiles(withMeta=true)`:
     * the source file's base name (== `AddFile.path` — files are flattened
@@ -4200,18 +3912,6 @@ object GraftTable {
     */
   private[tables] val BloomCacheMaxEntries = 512
 
-  /** Commit-meta `partitionBy` decode: transform specs ride a JSON list,
-    * identity-only tables the legacy comma-joined string.
-    */
-  private[tables] def decodePartitionBy(raw: Option[Any]): Seq[String] =
-    raw match {
-      case Some(l: java.util.List[_]) => l.asScala.toSeq.map(_.toString)
-      case Some(s) =>
-        Option(s).map(_.toString).filter(_.nonEmpty)
-          .map(_.split(",").toSeq).getOrElse(Nil)
-      case None => Nil
-    }
-
   /** Hive's sentinel directory value for a null partition key. */
   private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
@@ -4343,59 +4043,62 @@ object GraftTable {
       s"keyCol $k not in ${schemaWithGen.fieldNames.mkString(",")}"))
     PartitionTransforms.validate(partitionBy.map(PartitionTransforms.parse),
       schemaWithGen)
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(location)
-    val fs = root.getFileSystem(conf)
-    val logDir = new Path(root, LogDirName)
-    require(!fs.exists(logDir), s"table already exists at $location")
-    fs.mkdirs(logDir)
-    val schemaJson = schemaWithGen.json
-    val t = new GraftTable(location, spark, keyCol, schemaJson, partitionBy)
-    val gens = generatedOf(schemaWithGen)
-    gens.foreach { case (n, e) => t.validateGeneratedSql(n, e, schemaWithGen) }
+    val t = new GraftTable(location, spark, keyCol, partitionBy)
+    t.log.create(location)
+    val target = TableMeta("create", 0L, keyCol, schemaWithGen.json, partitionBy,
+      constraints = constraints)
+    generatedOf(schemaWithGen).foreach { case (n, e) =>
+      t.validateGeneratedSql(n, e, schemaWithGen) }
     // declared CHECK constraints land IN the create commit and gate its
     // data — a violating CTAS commits NOTHING (single-commit atomicity),
     // unlike create-then-addConstraint which could strand constraint-less
     // data on a crash between the two commits
-    val cons = constraints.toSeq.sortBy(_._1)
-    cons.foreach { case (n, sql) => t.validateConstraintSql(n, sql, schemaWithGen) }
+    constraints.toSeq.sortBy(_._1).foreach { case (n, sql) =>
+      t.validateConstraintSql(n, sql, schemaWithGen) }
     // aligned by construction (withId carries exactly the declared
     // columns); alignSchema's GENERATED-ALWAYS presence check must not
     // fire on create's own null identity slots
-    val ids = identityOf(schemaWithGen)
     val adds = t.writeData(
-      withId.select(schemaWithGen.fieldNames.toIndexedSeq.map(col): _*),
-      consOverride = Some(cons), genOverride = Some(gens),
-      idOverride = Some(ids), idStrict = true)
+      withId.select(schemaWithGen.fieldNames.toIndexedSeq.map(col): _*), target,
+      idStrict = true)
     // the create commit seeds the identity high-water marks from its own
     // assigned values (later commits go through commit(), which advances)
-    val idHwmCreate = ids.flatMap { case (n, spec) =>
-      val assigned = adds.flatMap(_.cs.get(n))
-        .map(ks => if (spec.step > 0) ks.max.toLong else ks.min.toLong)
-      if (assigned.isEmpty) None
-      else Some(n -> (if (spec.step > 0) assigned.max else assigned.min))
-    }
-    writeCommit(fs, logDir, 1L,
-      metaMap("create", keyCol, schemaJson, None, partitionBy,
-        constraints = constraints, idHwm = idHwmCreate, adds = adds),
-      adds, Nil)
+    t.log.write(1L, target.copy(ts = System.currentTimeMillis(),
+      idHwm = advanceIdHwm(Map.empty, schemaWithGen, Map.empty, adds))
+      .withFeatures(adds), adds, Nil)
     t
   }
 
   /** Open an existing table (keyCol + schema + partitioning come from the
-    * create commit).
+    * latest commit: REPLACE TABLE may have redefined key and partitioning
+    * since creation).
     */
   def at(spark: SparkSession, location: String): GraftTable = {
-    val conf = spark.sessionState.newHadoopConf()
-    val logDir = new Path(new Path(location), LogDirName)
-    val fs = logDir.getFileSystem(conf)
-    require(fs.exists(logDir), s"no table at $location")
-    // identity comes from the LATEST commit: REPLACE TABLE may have
-    // redefined key and partitioning since creation
-    val (meta, _, _) = readCommit(fs, logDir, listVersions(fs, logDir).last)
-    val key = Option(meta.get("keyCol").orNull).map(_.toString).filter(_.nonEmpty)
-    val parts = decodePartitionBy(meta.get("partitionBy"))
-    new GraftTable(location, spark, key, meta("schema").toString, parts)
+    val log = new GraftLog(new Path(location),
+      () => new Path(location).getFileSystem(spark.sessionState.newHadoopConf()))
+    require(log.exists, s"no table at $location")
+    val meta = log.snapshot().meta
+    new GraftTable(location, spark, meta.keyCol, meta.partitionBy)
+  }
+
+  /** Identity high-water marks after a commit of `adds`: each identity
+    * column's mark advances to the furthest value the adds' stats show
+    * (rewrites re-add values ≤ hwm, so only genuine assignments move it)
+    * and is carried forward FOREVER — restore / replace never reuse a
+    * value. Identity columns are exempt from the stats cap, so the adds
+    * always carry the needed per-file max/min.
+    */
+  private def advanceIdHwm(prev: Map[String, Long], schema: StructType,
+      colmap: Map[String, String], adds: Seq[AddFile]): Map[String, Long] = {
+    val specs = identityOf(schema)
+    if (specs.isEmpty) prev
+    else prev ++ specs.flatMap { case (n, spec) =>
+      val assigned = adds.flatMap(_.cs.get(colmap.getOrElse(n, n)))
+        .map(ks => if (spec.step > 0) ks.max.toLong else ks.min.toLong)
+      val all = prev.get(n).toSeq ++ assigned
+      if (all.isEmpty) None
+      else Some(n -> (if (spec.step > 0) all.max else all.min))
+    }
   }
 
   /** PROTOCOL feature gate (the Delta minReader/minWriter / Iceberg
@@ -4433,227 +4136,6 @@ object GraftTable {
       "identity-columns", "unique-key", "partition-transforms",
       "bloom-index", "sort-order", "branches")
 
-  /** The feature sets a commit with this state implies — derived, never
-    * hand-maintained, so a new surface that forgets to register here is
-    * caught by the derivation tests rather than silently ungated.
-    */
-  private def impliedFeatures(schemaJson: String,
-      partitionBy: Seq[String], colmap: Map[String, String],
-      retired: Seq[String], constraints: Map[String, String],
-      bloom: Map[String, Long], idHwm: Map[String, Long], sort: Seq[String],
-      adds: Seq[AddFile]): (Set[String], Set[String]) = {
-    val r = Set.newBuilder[String]
-    val w = Set.newBuilder[String]
-    if (adds.exists(_.dv.isDefined)) r += "deletion-vectors"
-    if (colmap.nonEmpty) r += "column-mapping"
-    if (retired.nonEmpty) w += "drop-columns"
-    if (constraints.nonEmpty) w += "check-constraints"
-    if (bloom.nonEmpty) w += "bloom-index"
-    if (idHwm.nonEmpty) w += "identity-columns"
-    if (sort.nonEmpty) w += "sort-order"
-    if (partitionBy.exists(_.contains("("))) w += "partition-transforms"
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    if (generatedOf(schema).nonEmpty) w += "generated-columns"
-    if (identityOf(schema).nonEmpty) w += "identity-columns"
-    if (schema.fields.exists(f => f.metadata.contains(KeyUniqueKey) &&
-        f.metadata.getBoolean(KeyUniqueKey))) w += "unique-key"
-    (r.result(), w.result())
-  }
-
-  private def metaMap(op: String, keyCol: Option[String], schemaJson: String,
-      txn: Option[String] = None, partitionBy: Seq[String] = Nil,
-      colmap: Map[String, String] = Map.empty,
-      retired: Seq[String] = Nil,
-      constraints: Map[String, String] = Map.empty,
-      dataChange: Boolean = true,
-      bloom: Map[String, Long] = Map.empty,
-      idHwm: Map[String, Long] = Map.empty,
-      sort: Seq[String] = Nil,
-      priorFeatures: (Set[String], Set[String]) = (Set.empty, Set.empty),
-      adds: Seq[AddFile] = Nil,
-      ndv: Map[String, Long] = Map.empty) = {
-    val m = new java.util.LinkedHashMap[String, Any]()
-    m.put("op", op)
-    m.put("ts", System.currentTimeMillis())
-    m.put("keyCol", keyCol.orNull)
-    m.put("schema", schemaJson)
-    txn.foreach(m.put("txn", _))
-    if (partitionBy.nonEmpty) {
-      // transform specs contain commas ("bucket(8,k)") — they ride a JSON
-      // list; identity-only tables keep the legacy comma-string encoding
-      // byte-for-byte so existing logs and their readers are untouched
-      if (partitionBy.exists(_.contains("("))) {
-        val pj = new java.util.ArrayList[String]()
-        partitionBy.foreach(pj.add)
-        m.put("partitionBy", pj)
-      } else m.put("partitionBy", partitionBy.mkString(","))
-    }
-    if (colmap.nonEmpty) {
-      val cmj = new java.util.LinkedHashMap[String, Any]()
-      colmap.foreach { case (l, p) => cmj.put(l, p) }
-      m.put("colmap", cmj)
-    }
-    if (retired.nonEmpty) {
-      val rj = new java.util.ArrayList[String]()
-      retired.foreach(rj.add)
-      m.put("retired", rj)
-    }
-    if (constraints.nonEmpty) {
-      val cj = new java.util.LinkedHashMap[String, Any]()
-      constraints.foreach { case (n, s) => cj.put(n, s) }
-      m.put("constraints", cj)
-    }
-    if (bloom.nonEmpty) {
-      val bj = new java.util.LinkedHashMap[String, Any]()
-      bloom.toSeq.sortBy(_._1).foreach { case (c, ndv) => bj.put(c, ndv) }
-      m.put("bloom", bj)
-    }
-    if (idHwm.nonEmpty) {
-      val ij = new java.util.LinkedHashMap[String, Any]()
-      idHwm.toSeq.sortBy(_._1).foreach { case (c, v) => ij.put(c, v) }
-      m.put("idhwm", ij)
-    }
-    if (ndv.nonEmpty) {
-      val nj = new java.util.LinkedHashMap[String, Any]()
-      ndv.toSeq.sortBy(_._1).foreach { case (c, v) => nj.put(c, v) }
-      m.put("ndv", nj)
-    }
-    if (sort.nonEmpty) {
-      val sj = new java.util.ArrayList[String]()
-      sort.foreach(sj.add)
-      m.put("sort", sj)
-    }
-    // layout-only commits (compact/optimize): rows unchanged, so change
-    // feeds skip them without reading the rewritten files
-    if (!dataChange) m.put("dataChange", false)
-    // sticky feature gate: prior ∪ implied-by-this-commit, sorted for
-    // byte-stable rendering
-    val (ir, iw) = impliedFeatures(schemaJson, partitionBy, colmap, retired,
-      constraints, bloom, idHwm, sort, adds)
-    val (fr, fw) = (priorFeatures._1 ++ ir, priorFeatures._2 ++ iw)
-    if (fr.nonEmpty) {
-      val l = new java.util.ArrayList[String]()
-      fr.toSeq.sorted.foreach(l.add)
-      m.put("readerFeatures", l)
-    }
-    if (fw.nonEmpty) {
-      val l = new java.util.ArrayList[String]()
-      fw.toSeq.sorted.foreach(l.add)
-      m.put("writerFeatures", l)
-    }
-    m.asScala.toMap
-  }
-
-  private def logPath(logDir: Path, v: Long) = new Path(logDir, f"$v%020d.json")
-  private def checkpointPath(logDir: Path, v: Long) =
-    new Path(logDir, f"$v%020d.checkpoint.json")
-
-  private val CommitName = """(\d{20})\.json""".r
-  private val CheckpointName = """(\d{20})\.checkpoint\.json""".r
-
-  private def listVersions(fs: FileSystem, logDir: Path): Seq[Long] =
-    fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case CommitName(v) => v.toLong }.sorted
-
-  private def listCheckpoints(fs: FileSystem, logDir: Path): Seq[Long] =
-    fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case CheckpointName(v) => v.toLong }.sorted
-
-  /** One NDJSON commit file, made visible ATOMICALLY: the content is fully
-    * written to a hidden temp file in the log dir, then `rename`d into
-    * place — rename is the atomic metadata operation on HDFS-semantics
-    * filesystems (and POSIX same-directory), and it FAILS when the
-    * destination exists, so the loser of a version race gets
-    * [[ConcurrentCommitException]] and no reader can EVER observe a torn or
-    * empty commit. (`create(overwrite=false)` alone is not enough: the file
-    * becomes listable at create time, before its bytes land — a concurrent
-    * reader between create and close would parse an empty commit, and the
-    * memoizing commit cache would keep that torn read forever. Found by the
-    * racing-writers stress spec.)
-    */
-  private def writeCommit(fs: FileSystem, logDir: Path, v: Long,
-      meta: Map[String, Any], adds: Seq[AddFile], removes: Seq[String]): Unit = {
-    val tmp = new Path(logDir, s".tmp-commit-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try {
-      val sb = new StringBuilder
-      sb.append(mapper.writeValueAsString(
-        Map("meta" -> meta.asJava).asJava)).append('\n')
-      adds.foreach { a =>
-        sb.append(mapper.writeValueAsString(Map("add" -> addNode(a)).asJava)).append('\n')
-      }
-      removes.foreach { r =>
-        sb.append(mapper.writeValueAsString(Map("remove" -> r).asJava)).append('\n')
-      }
-      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
-    val p = logPath(logDir, v)
-    if (!renameClaim(fs, tmp, p)) {
-      fs.delete(tmp, false)
-      throw new ConcurrentCommitException(
-        s"version $v was committed concurrently at $logDir; " +
-          "re-read the snapshot and retry")
-    }
-  }
-
-  /** Atomically claim `p` with the fully-written `tmp`. On HDFS the
-    * namenode makes rename-onto-existing fail atomically; on the LOCAL
-    * filesystem the Hadoop implementations check-then-rename (and POSIX
-    * rename overwrites), so two in-JVM racers could both pass the check and
-    * the loser would CLOBBER the winner — the JVM-wide lock closes exactly
-    * that window (found by the racing-writers stress spec). Multi-process
-    * writers on a bare local filesystem remain out of scope, the same
-    * per-store boundary every log-structured table format draws (a
-    * production deployment is HDFS-semantics or a coordination layer).
-    */
-  private def renameClaim(fs: FileSystem, tmp: Path, p: Path): Boolean =
-    renameLock.synchronized {
-      try !fs.exists(p) && fs.rename(tmp, p) catch {
-        case _: java.io.IOException => false
-      }
-    }
-  private val renameLock = new Object
-
-  private def readCommit(fs: FileSystem, logDir: Path, v: Long)
-      : (Map[String, Any], Seq[AddFile], Seq[String]) = {
-    val text = readFully(fs, logPath(logDir, v))
-    var meta = Map.empty[String, Any]
-    val adds = Seq.newBuilder[AddFile]
-    val removes = Seq.newBuilder[String]
-    text.linesIterator.filter(_.nonEmpty).foreach { line =>
-      val node = mapper.readValue(line, classOf[java.util.Map[String, Object]])
-      if (node.containsKey("meta"))
-        meta = node.get("meta").asInstanceOf[java.util.Map[String, Object]]
-          .asScala.toMap
-      else if (node.containsKey("add"))
-        adds += parseAdd(node.get("add").asInstanceOf[java.util.Map[String, Object]])
-      else if (node.containsKey("remove"))
-        removes += node.get("remove").toString
-      else
-        // an action type this engine does not know CANNOT be skipped: the
-        // old behavior (silent skip) meant a newer log format read WRONG
-        // instead of loud — the exact failure the feature gate exists for
-        throw new IllegalStateException(
-          s"unknown log action ${node.keySet.asScala.mkString("/")} in " +
-            s"commit $v at $logDir — written by a newer engine; refusing " +
-            "to read rather than silently dropping it")
-    }
-    // READER feature gate: a feature-unaware scan would be silently wrong
-    // (a DV-unaware reader returns deleted rows; a colmap-unaware reader
-    // returns physical names) — refuse loud, naming the features
-    meta.get("readerFeatures") match {
-      case Some(l: java.util.List[_]) =>
-        val unknown = l.asScala.map(_.toString).toSet.diff(SupportedReaderFeatures)
-        if (unknown.nonEmpty) throw new IllegalStateException(
-          s"commit $v at $logDir requires reader feature(s) " +
-            s"${unknown.toSeq.sorted.mkString(", ")} this engine does not " +
-            "implement — refusing to read (an unaware read would silently " +
-            "return wrong rows); upgrade the engine to read this table")
-      case _ => ()
-    }
-    (meta, adds.result(), removes.result())
-  }
-
   /** Grace window before an unreferenced data file becomes reclaimable —
     * long enough that any writer whose files predate it has either
     * committed or died (7 days, the standard lakehouse default).
@@ -4666,136 +4148,5 @@ object GraftTable {
     * and O(versions) file reads per open.
     */
   private val DefaultCheckpointInterval: Int = 10
-
-  /** Shared AddFile serde — commits and checkpoints write the identical
-    * NDJSON `{"add":{…}}` shape so one parser reads both.
-    */
-  private def addNode(a: AddFile): java.util.Map[String, Any] = {
-    val m = new java.util.LinkedHashMap[String, Any]()
-    m.put("path", a.path); m.put("rows", a.rows); m.put("bytes", a.bytes)
-    a.stats.foreach { s =>
-      m.put("kind", s.kind); m.put("min", s.min); m.put("max", s.max)
-    }
-    if (a.pv.nonEmpty) {
-      val pv = new java.util.LinkedHashMap[String, Any]()
-      a.pv.foreach { case (c, v) => pv.put(c, v.orNull) } // JSON null = null key
-      m.put("pv", pv)
-    }
-    if (a.cs.nonEmpty) {
-      val cs = new java.util.LinkedHashMap[String, Any]()
-      a.cs.foreach { case (c, s) =>
-        val e = new java.util.LinkedHashMap[String, Any]()
-        e.put("kind", s.kind); e.put("min", s.min); e.put("max", s.max)
-        s.nulls.foreach(n => e.put("nulls", n))
-        s.rows.foreach(r => e.put("rows", r))
-        cs.put(c, e)
-      }
-      m.put("cs", cs)
-    }
-    a.dv.foreach { d => m.put("dvn", d.n); m.put("dv", d.b64) }
-    a.cb.foreach { c =>
-      val l = new java.util.ArrayList[String]()
-      c.foreach(l.add)
-      m.put("cb", l)
-    }
-    m
-  }
-
-  private def parseAdd(m: java.util.Map[String, Object]): AddFile = {
-    val stats =
-      if (m.containsKey("kind"))
-        Some(KeyStats(m.get("kind").toString, m.get("min").toString, m.get("max").toString))
-      else None
-    val pv = Option(m.get("pv"))
-      .map(_.asInstanceOf[java.util.Map[String, Object]].asScala
-        .map { case (c, v) => c -> Option(v).map(_.toString) }.toMap)
-      .getOrElse(Map.empty[String, Option[String]])
-    val cs = Option(m.get("cs"))
-      .map(_.asInstanceOf[java.util.Map[String, Object]].asScala.map { case (c, e) =>
-        val em = e.asInstanceOf[java.util.Map[String, Object]]
-        c -> KeyStats(em.get("kind").toString, em.get("min").toString,
-          em.get("max").toString,
-          Option(em.get("nulls")).map(_.asInstanceOf[Number].longValue),
-          Option(em.get("rows")).map(_.asInstanceOf[Number].longValue))
-      }.toMap)
-      .getOrElse(Map.empty[String, KeyStats])
-    val dv = Option(m.get("dv")).map(b =>
-      Dv(m.get("dvn").asInstanceOf[Number].longValue, b.toString))
-    val cb = Option(m.get("cb")).map(
-      _.asInstanceOf[java.util.List[Object]].asScala.map(_.toString).toSeq)
-    AddFile(m.get("path").toString,
-      m.get("rows").asInstanceOf[Number].longValue, stats,
-      Option(m.get("bytes")).map(_.asInstanceOf[Number].longValue).getOrElse(0L),
-      pv, cs, dv, cb)
-  }
-
-  private def readFully(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-      buf.toString("UTF-8")
-    } finally in.close()
-  }
-
-  /** The complete active-file set as of (immediately after) commit `v`, one
-    * `{"add":…}` line per file. Same write-temp-then-rename visibility
-    * discipline as `writeCommit` — a torn checkpoint would be WORSE than a
-    * torn commit (NDJSON truncated at a line boundary silently drops active
-    * files from every snapshot that replays it). The checkpoint for a
-    * version is a pure function of the immutable log prefix, so two racing
-    * handles produce identical content and the rename loser simply drops
-    * its temp — no exception.
-    */
-  private def writeCheckpoint(fs: FileSystem, logDir: Path, v: Long,
-      files: Seq[AddFile], txns: Set[String] = Set.empty): Unit = {
-    val tmp = new Path(logDir, s".tmp-checkpoint-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try {
-      val sb = new StringBuilder
-      // the ACCUMULATED idempotent-txn ids of every commit <= v ride the
-      // checkpoint (sorted — racing handles must render identical bytes):
-      // history EXPIRATION deletes those commits, and a replayed
-      // exactly-once txn must stay a no-op across it
-      if (txns.nonEmpty)
-        sb.append(mapper.writeValueAsString(
-          Map("txns" -> txns.toSeq.sorted.asJava).asJava)).append('\n')
-      files.foreach { a =>
-        sb.append(mapper.writeValueAsString(Map("add" -> addNode(a)).asJava)).append('\n')
-      }
-      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
-    if (!renameClaim(fs, tmp, checkpointPath(logDir, v)))
-      fs.delete(tmp, false) // a racing handle already wrote it
-  }
-
-  private def readCheckpoint(fs: FileSystem, logDir: Path, v: Long): Seq[AddFile] =
-    readFully(fs, checkpointPath(logDir, v)).linesIterator.filter(_.nonEmpty).flatMap { line =>
-      val node = mapper.readValue(line, classOf[java.util.Map[String, Object]])
-      if (!node.containsKey("add") && !node.containsKey("txns"))
-        // same loud-never-wrong contract as readCommit: an unknown
-        // checkpoint entry type means a newer engine wrote state this one
-        // would silently drop from every snapshot
-        throw new IllegalStateException(
-          s"unknown checkpoint entry ${node.keySet.asScala.mkString("/")} " +
-            s"at $logDir version $v — written by a newer engine; refusing " +
-            "to read rather than silently dropping it")
-      Option(node.get("add"))
-        .map(a => parseAdd(a.asInstanceOf[java.util.Map[String, Object]]))
-    }.toSeq
-
-  /** The txn set a checkpoint carries: `Some` iff the checkpoint has an
-    * explicit txns line (then it is COMPLETE for versions <= cp and the
-    * caller may skip scanning them); `None` for legacy checkpoints, where
-    * every commit still exists and a full scan stays correct.
-    */
-  private def readCheckpointTxns(fs: FileSystem, logDir: Path, v: Long)
-      : Option[Set[String]] =
-    readFully(fs, checkpointPath(logDir, v)).linesIterator.filter(_.nonEmpty)
-      .flatMap { line =>
-        val node = mapper.readValue(line, classOf[java.util.Map[String, Object]])
-        Option(node.get("txns")).map(_.asInstanceOf[java.util.List[Object]]
-          .asScala.map(_.toString).toSet)
-      }.nextOption()
 
 }

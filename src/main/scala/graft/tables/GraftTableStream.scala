@@ -260,12 +260,12 @@ private[tables] final class GraftTableMicroBatchStream(
     * LOUD otherwise — the append-only contract.
     */
   private def emittable(v: Long): Seq[GraftTable.AddFile] = {
-    val (meta, adds, removes) = table.commitActions(v)
+    val GraftLog.Commit(meta, adds, removes) = table.log.commit(v)
     if (removes.nonEmpty) {
-      if (meta.get("dataChange").contains(false)) return Seq.empty
+      if (!meta.dataChange) return Seq.empty
       if (!skipChangeCommits) throw new IllegalStateException(
         s"streaming read hit a non-append commit at version $v " +
-          s"(op=${meta.getOrElse("op", "?")}, ${removes.size} file(s) removed); " +
+          s"(op=${meta.op}, ${removes.size} file(s) removed); " +
           "the table-as-stream contract is append-only — restart from a " +
           "later startingVersion, or set skipChangeCommits=true to skip " +
           "such commits wholesale")
@@ -367,7 +367,7 @@ private[tables] final class GraftTableMicroBatchStream(
     // (one conf broadcast per micro-batch, not a copy in every task)
     new GraftParquetReaderFactory(
       GraftConfBridge.broadcast(spark.sparkContext, hadoopConf),
-      table.physicalSchemaOf(schema, anchoredColmap))
+      table.physicalSchema(schema, anchoredColmap))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

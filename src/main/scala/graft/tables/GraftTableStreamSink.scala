@@ -176,7 +176,7 @@ private[tables] final class GraftStreamingWrite(
     // batch writeData path); rows arrive positionally, so only the field
     // names change — the bound constraint checks stay valid (ordinals)
     // (one conf broadcast per epoch, not a copy in every task)
-    new GraftStreamWriterFactory(location, table.physicalSchemaOf(schema, anchoredColmap),
+    new GraftStreamWriterFactory(location, table.physicalSchema(schema, anchoredColmap),
       GraftConfBridge.broadcast(SparkSession.active.sparkContext, hadoopConf),
       constraintChecks)
 

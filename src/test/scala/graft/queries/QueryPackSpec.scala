@@ -28,6 +28,14 @@ class QueryPackSpec extends SparkTestBase {
     }
   }
 
+  test("q331 runs twice in one session with the same answer") {
+    val fn = SparkEntry.queries("q331_table_analyze_ndv")
+    val a = fn(spark, sf).collect().map(_.toString).toSeq
+    val b = fn(spark, sf).collect().map(_.toString).toSeq
+    assert(a == b)
+    assert(a.size == 1 && a.head.startsWith("[true,true,true,"), a)
+  }
+
   test("q23 Bernoulli sample: deterministic under fixed seed, fraction ≈ 0.01") {
     val fn = SparkEntry.queries("q23_sample_bernoulli")
     val a = fn(spark, sf).collect()

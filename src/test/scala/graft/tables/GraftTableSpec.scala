@@ -2224,6 +2224,20 @@ class GraftTableSpec extends SparkTestBase {
     assert(t.expireHistory(horizon) == 0)
   }
 
+  test("expireHistory rewrites a txn-less horizon checkpoint to carry the txns") {
+    val t = GraftTable.create(spark, tmp(), Seq((1L, "a")).toDF("k", "v"))
+    t.checkpointInterval = 3
+    t.append(Seq((2L, "b")).toDF("k", "v"))
+    t.append(Seq((3L, "c")).toDF("k", "v")) // v3 + a checkpoint with no txns
+    t.appendIfAbsent("late-txn", Seq((4L, "d")).toDF("k", "v"))
+    assert(t.expireHistory(3L) == 2)
+    // the replaced horizon checkpoint keeps both the files and the txn
+    assert(t.snapshot().count() == 4L)
+    val v = t.version
+    t.appendIfAbsent("late-txn", Seq((4L, "d")).toDF("k", "v"))
+    assert(t.version == v && t.snapshot(Some(3L)).count() == 3L)
+  }
+
   // ---- shallow clone ------------------------------------------------------
 
   test("shallow clone: one metadata commit, zero data files copied") {
