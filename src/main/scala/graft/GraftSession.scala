@@ -56,6 +56,10 @@ object GraftSession {
         .contains(org.apache.spark.sql.catalyst.optimizer.CostBasedJoinReorder))
       spark.experimental.extraOptimizations ++=
         Seq(org.apache.spark.sql.catalyst.optimizer.CostBasedJoinReorder)
+    // byte-level substring_index / regexp_extract, for a session built
+    // without GraftExtensions
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.ByteStringKernels))
+      spark.experimental.extraOptimizations ++= Seq(graft.plans.ByteStringKernels)
     graft.plans.TopKPerGroup.ensureStrategy(spark)
     spark
   }

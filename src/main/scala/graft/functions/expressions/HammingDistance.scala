@@ -79,6 +79,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.plans.RewriteSingletonRepartition(session))
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughTopK)
+    ext.injectOptimizerRule(_ => graft.plans.ByteStringKernels)
     // SQL UPDATE / MERGE INTO on graft catalog tables → native table ops
     ext.injectPostHocResolutionRule(session =>
       graft.tables.GraftSqlDmlRule(session))

@@ -45,19 +45,38 @@ sealed abstract class HeadMatcher {
 
 object HeadMatcher {
 
-  /** Compiles `pattern`; invalid regexes throw `PatternSyntaxException` as
+  /** Largest number of patterns [[compile]] remembers. */
+  private val MaxCached = 64
+
+  /** Per pattern: its DFA, shared by every reader of the pattern in this
+    * JVM (it is immutable), or the `Pattern` of a fallback, which gives
+    * each reader a `Matcher` of its own. Least recently used goes first.
+    */
+  private val compiled = new java.util.LinkedHashMap[String, Either[Pattern, DfaHeadMatcher]](
+      16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, Either[Pattern, DfaHeadMatcher]]): Boolean =
+      size > MaxCached
+  }
+
+  /** Compiles `pattern`, once per JVM while it stays among the last
+    * [[MaxCached]] used; invalid regexes throw `PatternSyntaxException` as
     * `Pattern.compile` does.
     */
-  def compile(pattern: String): HeadMatcher = {
-    val regex = Pattern.compile(pattern) // rejects what Java rejects, on both paths
-    try ByteDfa.compile(pattern)
-    catch { case Unsupported => new RegexHeadMatcher(regex) }
-  }
+  def compile(pattern: String): HeadMatcher = compiled.synchronized {
+    var c = compiled.get(pattern)
+    if (c == null) {
+      val regex = Pattern.compile(pattern) // rejects what Java rejects, on both paths
+      c = try Right(ByteDfa.compile(pattern)) catch { case Unsupported => Left(regex) }
+      compiled.put(pattern, c)
+    }
+    c
+  }.fold(new RegexHeadMatcher(_), identity)
 }
 
 /** Fallback: decode as `Text.toString` does, then `java.util.regex`. */
 private[logfile] final class RegexHeadMatcher(regex: Pattern) extends HeadMatcher {
-  private val matcher = regex.matcher("")
+  private[logfile] val matcher = regex.matcher("")
   def matches(bytes: Array[Byte], len: Int): Boolean =
     matcher.reset(Text.decode(bytes, 0, len)).matches()
 }
@@ -103,49 +122,66 @@ private object DfaHeadMatcher {
   }
 }
 
-private case object Unsupported extends Exception with NoStackTrace
+private[graft] case object Unsupported extends Exception with NoStackTrace
 
-/** Parser for the byte-level subset, NFA construction and subset
-  * construction; throws [[Unsupported]] for anything outside the subset.
+/** The byte-level regex subset, shared by [[HeadMatcher]]'s DFA and the
+  * byte-level `regexp_extract` (`graft.functions.expressions.ByteRegex`).
+  * [[parse]] accepts the union of what the two compile and throws
+  * [[Unsupported]] for anything else; each compiler then throws it for the
+  * nodes it cannot take.
+  *
+  * Every atom is one ASCII character: ASCII literals, escaped
+  * non-alphanumeric characters, `\d`, `\s`, positive bracket classes of
+  * ASCII members and ranges, and `.`. A quantifier (`?`, `*`, `+`, `{n}`,
+  * `{n,}`, `{n,m}`, all greedy) applies to a single atom only, never to a
+  * group or an assertion. Groups are capturing, named or non-capturing and
+  * numbered as Java numbers them. The assertions are a leading `^`, `\b`
+  * and `$`.
   */
-private object ByteDfa {
-  private sealed trait Re
-  /** One byte from the set. */
-  private final case class Bytes(set: BitSet) extends Re
-  private final case class Cat(items: List[Re]) extends Re
-  private final case class Alt(alts: List[Re]) extends Re
-  private final case class Opt(r: Re) extends Re
+private[graft] object RegexSubset {
+  sealed trait Re
+  /** One ASCII character from the set. */
+  final case class Bytes(set: BitSet) extends Re
+  /** `.`: one character that is not a line terminator. */
+  case object AnyChar extends Re
+  /** A greedy repeat of one atom ([[Bytes]] or [[AnyChar]]); `max < 0` is unbounded. */
+  final case class Repeat(atom: Re, min: Int, max: Int) extends Re
+  final case class Cat(items: List[Re]) extends Re
+  final case class Alt(alts: List[Re]) extends Re
+  /** A group; `capture` is its number, 0 for a non-capturing group. */
+  final case class Group(capture: Int, r: Re) extends Re
+  /** `^` at the start of the pattern. */
+  case object Begin extends Re
+  /** `\b`. */
+  case object WordBoundary extends Re
+  /** `$`. */
+  case object End extends Re
 
-  /** DFA states beyond this fall back to `java.util.regex`. */
-  private val MaxStates = 1024
-  /** Largest `m` accepted in `{n,m}`. */
+  /** Largest `n` or `m` accepted in `{n}`, `{n,}` and `{n,m}`. */
   private val MaxRepeat = 256
 
   private val Digits = BitSet('0'.toInt to '9'.toInt: _*)
   private val Spaces = BitSet(' ', '\t', '\n', 0x0B, '\f', '\r')
   private val Meta = "\\^$.|?*+()[]{}"
 
-  def compile(pattern: String): HeadMatcher = {
-    val (body, tail) = new Parser(pattern).parse()
-    val nfa = new Nfa
-    val end = if (tail) nfa.dotStar() else nfa.state(accept = true)
-    determinize(nfa, nfa.build(body, end), if (tail) end else -1)
+  /** The syntax tree of `pattern` and its number of capturing groups. */
+  def parse(pattern: String): (Re, Int) = {
+    val parser = new Parser(pattern)
+    val body = parser.parse()
+    (body, parser.groups)
   }
 
   private final class Parser(p: String) {
     private var i = 0
+    var groups = 0
     private def more: Boolean = i < p.length
     private def peek: Char = p.charAt(i)
+    private def quantifierNext: Boolean = more && "?*+{".indexOf(peek) >= 0
 
-    /** The body and whether it ends in `.*`. */
-    def parse(): (Re, Boolean) = {
-      if (p.startsWith("^")) i = 1 // a no-op under matches()
+    def parse(): Re = {
       val body = alt()
-      val tail = i + 2 == p.length && p.endsWith(".*")
-      if (tail) i += 2
-      // a trailing .* after a top-level alternation binds to the last branch only
-      if (more || (tail && body.isInstanceOf[Alt])) throw Unsupported
-      (body, tail)
+      if (more) throw Unsupported
+      body
     }
 
     private def alt(): Re = {
@@ -160,27 +196,41 @@ private object ByteDfa {
 
     private def seq(): Re = {
       val items = List.newBuilder[Re]
-      while (more && peek != '|' && peek != ')' && peek != '.') {
-        if (peek == '(') {
-          items += group()
-          if (more && "?*+{".indexOf(peek) >= 0) throw Unsupported
-        } else items += quantified(atom())
+      while (more && peek != '|' && peek != ')') {
+        items += (peek match {
+          case '(' => assertion(group())
+          case '^' if i == 0 => i += 1; assertion(Begin)
+          case '$' => i += 1; assertion(End)
+          case '\\' if p.startsWith("\\b", i) => i += 2; assertion(WordBoundary)
+          case '.' => i += 1; quantified(AnyChar)
+          case _ => quantified(Bytes(atom()))
+        })
       }
       Cat(items.result())
     }
 
+    /** `r`, which takes no quantifier. */
+    private def assertion(r: Re): Re = {
+      if (quantifierNext) throw Unsupported
+      r
+    }
+
     private def group(): Re = {
       i += 1
-      if (p.startsWith("?:", i)) i += 2
-      else if (p.startsWith("?<", i) && i + 2 < p.length && isAsciiLetter(p.charAt(i + 2))) {
-        i = p.indexOf('>', i)
-        if (i < 0) throw Unsupported
-        i += 1
-      } else if (more && peek == '?') throw Unsupported // flags, lookaround, atomic
+      val capture =
+        if (p.startsWith("?:", i)) { i += 2; 0 }
+        else if (p.startsWith("?<", i) && i + 2 < p.length && isAsciiLetter(p.charAt(i + 2))) {
+          i = p.indexOf('>', i)
+          if (i < 0) throw Unsupported
+          i += 1
+          groups += 1
+          groups
+        } else if (more && peek == '?') throw Unsupported // flags, lookaround, atomic
+        else { groups += 1; groups }
       val r = alt()
       if (!more || peek != ')') throw Unsupported
       i += 1
-      r
+      Group(capture, r)
     }
 
     private def atom(): BitSet = peek match {
@@ -236,23 +286,25 @@ private object ByteDfa {
       case _ => throw Unsupported
     }
 
-    private def quantified(a: BitSet): Re = {
-      val one = Bytes(a)
-      if (!more) return one
+    private def quantified(a: Re): Re = {
+      if (!more) return a
       val r = peek match {
-        case '?' => i += 1; Opt(one)
+        case '?' => i += 1; Repeat(a, 0, 1)
+        case '*' => i += 1; Repeat(a, 0, -1)
+        case '+' => i += 1; Repeat(a, 1, -1)
         case '{' =>
           i += 1
           val n = number()
-          val m = if (more && peek == ',') { i += 1; number() } else n
-          if (!more || peek != '}' || n > m || m > MaxRepeat) throw Unsupported
+          val m =
+            if (!more || peek != ',') n
+            else { i += 1; if (more && peek == '}') -1 else number() }
+          if (!more || peek != '}' || n > MaxRepeat || m > MaxRepeat || (m >= 0 && n > m))
+            throw Unsupported
           i += 1
-          Cat(List.fill(n)(one) ++ List.fill(m - n)(Opt(one)))
-        case '*' | '+' => throw Unsupported
-        case _ => return one
+          Repeat(a, n, m)
+        case _ => return a
       }
-      // lazy or possessive modifiers, stacked quantifiers
-      if (more && "?*+{".indexOf(peek) >= 0) throw Unsupported
+      if (quantifierNext) throw Unsupported // lazy or possessive, stacked quantifiers
       r
     }
 
@@ -265,6 +317,28 @@ private object ByteDfa {
 
     private def isAsciiLetter(c: Char): Boolean =
       (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+  }
+}
+
+/** NFA construction and subset construction over a [[RegexSubset]] tree
+  * that fits `matches()` on any UTF-8 line: no `.` but a trailing `.*`
+  * after no top-level `|`, no `\b` or `$`, and bounded repeats only. Throws
+  * [[Unsupported]] for anything else.
+  */
+private object ByteDfa {
+  import RegexSubset._
+
+  /** DFA states beyond this fall back to `java.util.regex`. */
+  private val MaxStates = 1024
+
+  def compile(pattern: String): DfaHeadMatcher = {
+    val (body, tail) = parse(pattern)._1 match {
+      case Cat(items :+ Repeat(AnyChar, 0, -1)) => (Cat(items), true)
+      case r => (r, false)
+    }
+    val nfa = new Nfa
+    val end = if (tail) nfa.dotStar() else nfa.state(accept = true)
+    determinize(nfa, nfa.build(body, end), if (tail) end else -1)
   }
 
   /** Thompson NFA: each state has byte-set edges, epsilon edges, an accept flag. */
@@ -283,7 +357,15 @@ private object ByteDfa {
       case Bytes(set) => val s = state(); edges(s) = List(set -> next); s
       case Cat(items) => items.foldRight(next)(build)
       case Alt(alts) => val s = state(); eps(s) = alts.map(build(_, next)); s
-      case Opt(inner) => val s = state(); eps(s) = List(build(inner, next), next); s
+      case Group(_, inner) => build(inner, next)
+      case Begin => next // only ever at the pattern's start: a no-op under matches()
+      case Repeat(atom: Bytes, n, m) if m >= 0 =>
+        // n copies, then m - n optional ones
+        var s = next
+        for (_ <- n until m) { val o = state(); eps(o) = List(build(atom, s), s); s = o }
+        for (_ <- 0 until n) s = build(atom, s)
+        s
+      case _ => throw Unsupported // `.`, unbounded repeats, `\b`, `$`
     }
 
     /** Java's `.*` at the end of the input, over UTF-8 bytes: accept any

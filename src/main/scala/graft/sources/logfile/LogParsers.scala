@@ -9,9 +9,12 @@ import org.apache.spark.sql.functions._
   * writing regexes: `spark.read.format("logfile").option("pattern",
   * LogParsers.Log4jDefault.headPattern)` then `LogParsers.parse(df, layout)`.
   *
-  * All projections are plain Catalyst expressions (`regexp_extract` +
-  * `to_timestamp`), so they stay inside whole-stage codegen and the scan's
-  * column pruning is unaffected.
+  * The projections are `substring_index`, `regexp_extract` and
+  * `to_timestamp`, so they stay inside whole-stage codegen and the scan's
+  * column pruning is unaffected. In a graft session,
+  * [[graft.plans.ByteStringKernels]] evaluates the first two on UTF-8
+  * bytes: every pattern here is in its byte subset. A row with a byte
+  * `>= 0x80` takes Spark's `java.util.regex` path for that row.
   */
 object LogParsers {
 

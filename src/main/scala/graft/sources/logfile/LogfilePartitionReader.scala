@@ -41,6 +41,7 @@ final class LogfilePartitionReader(
   extends PartitionReader[InternalRow] {
 
   private val head = HeadMatcher.compile(split.pattern)
+  private[logfile] def headMatcher: HeadMatcher = head
   private val hadoopPath = new Path(split.path)
 
   private var decompressor: Decompressor = _

@@ -2619,10 +2619,12 @@ final class GraftTable private (
     // files may carry DVs, its schema the declarations); a BRANCH
     // additionally declares the 'branches' writer feature on ITS log —
     // an engine without branch support must not commit into a branch dir
-    // (it could not publish or respect the publish protocol)
+    // (it could not publish or respect the publish protocol). Key,
+    // partitioning and schema are all the cloned version's: this handle's
+    // may belong to a later version.
     val m = src.meta
-    destLog.write(1L, m.copy(op = op, ts = System.currentTimeMillis(), keyCol = keyCol,
-      schemaJson = m.schema.json, partitionBy = partitionBy, ndv = Map.empty,
+    destLog.write(1L, m.copy(op = op, ts = System.currentTimeMillis(),
+      schemaJson = m.schema.json, ndv = Map.empty,
       txn = None, dataChange = true, branchPoint = branchPoint,
       writerFeatures = m.writerFeatures ++ branchPoint.map(_ => "branches"))
       .withFeatures(refs), refs, Nil)

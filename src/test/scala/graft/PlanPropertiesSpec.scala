@@ -437,4 +437,27 @@ class PlanPropertiesSpec extends SparkTestBase {
     assert(exchanges <= 4, s"chunking must stay narrow:\n$p")
     assert(p.contains("Generate explode"), p)
   }
+
+  test("byte string kernels: Bench explain's default subset and q47 gain no CodegenFallback") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.catalyst.expressions.Unevaluable
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    // a session on the same context without the graft extensions, so
+    // without graft.plans.ByteStringKernels
+    val plain = SparkSession.builder().create()
+    SparkSession.setActiveSession(spark)
+    SparkSession.setDefaultSession(spark)
+    def fallbacks(df: DataFrame) =
+      df.queryExecution.executedPlan.collect { case p => p.expressions.flatMap(_.collect {
+        case e: CodegenFallback if !e.isInstanceOf[Unevaluable] => e
+      })}.flatten
+    for (q <- Bench.ExplainDefault :+ "q47_logfile_count_by_level") {
+      val (df, ref) = (SparkEntry.queries(q)(spark, sf), SparkEntry.queries(q)(plain, sf))
+      assert(fallbacks(df).size <= fallbacks(ref).size, s"$q: ${fallbacks(df)}")
+    }
+    val q47 = SparkEntry.queries("q47_logfile_count_by_level")(spark, sf)
+    val p = plan("q47_logfile_count_by_level")
+    assert(p.contains("byte_regexp_extract(") && p.contains("byte_substring_index("), p)
+    assert(fallbacks(q47).isEmpty, q47.queryExecution.executedPlan)
+  }
 }

@@ -124,6 +124,27 @@ class HeadMatcherSpec extends AnyFunSuite {
     }
   }
 
+  test("readers of one pattern share its DFA; readers of a fallback pattern own their Matcher") {
+    val f = java.io.File.createTempFile("head-memo", ".log")
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath, bytes("INFO 2017-01-01 00:00:00,002 x\n"))
+    val conf = new org.apache.hadoop.conf.Configuration()
+    def readers(pattern: String): Seq[HeadMatcher] = (1 to 2).map { _ =>
+      val r = new LogfilePartitionReader(
+        LogfilePartition(f.getAbsolutePath, 0L, f.length, pattern), conf, LogfileTable.Schema)
+      try r.headMatcher finally r.close()
+    }
+    val Seq(d1, d2) = readers(LogfileFixture.PatternB)
+    assert(d1.isInstanceOf[DfaHeadMatcher] && (d1 eq d2), "one DFA per pattern and JVM")
+    val Seq(r1, r2) = readers("(?i)info.*")
+    (r1, r2) match {
+      case (a: RegexHeadMatcher, b: RegexHeadMatcher) =>
+        assert(a ne b)
+        assert(a.matcher ne b.matcher, "a Matcher is per reader")
+      case other => fail(s"expected the fallback: $other")
+    }
+  }
+
   test("invalid patterns fail as Pattern.compile fails") {
     intercept[java.util.regex.PatternSyntaxException](HeadMatcher.compile("(a"))
     intercept[java.util.regex.PatternSyntaxException](HeadMatcher.compile("a{2"))

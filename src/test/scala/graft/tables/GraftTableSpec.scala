@@ -2319,6 +2319,21 @@ class GraftTableSpec extends SparkTestBase {
     assert(e.getMessage.contains("vacuum"), e.getMessage)
   }
 
+  test("clone of an old version takes that version's key and partitioning") {
+    val loc = tmp()
+    GraftTable.create(spark, loc, Seq((1L, "x", "a"), (2L, "y", "b")).toDF("k", "p", "v"),
+      keyCol = Some("k"), partitionBy = Seq("p"))
+    GraftTable.at(spark, loc).replaceWith(Seq(("n1", 10L)).toDF("name", "id"),
+      newKeyCol = Some("id"), newPartitionBy = Seq("name"))
+    // a handle on the replaced table: keyed on id, partitioned by name
+    val c = GraftTable.at(spark, loc).cloneTo(tmp(), Some(1L))
+    assert(c.keyCol.contains("k") && c.partitionBy == Seq("p"))
+    assert(c.schema.fieldNames.toSeq == Seq("k", "p", "v"))
+    c.append(Seq((3L, "x", "c")).toDF("k", "p", "v"))
+    assert(c.snapshot().as[(Long, String, String)].collect().toSet ==
+      Set((1L, "x", "a"), (2L, "y", "b"), (3L, "x", "c")))
+  }
+
   test("merge over a DV'd file: survivors exclude deleted rows") {
     val t = GraftTable.create(spark, tmp(),
       (1L to 100L).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1),
