@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.logfile.{RegexSubset, Unsupported}
+import graft.sources.logfile.{PatternMemo, RegexSubset, Unsupported}
 
 /** `substring_index(child, delim, count)` with a literal delimiter and
   * count, on the string's UTF-8 bytes. It returns the bytes
@@ -54,7 +54,11 @@ case class ByteRegExpExtract(child: Expression, pattern: String, idx: Int)
   override def dataType: DataType = child.dataType
   override def prettyName: String = "byte_regexp_extract"
 
-  @transient private lazy val program: ByteRegex = ByteRegex.compile(pattern, idx)
+  /** The program the rule compiled, from the per-JVM memo: copies on the
+    * driver and deserialized copies on executors compile nothing.
+    */
+  @transient private[graft] lazy val program: ByteRegex = ByteRegex.compile(pattern, idx)
+    .getOrElse(throw new IllegalArgumentException(s"not in the byte regex subset: $pattern"))
 
   /** The interpreted path, Spark's fallback, takes fresh scratch per call. */
   override protected def nullSafeEval(s: Any): Any =
@@ -247,16 +251,18 @@ object ByteRegex {
   /** Java's `.` over ASCII: anything but `\n` and `\r`. */
   private val Dot = BitSet(0 until 128: _*) - '\n' - '\r'
 
-  /** Whether [[compile]] takes `(pattern, idx)`. */
-  def supports(pattern: String, idx: Int): Boolean =
-    try { compile(pattern, idx); true }
-    catch { case Unsupported | _: java.util.regex.PatternSyntaxException => false }
+  private val compiled = new PatternMemo[(String, Int), Option[ByteRegex]]
 
-  /** Compiles `pattern` for group `idx`; throws [[Unsupported]] outside the
-    * subset or when `idx` is not in `0..groupCount`, and
-    * `PatternSyntaxException` where `Pattern.compile` does.
+  /** `pattern` compiled for group `idx`, once per JVM while it stays in
+    * [[PatternMemo]]; None outside the subset, when `idx` is not in
+    * `0..groupCount`, or where `Pattern.compile` throws.
     */
-  def compile(pattern: String, idx: Int): ByteRegex = {
+  def compile(pattern: String, idx: Int): Option[ByteRegex] = compiled((pattern, idx)) {
+    try Some(build(pattern, idx))
+    catch { case Unsupported | _: java.util.regex.PatternSyntaxException => None }
+  }
+
+  private def build(pattern: String, idx: Int): ByteRegex = {
     val regex = Pattern.compile(pattern)
     val (body, groups) = RegexSubset.parse(pattern)
     if (groups != regex.matcher("").groupCount() || idx < 0 || idx > groups) throw Unsupported

@@ -35,7 +35,7 @@ object ByteStringKernels extends Rule[LogicalPlan] {
           if utf8Binary(s) && c != Int.MinValue =>
         ByteSubstringIndex(s, d, c)
       case RegExpExtract(s, Literal(p: UTF8String, _: StringType), Literal(i: Int, IntegerType))
-          if utf8Binary(s) && ByteRegex.supports(p.toString, i) =>
+          if utf8Binary(s) && ByteRegex.compile(p.toString, i).isDefined =>
         ByteRegExpExtract(s, p.toString, i)
     }
 

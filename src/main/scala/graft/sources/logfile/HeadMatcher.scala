@@ -45,33 +45,34 @@ sealed abstract class HeadMatcher {
 
 object HeadMatcher {
 
-  /** Largest number of patterns [[compile]] remembers. */
-  private val MaxCached = 64
-
   /** Per pattern: its DFA, shared by every reader of the pattern in this
     * JVM (it is immutable), or the `Pattern` of a fallback, which gives
-    * each reader a `Matcher` of its own. Least recently used goes first.
+    * each reader a `Matcher` of its own.
     */
-  private val compiled = new java.util.LinkedHashMap[String, Either[Pattern, DfaHeadMatcher]](
-      16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Either[Pattern, DfaHeadMatcher]]): Boolean =
-      size > MaxCached
+  private val compiled = new PatternMemo[String, Either[Pattern, DfaHeadMatcher]]
+
+  /** Compiles `pattern`, once per JVM while it stays in [[PatternMemo]];
+    * invalid regexes throw `PatternSyntaxException` as `Pattern.compile`
+    * does.
+    */
+  def compile(pattern: String): HeadMatcher = compiled(pattern) {
+    val regex = Pattern.compile(pattern) // rejects what Java rejects, on both paths
+    try Right(ByteDfa.compile(pattern)) catch { case Unsupported => Left(regex) }
+  }.fold(new RegexHeadMatcher(_), identity)
+}
+
+/** The per-JVM memo of compiled patterns: the last 64 keys used, least
+  * recently used going first. A compile that throws stores nothing.
+  */
+private[graft] final class PatternMemo[K, V] {
+  private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > 64
   }
 
-  /** Compiles `pattern`, once per JVM while it stays among the last
-    * [[MaxCached]] used; invalid regexes throw `PatternSyntaxException` as
-    * `Pattern.compile` does.
-    */
-  def compile(pattern: String): HeadMatcher = compiled.synchronized {
-    var c = compiled.get(pattern)
-    if (c == null) {
-      val regex = Pattern.compile(pattern) // rejects what Java rejects, on both paths
-      c = try Right(ByteDfa.compile(pattern)) catch { case Unsupported => Left(regex) }
-      compiled.put(pattern, c)
-    }
-    c
-  }.fold(new RegexHeadMatcher(_), identity)
+  def apply(key: K)(compile: => V): V = map.synchronized {
+    if (!map.containsKey(key)) map.put(key, compile)
+    map.get(key)
+  }
 }
 
 /** Fallback: decode as `Text.toString` does, then `java.util.regex`. */

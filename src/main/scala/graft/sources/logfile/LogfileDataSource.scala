@@ -36,8 +36,8 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Tasks: a scan task reads one or more consecutive splits, in order, each
   * through its own [[LogfilePartitionReader]] ([[LogfileChainReader]]).
-  * The batch planner packs splits into tasks by Spark's `FilePartition`
-  * rule and settings (`spark.sql.files.maxPartitionBytes`,
+  * Both planners, batch and micro-batch, pack splits into tasks by Spark's
+  * `FilePartition` rule and settings (`spark.sql.files.maxPartitionBytes`,
   * `spark.sql.files.openCostInBytes`, `spark.sql.files.minPartitionNum`),
   * so a directory of small rotated files costs a few core-sized tasks, not
   * one task per file. Splits of `spark.sql.files.maxPartitionBytes` or more
@@ -138,6 +138,25 @@ private object LogfileOptions {
           if new GlobPattern(glob).matches(name) || new GlobPattern(glob).matches(full) => re
     }.getOrElse(defaultPattern(options))
   }
+
+  /** The files under the option paths, sorted by path: each glob match, or
+    * a directory's files (not its subdirectories). Names starting with `_`
+    * or `.` are skipped. `requireMatch` fails a path that matches nothing.
+    */
+  def listFiles(options: CaseInsensitiveStringMap, conf: Configuration,
+      requireMatch: Boolean): Seq[FileStatus] =
+    paths(options).flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val globbed = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
+      require(!requireMatch || globbed.nonEmpty, s"logfile path matches no files: $p")
+      globbed.flatMap { st =>
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile) else Seq(st)
+      }
+    }.filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.sortBy(_.getPath.toString)
 }
 
 final class LogfileScanBuilder(options: CaseInsensitiveStringMap)
@@ -251,55 +270,27 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
       limit.map(l => s", PushedLimit=$l").getOrElse("") +
       (if (countPushed) ", PushedAggregation=[COUNT(*)]" else "") + ")"
 
-  /** Byte-size statistics from the (filter-pruned) file listing, so Catalyst
-    * can pick a broadcast side when a logfile relation joins something.
+  /** The (filter-pruned) file listing, made once per scan: statistics and
+    * planning both read it.
+    */
+  private lazy val files: Seq[FileStatus] =
+    LogfileOptions.listFiles(options, SparkSession.active.sessionState.newHadoopConf(),
+      requireMatch = true)
+      .filter(st => fileFilters.forall(LogfileFileFilter.accept(_, st.getPath.toString)))
+
+  /** Byte-size statistics from the file listing, so Catalyst can pick a
+    * broadcast side when a logfile relation joins something.
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
-      private val bytes = listFiles().map(_.getLen).sum
+      private val bytes = files.map(_.getLen).sum
       override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
 
-  private def listFiles(): Seq[FileStatus] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    LogfileOptions.paths(options).flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val globbed = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      require(globbed.nonEmpty, s"logfile path matches no files: $p")
-      globbed.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile) else Seq(st)
-      }
-    }.filterNot { st =>
-      val n = st.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }.filter(st => fileFilters.forall(LogfileFileFilter.accept(_, st.getPath.toString)))
-      .sortBy(_.getPath.toString)
-  }
-
-  /** Driver-side split planning — the DSv2 analog of
-    * `FileInputFormat.getSplits` + `isSplitable` (`LogfileInputFormat.java:112-119`):
-    * uncompressed files are carved into `maxSplitBytes` ranges, files with a
-    * (non-splittable) codec become exactly one whole-file split. The splits,
-    * in (path, start) order, are then packed into tasks
-    * ([[LogfileSplits.pack]]) with the target size Spark's own file scans
-    * use.
-    */
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    val codecs = new CompressionCodecFactory(conf)
-    val maxSplit = Option(options.get("maxsplitbytes")).map(_.toLong)
-      .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
-
-    val carved = listFiles().flatMap { st =>
-      val pattern = LogfileOptions.resolvePattern(options, st.getPath)
-      LogfileSplits.carve(st, pattern, conf, codecs, maxSplit)
-    }
-    val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    val target = FilePartition.maxSplitBytes(spark, carved.map(_.diskBytes + openCost).sum)
-    LogfileSplits.pack(carved, target, openCost).toArray
+    LogfileSplits.plan(spark, spark.sessionState.newHadoopConf(), options, files)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -319,45 +310,31 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
 }
 
 /** One split: [start, end) byte range of `path` (decompressed-logical for
-  * codec'd files, where end is MaxValue ⇒ whole file).
-  *
-  * `locations` are the HDFS block hosts holding this range, ranked by
-  * overlap, so the scheduler can place the task data-local — what the
-  * reference inherits from `FileInputFormat.getSplits`
-  * (`LogfileInputFormat.java:112-119`). Empty on filesystems without
-  * block topology.
-  *
-  * A bare split is one task (the micro-batch planner emits these); the
-  * batch planner packs splits into [[LogfileSplitGroup]]s.
+  * codec'd files, where end is MaxValue ⇒ whole file). A split is the unit
+  * of record ownership, not of scheduling: tasks are [[LogfileSplitGroup]]s.
   */
-final case class LogfilePartition(path: String, start: Long, end: Long, pattern: String,
-    locations: Array[String] = Array.empty)
-  extends InputPartition {
-  override def preferredLocations(): Array[String] = locations
-}
+final case class LogfilePartition(path: String, start: Long, end: Long, pattern: String)
 
 /** One scan task of consecutive splits, read in order by a
-  * [[LogfileChainReader]]. `locations` rank hosts by their block overlap
-  * summed over the splits.
+  * [[LogfileChainReader]]. `locations` are the HDFS block hosts holding the
+  * splits' bytes, ranked by overlap summed over the splits, so the
+  * scheduler can place the task data-local — what the reference inherits
+  * from `FileInputFormat.getSplits` (`LogfileInputFormat.java:112-119`).
+  * Empty on filesystems without block topology.
   */
 final case class LogfileSplitGroup(splits: Array[LogfilePartition], locations: Array[String])
   extends InputPartition {
   override def preferredLocations(): Array[String] = locations
 }
 
-object LogfileSplitGroup {
-  /** The splits a task reads: a bare split is a group of one. */
-  def splitsOf(p: InputPartition): Array[LogfilePartition] = p match {
-    case g: LogfileSplitGroup => g.splits
-    case s: LogfilePartition => Array(s)
-  }
-}
-
-/** The one split-carving rule, shared by the batch planner and the streaming
-  * micro-batch planner so a big plain file parallelizes identically in both:
-  * uncompressed files become `maxSplit`-byte [start, end) ranges; codec'd
-  * files exactly one whole-file split (splittable-compressed is rejected
-  * at read); empty files vanish (a 0-byte .gz would EOF in the decompressor).
+/** The one logfile planner, shared by the batch scan and the micro-batch
+  * stream, so the same files plan the same tasks in both: the DSv2 analog
+  * of `FileInputFormat.getSplits` + `isSplitable`
+  * (`LogfileInputFormat.java:112-119`). Uncompressed files become
+  * `maxSplit`-byte [start, end) ranges; codec'd files exactly one
+  * whole-file split (splittable-compressed is rejected at read); empty
+  * files vanish (a 0-byte .gz would EOF in the decompressor). The splits
+  * are then packed into tasks.
   */
 private[logfile] object LogfileSplits {
   /** A split with what packing needs: the on-disk byte range it covers
@@ -366,9 +343,25 @@ private[logfile] object LogfileSplits {
   final case class Carved(split: LogfilePartition, diskStart: Long, diskBytes: Long,
       blocks: Array[BlockLocation])
 
-  def forFile(st: FileStatus, pattern: String, conf: Configuration,
-      codecs: CompressionCodecFactory, maxSplit: Long): Seq[LogfilePartition] =
-    carve(st, pattern, conf, codecs, maxSplit).map(_.split)
+  /** Carves `files`, in their given order, each with its resolved pattern
+    * and the `maxsplitbytes` option (default
+    * `spark.sql.files.maxPartitionBytes`), then packs the splits with the
+    * target size Spark's own file scans use. A pure function of the files,
+    * their lengths and block reports, and the session conf, so a replayed
+    * micro-batch plans the same tasks.
+    */
+  def plan(spark: SparkSession, conf: Configuration, options: CaseInsensitiveStringMap,
+      files: Seq[FileStatus]): Array[InputPartition] = {
+    val codecs = new CompressionCodecFactory(conf)
+    val maxSplit = Option(options.get("maxsplitbytes")).map(_.toLong)
+      .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
+    val carved = files.flatMap { st =>
+      carve(st, LogfileOptions.resolvePattern(options, st.getPath), conf, codecs, maxSplit)
+    }
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val target = FilePartition.maxSplitBytes(spark, carved.map(_.diskBytes + openCost).sum)
+    pack(carved, target, openCost).toArray
+  }
 
   def carve(st: FileStatus, pattern: String, conf: Configuration,
       codecs: CompressionCodecFactory, maxSplit: Long): Seq[Carved] = {
@@ -381,10 +374,8 @@ private[logfile] object LogfileSplits {
       // does), then slice locally per split — not one RPC per split
       val blocks = Option(fs.getFileBlockLocations(st, 0L, st.getLen))
         .getOrElse(Array.empty)
-      def carved(start: Long, end: Long, diskEnd: Long) = Carved(
-        LogfilePartition(path, start, end, pattern,
-          LogfileLocality.rank(blocks, start, diskEnd - start)),
-        start, diskEnd - start, blocks)
+      def carved(start: Long, end: Long, diskEnd: Long) =
+        Carved(LogfilePartition(path, start, end, pattern), start, diskEnd - start, blocks)
       if (codecs.getCodec(st.getPath) != null) Seq(carved(0L, Long.MaxValue, st.getLen))
       else (0L until st.getLen by maxSplit).map { start =>
         val end = math.min(start + maxSplit, st.getLen)
@@ -420,14 +411,8 @@ private[logfile] object LogfileSplits {
 }
 
 private[logfile] object LogfileLocality {
-  /** Rank hosts by overlapping byte count with [start, start+len); ties keep
-    * block order (deterministic for a stable block report).
-    */
-  def rank(blocks: Array[BlockLocation], start: Long, len: Long): Array[String] =
-    rank(Seq((blocks, start, len)))
-
   /** Rank hosts by overlap summed over several (blocks, start, len) ranges;
-    * ties keep first-seen order.
+    * ties keep first-seen order (deterministic for a stable block report).
     */
   def rank(ranges: Seq[(Array[BlockLocation], Long, Long)]): Array[String] = {
     val byHost = scala.collection.mutable.LinkedHashMap.empty[String, Long]
@@ -458,7 +443,7 @@ final class LogfileReaderFactory(conf: Broadcast[SerializableConfiguration],
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     require(countPushed, "a logfile record scan is columnar")
     new LogfileCountReader(new LogfileChainReader[InternalRow](
-      LogfileSplitGroup.splitsOf(partition), None, { (split, _) =>
+      partition.asInstanceOf[LogfileSplitGroup].splits, None, { (split, _) =>
         val r = new LogfilePartitionReader(split, conf.value.value, required, None, countOnly = true)
         (r, r)
       }))
@@ -471,7 +456,7 @@ final class LogfileReaderFactory(conf: Broadcast[SerializableConfiguration],
   override def supportColumnarReads(partition: InputPartition): Boolean = !countPushed
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
-    new LogfileChainReader[ColumnarBatch](LogfileSplitGroup.splitsOf(partition), limit,
+    new LogfileChainReader[ColumnarBatch](partition.asInstanceOf[LogfileSplitGroup].splits, limit,
       { (split, left) =>
         val r = new LogfilePartitionReader(split, conf.value.value, required, left)
         (r, new LogfileColumnarReader(r, required, split.path))

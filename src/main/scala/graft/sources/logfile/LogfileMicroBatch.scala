@@ -58,20 +58,6 @@ final class LogfileMicroBatchStream(
   private val settleMs: Long =
     Option(options.get("settletimems")).map(_.toLong).getOrElse(0L)
 
-  private def listFiles(): Seq[FileStatus] = {
-    LogfileOptions.paths(options).flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val globbed = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      globbed.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile) else Seq(st)
-      }
-    }.filterNot { st =>
-      val n = st.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }
-  }
-
   override def initialOffset(): Offset = LogfileHwmOffset.Initial
 
   override def getDefaultReadLimit: ReadLimit =
@@ -92,7 +78,7 @@ final class LogfileMicroBatchStream(
       case _ => Int.MaxValue
     }
     val settledBefore = System.currentTimeMillis() - settleMs
-    val candidates = listFiles()
+    val candidates = LogfileOptions.listFiles(options, conf, requireMatch = false)
       .filter(st => s.isNew(st.getPath.toString, st.getModificationTime, latenessMs))
       .sortBy(st => (st.getModificationTime, st.getPath.toString))
     // settle gate cuts in admission order, never past it: admitting a newer
@@ -115,24 +101,18 @@ final class LogfileMicroBatchStream(
     * computed, pinned in the offset so replays after a failure rebuild the
     * same batch regardless of what the directory lists by then.
     *
-    * Files are carved with the SAME `maxSplitBytes` rule as the batch
-    * planner ([[LogfileSplits]]): one producer dropping a single 10 GB plain
-    * file must not single-thread the whole trigger. Splitting is a pure
-    * function of the (immutable-by-contract) file length, so a replayed
-    * batch re-carves the identical partitions. Each split is its own task:
-    * unlike the batch planner, this one does not pack splits.
+    * The batch scan's planner ([[LogfileSplits.plan]]) carves and packs
+    * them: one producer dropping a single 10 GB plain file must not
+    * single-thread the whole trigger, and a trigger over many small
+    * rotated files costs a few core-sized tasks, not one per file.
+    * Planning is a pure function of the (immutable-by-contract) files, so a
+    * replayed batch plans the identical tasks.
     */
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    val maxSplit = Option(options.get("maxsplitbytes")).map(_.toLong)
-      .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
-    LogfileHwmOffset.of(end).files.sorted.flatMap { p =>
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    LogfileSplits.plan(spark, conf, options, LogfileHwmOffset.of(end).files.sorted.map { p =>
       val path = new Path(p)
-      val pattern = LogfileOptions.resolvePattern(options, path)
-      val st = path.getFileSystem(conf).getFileStatus(path)
-      LogfileSplits.forFile(st, pattern, conf, codecs, maxSplit)
-    }.toArray
-  }
+      path.getFileSystem(conf).getFileStatus(path)
+    })
 
   /** One conf broadcast per micro-batch, not a copy in every task. */
   override def createReaderFactory(): PartitionReaderFactory =

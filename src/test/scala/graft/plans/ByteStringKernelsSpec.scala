@@ -3,12 +3,13 @@ package graft.plans
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.regex.Pattern
 
-import org.apache.spark.SparkThrowable
+import org.apache.spark.{SparkEnv, SparkThrowable}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal,
-  RegExpExtract, SubstringIndex}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BindReferences,
+  BoundReference, Expression, Literal, RegExpExtract, SubstringIndex}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -145,7 +146,7 @@ class ByteStringKernelsSpec extends SparkTestBase {
 
   for (p <- Patterns) test(s"regexp_extract: byte program agrees with Spark: $p") {
     val groups = Pattern.compile(p).matcher("").groupCount()
-    for (idx <- 0 to groups) assert(ByteRegex.supports(p, idx), s"expected the byte path, group $idx")
+    for (idx <- 0 to groups) assert(ByteRegex.compile(p, idx).isDefined, s"expected the byte path, group $idx")
     val cases = for (in <- inputs; idx <- Gen.choose(0, groups)) yield (in, idx)
     check(p, Prop.forAll(cases) { case (in, idx) =>
       val expected = spark(RegExpExtract(strLit(in), Literal(p), Literal(idx)), in)
@@ -211,6 +212,30 @@ class ByteStringKernelsSpec extends SparkTestBase {
     // lookahead, backreference, negated class, \w, lazy and possessive quantifiers
     for (p <- Seq("(?=a)(a)", "(a)\\1", "[^a](b)", "(\\w+)", "(a+?)", "(a*+)b", "(?i)(b)"))
       both(_.select(regexp_extract(col("s"), p, 1)))
+  }
+
+  test("regexp_extract compiles its pattern once: the rule's program serves every copy") {
+    val p = "compile-once-(\\d+)-(x?)"
+    val s = AttributeReference("s", StringType)()
+    val plan = Project(Seq(Alias(RegExpExtract(s, Literal(p), Literal(1)), "n")()), LocalRelation(s))
+    val rewritten = ByteStringKernels(plan).expressions.flatMap(_.collect {
+      case e: ByteRegExpExtract => e
+    })
+    assert(rewritten.size == 1, plan)
+    val e = rewritten.head
+    // copies: bound to the input row, a new child, Spark's reflective copy,
+    // and each of those serialized as a task ships it
+    val bound = BindReferences.bindReference(e, Seq(s))
+    val ser = SparkEnv.get.closureSerializer.newInstance()
+    def shipped(x: ByteRegExpExtract) = ser.deserialize[ByteRegExpExtract](ser.serialize(x))
+    val copies = Seq(bound, bound.withNewChildren(Seq(Input)),
+      bound.makeCopy(Array(Input, p, Integer.valueOf(1)))).map(_.asInstanceOf[ByteRegExpExtract])
+    val row = InternalRow(UTF8String.fromString("a compile-once-42-x b"))
+    for (c <- copies ++ copies.map(shipped)) {
+      assert(c.eval(row).toString == "42")
+      assert(c.program eq e.program, "a copy compiled its own program")
+    }
+    assert(ByteRegex.compile(p, 1).exists(_ eq e.program), "the rule's program was dropped")
   }
 
   test("guards: a group index past the group count fails as Spark fails") {

@@ -8,16 +8,21 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
+import graft.tables.CountingFs
 import org.apache.hadoop.fs.BlockLocation
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.{InputPartition, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Pins the packing of splits into tasks: a task of several splits reads
   * exactly what its splits read one by one, with the same metrics; a
   * pushed limit stops a task from opening more splits; the conf ships as a
-  * broadcast, not inside each task.
+  * broadcast, not inside each task; the micro-batch planner plans the batch
+  * planner's tasks; a batch scan lists its paths once.
   */
 class LogfilePackingSpec extends SparkTestBase {
 
@@ -36,10 +41,14 @@ class LogfilePackingSpec extends SparkTestBase {
       case b: BatchScanExec => b
     }.getOrElse(fail("no BatchScanExec in plan"))
 
-  private def options(dir: String, maxSplit: Long) = new CaseInsensitiveStringMap(Map(
-    "path" -> dir, "pattern" -> LogfileFixture.PatternA,
-    "pattern.*_1.log*" -> LogfileFixture.PatternB,
-    "maxsplitbytes" -> maxSplit.toString).asJava)
+  /** `bGlob` names the files of layout B: the fixture writes it to odd files. */
+  private def options(dir: String, maxSplit: Long, bGlob: String = "*_1.log*") =
+    new CaseInsensitiveStringMap(Map(
+      "path" -> dir, "pattern" -> LogfileFixture.PatternA,
+      s"pattern.$bGlob" -> LogfileFixture.PatternB,
+      "maxsplitbytes" -> maxSplit.toString).asJava)
+
+  private val OddFiles = "*[13579].log*"
 
   private def carved(path: String, bytes: Long*): Seq[LogfileSplits.Carved] = {
     var start = 0L
@@ -78,7 +87,7 @@ class LogfilePackingSpec extends SparkTestBase {
     val expected = new File(dir).listFiles().filterNot(_.getName.startsWith("_"))
       .map(f => new org.apache.hadoop.fs.Path(f.getAbsolutePath))
       .map(p => p.getFileSystem(conf).getFileStatus(p)).sortBy(_.getPath.toString).toSeq
-      .flatMap(st => LogfileSplits.forFile(st, "p", conf, codecs, 512))
+      .flatMap(st => LogfileSplits.carve(st, "p", conf, codecs, 512).map(_.split))
     assert(splits.map(s => (s.path, s.start, s.end)) == expected.map(s => (s.path, s.start, s.end)))
     assert(packed.length < splits.length, s"${splits.length} splits in ${packed.length} tasks")
     // maxPartitionBytes caps the target: below any split, every task is one split
@@ -180,5 +189,82 @@ class LogfilePackingSpec extends SparkTestBase {
     // what each task carried before: a bare Configuration alone is larger
     assert(serializedSize(new org.apache.spark.util.SerializableConfiguration(
       new org.apache.hadoop.conf.Configuration())) > 4096)
+  }
+
+  /** Each task's splits and preferred hosts, in task order. */
+  private def tasks(parts: Array[InputPartition]): Seq[(Seq[LogfilePartition], Seq[String])] =
+    parts.toSeq.map { case g: LogfileSplitGroup => (g.splits.toSeq, g.locations.toSeq) }
+
+  /** The micro-batch planner over every file in `dir`, and its one offset. */
+  private def trigger(dir: String, maxSplit: Long) = {
+    val stream = new LogfileMicroBatchStream(options(dir, maxSplit, OddFiles),
+      LogfileTable.Schema)
+    (stream, stream.latestOffset(LogfileHwmOffset.Initial, ReadLimit.allAvailable()))
+  }
+
+  test("a micro-batch plans the batch planner's tasks for the same files") {
+    val dir = tmpDir("logfile-plan-stream")
+    LogfileFixture.ensure(dir, files = 3, recordsPerFile = 400, seed = 64L)
+    val batch = tasks(new LogfileScanBuilder(options(dir, 2048, OddFiles)).build().toBatch
+      .planInputPartitions())
+    val (stream, end) = trigger(dir, 2048)
+    assert(LogfileHwmOffset.of(end).files.size == 6)
+    assert(tasks(stream.planInputPartitions(LogfileHwmOffset.Initial, end)) == batch)
+    // plain files carve into several splits, and tasks hold several splits
+    assert(batch.flatMap(_._1).size > 6 && batch.size < batch.flatMap(_._1).size, batch)
+    assert(batch.forall(_._2 == Seq("localhost")), batch)
+  }
+
+  test("a micro-batch of many small files plans a few core-sized tasks, not one a file") {
+    val dir = tmpDir("logfile-plan-small")
+    LogfileFixture.ensure(dir, files = 20, recordsPerFile = 20, seed = 65L)
+    val (stream, end) = trigger(dir, 512 << 20)
+    val planned = tasks(stream.planInputPartitions(LogfileHwmOffset.Initial, end))
+    assert(planned.flatMap(_._1).size == 40)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(planned.size <= cores + 1, s"40 files on $cores cores in ${planned.size} tasks")
+  }
+
+  test("a replayed micro-batch plans the same tasks") {
+    val dir = tmpDir("logfile-plan-replay")
+    LogfileFixture.ensure(dir, files = 4, recordsPerFile = 300, seed = 66L)
+    val (stream, end) = trigger(dir, 4096)
+    val first = tasks(stream.planInputPartitions(LogfileHwmOffset.Initial, end))
+    assert(tasks(stream.planInputPartitions(LogfileHwmOffset.Initial, end)) == first)
+    // a restarted query re-plans the batch from its checkpointed offset
+    val (restarted, _) = trigger(dir, 4096)
+    assert(tasks(restarted.planInputPartitions(LogfileHwmOffset.Initial,
+      restarted.deserializeOffset(end.json()))) == first)
+  }
+
+  test("a stream over many small plain and gzip files emits the batch read's records") {
+    val dir = tmpDir("logfile-plan-e2e")
+    val truth = LogfileFixture.ensure(dir, files = 20, recordsPerFile = 30, seed = 67L)
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    val opts = options(dir, 1024, OddFiles).asCaseSensitiveMap()
+    val expected = rows(spark.read.format("logfile").options(opts).load())
+    assert(expected.size == truth.total * 2)
+    val q = spark.readStream.format("logfile").options(opts).load()
+      .writeStream.format("memory").queryName("logfile_plan_e2e")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      q.processAllAvailable()
+      assert(rows(spark.table("logfile_plan_e2e")) == expected)
+    } finally q.stop()
+  }
+
+  test("a batch scan lists its input directory once for statistics and planning") {
+    CountingFs.register(spark)
+    val dir = CountingFs.tempDir("logfile-plan-listing")
+    LogfileFixture.ensure(new org.apache.hadoop.fs.Path(dir).toUri.getPath, files = 2,
+      recordsPerFile = 50, seed = 68L)
+    val scan = new LogfileScanBuilder(options(dir, 4096)).build()
+    val listings = CountingFs.dirListingsDuring(dir) {
+      assert(scan.asInstanceOf[SupportsReportStatistics].estimateStatistics()
+        .sizeInBytes().getAsLong > 0)
+      assert(scan.toBatch.planInputPartitions().nonEmpty)
+    }
+    assert(listings == 1)
   }
 }

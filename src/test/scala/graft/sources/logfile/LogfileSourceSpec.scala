@@ -31,7 +31,7 @@ class LogfileSourceSpec extends SparkTestBase {
 
   /** Every split the scan planned, across its tasks, in task order. */
   private def plannedSplits(df: DataFrame): Seq[LogfilePartition] =
-    scanOf(df).inputPartitions.flatMap(LogfileSplitGroup.splitsOf).toSeq
+    scanOf(df).inputPartitions.flatMap(_.asInstanceOf[LogfileSplitGroup].splits).toSeq
 
   private def scanOf(df: DataFrame) =
     df.queryExecution.executedPlan.collectLeaves().collectFirst {
@@ -488,9 +488,9 @@ class LogfileSourceSpec extends SparkTestBase {
       new BlockLocation(Array("h1:1", "h2:1"), Array("h1", "h2"), 0L, 100L),
       new BlockLocation(Array("h2:1", "h3:1"), Array("h2", "h3"), 100L, 100L))
     // split [80, 180): 20 bytes from block 1, 80 from block 2 → h2 first
-    assert(LogfileLocality.rank(blocks, 80L, 100L).toSeq == Seq("h2", "h3", "h1"))
+    assert(LogfileLocality.rank(Seq((blocks, 80L, 100L))).toSeq == Seq("h2", "h3", "h1"))
     // no overlap → empty
-    assert(LogfileLocality.rank(blocks, 200L, 50L).isEmpty)
+    assert(LogfileLocality.rank(Seq((blocks, 200L, 50L))).isEmpty)
     // a task of several splits sums overlap over them: [80, 180) above
     // gives h1 20, h2 100, h3 80; [0, 100) of another file on h4/h1 adds
     // h4 100 and h1 100 → h1 120, then the h2/h4 tie in first-seen order
@@ -499,15 +499,15 @@ class LogfileSourceSpec extends SparkTestBase {
       Seq("h1", "h2", "h4", "h3"))
 
     // end-to-end: local FS reports localhost for every block; the planner
-    // must attach it to each split and each task of splits (the
-    // FileInputFormat.getSplits parity)
+    // must attach it to each task of splits (the FileInputFormat.getSplits
+    // parity)
     val dir = tmpDir("logfile-locality")
     LogfileFixture.ensure(dir, files = 1, recordsPerFile = 200, seed = 9L)
     val df = read(dir, LogfileFixture.PatternA, maxSplit = 4096)
     val parts = scanOf(df).inputPartitions
-    val splits = parts.flatMap(LogfileSplitGroup.splitsOf)
+    val splits = parts.flatMap(_.asInstanceOf[LogfileSplitGroup].splits)
     assert(splits.length > 1, "expected a multi-split plan")
-    (parts ++ splits).foreach { p =>
+    parts.foreach { p =>
       assert(p.preferredLocations().contains("localhost"),
         s"partition $p missing local-FS block host")
     }

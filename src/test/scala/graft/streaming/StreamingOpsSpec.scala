@@ -635,7 +635,8 @@ class StreamingOpsSpec extends SparkTestBase {
   test("logfile stream: one big plain file is carved into multiple splits per trigger") {
     import java.nio.file.Files
     import java.nio.charset.StandardCharsets
-    import graft.sources.logfile.{LogfileHwmOffset, LogfileMicroBatchStream, LogfileTable}
+    import graft.sources.logfile.{LogfileHwmOffset, LogfileMicroBatchStream, LogfilePartition,
+      LogfileSplitGroup, LogfileTable}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val dir = Files.createTempDirectory("logfile-stream-split").toFile.getAbsolutePath
@@ -665,12 +666,12 @@ class StreamingOpsSpec extends SparkTestBase {
       new CaseInsensitiveStringMap(opts), LogfileTable.Schema)
     val end = ms.latestOffset(LogfileHwmOffset.Initial, ReadLimit.allAvailable())
     val parts = ms.planInputPartitions(LogfileHwmOffset.Initial, end)
-    assert(parts.length >= 5,
-      s"a ${file.length()}-byte plain file at maxSplitBytes=2048 planned ${parts.length} partition(s)")
-    // replays re-carve identically (pure function of the immutable file);
-    // compare field-wise — the locations Array makes case-class == useless
     def ranges(ps: Array[org.apache.spark.sql.connector.read.InputPartition]) =
-      ps.map { case graft.sources.logfile.LogfilePartition(p, s, e, pt, _) => (p, s, e, pt) }.toSeq
+      ps.toSeq.flatMap(_.asInstanceOf[LogfileSplitGroup].splits)
+        .map { case LogfilePartition(p, s, e, pt) => (p, s, e, pt) }
+    assert(ranges(parts).map(_._2) == (0L until file.length() by 2048L),
+      s"a ${file.length()}-byte plain file at maxSplitBytes=2048 planned ${ranges(parts)}")
+    // replays re-carve identically (pure function of the immutable file)
     assert(ranges(ms.planInputPartitions(LogfileHwmOffset.Initial, end)) == ranges(parts))
 
     // end-to-end: the split stream emits exactly the unsplit batch record set

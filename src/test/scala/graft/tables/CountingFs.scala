@@ -2,17 +2,19 @@ package graft.tables
 
 import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** A local filesystem under its own `countfs` scheme, for specs that pin
-  * how the table layer uses its filesystem: it counts listings of
-  * `_graft_log` directories, lets a spec intercept renames, and records how
-  * many renames were still running when a writer's `_tmp-*` staging
-  * directory was deleted. The FS cache is disabled for the scheme, so every
-  * `getFileSystem` call sees the current hooks.
+  * how the table layer and the logfile scan use their filesystem: it counts
+  * listings of `_graft_log` directories and of each directory, lets a spec
+  * intercept renames, and records how many renames were still running when
+  * a writer's `_tmp-*` staging directory was deleted. The FS cache is
+  * disabled for the scheme, so every `getFileSystem` call sees the current
+  * hooks.
   */
 class CountingFs extends RawLocalFileSystem {
   import CountingFs._
@@ -22,6 +24,7 @@ class CountingFs extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] = {
     if (f.getName == "_graft_log") logListings.incrementAndGet()
+    dirListings.computeIfAbsent(f.toUri.getPath, _ => new AtomicInteger).incrementAndGet()
     super.listStatus(f).map(plain)
   }
 
@@ -53,6 +56,9 @@ object CountingFs {
   /** Listings of any `_graft_log` directory since the JVM started. */
   val logListings = new AtomicInteger
 
+  /** Listings of each directory since the JVM started, by its path. */
+  private val dirListings = new ConcurrentHashMap[String, AtomicInteger]
+
   /** Called before every rename; returning false fails the rename. */
   @volatile var renameHook: (Path, Path) => Boolean = null
 
@@ -77,5 +83,15 @@ object CountingFs {
     val before = logListings.get
     body
     logListings.get - before
+  }
+
+  /** Listings of the directory `dir` (a `countfs://` path) made while
+    * `body` runs.
+    */
+  def dirListingsDuring(dir: String)(body: => Any): Int = {
+    val count = dirListings.computeIfAbsent(new Path(dir).toUri.getPath, _ => new AtomicInteger)
+    val before = count.get
+    body
+    count.get - before
   }
 }
