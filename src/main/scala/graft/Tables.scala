@@ -18,21 +18,26 @@ object Tables {
     * all pin `spark.sql.session.timeZone=UTC`, so the NTZ→TZ cast is
     * value-preserving and `unix_micros * 1000` is exact.
     */
-  /** Parquet SCHEMA memo per file path: a bare-path `spark.read.parquet`
-    * runs a footer-reading schema-inference JOB on every call — ~40 ms of
-    * driver+task latency that a catalog-backed table never pays (its schema
-    * comes from the metastore). One inference per path per JVM, then
-    * `read.schema(...)` skips the job. Metadata only — never rows, bytes,
-    * or results: every query still scans the parquet in full each run.
+  /** Parquet SCHEMA memo per file path, modification time and length: a
+    * bare-path `spark.read.parquet` runs a footer-reading schema-inference
+    * JOB on every call — ~40 ms of driver+task latency that a
+    * catalog-backed table never pays (its schema comes from the metastore).
+    * One inference per file state per JVM, then `read.schema(...)` skips
+    * the job; a file rewritten at the same path is inferred again.
+    * Metadata only — never rows, bytes, or results: every query still
+    * scans the parquet in full each run.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    val hadoopPath = new org.apache.hadoop.fs.Path(path)
+    val st = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(hadoopPath)
+    val schema = schemaCache.computeIfAbsent((path, st.getModificationTime, st.getLen),
+      _ => spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     if (name == "events") normalizeTs(df) else df
   }

@@ -39,8 +39,8 @@ import org.apache.hadoop.io.Text
   * sequences decode to those chars wherever they occur.
   */
 sealed abstract class HeadMatcher {
-  /** True iff the UTF-8 line `bytes[0, len)` is a record head. */
-  def matches(bytes: Array[Byte], len: Int): Boolean
+  /** True iff the UTF-8 line `bytes[off, off + len)` is a record head. */
+  def matches(bytes: Array[Byte], off: Int, len: Int): Boolean
 }
 
 object HeadMatcher {
@@ -78,8 +78,8 @@ private[graft] final class PatternMemo[K, V] {
 /** Fallback: decode as `Text.toString` does, then `java.util.regex`. */
 private[logfile] final class RegexHeadMatcher(regex: Pattern) extends HeadMatcher {
   private[logfile] val matcher = regex.matcher("")
-  def matches(bytes: Array[Byte], len: Int): Boolean =
-    matcher.reset(Text.decode(bytes, 0, len)).matches()
+  def matches(bytes: Array[Byte], off: Int, len: Int): Boolean =
+    matcher.reset(Text.decode(bytes, off, len)).matches()
 }
 
 /** A DFA over bytes. Bytes that no transition tells apart share a class;
@@ -94,14 +94,15 @@ private[logfile] final class DfaHeadMatcher(
   private val width = table.length / accepting.length
   private val stays = Array.tabulate(256)(b => tail > 0 && table(tail + classOf(b)) == tail)
 
-  def matches(bytes: Array[Byte], len: Int): Boolean = {
+  def matches(bytes: Array[Byte], off: Int, len: Int): Boolean = {
+    val end = off + len
     var s = start
-    var i = 0
-    while (i < len) {
+    var i = off
+    while (i < end) {
       if (s == tail) {
-        while (i + 8 <= len && DfaHeadMatcher.plainAscii(bytes, i)) i += 8
-        while (i < len && stays(bytes(i) & 0xff)) i += 1
-        if (i == len) return true
+        while (i + 8 <= end && DfaHeadMatcher.plainAscii(bytes, i)) i += 8
+        while (i < end && stays(bytes(i) & 0xff)) i += 1
+        if (i == end) return true
       }
       s = table(s + classOf(bytes(i) & 0xff))
       if (s == 0) return false

@@ -42,7 +42,9 @@ import org.apache.spark.util.SerializableConfiguration
   * so a directory of small rotated files costs a few core-sized tasks, not
   * one task per file. Splits of `spark.sql.files.maxPartitionBytes` or more
   * stay one per task. The Hadoop conf ships to executors once per scan, as
-  * a broadcast.
+  * a broadcast. A batch scan carves its files and builds its reader factory
+  * once, when it first runs: it states its columnar mode up front
+  * (`columnarSupportMode`), so Catalyst's planning never asks for either.
   *
   * Options:
   *   - `pattern` (required): default first-line regex.
@@ -55,7 +57,10 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Emission: a record scan emits `ColumnarBatch`es ([[LogfileColumnarReader]]);
   * the pushed COUNT(*) partial, one row per task, takes the row reader. No
-  * option selects the path.
+  * option selects the path. A split reader splits lines in its own buffer
+  * ([[LineSplitter]], with the reference `LineReader`'s line rules and byte
+  * counts), tests each head where the line lies, and copies a line only
+  * into its record.
   *
   * Output schema: `file string, offset long, record string`; `offset` is the
   * byte offset of the record's first line in the (decompressed) stream.
@@ -288,17 +293,30 @@ final class LogfileScan(options: CaseInsensitiveStringMap, required: StructType,
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** A record scan is always columnar and the pushed COUNT(*) never is.
+    * Saying so keeps Spark from planning the partitions and building the
+    * reader factory at planning time, on every plan copy, only to ask them
+    * (what its default, `PARTITION_DEFINED`, does).
+    */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    if (countPushed) Scan.ColumnarSupportMode.UNSUPPORTED else Scan.ColumnarSupportMode.SUPPORTED
+
+  // the tasks and the reader factory, each made once per scan, when the
+  // scan first runs: one carving of the files, one broadcast of the conf
+  private lazy val partitions: Array[InputPartition] = {
     val spark = SparkSession.active
     LogfileSplits.plan(spark, spark.sessionState.newHadoopConf(), options, files)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
+  private lazy val readerFactory: PartitionReaderFactory = {
     val spark = SparkSession.active
     val conf = GraftConfBridge.broadcast(
       spark.sparkContext, spark.sessionState.newHadoopConf())
     new LogfileReaderFactory(conf, required, limit, countPushed)
   }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Scan observability (bytes read, records assembled, boundary-spanning
     * records) — the `getProgress` parity item
@@ -432,7 +450,9 @@ object LogfileScan {
 }
 
 /** Builds each task's [[LogfileChainReader]] over its splits. The Hadoop
-  * conf arrives as one broadcast per scan rather than a copy in every task.
+  * conf arrives as one broadcast per scan rather than a copy in every task,
+  * and a task's splits share one `CompressionCodecFactory`, which
+  * instantiates every codec it knows when it is built.
   */
 final class LogfileReaderFactory(conf: Broadcast[SerializableConfiguration],
     required: StructType, limit: Option[Int] = None, countPushed: Boolean = false)
@@ -442,25 +462,28 @@ final class LogfileReaderFactory(conf: Broadcast[SerializableConfiguration],
     */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     require(countPushed, "a logfile record scan is columnar")
+    val codecs = new CompressionCodecFactory(conf.value.value)
     new LogfileCountReader(new LogfileChainReader[InternalRow](
       partition.asInstanceOf[LogfileSplitGroup].splits, None, { (split, _) =>
-        val r = new LogfilePartitionReader(split, conf.value.value, required, None, countOnly = true)
+        val r = new LogfilePartitionReader(split, conf.value.value, required, None,
+          countOnly = true, codecs)
         (r, r)
       }))
   }
 
-  /** Vectorized path (everything except the one-row COUNT(*) partial, where
-    * a batch is pointless): record bytes go straight from the assembly
-    * buffer into reused column vectors — no per-record row or UTF8String.
+  /** Vectorized path (every record scan; the scan's `columnarSupportMode`
+    * tells Spark): record bytes go straight from the assembly buffer into
+    * reused column vectors — no per-record row or UTF8String.
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean = !countPushed
-
-  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val codecs = new CompressionCodecFactory(conf.value.value)
     new LogfileChainReader[ColumnarBatch](partition.asInstanceOf[LogfileSplitGroup].splits, limit,
       { (split, left) =>
-        val r = new LogfilePartitionReader(split, conf.value.value, required, left)
+        val r = new LogfilePartitionReader(split, conf.value.value, required, left,
+          countOnly = false, codecs)
         (r, new LogfileColumnarReader(r, required, split.path))
       })
+  }
 }
 
 /** Drains the (string-skipping) inner reader and emits ONE row: this
@@ -487,8 +510,9 @@ final class LogfileCountReader(inner: LogfileChainReader[InternalRow])
 }
 
 private[logfile] object LogfileCodec {
-  def forPath(conf: Configuration, path: Path): Option[org.apache.hadoop.io.compress.CompressionCodec] =
-    Option(new CompressionCodecFactory(conf).getCodec(path)).map { c =>
+  def forPath(codecs: CompressionCodecFactory, path: Path)
+      : Option[org.apache.hadoop.io.compress.CompressionCodec] =
+    Option(codecs.getCodec(path)).map { c =>
       if (c.isInstanceOf[SplittableCompressionCodec])
         throw new RuntimeException(
           s"splittable compressed input is not supported: $path " +

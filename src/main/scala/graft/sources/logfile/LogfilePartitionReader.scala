@@ -2,9 +2,7 @@ package graft.sources.logfile
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.Text
-import org.apache.hadoop.io.compress.{CodecPool, Decompressor}
-import org.apache.hadoop.util.LineReader
+import org.apache.hadoop.io.compress.{CodecPool, CompressionCodecFactory, Decompressor}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -31,14 +29,29 @@ import org.apache.spark.unsafe.types.UTF8String
   *      positions in the decompressed stream;
   *   5. continuation lines re-join with "\n" and records carry no trailing
   *      newline (reference `:311`; we pin "\n" over platform separators).
+  *
+  * Lines come from a [[LineSplitter]], which keeps the reference's
+  * `LineReader` line rules and byte counts, so offsets, [[bytesRead]] and
+  * split ownership are the reference's. Each line is tested in the
+  * splitter's buffer and copied once, into the record, only if the record
+  * is assembled.
   */
-final class LogfilePartitionReader(
+final class LogfilePartitionReader private[logfile] (
     split: LogfilePartition,
     conf: Configuration,
     required: StructType,
-    limit: Option[Int] = None,
-    countOnly: Boolean = false)
+    limit: Option[Int],
+    countOnly: Boolean,
+    codecs: CompressionCodecFactory)
   extends PartitionReader[InternalRow] {
+
+  /** A reader with a codec factory of its own. A scan task shares one
+    * factory across its splits instead: building one instantiates every
+    * codec Hadoop knows.
+    */
+  def this(split: LogfilePartition, conf: Configuration, required: StructType,
+      limit: Option[Int] = None, countOnly: Boolean = false) =
+    this(split, conf, required, limit, countOnly, new CompressionCodecFactory(conf))
 
   private val head = HeadMatcher.compile(split.pattern)
   private[logfile] def headMatcher: HeadMatcher = head
@@ -48,17 +61,17 @@ final class LogfilePartitionReader(
   private var pos: Long = 0L // logical (decompressed) offset of the next byte
   private var end: Long = split.end
 
-  private val reader: LineReader = {
+  private val lines: LineSplitter = {
     val fs = hadoopPath.getFileSystem(conf)
     var in: java.io.InputStream = null
     try {
-      LogfileCodec.forPath(conf, hadoopPath) match {
+      LogfileCodec.forPath(codecs, hadoopPath) match {
         case Some(codec) =>
           require(split.start == 0L, "codec'd files must be single whole-file splits")
           end = Long.MaxValue
           decompressor = CodecPool.getDecompressor(codec)
           in = fs.open(hadoopPath)
-          new LineReader(codec.createInputStream(in, decompressor), conf)
+          new LineSplitter(codec.createInputStream(in, decompressor))
         case None =>
           val raw = fs.open(hadoopPath)
           in = raw
@@ -68,7 +81,7 @@ final class LogfilePartitionReader(
             raw.seek(split.start - 1)
             pos = split.start - 1
           }
-          new LineReader(raw, conf)
+          new LineSplitter(raw)
       }
     } catch {
       case t: Throwable => // don't leak the stream/decompressor on init failure
@@ -82,16 +95,15 @@ final class LogfilePartitionReader(
   // reads too (must precede the `locally` block below in declaration order)
   private val basePos: Long = pos
 
-  private var line = new Text
   private var finished = false
-  // the next record's head line: `line` and `pendingHead` swap buffers when
-  // a head is held, so holding one copies and allocates nothing
-  private var pendingHead = new Text
+  // the next record's head is the splitter's current line: it is held in
+  // place, and `next()` copies it before it reads another line
   private var hasPendingHead = false
   private var pendingHeadPos: Long = 0L
 
   private var recordsAssembled = 0L
   private var recordsSpanning = 0L
+  private val maxRecords: Long = limit.fold(Long.MaxValue)(_.toLong)
 
   // --- realignment: discard partial line, then skip continuation lines
   // (they belong to the previous split; for start==0, leading junk before the
@@ -101,22 +113,19 @@ final class LogfilePartitionReader(
     advanceToNextHead()
   }
 
-  /** Reads the next line into `line`; false, and `finished`, at EOF. */
+  /** Reads the next line into the splitter; false, and `finished`, at EOF. */
   private def readLine(): Boolean = {
-    val n = reader.readLine(line)
+    val n = lines.readLine()
     pos += n
     if (n == 0) finished = true
     n > 0
   }
 
-  /** The head test, the only one in the reader: does `line` fully match? */
-  private def lineIsHead: Boolean = head.matches(line.getBytes, line.getLength)
+  /** The head test, the only one in the reader: does the current line fully match? */
+  private def lineIsHead: Boolean = head.matches(lines.bytes, lines.start, lines.length)
 
-  /** Holds `line`, starting at `start`, as the next record's head. */
+  /** Holds the current line, starting at `start`, as the next record's head. */
   private def holdHead(start: Long): Unit = {
-    val t = pendingHead
-    pendingHead = line
-    line = t
     hasPendingHead = true
     pendingHeadPos = start
   }
@@ -137,13 +146,16 @@ final class LogfilePartitionReader(
   private var curOffset = 0L
   private val fileUtf8 = UTF8String.fromString(split.path)
 
-  // --- record assembly buffer: raw UTF-8 bytes appended straight from the
-  // line reader's Text, so the record column never round-trips through
-  // java.lang.String (decode + char copies + re-encode — the per-record CPU
-  // tax of the scan at 100 TB). Reused across records; grows geometrically.
+  // --- record assembly buffer: each line's raw UTF-8 bytes are copied once,
+  // straight from the splitter's buffer, so the record column never
+  // round-trips through java.lang.String (decode + char copies + re-encode —
+  // the per-record CPU tax of the scan at 100 TB). Reused across records;
+  // grows geometrically.
   private var recBuf = new Array[Byte](1 << 16)
   private var recLen = 0
-  private def appendLine(bytes: Array[Byte], len: Int, newline: Boolean): Unit = {
+  /** Appends the splitter's current line, after a "\n" if `newline`. */
+  private def appendLine(newline: Boolean): Unit = {
+    val len = lines.length
     val extra = len + (if (newline) 1 else 0)
     if (recLen + extra > recBuf.length) {
       var cap = recBuf.length
@@ -151,18 +163,18 @@ final class LogfilePartitionReader(
       recBuf = java.util.Arrays.copyOf(recBuf, cap)
     }
     if (newline) { recBuf(recLen) = '\n'; recLen += 1 }
-    System.arraycopy(bytes, 0, recBuf, recLen, len)
+    System.arraycopy(lines.bytes, lines.start, recBuf, recLen, len)
     recLen += len
   }
 
   override def next(): Boolean = {
     // pushed-down (partial) limit: stop assembling -- and stop READING the
     // underlying stream -- once this partition has emitted `limit` records
-    if (limit.exists(recordsAssembled >= _)) return false
+    if (recordsAssembled >= maxRecords) return false
     if (!hasPendingHead) return false
     curOffset = pendingHeadPos
     recLen = 0
-    if (!countOnly) appendLine(pendingHead.getBytes, pendingHead.getLength, newline = false)
+    if (!countOnly) appendLine(newline = false)
     hasPendingHead = false
     var assembling = true
     var spanned = false
@@ -177,7 +189,7 @@ final class LogfilePartitionReader(
         // continuation at/past split end ⇒ this record spans the boundary
         // (invariant 3); MaxValue end (whole-file codec split) never spans
         if (lineStart >= end) spanned = true
-        if (!countOnly) appendLine(line.getBytes, line.getLength, newline = true)
+        if (!countOnly) appendLine(newline = true)
       }
     }
     recordsAssembled += 1
@@ -228,7 +240,7 @@ final class LogfilePartitionReader(
   private[logfile] def recordLength: Int = recLen
 
   override def close(): Unit = {
-    reader.close()
+    lines.close()
     if (decompressor != null) {
       CodecPool.returnDecompressor(decompressor)
       decompressor = null

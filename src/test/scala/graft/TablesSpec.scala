@@ -38,4 +38,23 @@ class TablesSpec extends SparkTestBase {
     val bad = got.where(col("ts") =!= col("us") * 1000L)
     assert(bad.isEmpty, s"nanos mismatch: ${bad.collect().mkString(",")}")
   }
+
+  test("a parquet file rewritten at the same path with a new schema reads the new schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables-rewrite")
+    /** Writes `df` as the single parquet file `dir/t.parquet`, replacing it. */
+    def put(df: org.apache.spark.sql.DataFrame): Unit = {
+      val out = java.nio.file.Files.createTempDirectory("graft-tables-part").toString
+      df.coalesce(1).write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, dir.resolve("t.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    put(Seq((1L, "a")).toDF("id", "name"))
+    assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("id", "name"))
+    put(Seq((2L, 3.5, true)).toDF("id", "score", "ok"))
+    val got = Tables(spark, dir.toString, "t")
+    assert(got.columns.toSeq == Seq("id", "score", "ok"))
+    assert(got.collect().toSeq == Seq(org.apache.spark.sql.Row(2L, 3.5, true)))
+  }
 }

@@ -82,7 +82,7 @@ class HeadMatcherSpec extends AnyFunSuite {
 
   /** The matcher reads only `bytes[0, len)`: trailing junk in the buffer must not count. */
   private def actual(m: HeadMatcher, line: Array[Byte]): Boolean =
-    m.matches(line ++ bytes(" junk"), line.length)
+    m.matches(line ++ bytes(" junk"), 0, line.length)
 
   private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString(" ")
 
@@ -106,6 +106,31 @@ class HeadMatcherSpec extends AnyFunSuite {
   for ((pattern, examples) <- Fallback) test(s"fallback agrees with java.util.regex: $pattern") {
     assert(HeadMatcher.compile(pattern).isInstanceOf[RegexHeadMatcher], "expected the fallback")
     agree(pattern, examples)
+  }
+
+  test("the DFA and the regex fallback agree on lines at nonzero offsets in a larger buffer") {
+    // a line sits in the line splitter's buffer between other bytes, at any
+    // alignment of the DFA's 8-byte skip
+    for ((pattern, examples) <- Compiled) {
+      val dfa = HeadMatcher.compile(pattern)
+      assert(dfa.isInstanceOf[DfaHeadMatcher], "expected the byte path")
+      val fallback = new RegexHeadMatcher(Pattern.compile(pattern))
+      val placed = for {
+        line <- lines(examples)
+        before <- Gen.listOf(someByte)
+        after <- Gen.listOf(someByte)
+      } yield (before.toArray ++ line ++ after, before.length, line.length)
+      val prop = Prop.forAll(placed) { case (buf, off, len) =>
+        val d = dfa.matches(buf, off, len)
+        (d == fallback.matches(buf, off, len) &&
+          d == expected(pattern, buf.slice(off, off + len))) :|
+          s"pattern $pattern, buffer [${hex(buf)}], line at $off, $len bytes"
+      }
+      val params = Check.Parameters.default
+        .withMinSuccessfulTests(500).withInitialSeed(Seed(pattern.hashCode.toLong + 1))
+      val result = Check.check(params, prop)
+      assert(result.passed, result.status.toString)
+    }
   }
 
   test("trailing .* rejects exactly Java's line terminators, over every short byte tail") {

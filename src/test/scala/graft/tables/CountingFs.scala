@@ -5,12 +5,15 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** A local filesystem under its own `countfs` scheme, for specs that pin
   * how the table layer and the logfile scan use their filesystem: it counts
-  * listings of `_graft_log` directories and of each directory, lets a spec
+  * listings of `_graft_log` directories and of each directory, and block
+  * reports of each file (the logfile planner asks one per file), lets a spec
   * intercept renames, and records how many renames were still running when
   * a writer's `_tmp-*` staging directory was deleted. The FS cache is
   * disabled for the scheme, so every `getFileSystem` call sees the current
@@ -29,6 +32,13 @@ class CountingFs extends RawLocalFileSystem {
   }
 
   override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
+
+  override def getFileBlockLocations(file: FileStatus, start: Long, len: Long)
+      : Array[BlockLocation] = {
+    blockReports.computeIfAbsent(file.getPath.toUri.getPath, _ => new AtomicInteger)
+      .incrementAndGet()
+    super.getFileBlockLocations(file, start, len)
+  }
 
   // the local statuses load permissions through java.io.File, which
   // refuses a non-`file` URI; a plain copy keeps the default permissions
@@ -58,6 +68,9 @@ object CountingFs {
 
   /** Listings of each directory since the JVM started, by its path. */
   private val dirListings = new ConcurrentHashMap[String, AtomicInteger]
+
+  /** Block reports of each file since the JVM started, by its path. */
+  private val blockReports = new ConcurrentHashMap[String, AtomicInteger]
 
   /** Called before every rename; returning false fails the rename. */
   @volatile var renameHook: (Path, Path) => Boolean = null
@@ -93,5 +106,19 @@ object CountingFs {
     val before = count.get
     body
     count.get - before
+  }
+
+  /** Block reports of each file under the directory `dir` (a `countfs://`
+    * path) made while `body` runs, by file name; files with none are left
+    * out.
+    */
+  def blockReportsDuring(dir: String)(body: => Any): Map[String, Int] = {
+    val prefix = new Path(dir).toUri.getPath + "/"
+    def now = blockReports.asScala.collect {
+      case (p, n) if p.startsWith(prefix) => p.substring(prefix.length) -> n.get
+    }.toMap
+    val before = now
+    body
+    now.map { case (f, n) => f -> (n - before.getOrElse(f, 0)) }.filter(_._2 > 0)
   }
 }
