@@ -3,7 +3,6 @@ package graft.functions.expressions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** `hamming64(a, b)` — popcount of XOR over two 64-bit fingerprints, as a

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{GraftQuery, QueryPack, Tables}
 import graft.operators.{IntervalJoin, PageRank}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,13 +36,6 @@ import org.apache.spark.sql.types.DecimalType
   *     the fill is one window pass per series.
   */
 object Advanced extends QueryPack {
-
-  /** Recursive temp-dir reclaim shared by every table-backed query's
-    * `finally` block (was 21 identical inline copies).
-    */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
-  }
 
   private def dsum2(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
 
@@ -236,12 +228,7 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
           .where(col("o_orderkey") % 3 === 0)
-        // per-invocation directory: concurrent drivers (verify + bench, or
-        // parallel sessions) must not overwrite each other's files mid-read
-        val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_roundtrip_${java.util.UUID.randomUUID()}")
-        val root = rootFile.getAbsolutePath
-        try {
+        withScratchRoot(s, "roundtrip") { root =>
           val csvDir = s"$root/csv"
           val jsonDir = s"$root/json"
           base.coalesce(4).write.option("header", "true").csv(csvDir)
@@ -257,9 +244,6 @@ object Advanced extends QueryPack {
             .groupBy("fmt", "o_orderpriority")
             .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total"))
             .orderBy("fmt", "o_orderpriority"))
-        } finally {
-          val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
-          fs.delete(new Path(root), true)
         }
       },
       Some("""WITH b AS (
@@ -585,22 +569,17 @@ object Advanced extends QueryPack {
           .select(col("o_orderkey"), col("o_custkey"),
             (expr("CAST(round(o_totalprice * 100) AS BIGINT)") + 1L).as("price_c"),
             lit("M").as("o_orderstatus"))
-        // per-invocation location (same discipline as q104): concurrent
-        // drivers must not collide on the table root
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q285_${java.util.UUID.randomUUID()}")
-        val t = graft.tables.GraftTable.create(
-          s, root.getAbsolutePath, base, keyCol = Some("o_orderkey"))
-        t.merge(src)
-        val out = materializeSmall(t.snapshot()
-          .groupBy((col("o_orderkey") % 10).as("bucket"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("price_c")).as("sum_price_c"),
-            sum(when(col("o_orderstatus") === "M", 1L).otherwise(0L)).as("n_merged"))
-          .orderBy(col("bucket")))
-        // table consumed into a local relation — reclaim the temp dir
-        rmTree(root)
-        out
+        withScratchRoot(s, "table_q285") { root =>
+          val t = graft.tables.GraftTable.create(
+            s, root, base, keyCol = Some("o_orderkey"))
+          t.merge(src)
+          materializeSmall(t.snapshot()
+            .groupBy((col("o_orderkey") % 10).as("bucket"))
+            .agg(count(lit(1)).as("n"),
+              sum(col("price_c")).as("sum_price_c"),
+              sum(when(col("o_orderstatus") === "M", 1L).otherwise(0L)).as("n_merged"))
+            .orderBy(col("bucket")))
+        }
       },
       Some("""WITH base AS (
         |  SELECT o_orderkey, o_custkey,
@@ -633,11 +612,9 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q286_${java.util.UUID.randomUUID()}")
-        try {
+        withScratchRoot(s, "table_q286") { root =>
           val t = graft.tables.GraftTable.create(
-            s, root.getAbsolutePath, base, keyCol = Some("o_orderkey"))
+            s, root, base, keyCol = Some("o_orderkey"))
           t.deleteWhere(col("o_orderpriority") === "1-URGENT")
           t.append(base.filter(col("o_orderpriority") === "1-URGENT")
             .withColumn("price_c", col("price_c") * 2))
@@ -646,8 +623,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).as("n_orders"),
               (sum(col("price_c")).cast("double") / 100.0).as("total"))
             .orderBy("o_orderpriority"))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -673,11 +648,9 @@ object Advanced extends QueryPack {
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q287_${java.util.UUID.randomUUID()}")
-        try {
+        withScratchRoot(s, "table_q287") { root =>
           val t = graft.tables.GraftTable.create(
-            s, root.getAbsolutePath, orders,
+            s, root, orders,
             keyCol = Some("o_orderkey"), partitionBy = Seq("o_orderstatus"))
           t.replacePartitions(orders.where(col("o_orderstatus") === "O")
             .withColumn("price_c", col("price_c") * 2))
@@ -685,8 +658,6 @@ object Advanced extends QueryPack {
             .groupBy(col("o_orderstatus"))
             .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
             .orderBy(col("o_orderstatus")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
@@ -716,19 +687,15 @@ object Advanced extends QueryPack {
         val src = orders.where(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_orderpriority"),
             (expr("CAST(round(o_totalprice * 100) AS BIGINT)") + 1L).as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q288_${java.util.UUID.randomUUID()}")
-        try {
+        withScratchRoot(s, "table_q288") { root =>
           val t = graft.tables.GraftTable.create(
-            s, root.getAbsolutePath, base, keyCol = Some("o_orderkey"))
+            s, root, base, keyCol = Some("o_orderkey"))
           t.merge(src)                                      // version 2
           t.deleteWhere(col("o_orderpriority") === "5-LOW") // version 3
           materializeSmall(t.changes(1L, t.version)
             .groupBy(col("_version"), col("_change"))
             .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
             .orderBy(col("_version"), col("_change")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -770,16 +737,12 @@ object Advanced extends QueryPack {
               .as("ship_day"),
             expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c"))
           .repartitionByRange(8, col("ship_day")) // the clustering that makes ranges tight
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q289_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath, li)
+        withScratchRoot(s, "table_q289") { root =>
+          val t = graft.tables.GraftTable.create(s, root, li)
           materializeSmall(t.scan(col("ship_day").between(9862L, 10225L))
             .groupBy((col("ship_day") % 7).as("dow"))
             .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
             .orderBy(col("dow")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH li AS (
@@ -807,25 +770,21 @@ object Advanced extends QueryPack {
         def slice(r: Int) = orders.where(col("o_orderkey") % 4 === r)
           .select(col("o_orderkey"), col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q290_${java.util.UUID.randomUUID()}")
         val sink = s"q290_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath, slice(1))
-          t.append(slice(2))
-          t.append(slice(3))
-          val q = t.readStream.writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation",
-              new java.io.File(root, "_ckpt").getAbsolutePath)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          try q.awaitTermination() finally q.stop()
-          materializeSmall(s.table(sink)
-            .groupBy(col("o_orderpriority"))
-            .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
-            .orderBy(col("o_orderpriority")))
-        } finally {
-          s.catalog.dropTempView(sink)
-          rmTree(root)
+        withScratchRoot(s, "table_q290") { root =>
+          try {
+            val t = graft.tables.GraftTable.create(s, root, slice(1))
+            t.append(slice(2))
+            t.append(slice(3))
+            val q = t.readStream.writeStream.format("memory").queryName(sink)
+              .option("checkpointLocation", s"$root/_ckpt")
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+            try q.awaitTermination() finally q.stop()
+            materializeSmall(s.table(sink)
+              .groupBy(col("o_orderpriority"))
+              .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
+              .orderBy(col("o_orderpriority")))
+          } finally s.catalog.dropTempView(sink)
         }
       },
       Some("""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
@@ -849,18 +808,14 @@ object Advanced extends QueryPack {
             expr("CAST(datediff(o_orderdate, DATE '1995-01-01') AS BIGINT)")
               .as("day"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q291_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath, orders)
+        withScratchRoot(s, "table_q291") { root =>
+          val t = graft.tables.GraftTable.create(s, root, orders)
           t.optimize(Seq("o_custkey", "day"), targetBytes = 256L << 10)
           materializeSmall(t.scan(
               col("o_custkey").between(100L, 400L) && col("day") < 365L)
             .groupBy((col("o_custkey") % 10).as("bucket"))
             .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
             .orderBy(col("bucket")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT o_custkey % 10 AS bucket, CAST(COUNT(*) AS BIGINT) AS n,
@@ -885,13 +840,7 @@ object Advanced extends QueryPack {
       "q292_table_sql_catalog",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        // per-invocation catalog name + root: concurrent drivers never
-        // collide, and the catalog instance cache stays consistent
-        val cat = s"gq292_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q292") { cat =>
           s.sql(s"""CREATE TABLE $cat.t AS
             SELECT o_orderkey AS k, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -904,10 +853,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT prio, COUNT(*) AS n_orders,
             CAST(SUM(price_c) AS BIGINT) AS sum_price_c
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""SELECT o_orderpriority AS prio, CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -932,28 +877,23 @@ object Advanced extends QueryPack {
         def slice(r: Int) = orders.where(col("o_orderkey") % 4 === r)
           .select(col("o_orderkey"), col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q293_${java.util.UUID.randomUUID()}")
-        try {
+        withScratchRoot(s, "table_q293") { root =>
           val src = graft.tables.GraftTable.create(
-            s, new java.io.File(root, "src").getAbsolutePath, slice(1))
+            s, s"$root/src", slice(1))
           src.append(slice(2))
           src.append(slice(3))
-          val dstLoc = new java.io.File(root, "dst").getAbsolutePath
+          val dstLoc = s"$root/dst"
           val dst = graft.tables.GraftTable.create(s, dstLoc,
             slice(1).limit(0)) // empty table, same schema
           val q = src.readStream.writeStream.format("graft-table")
             .option("path", dstLoc)
-            .option("checkpointLocation",
-              new java.io.File(root, "_ckpt").getAbsolutePath)
+            .option("checkpointLocation", s"$root/_ckpt")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
           try q.awaitTermination() finally q.stop()
           materializeSmall(dst.snapshot()
             .groupBy(col("o_orderpriority"))
             .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
             .orderBy(col("o_orderpriority")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
@@ -978,11 +918,9 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q294_${java.util.UUID.randomUUID()}")
-        try {
+        withScratchRoot(s, "table_q294") { root =>
           val t = graft.tables.GraftTable.create(
-            s, root.getAbsolutePath, base, keyCol = Some("o_orderkey"))
+            s, root, base, keyCol = Some("o_orderkey"))
           t.deleteWhere(col("o_orderpriority") === "1-URGENT")
           t.merge(base.where(col("o_orderkey") % 3 === 0)
             .withColumn("price_c", col("price_c") * 2L))
@@ -991,8 +929,6 @@ object Advanced extends QueryPack {
             .select(col("group").as("prio"), col("n"), col("sum").as("sum_price_c"))
             .orderBy("prio")
           materializeSmall(out)
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1021,11 +957,7 @@ object Advanced extends QueryPack {
       "q295_table_sql_update_merge",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq295_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q295") { cat =>
           s.sql(s"""CREATE TABLE $cat.t TBLPROPERTIES ('key'='k') AS
             SELECT o_orderkey AS k, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -1041,10 +973,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT prio, COUNT(*) AS n,
             CAST(SUM(price_c) AS BIGINT) AS sum_price_c
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1077,11 +1005,7 @@ object Advanced extends QueryPack {
       "q296_table_merge_clauses",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq296_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q296") { cat =>
           s.sql(s"""CREATE TABLE $cat.t TBLPROPERTIES ('key'='k') AS
             SELECT o_orderkey AS k, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -1099,10 +1023,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT prio, COUNT(*) AS n,
             CAST(SUM(price_c) AS BIGINT) AS sum_price_c
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1140,11 +1060,7 @@ object Advanced extends QueryPack {
       "q297_table_optimize_call",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq297_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q297") { cat =>
           s.sql(s"""CREATE TABLE $cat.t AS
             SELECT o_orderpriority AS prio, o_orderdate AS day,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -1156,10 +1072,6 @@ object Advanced extends QueryPack {
             CAST(SUM(price_c) AS BIGINT) AS sum_price_c,
             CAST(MIN(day) AS STRING) AS first_day
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""SELECT o_orderpriority AS prio, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1181,11 +1093,7 @@ object Advanced extends QueryPack {
       "q298_table_rename_column",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq298_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q298") { cat =>
           s.sql(s"""CREATE TABLE $cat.t AS
             SELECT o_orderkey AS k, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -1199,10 +1107,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT prio, COUNT(*) AS n,
             CAST(SUM(cents) AS BIGINT) AS sum_cents
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH rows0 AS (
@@ -1228,11 +1132,7 @@ object Advanced extends QueryPack {
       "q299_table_merge_compound_on",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq299_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q299") { cat =>
           s.sql(s"""CREATE TABLE $cat.t TBLPROPERTIES ('key'='k') AS
             SELECT o_orderkey AS k, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -1250,10 +1150,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT prio, COUNT(*) AS n,
             CAST(SUM(price_c) AS BIGINT) AS sum_price_c
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1293,11 +1189,7 @@ object Advanced extends QueryPack {
       "q300_table_drop_column",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq300_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q300") { cat =>
           s.sql(s"""CREATE TABLE $cat.t TBLPROPERTIES ('key'='k') AS
             SELECT o_orderkey AS k, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c,
@@ -1315,10 +1207,6 @@ object Advanced extends QueryPack {
             CAST(COUNT(tax_c) AS BIGINT) AS n_tax,
             CAST(SUM(tax_c) AS BIGINT) AS sum_tax
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH rows0 AS (
@@ -1344,11 +1232,7 @@ object Advanced extends QueryPack {
       "q301_table_count_pushdown",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq301_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q301") { cat =>
           s.sql(s"""CREATE TABLE $cat.t TBLPROPERTIES ('key'='k') AS
             SELECT o_orderkey AS k, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -1361,10 +1245,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT COUNT(*) AS n,
             CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
             FROM $cat.t"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH rows0 AS (
@@ -1395,26 +1275,22 @@ object Advanced extends QueryPack {
         val src = orders.where(col("o_orderkey") % 3 === 0)
           .select(col("o_orderkey").as("k"), lit("X").as("prio"),
             col("o_orderkey").cast("long").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q302_${java.util.UUID.randomUUID()}")
         val sink = s"q302_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath, base,
-            keyCol = Some("k"))
-          t.merge(src)                                  // v2: upsert
-          t.deleteWhere(col("prio") === "5-LOW")        // v3: change commit
-          val q = t.readChangeStream.writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation",
-              new java.io.File(root, "_ckpt").getAbsolutePath)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          try q.awaitTermination() finally q.stop()
-          materializeSmall(s.table(sink)
-            .groupBy(col("_change"), col("_version"), col("prio"))
-            .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
-            .orderBy(col("_change"), col("_version"), col("prio")))
-        } finally {
-          s.catalog.dropTempView(sink)
-          rmTree(root)
+        withScratchRoot(s, "table_q302") { root =>
+          try {
+            val t = graft.tables.GraftTable.create(s, root, base,
+              keyCol = Some("k"))
+            t.merge(src)                                  // v2: upsert
+            t.deleteWhere(col("prio") === "5-LOW")        // v3: change commit
+            val q = t.readChangeStream.writeStream.format("memory").queryName(sink)
+              .option("checkpointLocation", s"$root/_ckpt")
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+            try q.awaitTermination() finally q.stop()
+            materializeSmall(s.table(sink)
+              .groupBy(col("_change"), col("_version"), col("prio"))
+              .agg(count(lit(1)).as("n"), sum(col("price_c")).as("sum_price_c"))
+              .orderBy(col("_change"), col("_version"), col("prio")))
+          } finally s.catalog.dropTempView(sink)
         }
       },
       Some("""WITH base AS (
@@ -1448,11 +1324,7 @@ object Advanced extends QueryPack {
       "q303_table_check_constraints",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq303_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q303") { cat =>
           s.sql(s"""CREATE TABLE $cat.t (k BIGINT, prio STRING, price_c BIGINT)
             TBLPROPERTIES ('key'='k',
               'constraint.price_pos'='price_c >= 0',
@@ -1473,10 +1345,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT prio, COUNT(*) AS n,
             CAST(SUM(price_c) AS BIGINT) AS sum_price_c
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1505,11 +1373,7 @@ object Advanced extends QueryPack {
       "q304_table_partition_stats",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq304_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q304") { cat =>
           s.sql(s"""CREATE TABLE $cat.t (k BIGINT, price_c BIGINT, y INT,
             prio STRING) PARTITIONED BY (y, prio)""")
           s.sql(s"""INSERT INTO $cat.t
@@ -1523,10 +1387,6 @@ object Advanced extends QueryPack {
             FROM (SELECT COUNT(*) AS n, MIN(y) AS min_y, MAX(y) AS max_y,
               MIN(prio) AS min_prio, MAX(prio) AS max_prio,
               COUNT(prio) AS n_prio FROM $cat.t)"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH rows0 AS (
@@ -1558,10 +1418,8 @@ object Advanced extends QueryPack {
           .select(col("o_orderkey").as("k"), lit("X").as("prio"),
             col("o_orderkey").cast("long").as("price_c"),
             expr("CAST(round(o_totalprice * 10) AS BIGINT)").as("tax_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q305_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath, base,
+        withScratchRoot(s, "table_q305") { root =>
+          val t = graft.tables.GraftTable.create(s, root, base,
             keyCol = Some("k"))
           t.merge(src, mergeSchema = true)
           materializeSmall(t.snapshot()
@@ -1571,8 +1429,6 @@ object Advanced extends QueryPack {
               count(col("tax_c")).as("n_tax"),
               sum(col("tax_c")).cast("long").as("sum_tax"))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1608,10 +1464,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q306_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q306") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.coalesce(1), keyCol = Some("k"))
           t.deleteWhere(col("k") % 97 === 0)            // ~1%: DV path
           t.deleteWhere(col("k") % 89 === 0)            // vector merges
@@ -1623,8 +1477,6 @@ object Advanced extends QueryPack {
               sum(col("price_c")).cast("long").as("sum_price_c"))
             .withColumn("n_v1", lit(nV1))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1653,13 +1505,10 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q307_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s,
-            new java.io.File(root, "src").getAbsolutePath,
+        withScratchRoot(s, "table_q307") { root =>
+          val t = graft.tables.GraftTable.create(s, s"$root/src",
             base.coalesce(2), keyCol = Some("k"))
-          val c = t.cloneTo(new java.io.File(root, "fork").getAbsolutePath)
+          val c = t.cloneTo(s"$root/fork")
           c.deleteWhere(col("prio") === "1-URGENT")
           c.merge(base.where(col("k") % 5 === 0)
             .withColumn("price_c", col("price_c") * 3))
@@ -1671,8 +1520,6 @@ object Advanced extends QueryPack {
           materializeSmall(agg(t.snapshot(), "source")
             .unionByName(agg(c.snapshot(), "fork"))
             .orderBy(col("side"), col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1706,17 +1553,15 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q308_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q308") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 2 === 0), keyCol = Some("k"))
           t.replaceWith(
             base.where(col("k") % 3 === 0)
               .select(col("k"), col("prio"),
                 (col("price_c") * 2).as("cents2")),
             newKeyCol = Some("k"))
-          val re = graft.tables.GraftTable.at(s, root.getAbsolutePath)
+          val re = graft.tables.GraftTable.at(s, root)
           val nV1 = re.snapshot(Some(1L)).count()
           materializeSmall(re.snapshot()
             .groupBy(col("prio"))
@@ -1724,8 +1569,6 @@ object Advanced extends QueryPack {
               sum(col("cents2")).cast("long").as("sum_cents2"))
             .withColumn("n_v1", lit(nV1))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1752,12 +1595,10 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q309_${java.util.UUID.randomUUID()}")
-        try {
+        withScratchRoot(s, "table_q309") { root =>
           val prios = base.select("prio").distinct()
             .collect().map(_.getString(0)).sorted
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("prio") === prios.head), keyCol = Some("k"))
           prios.tail.foreach(p => t.append(base.where(col("prio") === p)))
           val horizon = t.version // pre-delete horizon
@@ -1774,8 +1615,6 @@ object Advanced extends QueryPack {
             .join(feedDel, Seq("prio"), "left")
             .withColumn("n_deleted", coalesce(col("n_deleted"), lit(0L)))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1801,10 +1640,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q310_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q310") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 2 === 0), keyCol = Some("k"))
           t.merge(base.where(col("k") % 3 === 0)
             .withColumn("price_c", col("price_c") * 2))       // v2
@@ -1814,8 +1651,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).as("n"),
               sum(col("price_c")).cast("long").as("sum_price_c"))
             .orderBy(col("_change")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1855,10 +1690,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q311_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q311") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.limit(0), keyCol = Some("k"))
           t.setBloomFilter(Map("k" -> 100000L))
           val prios = base.select("prio").distinct()
@@ -1872,8 +1705,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).as("n"),
               sum(col("price_c")).cast("long").as("sum_price_c"))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1902,10 +1733,8 @@ object Advanced extends QueryPack {
             col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
           .where(col("d") >= "1995-01-01" && col("d") < "1995-07-01")
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q312_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q312") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.limit(0), partitionBy = Seq("bucket(8,k)", "months(d)"))
           t.append(base.repartition(1))
           val keys = base.orderBy(col("k")).limit(9)
@@ -1916,8 +1745,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).as("n"),
               sum(col("price_c")).cast("long").as("sum_price_c"))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1948,14 +1775,12 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q313_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q313") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.limit(0), partitionBy = Seq("prio"))
           t.append(base.where(col("k") % 2 === 0).repartition(1)) // era 1
           t.setPartitioning(Seq("bucket(8,k)"))
-          val t2 = graft.tables.GraftTable.at(s, root.getAbsolutePath)
+          val t2 = graft.tables.GraftTable.at(s, root)
           t2.append(base.where(col("k") % 2 === 1).repartition(1)) // era 2
           val keys = base.orderBy(col("k")).limit(10)
             .select("k").collect().map(_.getLong(0)).toIndexedSeq
@@ -1964,8 +1789,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).as("n"),
               sum(col("price_c")).cast("long").as("sum_price_c"))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -1994,10 +1817,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderdate").as("d"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q314_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q314") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.limit(0), keyCol = Some("k"),
             generatedColumns = Map("y" -> "year(d)"))
           t.append(base.repartition(1)) // y computed per row in the write
@@ -2007,8 +1828,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).as("n"),
               sum(col("price_c")).cast("long").as("sum_price_c"))
             .orderBy(col("y")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -2037,10 +1856,8 @@ object Advanced extends QueryPack {
       (s, dir) => {
         val base = Tables(s, dir, "customer")
           .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q315_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q315") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.limit(0),
             identityColumns = Map("id" -> graft.tables.GraftTable.IdentitySpec(1L, 1L)))
           t.append(base.where(col("k") % 2 === 0))
@@ -2050,8 +1867,6 @@ object Advanced extends QueryPack {
               count_distinct(col("id")).cast("long").as("n_ids"),
               count(col("id")).cast("long").as("n_nonnull"),
               sum(col("k")).cast("long").as("sum_k")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -2074,23 +1889,19 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("p"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q316_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q316") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 2 === 0), keyCol = Some("k"))
           t.merge(base.where(col("k") % 3 === 0)
             .withColumn("p", col("p") + 7L))
           t.deleteWhere(col("k") < 800L)
           materializeSmall(s.read.format("graft-table-cdf")
-            .option("path", root.getAbsolutePath)
+            .option("path", root)
             .option("startingVersion", "1").load()
             .groupBy(col("_change"))
             .agg(count(lit(1)).cast("long").as("n"),
               sum(col("p")).cast("long").as("sum_p"))
             .orderBy(col("_change")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH c AS (
@@ -2126,10 +1937,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("p"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q317_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q317") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.limit(0), partitionBy = Seq("prio"))
           t.append(base)
           val reload = base.where(col("prio") === "1-URGENT")
@@ -2141,8 +1950,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).cast("long").as("n"),
               sum(col("p")).cast("long").as("sum_p"))
             .orderBy(col("prio")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -2169,10 +1976,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "customer")
           .select(col("c_custkey").as("k"),
             expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q318_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q318") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 2 === 0), keyCol = Some("k"),
             identityColumns = Map("id" -> graft.tables.GraftTable.IdentitySpec(1L, 1L)))
           t.merge(base.where(col("k") % 3 === 0).withColumn("bal", col("bal") + 11L))
@@ -2180,8 +1985,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).cast("long").as("n"),
               count_distinct(col("id")).cast("long").as("n_ids"),
               sum(col("bal")).cast("long").as("sum_bal")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH c AS (
@@ -2209,22 +2012,18 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "nation")
           .select(col("n_nationkey").as("k"), col("n_name").as("name"),
             col("n_regionkey").as("r"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q319_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q319") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") < 10), keyCol = Some("k"))
           t.append(base.where(col("k") >= 10)) // version 2 = full nation
           t.deleteWhere(col("r") === 0L)       // version 3 drops region 0
           materializeSmall(s.read.format("graft-table")
-            .option("path", root.getAbsolutePath)
+            .option("path", root)
             .option("versionAsOf", "2").load()
             .groupBy(col("r"))
             .agg(count(lit(1)).cast("long").as("n"),
               min(col("name")).as("first_name"))
             .orderBy(col("r")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT n_regionkey AS r, CAST(COUNT(*) AS BIGINT) AS n,
@@ -2242,10 +2041,8 @@ object Advanced extends QueryPack {
       (s, dir) => {
         val base = Tables(s, dir, "region")
           .select(col("r_regionkey").as("k"), col("r_name").as("name"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q320_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q320") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") < 3).repartition(1), keyCol = Some("k"))
           t.append(base.where(col("k") >= 3).repartition(1))
           t.deleteWhere(col("k") === 0L) // 1 of 3 rows in file 1: DV or rewrite
@@ -2255,8 +2052,6 @@ object Advanced extends QueryPack {
               col("rowsAdded").as("rows_added"),
               col("rowsRemoved").as("rows_removed"))
             .orderBy(col("version")))
-        } finally {
-          rmTree(root)
         }
       },
       // the delete's physical route (DV re-add vs rewrite) decides the
@@ -2289,10 +2084,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("p"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q321_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q321") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 2 === 0), keyCol = Some("k"),
             uniqueKey = true)
           t.append(base.where(col("k") % 2 === 1))
@@ -2302,8 +2095,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).cast("long").as("n"),
               count_distinct(col("k")).cast("long").as("n_keys"),
               sum(col("p")).cast("long").as("sum_p")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -2329,10 +2120,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").cast("int").as("k"),
             expr("CAST(round(o_totalprice) AS INT)").as("q"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q322_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q322") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 3 === 0), keyCol = Some("k"))
           t.widenColumn("q", org.apache.spark.sql.types.LongType)
           // the long era would overflow INT — only legal after the widening
@@ -2345,8 +2134,6 @@ object Advanced extends QueryPack {
               min(col("q")).cast("long").as("min_q"),
               max(col("q")).cast("long").as("max_q"))
             .orderBy("old_era"))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -2374,10 +2161,8 @@ object Advanced extends QueryPack {
           .select(col("o_orderkey").as("k"),
             col("o_orderpriority").as("prio"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("p"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q323_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q323") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 2 === 0), keyCol = Some("k"))
           val b = t.createBranch("ingest")
           b.append(base.where(col("k") % 2 === 1)) // staged, invisible to main
@@ -2391,8 +2176,6 @@ object Advanced extends QueryPack {
             .agg(count(lit(1)).cast("long").as("n"),
               sum(col("p")).cast("long").as("sum_p"))
             .orderBy("prio"))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT o_orderpriority AS prio,
@@ -2411,11 +2194,7 @@ object Advanced extends QueryPack {
       "q324_table_delete_in_subquery",
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val cat = s"gq324_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cat_$cat")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.tables.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-        try {
+        withScratchCatalog(s, "q324") { cat =>
           s.sql(s"""CREATE TABLE $cat.t TBLPROPERTIES ('key'='k') AS
             SELECT o_orderkey AS k, o_custkey AS cust, o_orderpriority AS prio,
               CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
@@ -2428,10 +2207,6 @@ object Advanced extends QueryPack {
           materializeSmall(s.sql(s"""SELECT prio, COUNT(*) AS n,
             CAST(SUM(price_c) AS BIGINT) AS sum_price_c
             FROM $cat.t GROUP BY prio ORDER BY prio"""))
-        } finally {
-          s.conf.unset(s"spark.sql.catalog.$cat")
-          s.conf.unset(s"spark.sql.catalog.$cat.root")
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -2462,10 +2237,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             expr("CAST(round(o_totalprice) AS INT)").as("q"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q325_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q325") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 2 === 0), keyCol = Some("k"))
           // the drifted upstream: BIGINT measure, beyond-int-range values,
           // replacing the thirds and inserting odd thirds
@@ -2478,8 +2251,6 @@ object Advanced extends QueryPack {
               sum(col("q")).cast("long").as("sum_q"),
               max(col("q")).cast("long").as("max_q"))
             .orderBy("merged"))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -2507,10 +2278,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "lineitem")
           .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
             expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q326_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q326") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 5 === 0), keyCol = Some("k"))
           t.setSortOrder(Seq("k"))
           val pre = t.fileRanges("k").map(_._1).toSet
@@ -2518,14 +2287,9 @@ object Advanced extends QueryPack {
           // would coalesce the range shuffle to ONE file at oracle scale
           // (production-size appends split naturally), which would make the
           // disjointness claim vacuous — keep the shuffle's partitions
-          val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-          val prevCoalesce = s.conf.getOption(coalesceKey)
-          s.conf.set(coalesceKey, "false")
-          try t.append(base.where(col("k") % 5 =!= 0)
-            .orderBy(md5(col("k").cast("string"))).repartition(8))
-          finally prevCoalesce match {
-            case Some(v) => s.conf.set(coalesceKey, v)
-            case None => s.conf.unset(coalesceKey)
+          withConf(s, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+            t.append(base.where(col("k") % 5 =!= 0)
+              .orderBy(md5(col("k").cast("string"))).repartition(8))
           }
           // disjointness from the LOG (no data read): the SORTED-ERA files'
           // [min, max] ranges must not overlap pairwise (the pre-sort
@@ -2548,8 +2312,6 @@ object Advanced extends QueryPack {
               sum(col("cents")).cast("long").as("sum_cents"))
             .withColumn("files_disjoint", lit(disjoint))
             .select(col("files_disjoint"), col("n"), col("sum_cents")))
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT TRUE AS files_disjoint,
@@ -2576,10 +2338,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q327_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q327") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base, keyCol = Some("k"), constraints = Map("k_nonneg" -> "k >= 0"))
           t.deleteWhere(col("k") % 97 === 0) // ~1% sparse → deletion vectors
           t.renameColumn("cents", "price_cents") // → column-mapping
@@ -2604,7 +2364,7 @@ object Advanced extends QueryPack {
             mapper.writeValueAsString(node).getBytes("UTF-8"))
           val gateLoud =
             try {
-              graft.tables.GraftTable.at(s, root.getAbsolutePath)
+              graft.tables.GraftTable.at(s, root)
                 .snapshot().count()
               false
             } catch {
@@ -2615,8 +2375,6 @@ object Advanced extends QueryPack {
           Seq((gateLoud, nRows, sumCents, rf.mkString(","), wf.mkString(",")))
             .toDF("gate_loud", "n", "sum_cents",
               "reader_features", "writer_features")
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT TRUE AS gate_loud,
@@ -2642,21 +2400,14 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderdate").as("ts"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q328_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q328") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.orderBy(col("k")).limit(1), keyCol = Some("k"))
           t.setSortOrder(Seq("ts"))
           // shuffled multi-task ingest; keep the range shuffle's partitions
           // so the time bands land as SEPARATE files at oracle scale
-          val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-          val prev = s.conf.getOption(coalesceKey)
-          s.conf.set(coalesceKey, "false")
-          try t.append(base.orderBy(md5(col("k").cast("string"))).repartition(8))
-          finally prev match {
-            case Some(v) => s.conf.set(coalesceKey, v)
-            case None => s.conf.unset(coalesceKey)
+          withConf(s, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+            t.append(base.orderBy(md5(col("k").cast("string"))).repartition(8))
           }
           val total = t.fileRanges("ts").size.toLong
           require(total >= 3, s"time-sorted ingest landed $total file(s); " +
@@ -2679,8 +2430,6 @@ object Advanced extends QueryPack {
           import s.implicits._
           Seq((pruned, agg.getLong(0), agg.getLong(1)))
             .toDF("time_pruned", "n", "sum_cents")
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH dup AS (
@@ -2708,10 +2457,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "customer")
           .select(col("c_custkey").as("k"),
             expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("cents"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q329_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q329") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base, keyCol = Some("k"))
           t.createTag("training-run")
           // the table moves on: balances re-derived, low accounts dropped
@@ -2730,8 +2477,6 @@ object Advanced extends QueryPack {
             current.getLong(0), current.getLong(1)))
             .toDF("tag_protected", "freed_after_drop",
               "n_tagged", "sum_tagged", "n_current", "sum_current")
-        } finally {
-          rmTree(root)
         }
       },
       Some("""WITH base AS (
@@ -2762,10 +2507,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "lineitem")
           .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
             expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q330_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s, root.getAbsolutePath,
+        withScratchRoot(s, "table_q330") { root =>
+          val t = graft.tables.GraftTable.create(s, root,
             base.where(col("k") % 3 =!= 0).repartition(4), keyCol = Some("k"))
           t.optimize(Seq("k"), targetBytes = 256 << 10)
           val gen1 = t.fileRanges("k").map(_._1).toSet
@@ -2781,8 +2524,6 @@ object Advanced extends QueryPack {
           import s.implicits._
           Seq((priorGenUntouched, noopWhenClean, agg.getLong(0), agg.getLong(1)))
             .toDF("prior_gen_untouched", "noop_when_clean", "n", "sum_cents")
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT TRUE AS prior_gen_untouched, TRUE AS noop_when_clean,
@@ -2806,12 +2547,8 @@ object Advanced extends QueryPack {
         val base = Tables(s, dir, "customer")
           .select(col("c_custkey").as("k"), col("c_nationkey").as("nat"),
             col("c_mktsegment").as("seg"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q331_${java.util.UUID.randomUUID()}")
-        try {
-          val t = graft.tables.GraftTable.create(s,
-            new java.io.File(root, "t").getAbsolutePath,
-            base, keyCol = Some("k"))
+        withScratchRoot(s, "table_q331") { root =>
+          val t = graft.tables.GraftTable.create(s, s"$root/t", base, keyCol = Some("k"))
           val ndv = t.analyze(Seq("nat", "seg"))
           val statsSurfaced = t.columnNdv == ndv && ndv.size == 2
           // under CBO the CATALOG relation's optimized stats must carry
@@ -2820,27 +2557,15 @@ object Advanced extends QueryPack {
           // through a throwaway catalog over the table's parent dir). The
           // session keeps a catalog it once loaded under its name, root
           // included, so each run registers a name of its own.
-          val cat = s"q331cat_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-          val cboKey = "spark.sql.cbo.enabled"
-          val prevCbo = s.conf.getOption(cboKey)
-          s.conf.set(cboKey, "true")
-          s.conf.set(s"spark.sql.catalog.$cat", "graft.tables.GraftCatalog")
-          s.conf.set(s"spark.sql.catalog.$cat.root", root.getAbsolutePath)
-          val statsInPlan =
-            try {
+          val statsInPlan = withConf(s, "spark.sql.cbo.enabled" -> "true") {
+            withCatalog(s, "q331", root) { cat =>
               val st = s.table(s"$cat.t").queryExecution.optimizedPlan.stats
               st.rowCount.isDefined && st.attributeStats.exists {
                 case (a, cs) =>
                   a.name == "nat" && cs.distinctCount.contains(BigInt(ndv("nat")))
               }
-            } finally {
-              prevCbo match {
-                case Some(v) => s.conf.set(cboKey, v)
-                case None => s.conf.unset(cboKey)
-              }
-              s.conf.unset(s"spark.sql.catalog.$cat")
-              s.conf.unset(s"spark.sql.catalog.$cat.root")
             }
+          }
           val exact = t.snapshot().agg(
             count_distinct(col("nat")), count_distinct(col("seg"))).head()
           val (exNat, exSeg) = (exact.getLong(0), exact.getLong(1))
@@ -2853,8 +2578,6 @@ object Advanced extends QueryPack {
           Seq((statsSurfaced, statsInPlan, ndvWithinTol, exNat, exSeg))
             .toDF("stats_surfaced", "stats_in_plan", "ndv_within_tol",
               "n_nation_exact", "n_segment_exact")
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT TRUE AS stats_surfaced, TRUE AS stats_in_plan,
@@ -2881,19 +2604,13 @@ object Advanced extends QueryPack {
         val l = Tables(s, dir, "lineitem").select(col("l_orderkey"),
           expr("CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)")
             .as("cents"))
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_table_q332_${java.util.UUID.randomUUID()}")
-        try {
-          val to = graft.tables.GraftTable.create(s,
-            new java.io.File(root, "o").getAbsolutePath, o,
+        withScratchRoot(s, "table_q332") { root =>
+          val to = graft.tables.GraftTable.create(s, s"$root/o", o,
             partitionBy = Seq("bucket(8,o_orderkey)"))
-          val tl = graft.tables.GraftTable.create(s,
-            new java.io.File(root, "l").getAbsolutePath, l,
+          val tl = graft.tables.GraftTable.create(s, s"$root/l", l,
             partitionBy = Seq("bucket(8,l_orderkey)"))
-          val bKey = "spark.sql.autoBroadcastJoinThreshold"
-          val prev = s.conf.getOption(bKey)
-          s.conf.set(bKey, "-1") // force SMJ: broadcast would mask the claim
-          try {
+          // force SMJ: broadcast would mask the claim
+          withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
             val j = tl.snapshot()
               .join(to.snapshot(), col("l_orderkey") === col("o_orderkey"))
               .groupBy(col("o_orderpriority"))
@@ -2912,12 +2629,7 @@ object Advanced extends QueryPack {
               .sortBy(_._1)
               .toDF("o_orderpriority", "join_unshuffled", "scan_log_backed",
                 "n", "revenue_cents")
-          } finally prev match {
-            case Some(v) => s.conf.set(bKey, v)
-            case None => s.conf.unset(bKey)
           }
-        } finally {
-          rmTree(root)
         }
       },
       Some("""SELECT o.o_orderpriority, TRUE AS join_unshuffled,
@@ -2955,17 +2667,15 @@ object Advanced extends QueryPack {
         // planning).
         val n = Tables(s, dir, "orders").count() * 100
         val files = 32
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_probe_q333_${java.util.UUID.randomUUID()}")
-        try {
-          s.range(0, n, 1, files).write.parquet(root.getAbsolutePath)
+        withScratchRoot(s, "probe_q333") { root =>
+          s.range(0, n, 1, files).write.parquet(root)
           val h = (1 to 6).foldLeft(col("id").cast("string")) { (c, _) => md5(c) }
           def hex6(off: Int) =
             conv(substring(h, off, 6), 16, 10).cast("long")
-          materializeSmall(s.read.parquet(root.getAbsolutePath)
+          materializeSmall(s.read.parquet(root)
             .agg(count(lit(1)).as("n_rows"),
               sum(hex6(1)).as("sum_hi"), sum(hex6(27)).as("sum_lo")))
-        } finally rmTree(root)
+        }
       },
       Some {
         def hex6(off: Int): String =

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryPack, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -601,8 +601,6 @@ object Events extends QueryPack {
     GraftQuery(
       "q195_dwell_percentiles",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id", "event_type").orderBy("us", "event_id")
         Tables(s, dir, "events")
           .select(col("user_id"), col("event_type"),
             expr("ts div 1000").as("us"), col("event_id"))

@@ -82,13 +82,9 @@ object Multimodal extends QueryPack {
     // pinned in MediaPipelineSpec and the PNG bytes are authored in-query.
     GraftQuery(
       "q145_binaryfile_ingest",
-      (s, dir) => {
-        import org.apache.hadoop.fs.Path
-        val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_bin_${java.util.UUID.randomUUID()}")
-        val root = rootFile.getAbsolutePath
-        new java.io.File(root).mkdirs()
-        try {
+      (s, _) => {
+        withScratchRoot(s, "bin") { root =>
+          new java.io.File(root).mkdirs()
           // author deterministic PNG fixtures: sizes derived from index
           (1 to 6).foreach { i =>
             val w = 8 * i
@@ -120,9 +116,6 @@ object Multimodal extends QueryPack {
             }
             .toDF("name", "length_matches_content", "width", "height", "channels")
           materializeSmall(decoded.orderBy("name"))
-        } finally {
-          val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
-          fs.delete(new Path(root), true)
         }
       },
       // the fixture is authored by the query itself with analytically

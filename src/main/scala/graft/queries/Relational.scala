@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{GraftQuery, QueryPack, Tables}
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 

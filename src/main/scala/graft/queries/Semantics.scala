@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryPack, Tables}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -37,10 +36,7 @@ object Semantics extends QueryPack {
       "q140_schema_evolution",
       (s, dir) => {
         val orders = Tables(s, dir, "orders")
-        val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_evo_${java.util.UUID.randomUUID()}")
-        val root = rootFile.getAbsolutePath
-        try {
+        withScratchRoot(s, "evo") { root =>
           orders.where(col("o_orderkey") % 2 === 0)
             .select(col("o_orderkey"), col("o_totalprice"))
             .write.parquet(s"$root/batch=1")
@@ -52,9 +48,6 @@ object Semantics extends QueryPack {
             .groupBy(coalesce(col("o_orderstatus"), lit("<pre-evolution>")).as("status"))
             .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total"))
             .orderBy("status"))
-        } finally {
-          val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
-          fs.delete(new Path(root), true)
         }
       },
       Some("""WITH m AS (

@@ -34,7 +34,6 @@ object Sketches extends QueryPack {
     GraftQuery(
       "q130_quantile_sketch",
       (s, dir) => {
-        import s.implicits._
         val qs = Seq((25, 100), (50, 100), (75, 100), (90, 100))
         val sketch = udaf(QuantileSketchAgg(2048, qs))
         Tables(s, dir, "customer")

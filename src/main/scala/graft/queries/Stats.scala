@@ -1,9 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryPack, Tables}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Round-7 surface: statistical profiling and principled sampling — the
   * pairwise correlation matrix (feature redundancy screening before a

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, QueryPack, Tables}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -38,12 +37,7 @@ object Storage extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .where(col("o_orderkey") % 2 === 0)
-        // per-invocation directory: concurrent drivers (verify + bench)
-        // must not overwrite each other's files mid-read
-        val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_orc_${java.util.UUID.randomUUID()}")
-        val root = rootFile.getAbsolutePath
-        try {
+        withScratchRoot(s, "orc") { root =>
           base.coalesce(4).write.orc(root)
           val back = s.read
             .schema("o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE")
@@ -54,9 +48,6 @@ object Storage extends QueryPack {
             .groupBy("o_orderstatus")
             .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total"))
             .orderBy("o_orderstatus"))
-        } finally {
-          val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
-          fs.delete(new Path(root), true)
         }
       },
       Some("""SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
@@ -74,10 +65,7 @@ object Storage extends QueryPack {
       (s, dir) => {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-        val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_part_${java.util.UUID.randomUUID()}")
-        val root = rootFile.getAbsolutePath
-        try {
+        withScratchRoot(s, "part") { root =>
           base.write.partitionBy("o_orderpriority").parquet(root)
           val back = s.read.parquet(root)
             .where(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
@@ -87,9 +75,6 @@ object Storage extends QueryPack {
               dsum2(col("o_totalprice")).as("total"),
               max(col("o_orderkey")).as("max_key"))
             .orderBy("o_orderpriority"))
-        } finally {
-          val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
-          fs.delete(new Path(root), true)
         }
       },
       Some("""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
@@ -145,16 +130,13 @@ object Storage extends QueryPack {
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-        val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_dpo_${java.util.UUID.randomUUID()}")
-        val root = rootFile.getAbsolutePath
-        val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        try {
+        withScratchRoot(s, "dpo") { root =>
           base.write.partitionBy("o_orderpriority").parquet(root)
-          s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          base.filter(col("o_orderpriority") === "1-URGENT")
-            .withColumn("price_c", col("price_c") * 2)
-            .write.mode("overwrite").partitionBy("o_orderpriority").parquet(root)
+          withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+            base.filter(col("o_orderpriority") === "1-URGENT")
+              .withColumn("price_c", col("price_c") * 2)
+              .write.mode("overwrite").partitionBy("o_orderpriority").parquet(root)
+          }
           val back = s.read
             .schema("o_orderkey BIGINT, price_c BIGINT, o_orderpriority STRING")
             .parquet(root)
@@ -163,13 +145,6 @@ object Storage extends QueryPack {
             .agg(count(lit(1)).as("n_orders"),
               (sum(col("price_c")).cast("double") / 100.0).as("total"))
             .orderBy("o_orderpriority"))
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-          val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
-          fs.delete(new Path(root), true)
         }
       },
       Some("""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -188,10 +163,7 @@ object Storage extends QueryPack {
     GraftQuery(
       "q173_dynamic_partition_pruning",
       (s, dir) => {
-        val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_dpp_${java.util.UUID.randomUUID()}")
-        val root = rootFile.getAbsolutePath
-        try {
+        withScratchRoot(s, "dpp") { root =>
           Tables(s, dir, "orders")
             .select(col("o_orderkey"), col("o_custkey"),
               expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"),
@@ -209,9 +181,6 @@ object Storage extends QueryPack {
             .agg(count(lit(1)).as("n_orders"),
               (sum(col("price_c")).cast("double") / 100.0).as("total"))
             .orderBy("nationkey"))
-        } finally {
-          val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
-          fs.delete(new Path(root), true)
         }
       },
       Some("""SELECT CAST(c_nationkey AS BIGINT) AS nationkey,

@@ -3,7 +3,6 @@ package graft.queries
 import graft.{GraftQuery, QueryPack, Tables}
 import graft.functions.expressions.{CosineSimilarity, InterleaveBits}
 import graft.operators.{BpeTrainer, ConnectedComponents, KMeans}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType

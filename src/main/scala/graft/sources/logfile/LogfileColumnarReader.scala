@@ -49,11 +49,14 @@ final class LogfileColumnarReader(
     while (n < batchSize && inner.next()) {
       var c = 0
       while (c < kinds.length) {
-        kinds(c) match {
+        // typed Unit: `putByteArray` returns an Int, and a match mixing it
+        // with `putLong`'s Unit is typed Any, which boxes an Integer per
+        // call; the last arm is total (kind 2), so no MatchError boxes either
+        (kinds(c) match {
           case 0 => vectors(c).putByteArray(n, fileBytes, 0, fileBytes.length)
           case 1 => vectors(c).putLong(n, inner.currentOffset)
-          case 2 => vectors(c).putByteArray(n, inner.recordBuffer, 0, inner.recordLength)
-        }
+          case _ => vectors(c).putByteArray(n, inner.recordBuffer, 0, inner.recordLength)
+        }): Unit
         c += 1
       }
       n += 1

@@ -1,6 +1,6 @@
 package graft.sources.logfile
 
-import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStreamWriter}
+import java.io.{BufferedOutputStream, File, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
 

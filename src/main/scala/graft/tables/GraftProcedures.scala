@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Maintenance procedures for the SQL face — the Spark 4 `ProcedureCatalog`
   * surface (`CALL graft.system.<proc>(...)`), the same operational story

@@ -54,7 +54,7 @@ final class GraftTable private (
     val location: String,
     spark: SparkSession,
     val keyCol: Option[String],
-    val partitionBy: Seq[String] = Nil) {
+    val partitionBy: Seq[String]) {
 
   import GraftTable._
 
@@ -1629,9 +1629,11 @@ final class GraftTable private (
 
   /** Auto-retry guards: rows already written were validated under the
     * constraints at write time — a retry after a concurrent constraint
-    * change must fail loud, not commit unvalidated data.
+    * change must fail loud, not commit unvalidated data. The one-argument
+    * form checks against the table's current constraints; GraftTableSpec
+    * pins the guard through it.
     */
-  private def requireConstraintsUnchanged(validatedUnder: Map[String, String]): Unit =
+  private[tables] def requireConstraintsUnchanged(validatedUnder: Map[String, String]): Unit =
     requireSameConstraints(validatedUnder, constraints)
 
   private def requireSameConstraints(validatedUnder: Map[String, String],
@@ -3338,7 +3340,7 @@ final class GraftTable private (
 
   private def footerStats(p: Path, keyCol: Option[String],
       tableSchema: StructType,
-      priorityCols: Set[String] = Set.empty): (Long, Option[KeyStats], Map[String, KeyStats]) = {
+      priorityCols: Set[String]): (Long, Option[KeyStats], Map[String, KeyStats]) = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
@@ -3404,7 +3406,7 @@ final class GraftTable private (
     */
   private def skippingStats(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
-      priorityCols: Set[String] = Set.empty): Map[String, KeyStats] = {
+      priorityCols: Set[String]): Map[String, KeyStats] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     // (kind, scale): logged stat = footer long value × scale. TIMESTAMP

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import GraftTable.{AddFile, KeyStats}
+import GraftTable.AddFile
 
 /** One commit's table metadata — the `{"meta":…}` line of a log file. Every
   * commit carries the full definition in force at its version (schema,

@@ -14,9 +14,22 @@ class QueryPackSpec extends SparkTestBase {
   test("every declared query executes and returns rows at sf0.001") {
     val qs = SparkEntry.queries
     assert(qs.size >= 48)
-    qs.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"$name returned 0 rows")
+    // run against a fresh java.io.tmpdir, so any scratch root a query leaves
+    // behind shows up there (the logfile fixture is shared, not scratch)
+    val tmp = java.nio.file.Files.createTempDirectory("querypack-tmpdir").toFile
+    val prevTmp = sys.props("java.io.tmpdir")
+    sys.props("java.io.tmpdir") = tmp.getAbsolutePath
+    try {
+      qs.foreach { case (name, fn) =>
+        val n = fn(spark, sf).count()
+        assert(n > 0, s"$name returned 0 rows")
+      }
+      val left = Option(tmp.list()).toSeq.flatten
+        .filter(f => f.startsWith("graft_") && f != "graft_logfile_fixture")
+      assert(left.isEmpty, s"scratch roots left behind: ${left.sorted.mkString(", ")}")
+    } finally {
+      sys.props("java.io.tmpdir") = prevTmp
+      org.apache.hadoop.fs.FileUtil.fullyDelete(tmp)
     }
   }
 
