@@ -369,7 +369,7 @@ private[tables] object GraftLog {
 /** One consistent read of a table: a version, its commit metadata and —
   * replayed on first use — its active files and committed txn ids, all
   * from a single log listing. Each public table statement takes one
-  * snapshot (the OCC retry loops take a fresh one per attempt).
+  * snapshot (the OCC retry loop takes a fresh one per attempt).
   */
 private[tables] final class Snapshot(val version: Long, val meta: TableMeta,
     log: GraftLog, val listing: GraftLog.Listing) {

@@ -34,9 +34,13 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType, 
   *     destination exists, so readers either see version N or N+1, never a
   *     torn or partially-written state (create-then-write would expose the
   *     file before its bytes land). Writers race on the next version
-  *     number; the rename loser gets
-  *     [[GraftTable.ConcurrentCommitException]] and must retry on a fresh
-  *     snapshot (optimistic concurrency). On S3-style stores rename is not
+  *     number (optimistic concurrency). Appends, merges, DML,
+  *     maintenance and the streaming sink retry a lost race through ONE
+  *     loop, `commitWithConflictCheck`: the loser re-commits its
+  *     already-written files at the new head when every winner is provably
+  *     disjoint, and fails loud otherwise. Any other commit (overwrite,
+  *     DDL) loses with [[GraftTable.ConcurrentCommitException]], as does
+  *     a loop after 50 lost races. On S3-style stores rename is not
   *     atomic and this needs a coordination layer, same as every
   *     log-structured table format.
   *   - Durability: parquet data files are fully written and moved into
@@ -88,7 +92,7 @@ final class GraftTable private (
   /** The table's commit log ([[GraftLog]]). Every public statement lists
     * it ONCE: it takes a [[Snapshot]] — version, metadata and (replayed on
     * first use) active files — and derives everything else from it; the
-    * OCC retry loops take a fresh snapshot per attempt.
+    * OCC retry loop takes a fresh snapshot per attempt.
     */
   private[tables] val log = new GraftLog(new Path(location), () => fs)
 
@@ -1382,136 +1386,115 @@ final class GraftTable private (
     * never a silent cast. The evolved schema is versioned with the commit,
     * so time travel keeps each version's own schema.
     */
-  def append(df: DataFrame, mergeSchema: Boolean = false): Long = {
-    val s = latest()
-    val cur = s.meta.schema
-    val (aligned, newSchema) = alignEvolving(df, cur, mergeSchema)
+  def append(df: DataFrame, mergeSchema: Boolean = false): Long =
+    appendTo(latest(), df, mergeSchema, None)
+
+  /** The append both [[append]] and [[appendIfAbsent]] run: align (and,
+    * with `mergeSchema`, evolve) against `s`, probe UNIQUE KEY against `s`,
+    * write once, commit through [[commitWithConflictCheck]]. A blind append
+    * reads no table rows, so no winner's adds can invalidate its match
+    * decisions (`addsCouldMatch = never`).
+    */
+  private def appendTo(s: Snapshot, df: DataFrame, mergeSchema: Boolean,
+      txn: Option[String]): Long = {
+    val (aligned, newSchema) = alignEvolving(df, s.meta.schema, mergeSchema)
     requireUniqueKeys(s, aligned, Set.empty, "append")
-    val adds = writeData(aligned, s.meta, idStrict = true)
-    // OPTIMISTIC-CONCURRENCY retry (the Delta ConflictChecker design for
-    // BLIND appends): an append reads nothing, so losing the version race
-    // to another writer is not a logical conflict — the already-written
-    // files are re-committed at the new head (data is written ONCE; only
-    // the O(1) log write retries). What CAN invalidate the written files is
-    // a concurrent change to what they were validated or laid out under:
-    // constraints (rows unchecked against the new one), schema/colmap (the
-    // files carry the old physical layout), partitioning or the merge key
-    // (commit's stale-handle guards) — each fails loud instead of retrying.
-    // At 100 TB this is what lets a thousand ingest writers share a table
-    // without serializing on anything but the log-rename itself.
-    var base = s
-    var attempt = 0
-    while (true) {
-      try return commit(base, "append", adds, Nil, edit = _.copy(schemaJson = newSchema.json))
-      catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt >= 50) throw e
-          val head = latest()
-          requireSameConstraints(s.meta.constraints, head.meta.constraints)
-          if (!head.meta.sameLayout(s.meta))
-            throw new IllegalStateException(
-              "append lost the race to a concurrent schema change; the " +
-                "written files were laid out under the previous schema — " +
-                "re-run the append against the new definition")
-          // identity values were assigned from the hwm at write time; a
-          // winner that advanced it may have claimed the same values
-          if (GraftTable.identityOf(cur).nonEmpty && head.meta.idHwm != s.meta.idHwm)
-            throw new IllegalStateException(
-              "append lost the race to a concurrent identity-assigning " +
-                "write; the assigned values could collide — re-run the append")
-          // the uniqueness probe ran against the PREVIOUS head: a winner
-          // that landed NEW ROW CONTENT may have inserted the same keys —
-          // re-validate by re-running. Layout-only winners (compact/
-          // optimize, dataChange=false) and empty commits cannot introduce
-          // keys, so routine background maintenance rebases cleanly.
-          if (uniqueKeyIn(head.meta.schema)) {
-            val rowBearing = base.commitsUntil(head).exists { case (_, w) =>
-              w.meta.dataChange && (w.adds.exists(_.rows > 0) || w.removes.nonEmpty)
-            }
-            if (rowBearing) throw new IllegalStateException(
-              "append lost the race on a UNIQUE KEY table to a concurrent " +
-                "row-changing commit; re-run the append so uniqueness " +
-                "re-validates against the new head")
-          }
-          base = head
-      }
-    }
-    -1L // unreachable
+    commitWithConflictCheck(s, "append", writeData(aligned, s.meta, idStrict = true),
+      Nil, _ => false, _.copy(schemaJson = newSchema.json), txn, keysProbed = true)
   }
 
-  /** OCC retry for operations that READ the table before writing (merge /
-    * delete / update / compact / optimize) — the published ConflictChecker
-    * design at the WriteSerializable level: losing the log-rename race is
-    * not by itself a logical conflict. Every winner commit in
-    * `(expected, head]` is examined against this operation's write set and
-    * match predicate, and the already-written output is re-committed at the
-    * new head (data is written ONCE; only the O(1) log write retries) when
-    * the winner is provably disjoint:
-    *
-    *   - a winner that removed OR re-added any file this operation rewrites
-    *     / DV's / drops conflicts ALWAYS — the file state this op's output
-    *     replaces is gone, and a same-file DV race would clobber the other
-    *     writer's vector;
-    *   - a winner that ADDED data files `addsCouldMatch` cannot refute
-    *     conflicts — for a keyed merge that is any file whose key range
-    *     intersects the source's (the matched / not-matched decisions,
-    *     including key-uniqueness inserts, were taken without those rows);
-    *   - predicate DML and layout maintenance pass `addsCouldMatch = never`:
-    *     a concurrent blind append rebases cleanly, and the final state
-    *     equals the this-op-first serial order — the WriteSerializable
-    *     contract (log order is not the serialization order for blind
-    *     appends, exactly as published);
-    *   - layout-only winner commits (compact/optimize, `dataChange=false`)
-    *     are checked for file overlap only — table-wide row content is
-    *     unchanged, so a refuted file stays refuted;
-    *   - concurrent CHECK-constraint changes fail LOUD when the op wrote
-    *     NEW row content (`checkConstraints` — the rows were validated
-    *     under the old set); layout-only rewrites skip the guard (their
-    *     rows were already validated by `addConstraint`'s full-table scan);
-    *   - concurrent schema / column-mapping changes fail LOUD when the
-    *     output encodes the schema (`checkSchema`); layout-only rewrites
-    *     tolerate ADD COLUMN (their files null-fill by name exactly like
-    *     the inputs did) — and a REPLACE/RESTORE winner is caught by file
-    *     overlap, a partitioning or merge-key change by `commit`'s
-    *     stale-handle guards.
-    *
+  /** The ONE optimistic-concurrency retry loop: every table write that
+    * retries a lost log-rename race (append, appendIfAbsent, the streaming
+    * sink's [[commitFiles]], merge, mergeInto, delete, update, compact,
+    * optimize) commits here. It follows the published ConflictChecker
+    * design at the WriteSerializable level: losing the race is not by
+    * itself a logical conflict. Each winner commit in `(base, head]` is
+    * examined, and the already-written output is re-committed at the new
+    * head (data is written ONCE; only the O(1) log write retries) unless a
+    * guard fails.
     * At 100 TB this is what lets streaming ingest, GDPR deletes and
     * background compaction share one table without serializing whole
     * operations on each other — only true logical conflicts surface.
+    *
+    * What each guard needs is read off the commit itself, never passed in:
+    * a commit whose `edit` clears `dataChange` is LAYOUT-ONLY (compact,
+    * optimize: the rows are unchanged table-wide), and the adds ASSIGN
+    * identity values exactly when they advance the high-water mark
+    * ([[advanceIdHwm]]; rewrites carry values ≤ the mark). The guards, in
+    * the order they run:
+    *
+    *   - txn: when the read snapshot, or the head after a lost race,
+    *     already holds `txn`, the loop returns that version — a replayed
+    *     or concurrently landed transaction commits nothing;
+    *   - constraints (every commit but a layout-only one): a changed CHECK
+    *     set fails loud — the rows were validated under the old one. A
+    *     layout-only rewrite skips it: `addConstraint`'s full-table scan
+    *     already validated those very rows;
+    *   - schema (every commit but a layout-only one): a changed schema or
+    *     column mapping fails loud — the files were written under the old
+    *     one. A layout-only rewrite tolerates ADD COLUMN (its files
+    *     null-fill by name exactly like its inputs did);
+    *   - identity (adds that assign identity values): a winner that moved
+    *     the high-water mark may have claimed the same values — loud;
+    *   - file overlap (always): a winner that removed OR re-added a file in
+    *     `removes` conflicts — the file state this output replaces is gone,
+    *     and a same-file DV race would clobber the other writer's vector;
+    *   - match predicate (data-changing winners): added files with rows
+    *     that `addsCouldMatch` cannot refute conflict — for a keyed merge
+    *     any file whose key range meets the source's. Predicate DML, blind
+    *     appends and layout maintenance pass `never`: a concurrent blind
+    *     append rebases, and the final state equals the this-op-first
+    *     serial order (log order is not the serialization order for blind
+    *     appends, exactly as published);
+    *   - UNIQUE KEY (`keysProbed`: the output's keys were checked by
+    *     [[requireUniqueKeys]] against `read` — append and mergeInto): on a
+    *     UNIQUE KEY table any data-changing winner that added rows or
+    *     removed files fails loud, because the probe never saw its keys.
+    *     Layout-only winners and empty commits cannot introduce keys, so
+    *     routine maintenance still rebases. `merge` needs no flag: its
+    *     key-range `addsCouldMatch` covers every key it inserts.
+    *
+    * A partitioning or merge-key change is caught by [[commit]]'s
+    * stale-handle guards, a REPLACE/RESTORE winner by file overlap. After
+    * 50 lost races the last [[GraftTable.ConcurrentCommitException]]
+    * propagates.
     */
   private def commitWithConflictCheck(read: Snapshot, op: String,
       adds: Seq[AddFile], removes: Seq[String],
       addsCouldMatch: AddFile => Boolean,
       edit: TableMeta => TableMeta = identity,
-      checkConstraints: Boolean = true,
-      checkSchema: Boolean = true,
-      assignsIdentity: Boolean = false): Long = {
+      txn: Option[String] = None,
+      keysProbed: Boolean = false): Long = {
+    if (txn.exists(read.txns.contains)) return read.version
+    val planned = edit(read.meta.copy(dataChange = true))
+    val layoutOnly = !planned.dataChange
+    val advancesHwm =
+      advanceIdHwm(read.meta.idHwm, planned.schema, planned.colmap, adds) != read.meta.idHwm
+    val mine = removes.toSet
     var base = read
     var attempt = 0
     while (true) {
-      try return commit(base, op, adds, removes, edit = edit)
+      try return commit(base, op, adds, removes, txn, edit)
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
           if (attempt >= 50) throw e
           val head = latest()
-          if (checkConstraints)
+          if (txn.exists(head.txns.contains)) return head.version
+          if (!layoutOnly) {
             requireSameConstraints(read.meta.constraints, head.meta.constraints)
-          // an op that ASSIGNED identity values did so from the read
-          // version's hwm — a winner advancing it may have claimed the same
-          // values (rewrites only carry existing values and pass false here)
-          if (assignsIdentity && head.meta.idHwm != read.meta.idHwm)
+            if (!head.meta.sameLayout(read.meta))
+              throw new IllegalStateException(
+                s"$op lost the race to a concurrent schema change; its files " +
+                  "were written under the previous schema — re-run against " +
+                  "the new definition")
+          }
+          if (advancesHwm && head.meta.idHwm != read.meta.idHwm)
             throw new IllegalStateException(
               s"$op lost the race to a concurrent identity-assigning " +
                 "write; the assigned values could collide — re-run")
-          if (checkSchema && !head.meta.sameLayout(read.meta))
-            throw new IllegalStateException(
-              s"$op lost the race to a concurrent schema change; its output " +
-                "was computed under the previous schema — re-run against " +
-                "the new definition")
-          val mine = removes.toSet
-          base.commitsUntil(head).foreach { case (w, GraftLog.Commit(meta, wAdds, wRemoves)) =>
+          val winners = base.commitsUntil(head)
+          winners.foreach { case (w, GraftLog.Commit(meta, wAdds, wRemoves)) =>
             val wOp = meta.op
             val overlap =
               (wRemoves.filter(mine) ++ wAdds.map(_.path).filter(mine)).distinct
@@ -1529,6 +1512,12 @@ final class GraftTable private (
                   "re-run on a fresh snapshot")
             }
           }
+          if (keysProbed && uniqueKeyIn(head.meta.schema) && winners.exists { case (_, w) =>
+                w.meta.dataChange && (w.adds.exists(_.rows > 0) || w.removes.nonEmpty) })
+            throw new IllegalStateException(
+              s"$op lost the race on a UNIQUE KEY table to a concurrent " +
+                s"row-changing commit; re-run the $op so uniqueness " +
+                "re-validates against the new head")
           base = head
       }
     }
@@ -1599,43 +1588,22 @@ final class GraftTable private (
     * `"<queryId>-batch-<batchId>"` from `foreachBatch`) is recorded in the
     * commit metadata; re-delivering an already-committed transaction is a
     * no-op, so a foreachBatch replay after a checkpoint restart writes each
-    * micro-batch exactly once. A concurrent retry that loses the version
-    * race observes the winner's txn on re-check and backs off — callers
-    * never see [[GraftTable.ConcurrentCommitException]] for their OWN txn.
+    * micro-batch exactly once. A race lost to an unrelated blind append
+    * rebases and lands once; a race lost to a writer of the SAME txn
+    * returns that writer's version — callers never see
+    * [[GraftTable.ConcurrentCommitException]] for their OWN txn.
     */
   def appendIfAbsent(txnId: String, df: DataFrame): Long = {
     require(txnId.nonEmpty, "txnId must be non-empty")
     val s = latest()
     if (s.txns.contains(txnId)) s.version
-    else {
-      val aligned = alignSchema(df, s.meta.schema)
-      requireUniqueKeys(s, aligned, Set.empty, "append")
-      try commit(s, "append", writeData(aligned, s.meta, idStrict = true), Nil, Some(txnId))
-      catch {
-        case e: ConcurrentCommitException =>
-          val head = latest()
-          if (head.txns.contains(txnId)) head.version
-          else {
-            // the data was validated against s's constraints; if the
-            // concurrent commit CHANGED them, a blind caller retry would
-            // commit rows the new constraint never saw — fail loud with
-            // the reason instead of the bare version race
-            requireSameConstraints(s.meta.constraints, head.meta.constraints)
-            throw e
-          }
-      }
-    }
+    else appendTo(s, df, mergeSchema = false, Some(txnId))
   }
 
-  /** Auto-retry guards: rows already written were validated under the
-    * constraints at write time — a retry after a concurrent constraint
-    * change must fail loud, not commit unvalidated data. The one-argument
-    * form checks against the table's current constraints; GraftTableSpec
-    * pins the guard through it.
+  /** Rows already written were validated under the constraints at write
+    * time — a retry after a concurrent constraint change must fail loud,
+    * not commit unvalidated data.
     */
-  private[tables] def requireConstraintsUnchanged(validatedUnder: Map[String, String]): Unit =
-    requireSameConstraints(validatedUnder, constraints)
-
   private def requireSameConstraints(validatedUnder: Map[String, String],
       now: Map[String, String]): Unit =
     if (now != validatedUnder) throw new IllegalStateException(
@@ -1645,33 +1613,15 @@ final class GraftTable private (
         "new constraints validate it")
 
   /** Commit already-written files under a transaction id — the streaming
-    * sink's epoch commit ([[GraftStreamingWrite]]): a replayed txn is a
-    * no-op, and a version race lost to an UNRELATED writer retries until
-    * this txn lands (bounded — a micro-batch commit must eventually land or
-    * fail loud, unlike `appendIfAbsent` whose caller owns the retry loop).
+    * sink's epoch commit ([[GraftStreamingWrite]]), through the same
+    * [[commitWithConflictCheck]] loop as every other write: a replayed txn
+    * is a no-op, a race lost to an unrelated writer rebases until the
+    * epoch lands, and a race lost to a constraint or schema change fails
+    * the epoch loud — the sink's own `checkColmap` rule.
     */
   private[tables] def commitFiles(op: String, adds: Seq[AddFile],
-      txnId: Option[String], maxAttempts: Int = 50): Long = {
-    var s = latest()
-    if (txnId.exists(s.txns.contains)) return s.version
-    // the files were validated (sink per-row checks) under the constraint
-    // set in force when the epoch started — a retry must not sail past a
-    // concurrent constraint change (the new constraint never saw the rows)
-    val validatedUnder = s.meta.constraints
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      requireSameConstraints(validatedUnder, s.meta.constraints)
-      try return commit(s, op, adds, Nil, txnId)
-      catch {
-        case e: ConcurrentCommitException =>
-          s = latest()
-          if (txnId.exists(s.txns.contains)) return s.version
-          if (attempt >= maxAttempts) throw e
-      }
-    }
-    -1L // unreachable
-  }
+      txnId: Option[String]): Long =
+    commitWithConflictCheck(latest(), op, adds, Nil, _ => false, txn = txnId)
 
   /** Replace the whole table contents (snapshot-atomic). */
   def overwrite(df: DataFrame): Long = {
@@ -1806,8 +1756,7 @@ final class GraftTable private (
       if (srcEmpty) _ => false
       else f => f.stats.forall(_.intersects(srcLo, srcHi))
     commitWithConflictCheck(s, "merge", writeData(newData, s.meta),
-      rewritten.map(_.path), couldMatch, _.copy(schemaJson = evolved.json),
-      assignsIdentity = GraftTable.identityOf(cur).nonEmpty)
+      rewritten.map(_.path), couldMatch, _.copy(schemaJson = evolved.json))
   }
 
   /** GENERALIZED MERGE — the full conditional-clause surface on top of the
@@ -1983,9 +1932,11 @@ final class GraftTable private (
         val couldMatch: AddFile => Boolean = f =>
           !bounds.isNullAt(0) &&
             f.stats.forall(_.intersects(bounds.get(0), bounds.get(1)))
+        // an insert clause may forge a key outside the source's bounds,
+        // which `couldMatch` cannot cover: under UNIQUE KEY the probe above
+        // vouched for it against `s` only, so the loop's key guard applies
         commitWithConflictCheck(s, "merge", writeData(newData, s.meta),
-          rewritten.map(_.path), couldMatch,
-          assignsIdentity = GraftTable.identityOf(schema).nonEmpty)
+          rewritten.map(_.path), couldMatch, keysProbed = true)
     }
   }
 
@@ -2237,12 +2188,10 @@ final class GraftTable private (
     // maintenance must not die to unrelated ingest: a concurrent blind
     // append rebases (the new small files just miss this compaction); only
     // a winner touching a compaction INPUT conflicts. Rows are unchanged
-    // table-wide, so neither the constraint nor the schema guard applies
-    // (a concurrent ADD CONSTRAINT validated these very rows; ADD COLUMN
-    // null-fills the rewrite exactly like its inputs).
+    // table-wide (`dataChange = false`), so neither the constraint nor the
+    // schema guard applies.
     commitWithConflictCheck(s, "compact", writeData(merged, s.meta, distribute = false),
-      small.map(_.path), _ => false, _.copy(dataChange = false),
-      checkConstraints = false, checkSchema = false)
+      small.map(_.path), _ => false, _.copy(dataChange = false))
   }
 
   /** OPTIMIZE: rewrite every active data file CLUSTERED on `clusterBy`, in
@@ -2383,8 +2332,7 @@ final class GraftTable private (
       writeData(clustered, s.meta, distribute = false)
         .map(_.copy(cb = Some(physSpec))),
       files.map(_.path),
-      _ => false, _.copy(dataChange = false),
-      checkConstraints = false, checkSchema = false)
+      _ => false, _.copy(dataChange = false))
   }
 
   /** Z-value from 8-bit RANKS: per dimension, ~255 order-statistic

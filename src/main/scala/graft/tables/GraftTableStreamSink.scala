@@ -32,8 +32,9 @@ import GraftTable.AddFile
   *     in-flight files safe);
   *   - the driver's epoch `commit` lands ONE log commit tagged
   *     `txn = <queryId>-epoch-<epochId>`, so a replayed epoch after a
-  *     checkpoint restart is a no-op and a version race against unrelated
-  *     writers retries until the epoch lands ([[GraftTable.commitFiles]]) —
+  *     checkpoint restart is a no-op, a version race against unrelated
+  *     writers rebases until the epoch lands, and one against a constraint
+  *     or schema change fails the epoch loud ([[GraftTable.commitFiles]]) —
   *     the `appendIfAbsent` exactly-once contract, natively in the sink;
   *   - `abort` deletes the files the failed epoch wrote.
   *

@@ -465,4 +465,90 @@ class GraftTableModelSpec extends SparkTestBase {
     val fin = t.snapshot().as[(Long, String)].collect().toSeq.sorted
     assert(folded == fin, "racing history's change feed does not fold")
   }
+
+  test("OCC chaos on a UNIQUE KEY table: winners inside the key range rebase or fail loud") {
+    val rnd = new Random(20260818L)
+    val loc = tmp()
+    val model = scala.collection.mutable.Map.empty[Long, String]
+    def df(rows: Iterable[(Long, String)]): DataFrame = rows.toSeq.toDF("k", "v")
+    def fresh(n: Int, avoid: Set[Long] = Set.empty): Seq[Long] =
+      Iterator.continually(rnd.nextInt(150).toLong)
+        .filterNot(k => model.contains(k) || avoid(k)).distinct.take(n).toSeq
+    fresh(8).foreach(k => model(k) = s"v$k")
+    val t = GraftTable.create(spark, loc, df(model), keyCol = Some("k"), uniqueKey = true)
+    val t2 = GraftTable.at(spark, loc)
+    // the winner appends either one of the op's OWN new keys (a certain
+    // collision) or a fresh key inside the op's key range / predicate band
+    def winner(own: Seq[Long], inside: Long => Boolean): Long = {
+      val free = (0L until 150L).filter(k => !model.contains(k) && !own.contains(k))
+      if (own.nonEmpty && rnd.nextBoolean()) rnd.shuffle(own).head
+      else rnd.shuffle(Option(free.filter(inside)).filter(_.nonEmpty).getOrElse(free)).head
+    }
+    var rebased = 0
+    var loud = 0
+    // the op serializes FIRST when it rebases (its effect applies to the
+    // pre-winner state); when it fails loud only the winner lands
+    def race(step: Int, name: String, w: Long)(op: => Unit)(effect: => Unit): Unit = {
+      t.onNextCommitAttempt = () => t2.append(df(Seq(w -> s"w$w")))
+      val ok =
+        try { op; true }
+        catch { case _: IllegalStateException | _: GraftTable.ConcurrentCommitException => false }
+      // an op that early-returned never reached commit: the winner never existed
+      val fired = t.onNextCommitAttempt == null
+      if (!fired) t.onNextCommitAttempt = null
+      assert(ok || fired, s"$step:$name failed without a race")
+      if (ok) effect
+      if (fired) {
+        model(w) = s"w$w"
+        if (ok) rebased += 1 else loud += 1
+      }
+      val got = t.snapshot().as[(Long, String)].collect().toSeq
+      assert(got.map(_._1).distinct.size == got.size,
+        s"after $step:$name (winner $w): UNIQUE KEY violated: ${got.map(_._1).sorted.mkString(",")}")
+      assert(got.toSet == model.toSet, s"after $step:$name (winner $w): ${got.toSet} != ${model.toSet}")
+    }
+    def range(ks: Seq[Long]): Long => Boolean = k => ks.nonEmpty && k >= ks.min && k <= ks.max
+    for ((opIdx, step) <- rnd.shuffle(Seq.tabulate(18)(_ % 6)).zipWithIndex) opIdx match {
+      case 0 =>
+        val ks = fresh(rnd.nextInt(3) + 1)
+        race(step, "append", winner(ks, range(ks)))(t.append(df(ks.map(k => k -> s"a$k")))) {
+          ks.foreach(k => model(k) = s"a$k")
+        }
+      case 1 => // replaces some keys, inserts others
+        val upd = rnd.shuffle(model.keys.toSeq).take(rnd.nextInt(3))
+        val ins = fresh(rnd.nextInt(2) + 1)
+        val src = (upd ++ ins).map(k => k -> s"m$k-$step")
+        race(step, "merge", winner(ins, range(upd ++ ins)))(t.merge(df(src))) {
+          src.foreach { case (k, v) => model(k) = v }
+        }
+      case 2 => // the one unmatched source key inserts under a FORGED key
+        val upd = rnd.shuffle(model.keys.toSeq).take(rnd.nextInt(3))
+        val srcNew = fresh(1).head
+        val forged = fresh(1, Set(srcNew)).head
+        val src = (upd :+ srcNew).map(k => k -> s"mi$k-$step")
+        race(step, "mergeInto", winner(Seq(forged), range(upd :+ srcNew))) {
+          t.mergeInto(df(src),
+            matched = Seq((None, Some(Map("v" -> col("__src_v"))))),
+            notMatched = Seq((None, Map("k" -> lit(forged), "v" -> col("__src_v")))))
+        } {
+          upd.foreach(k => model(k) = s"mi$k-$step")
+          model(forged) = s"mi$srcNew-$step"
+        }
+      case 3 =>
+        val lo = rnd.nextInt(150).toLong
+        race(step, "delete", winner(Nil, k => k >= lo && k <= lo + 40L)) {
+          t.deleteWhere(col("k").between(lo, lo + 40L))
+        } { model.filterInPlace((k, _) => !(k >= lo && k <= lo + 40L)) }
+      case 4 =>
+        val m = rnd.nextInt(4) + 2
+        race(step, "update", winner(Nil, _ % m == 0)) {
+          t.update(Map("v" -> concat(col("v"), lit(s"x$step"))), col("k") % m === 0L)
+        } { model.mapValuesInPlace((k, v) => if (k % m == 0) s"${v}x$step" else v) }
+      case 5 =>
+        race(step, "compact", winner(Nil, _ => true)) {
+          t.compact(smallFileBytes = 32L << 20, targetBytes = 64L << 20)
+        } {}
+    }
+    assert(rebased > 0 && loud > 0, s"rebased $rebased, failed loud $loud: a race outcome went unexercised")
+  }
 }

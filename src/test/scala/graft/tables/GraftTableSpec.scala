@@ -329,20 +329,14 @@ class GraftTableSpec extends SparkTestBase {
     val loc = tmp()
     val t1 = GraftTable.create(spark, loc, Seq((1L, "a")).toDF("k", "v"))
     val t2 = GraftTable.at(spark, loc)
-    t2.addConstraint("k_pos", "k > 0")
-    // t1's handle is NOT stale (constraints aren't identity), but its
-    // append raced nothing — next, force the race: pre-write via t1 with a
-    // conflicting commit in between is hard to time deterministically, so
-    // pin the guard directly at the commit layer instead
-    intercept[IllegalStateException] {
-      // simulate the retry path: the data was "validated" under NO
-      // constraints, and the table now has one
-      val m = classOf[GraftTable].getDeclaredMethod(
-        "requireConstraintsUnchanged", classOf[Map[String, String]])
-      m.setAccessible(true)
-      try m.invoke(t1, Map.empty[String, String])
-      catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+    // the constraint lands between t1's write and its log write: t1's rows
+    // were validated under NO constraints, and the head now has one
+    t1.onNextCommitAttempt = () => t2.addConstraint("k_pos", "k > 0")
+    val ec = intercept[IllegalStateException] {
+      t1.append(Seq((2L, "b")).toDF("k", "v"))
     }
+    assert(ec.getMessage.contains("constraints changed concurrently"), ec.getMessage)
+    assert(GraftTable.at(spark, loc).history.map(_.op) == Seq("create", "addConstraint"))
     // partitioning / merge-key changes: any commit from the stale handle is
     // refused (covers the retry path and plain sequential misuse alike)
     t2.setPartitioning(Seq("v"))
@@ -492,6 +486,26 @@ class GraftTableSpec extends SparkTestBase {
           Map("k" -> lit(1L), "v" -> col("__src_v")))))
     }
     assert(e4.getMessage.contains("already exists"), e4.getMessage)
+  }
+
+  test("unique key: a mergeInto insert forging a racing winner's key fails loud") {
+    val loc = tmp()
+    val t = GraftTable.create(spark, loc, Seq((1L, "a")).toDF("k", "v"),
+      keyCol = Some("k"), uniqueKey = true)
+    val t2 = GraftTable.at(spark, loc)
+    // the winner lands key 5 after the merge's uniqueness probe; the merge
+    // inserts key 5 from source key 99, outside the source's key range, so
+    // only the UNIQUE KEY guard can see the collision
+    t.onNextCommitAttempt = () => t2.append(Seq((5L, "w")).toDF("k", "v"))
+    val e = intercept[IllegalStateException] {
+      t.mergeInto(Seq((99L, "q")).toDF("k", "v"),
+        matched = Seq.empty,
+        notMatched = Seq((None, Map("k" -> lit(5L), "v" -> col("__src_v")))))
+    }
+    assert(e.getMessage.contains("UNIQUE KEY"), e.getMessage)
+    val re = GraftTable.at(spark, loc)
+    assert(re.history.map(_.op) == Seq("create", "append"))
+    assert(rows(re) == Set((1L, "a"), (5L, "w")))
   }
 
   // ---- history operation metrics
@@ -1189,11 +1203,18 @@ class GraftTableSpec extends SparkTestBase {
     val t = GraftTable.create(spark, tmp(),
       Seq((1, "a"), (2, "b")).toDF("k", "v"), keyCol = Some("k"))
     assert(t.schema("k").dataType == IntegerType)
-    // strict append with a WIDER source names the evolution route
-    val e = intercept[IllegalArgumentException] {
-      t.append(Seq((5000000000L, "c")).toDF("k", "v"))
+    // strict append with a WIDER source names the evolution route, and
+    // commits nothing (an INT64 file under an int column is unreadable)
+    val v0 = t.version
+    val strictWrites = Seq[org.apache.spark.sql.DataFrame => Long](
+      t.append(_), t.appendIfAbsent("tx-wide", _))
+    for (strict <- strictWrites) {
+      val e = intercept[IllegalArgumentException] {
+        strict(Seq((5000000000L, "c")).toDF("k", "v"))
+      }
+      assert(e.getMessage.contains("mergeSchema"), e.getMessage)
     }
-    assert(e.getMessage.contains("mergeSchema"), e.getMessage)
+    assert(t.version == v0)
     // mergeSchema = true: the table column widens in the SAME commit
     t.append(Seq((5000000000L, "c")).toDF("k", "v"), mergeSchema = true)
     assert(t.schema("k").dataType == LongType)
@@ -1471,6 +1492,39 @@ class GraftTableSpec extends SparkTestBase {
     assert(rows(t) == Set((1L, "a"), (2L, "b")))
     t.appendIfAbsent("q-batch-1", Seq((3L, "c")).toDF("k", "v"))
     assert(rows(t) == Set((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
+  test("appendIfAbsent rebases past an unrelated append; backs off on its own txn") {
+    val loc = tmp()
+    val t = GraftTable.create(spark, loc, Seq((1L, "a")).toDF("k", "v"))
+    val t2 = GraftTable.at(spark, loc)
+    // a blind winner: the txn's already-written files re-commit at the head
+    t.onNextCommitAttempt = () => t2.append(Seq((2L, "b")).toDF("k", "v"))
+    val v = t.appendIfAbsent("tx-rebase", Seq((3L, "c")).toDF("k", "v"))
+    assert(v == t.version && rows(t) == Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(t.history.map(_.op) == Seq("create", "append", "append"))
+    assert(t.appendIfAbsent("tx-rebase", Seq((3L, "c")).toDF("k", "v")) == v)
+    // a winner of the SAME txn: the loser returns the winner's version and
+    // its own files never land
+    t.onNextCommitAttempt = () => t2.appendIfAbsent("tx-same", Seq((4L, "d")).toDF("k", "v"))
+    val w = t.appendIfAbsent("tx-same", Seq((4L, "d")).toDF("k", "v"))
+    assert(w == t.version && w == v + 1)
+    assert(rows(t) == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+    assert(t.snapshot().count() == 4)
+  }
+
+  test("commitFiles fails the epoch loud when a schema change wins the race") {
+    val loc = tmp()
+    val t = GraftTable.create(spark, loc, Seq((1L, "a", 1.0)).toDF("k", "v", "w"))
+    val t2 = GraftTable.at(spark, loc)
+    // the epoch's files were written under (k, v, w): a DROP COLUMN winner
+    // fails the commit like the sink's own schema check does
+    t.onNextCommitAttempt = () => t2.dropColumn("w")
+    val e = intercept[IllegalStateException] {
+      t.commitFiles("streamingAppend", Nil, Some("q-epoch-0"))
+    }
+    assert(e.getMessage.contains("concurrent schema change"), e.getMessage)
+    assert(GraftTable.at(spark, loc).history.map(_.op) == Seq("create", "dropColumn"))
   }
 
   test("appendIfAbsent drives a foreachBatch sink exactly-once end-to-end") {
