@@ -1141,32 +1141,39 @@ private[tables] final class GraftScanBuilder(
   }
 }
 
+/** A SQL insert's query result, shaped for the table ops. The V1 insert
+  * contract is BY POSITION against the table schema, and Spark's output
+  * resolver has already validated and coerced the query, so the only
+  * residue is nullability flags (top-level and nested containsNull /
+  * valueContainsNull): renaming positionally and casting to each column's
+  * exact type is a no-op on values that aligns those.
+  */
+private[tables] object SqlInsert {
+  def byPosition(schema: StructType, data: DataFrame): DataFrame =
+    data.toDF(schema.fieldNames.toIndexedSeq: _*)
+      .select(schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+}
+
 /** INSERT INTO → `append`; INSERT OVERWRITE / TRUNCATE (overwrite-by-
-  * AlwaysTrue) → `overwrite`. The V1 bridge hands the query result over as
-  * a DataFrame, which is exactly the table ops' input type — all Spark
-  * types supported, one atomic commit either way. `writeStream.toTable`
+  * AlwaysTrue) → `overwrite`; static `INSERT OVERWRITE … PARTITION` →
+  * `overwriteWhere`. The V1 bridge hands the query result over as a
+  * DataFrame, which is exactly the table ops' input type — all Spark types
+  * supported, one atomic commit either way. Dynamic partition overwrite
+  * never reaches this builder: [[GraftSqlDmlRule]] lowers it during
+  * analysis to [[GraftReplacePartitionsSqlCommand]]. `writeStream.toTable`
   * routes through the same builder into the exactly-once epoch-commit
   * streaming sink ([[GraftStreamingWrite]] — flat atomic schemas, loud).
   */
 private[tables] final class GraftWriteBuilder(
     gt: GraftTable, queryId: String, querySchema: StructType)
-  extends WriteBuilder with SupportsOverwrite
-  with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
+  extends WriteBuilder with SupportsOverwrite {
 
   private var replace = false
-  private var dynamic = false
   // static `INSERT OVERWRITE … PARTITION (p = 'A')`: the partition filter
   // as (Column predicate, its SQL text for the in-job row-scope check)
   private var staticPartition: Option[(org.apache.spark.sql.Column, String)] = None
 
   override def truncate(): WriteBuilder = { replace = true; this }
-
-  /** Dynamic partition overwrite (`partitionOverwriteMode=dynamic` /
-    * `DataFrameWriterV2.overwritePartitions()`): every partition present
-    * in the data is replaced wholesale — exactly
-    * [[GraftTable.replacePartitions]]'s one-commit contract.
-    */
-  override def overwriteDynamicPartitions(): WriteBuilder = { dynamic = true; this }
 
   override def overwrite(filters: Array[Filter]): WriteBuilder = {
     if (filters.isEmpty || filters.forall(_.isInstanceOf[sources.AlwaysTrue])) {
@@ -1207,18 +1214,8 @@ private[tables] final class GraftWriteBuilder(
     override def toInsertableRelation(): InsertableRelation =
       new InsertableRelation {
         override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-          // v1 insert contract is BY POSITION against the table schema;
-          // Spark's output resolver has already validated/coerced the query
-          // schema, so the only residue is nullability flags (top-level and
-          // nested containsNull/valueContainsNull) — the cast to the
-          // table's exact type is a no-op on values and aligns those
-          val aligned = data.toDF(gt.schema.fieldNames.toIndexedSeq: _*)
-            .select(gt.schema.fields.toIndexedSeq.map(f =>
-              col(f.name).cast(f.dataType).as(f.name)): _*)
-          if (dynamic) {
-            if (gt.partitionBy.isEmpty) gt.overwrite(aligned)
-            else gt.replacePartitions(aligned)
-          } else staticPartition match {
+          val aligned = SqlInsert.byPosition(gt.schema, data)
+          staticPartition match {
             case Some((pred, sql)) => gt.overwriteWhere(pred, sql, aligned)
             case None =>
               if (replace || overwrite) gt.overwrite(aligned)
@@ -1227,7 +1224,7 @@ private[tables] final class GraftWriteBuilder(
         }
       }
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      require(!replace && !dynamic && staticPartition.isEmpty,
+      require(!replace && staticPartition.isEmpty,
         "streaming INSERT OVERWRITE is not supported; " +
           "a stream appends — overwrite the table with a batch write")
       require(gt.partitionBy.isEmpty, "streaming writes to a PARTITIONED " +
@@ -1282,13 +1279,9 @@ private[tables] final class GraftStagedTable(
         override def toInsertableRelation(): InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-              // v1 insert is BY POSITION against the declared schema; the
-              // cast aligns residual nullability flags (same as the live
-              // table's write path). Captured, not written — the single
-              // atomic commit happens in commitStagedChanges().
-              captured = Some(data.toDF(tableSchema.fieldNames.toIndexedSeq: _*)
-                .select(tableSchema.fields.toIndexedSeq.map(f =>
-                  col(f.name).cast(f.dataType).as(f.name)): _*))
+              // captured, not written — the single atomic commit happens in
+              // commitStagedChanges()
+              captured = Some(SqlInsert.byPosition(tableSchema, data))
             }
           }
       }

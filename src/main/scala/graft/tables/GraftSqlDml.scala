@@ -393,22 +393,23 @@ private[tables] final case class GraftUpdateSqlCommand(
   }
 }
 
-/** Upsert `MERGE INTO` lowered to the native key-pruned merge. */
+/** Dynamic partition overwrite lowered to the native one-commit
+  * [[GraftTable.replacePartitions]]: every partition the data touches is
+  * replaced wholesale, the whole table when it is unpartitioned.
+  */
 private[tables] final case class GraftReplacePartitionsSqlCommand(
     gt: GraftTable, data: DataFrame)
   extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
-    // the analyzer already aligned the query to the table positionally;
-    // rename + cast exactly like the V1 insert path does
-    val aligned = data.toDF(gt.schema.fieldNames.toIndexedSeq: _*)
-      .select(gt.schema.fields.toIndexedSeq.map(f =>
-        org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)): _*)
+    // the analyzer already aligned the query to the table positionally
+    val aligned = SqlInsert.byPosition(gt.schema, data)
     if (gt.partitionBy.isEmpty) gt.overwrite(aligned)
     else gt.replacePartitions(aligned)
     Seq.empty
   }
 }
 
+/** Upsert `MERGE INTO` lowered to the native key-pruned merge. */
 private[tables] final case class GraftMergeSqlCommand(gt: GraftTable, source: DataFrame)
   extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {

@@ -3,6 +3,7 @@ package graft.tables
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -34,13 +35,15 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType, 
   *     destination exists, so readers either see version N or N+1, never a
   *     torn or partially-written state (create-then-write would expose the
   *     file before its bytes land). Writers race on the next version
-  *     number (optimistic concurrency). Appends, merges, DML,
-  *     maintenance and the streaming sink retry a lost race through ONE
-  *     loop, `commitWithConflictCheck`: the loser re-commits its
-  *     already-written files at the new head when every winner is provably
-  *     disjoint, and fails loud otherwise. Any other commit (overwrite,
-  *     DDL) loses with [[GraftTable.ConcurrentCommitException]], as does
-  *     a loop after 50 lost races. On S3-style stores rename is not
+  *     number (optimistic concurrency). Appends, replaces (overwrite,
+  *     overwriteWhere, replacePartitions), merges, DML, maintenance and
+  *     the streaming sink retry a lost race through ONE loop,
+  *     `commitWithConflictCheck`: the loser re-commits its already-written
+  *     files at the new head when every winner is provably disjoint, and
+  *     fails loud otherwise, deleting the files it wrote. Any other commit
+  *     (DDL, restore, REPLACE TABLE) loses with
+  *     [[GraftTable.ConcurrentCommitException]], as does a loop after 50
+  *     lost races. On S3-style stores rename is not
   *     atomic and this needs a coordination layer, same as every
   *     log-structured table format.
   *   - Durability: parquet data files are fully written and moved into
@@ -1137,32 +1140,18 @@ final class GraftTable private (
   def replacePartitions(df: DataFrame): Long = {
     require(partitionBy.nonEmpty,
       "replacePartitions needs a partitioned table; use overwrite() otherwise")
-    val s = latest()
-    val aligned = alignSchema(df, s.meta.schema)
-    // O(distinct partitions) collect — the same bound the commit log holds;
-    // the tuple values come from the SAME shadow expressions the writer
-    // uses, so transform partitions replace whole transform cells
-    val touched: Set[Map[String, Option[String]]] = aligned
-      .select(partSpecs.zipWithIndex.map { case (sp, i) =>
-        val dt = aligned.schema.fields.find(_.name == sp.sourceCol)
-          .map(_.dataType).getOrElse(StringType)
-        sp.shadow(col(sp.sourceCol), dt).cast(StringType).as(s"__t_$i")
-      }: _*)
-      .distinct().collect()
-      .map(r => partSpecs.zipWithIndex
-        .map { case (sp, i) => sp.render -> Option(r.getString(i)) }.toMap).toSet
-    // partition evolution makes "replace the whole partition" ambiguous for
-    // files still laid out under an older spec — those files' rows may
-    // belong to a touched cell without carrying its key. Loud, with the
-    // migration path named.
-    val unmigrated = s.files.filter(_.rows > 0)
-      .filterNot(f => partitionBy.forall(f.pv.contains))
-    require(unmigrated.isEmpty,
-      s"replacePartitions after partition evolution: ${unmigrated.size} " +
-        "file(s) predate the current spec; optimize() first to migrate them")
-    val removes = s.files.filter(f => touched(f.pv)).map(_.path)
-    requireUniqueKeys(s, aligned, removes.toSet, "replacePartitions")
-    commit(s, "replacePartitions", writeData(aligned, s.meta, idStrict = true), removes)
+    replaceCells("replacePartitions", "replacePartitions", df, Some { (_, aligned) =>
+      // O(distinct partitions) collect — the same bound the commit log
+      // holds; the tuple values come from the SAME shadow expressions the
+      // writer uses, so transform partitions replace whole transform cells
+      aligned.select(partSpecs.zipWithIndex.map { case (sp, i) =>
+          val dt = aligned.schema(sp.sourceCol).dataType
+          sp.shadow(col(sp.sourceCol), dt).cast(StringType).as(s"__t_$i")
+        }: _*)
+        .distinct().collect()
+        .map(r => partSpecs.zipWithIndex
+          .map { case (sp, i) => sp.render -> Option(r.getString(i)) }.toMap).toSet
+    })
   }
 
   /** Row-level change feed between two versions: for every commit `v` in
@@ -1405,9 +1394,10 @@ final class GraftTable private (
 
   /** The ONE optimistic-concurrency retry loop: every table write that
     * retries a lost log-rename race (append, appendIfAbsent, the streaming
-    * sink's [[commitFiles]], merge, mergeInto, delete, update, compact,
-    * optimize) commits here. It follows the published ConflictChecker
-    * design at the WriteSerializable level: losing the race is not by
+    * sink's [[commitFiles]], overwrite, overwriteWhere, replacePartitions,
+    * merge, mergeInto, delete, update, compact, optimize) commits here. It
+    * follows the published ConflictChecker design at the WriteSerializable
+    * level: losing the race is not by
     * itself a logical conflict. Each winner commit in `(base, head]` is
     * examined, and the already-written output is re-committed at the new
     * head (data is written ONCE; only the O(1) log write retries) unless a
@@ -1447,7 +1437,8 @@ final class GraftTable private (
     *     serial order (log order is not the serialization order for blind
     *     appends, exactly as published);
     *   - UNIQUE KEY (`keysProbed`: the output's keys were checked by
-    *     [[requireUniqueKeys]] against `read` — append and mergeInto): on a
+    *     [[requireUniqueKeys]] against `read` — append, the replace writes
+    *     and mergeInto): on a
     *     UNIQUE KEY table any data-changing winner that added rows or
     *     removed files fails loud, because the probe never saw its keys.
     *     Layout-only winners and empty commits cannot introduce keys, so
@@ -1457,7 +1448,11 @@ final class GraftTable private (
     * A partitioning or merge-key change is caught by [[commit]]'s
     * stale-handle guards, a REPLACE/RESTORE winner by file overlap. After
     * 50 lost races the last [[GraftTable.ConcurrentCommitException]]
-    * propagates.
+    * propagates. Whenever the loop gives up on its output (a guard, the
+    * 50th lost race, a landed txn) it deletes the files this op wrote that
+    * neither `read` nor the head references: a deletion-vector add re-adds
+    * a live file, which stays. If [[commit]] throws anything else, its
+    * fate is unknown and the files stay.
     */
   private def commitWithConflictCheck(read: Snapshot, op: String,
       adds: Seq[AddFile], removes: Seq[String],
@@ -1465,7 +1460,13 @@ final class GraftTable private (
       edit: TableMeta => TableMeta = identity,
       txn: Option[String] = None,
       keysProbed: Boolean = false): Long = {
-    if (txn.exists(read.txns.contains)) return read.version
+    // best effort: vacuum reclaims what a failed delete leaves
+    def discardOwnFiles(head: Snapshot): Unit = if (adds.nonEmpty) {
+      val live = (read.files ++ head.files).map(_.path).toSet
+      adds.map(_.path).filterNot(live).foreach(p =>
+        try fs.delete(new Path(location, p), false) catch { case _: java.io.IOException => () })
+    }
+    if (txn.exists(read.txns.contains)) { discardOwnFiles(read); return read.version }
     val planned = edit(read.meta.copy(dataChange = true))
     val layoutOnly = !planned.dataChange
     val advancesHwm =
@@ -1478,46 +1479,48 @@ final class GraftTable private (
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
-          if (attempt >= 50) throw e
           val head = latest()
-          if (txn.exists(head.txns.contains)) return head.version
-          if (!layoutOnly) {
-            requireSameConstraints(read.meta.constraints, head.meta.constraints)
-            if (!head.meta.sameLayout(read.meta))
-              throw new IllegalStateException(
-                s"$op lost the race to a concurrent schema change; its files " +
-                  "were written under the previous schema — re-run against " +
-                  "the new definition")
-          }
-          if (advancesHwm && head.meta.idHwm != read.meta.idHwm)
-            throw new IllegalStateException(
-              s"$op lost the race to a concurrent identity-assigning " +
-                "write; the assigned values could collide — re-run")
-          val winners = base.commitsUntil(head)
-          winners.foreach { case (w, GraftLog.Commit(meta, wAdds, wRemoves)) =>
-            val wOp = meta.op
-            val overlap =
-              (wRemoves.filter(mine) ++ wAdds.map(_.path).filter(mine)).distinct
-            if (overlap.nonEmpty) throw new ConcurrentCommitException(
-              s"$op conflicts with concurrent '$wOp' (version $w): it " +
-                s"modified ${overlap.size} file(s) this operation rewrites " +
-                s"(e.g. ${overlap.head}) — re-run on a fresh snapshot")
-            if (meta.dataChange) {
-              val hot = wAdds.filter(a =>
-                a.rows > 0 && !mine(a.path) && addsCouldMatch(a))
-              if (hot.nonEmpty) throw new ConcurrentCommitException(
-                s"$op conflicts with concurrent '$wOp' (version $w): it " +
-                  s"added ${hot.size} file(s) whose rows this operation's " +
-                  s"match predicate could reach (e.g. ${hot.head.path}) — " +
-                  "re-run on a fresh snapshot")
+          if (txn.exists(head.txns.contains)) { discardOwnFiles(head); return head.version }
+          try {
+            if (attempt >= 50) throw e
+            if (!layoutOnly) {
+              requireSameConstraints(read.meta.constraints, head.meta.constraints)
+              if (!head.meta.sameLayout(read.meta))
+                throw new IllegalStateException(
+                  s"$op lost the race to a concurrent schema change; its files " +
+                    "were written under the previous schema — re-run against " +
+                    "the new definition")
             }
-          }
-          if (keysProbed && uniqueKeyIn(head.meta.schema) && winners.exists { case (_, w) =>
-                w.meta.dataChange && (w.adds.exists(_.rows > 0) || w.removes.nonEmpty) })
-            throw new IllegalStateException(
-              s"$op lost the race on a UNIQUE KEY table to a concurrent " +
-                s"row-changing commit; re-run the $op so uniqueness " +
-                "re-validates against the new head")
+            if (advancesHwm && head.meta.idHwm != read.meta.idHwm)
+              throw new IllegalStateException(
+                s"$op lost the race to a concurrent identity-assigning " +
+                  "write; the assigned values could collide — re-run")
+            val winners = base.commitsUntil(head)
+            winners.foreach { case (w, GraftLog.Commit(meta, wAdds, wRemoves)) =>
+              val wOp = meta.op
+              val overlap =
+                (wRemoves.filter(mine) ++ wAdds.map(_.path).filter(mine)).distinct
+              if (overlap.nonEmpty) throw new ConcurrentCommitException(
+                s"$op conflicts with concurrent '$wOp' (version $w): it " +
+                  s"modified ${overlap.size} file(s) this operation rewrites " +
+                  s"(e.g. ${overlap.head}) — re-run on a fresh snapshot")
+              if (meta.dataChange) {
+                val hot = wAdds.filter(a =>
+                  a.rows > 0 && !mine(a.path) && addsCouldMatch(a))
+                if (hot.nonEmpty) throw new ConcurrentCommitException(
+                  s"$op conflicts with concurrent '$wOp' (version $w): it " +
+                    s"added ${hot.size} file(s) whose rows this operation's " +
+                    s"match predicate could reach (e.g. ${hot.head.path}) — " +
+                    "re-run on a fresh snapshot")
+              }
+            }
+            if (keysProbed && uniqueKeyIn(head.meta.schema) && winners.exists { case (_, w) =>
+                  w.meta.dataChange && (w.adds.exists(_.rows > 0) || w.removes.nonEmpty) })
+              throw new IllegalStateException(
+                s"$op lost the race on a UNIQUE KEY table to a concurrent " +
+                  s"row-changing commit; re-run the $op so uniqueness " +
+                  "re-validates against the new head")
+          } catch { case NonFatal(g) => discardOwnFiles(head); throw g }
           base = head
       }
     }
@@ -1624,13 +1627,7 @@ final class GraftTable private (
     commitWithConflictCheck(latest(), op, adds, Nil, _ => false, txn = txnId)
 
   /** Replace the whole table contents (snapshot-atomic). */
-  def overwrite(df: DataFrame): Long = {
-    val s = latest()
-    val aligned = alignSchema(df, s.meta.schema)
-    val removes = s.files.map(_.path)
-    requireUniqueKeys(s, aligned, removes.toSet, "overwrite")
-    commit(s, "overwrite", writeData(aligned, s.meta, idStrict = true), removes)
-  }
+  def overwrite(df: DataFrame): Long = replaceCells("overwrite", "overwrite", df, None)
 
   /** STATIC partition overwrite — the SQL `INSERT OVERWRITE … PARTITION
     * (p = 'A')` form: every file in the partitions `partitionPred` selects
@@ -1650,30 +1647,50 @@ final class GraftTable private (
     require(partSpecs.forall(_.isInstanceOf[PartitionTransforms.Identity]),
       "overwriteWhere takes predicates over identity partition COLUMNS; " +
         "transform-partitioned tables reload whole cells via replacePartitions")
-    val s = latest()
-    val schema = s.meta.schema
-    val files = s.files
-    // same partition-evolution guard as replacePartitions: a file laid out
-    // under an older spec has no defined cell membership here
-    val unmigrated = files.filter(_.rows > 0)
-      .filterNot(f => partitionBy.forall(f.pv.contains))
-    require(unmigrated.isEmpty,
-      s"overwriteWhere after partition evolution: ${unmigrated.size} " +
-        "file(s) predate the current spec; optimize() first to migrate them")
-    val kept = prunePartitions(
-      files.filter(f => partitionBy.forall(f.pv.contains)).map(_.pv).distinct,
-      partitionPred, schema)
-    val removes = files.filter(f => kept(f.pv)).map(_.path)
     // NULL-STRICT scope check (pred IS TRUE, not SQL-CHECK null-passes): a
     // row with a NULL partition value does not belong to the replaced
     // partitions, so letting it through would write it into the surviving
     // null partition — duplicating rows the overwrite never removed
     val scope = s"${GraftTable.ReservedConstraintPrefix}overwrite_partition_scope" ->
       s"coalesce(($predSql), false)"
-    val alignedOw = alignSchema(df, schema)
-    requireUniqueKeys(s, alignedOw, removes.toSet, "partition overwrite")
-    val adds = writeData(alignedOw, s.meta, extraChecks = Seq(scope), idStrict = true)
-    commit(s, "overwritePartitions", adds, removes)
+    replaceCells("overwritePartitions", "overwriteWhere", df, Some { (s, _) =>
+      // the snapshot's tuples in one pass; a racing winner's new tuple when
+      // the retry meets it
+      val tuples = s.files.map(_.pv).filter(pv => partitionBy.forall(pv.contains)).distinct
+      val kept = prunePartitions(tuples, partitionPred, s.meta.schema)
+      val known = scala.collection.mutable.Map(tuples.map(pv => pv -> kept(pv)): _*)
+      pv => known.getOrElseUpdate(pv, prunePartitions(Seq(pv), partitionPred, s.meta.schema).nonEmpty)
+    }, Seq(scope))
+  }
+
+  /** The ONE replace write behind [[overwrite]], [[overwriteWhere]] and
+    * [[replacePartitions]]: on one snapshot, align `df` strictly, pick the
+    * replaced cells (`cells = None`: the whole table; else the partition
+    * tuples `cells` admits given the aligned input), probe UNIQUE KEY,
+    * write once and commit through [[commitWithConflictCheck]]. A winner's
+    * add conflicts exactly when it lies in a replaced cell, so an append
+    * into an untouched partition rebases. `what` names the method.
+    */
+  private def replaceCells(op: String, what: String, df: DataFrame,
+      cells: Option[(Snapshot, DataFrame) => Map[String, Option[String]] => Boolean],
+      extraChecks: Seq[(String, String)] = Nil): Long = {
+    val s = latest()
+    val (aligned, _) = alignEvolving(df, s.meta.schema, mergeSchema = false)
+    val replaced: AddFile => Boolean = cells.fold[AddFile => Boolean](_ => true) { pick =>
+      // a file laid out under an older spec may hold rows of a replaced
+      // cell without carrying its key: loud, naming the migration path
+      val unmigrated = s.files.filter(_.rows > 0)
+        .filterNot(f => partitionBy.forall(f.pv.contains))
+      require(unmigrated.isEmpty,
+        s"$what after partition evolution: ${unmigrated.size} " +
+          "file(s) predate the current spec; optimize() first to migrate them")
+      val inCell = pick(s, aligned)
+      f => partitionBy.forall(f.pv.contains) && inCell(f.pv)
+    }
+    val removes = s.files.filter(replaced).map(_.path)
+    requireUniqueKeys(s, aligned, removes.toSet, what)
+    commitWithConflictCheck(s, op, writeData(aligned, s.meta, extraChecks, idStrict = true),
+      removes, replaced, keysProbed = true)
   }
 
   /** Upsert by `keyCol`: target rows whose key appears in `source` are
@@ -2928,7 +2945,6 @@ final class GraftTable private (
     orphans
   }
 
-  /** Enforce identical column sets; reorder to table column order. */
   /** Null-fill generated columns `df` omits — writeData derives them from
     * their expressions (null slot = computed, the generated-column
     * contract), so writers never have to supply a derived value.
@@ -2941,23 +2957,6 @@ final class GraftTable private (
         val dt = schema.fields.find(_.name == n).get.dataType
         d.withColumn(n, lit(null).cast(dt))
       }
-
-  private def alignSchema(df: DataFrame, schema: StructType): DataFrame = {
-    val filled = fillGenerated(df, schema)
-    require(filled.columns.toSet == schema.fieldNames.toSet,
-      s"schema mismatch: table has ${schema.fieldNames.mkString(",")}, " +
-        s"got ${filled.columns.mkString(",")}")
-    // inputs narrower than a WIDENED column up-cast losslessly, so the
-    // upstream job that still produces the old type keeps working across
-    // the transition; any other mismatch flows through unchanged
-    val dfTypes = filled.schema.fields.map(x => x.name -> x.dataType).toMap
-    filled.select(schema.fields.toIndexedSeq.map { f =>
-      if (dfTypes(f.name) != f.dataType &&
-          GraftTable.isSafeWidening(dfTypes(f.name), f.dataType))
-        col(f.name).cast(f.dataType).as(f.name)
-      else col(f.name)
-    }: _*)
-  }
 
   /** Strict alignment, or (mergeSchema) the evolved (df', schema'):
     * schema' = current fields ++ df-only fields; df' selects every schema'
@@ -2976,7 +2975,7 @@ final class GraftTable private (
     if (!mergeSchema) {
       require(df.columns.toSet == cur.fieldNames.toSet,
         s"schema mismatch: table has ${cur.fieldNames.mkString(",")}, " +
-          s"got ${df.columns.mkString(",")} (pass mergeSchema = true to evolve)")
+          s"got ${df.columns.mkString(",")} (addColumns first, or append/merge with mergeSchema = true)")
     }
     val dfFields = df.schema.fields.map(f => f.name -> f).toMap
     val keptFields = cur.fields.toIndexedSeq.map { f =>
@@ -2999,7 +2998,7 @@ final class GraftTable private (
             s"type conflict on '${f.name}': table ${f.dataType}, data " +
               s"${g.dataType}" + (if (!mergeSchema &&
                 GraftTable.isSafeWidening(f.dataType, g.dataType))
-                " (a safe widening — pass mergeSchema = true to evolve)"
+                " (a safe widening: widenColumn first, or append/merge with mergeSchema = true)"
               else ""))
         case None => f
       }
@@ -4007,9 +4006,7 @@ object GraftTable {
     // data on a crash between the two commits
     constraints.toSeq.sortBy(_._1).foreach { case (n, sql) =>
       t.validateConstraintSql(n, sql, schemaWithGen) }
-    // aligned by construction (withId carries exactly the declared
-    // columns); alignSchema's GENERATED-ALWAYS presence check must not
-    // fire on create's own null identity slots
+    // aligned by construction (withId carries exactly the declared columns)
     val adds = t.writeData(
       withId.select(schemaWithGen.fieldNames.toIndexedSeq.map(col): _*), target,
       idStrict = true)

@@ -1203,18 +1203,31 @@ class GraftTableSpec extends SparkTestBase {
     val t = GraftTable.create(spark, tmp(),
       Seq((1, "a"), (2, "b")).toDF("k", "v"), keyCol = Some("k"))
     assert(t.schema("k").dataType == IntegerType)
-    // strict append with a WIDER source names the evolution route, and
-    // commits nothing (an INT64 file under an int column is unreadable)
+    // a strict write with a WIDER source names an evolution route the
+    // caller has, and commits nothing (an INT64 file under an int column is
+    // unreadable); the replace writes take no mergeSchema, so they must not
+    // be told to pass it. The partition ops run on a partitioned twin.
     val v0 = t.version
-    val strictWrites = Seq[org.apache.spark.sql.DataFrame => Long](
-      t.append(_), t.appendIfAbsent("tx-wide", _))
-    for (strict <- strictWrites) {
+    val tp = GraftTable.create(spark, tmp(),
+      Seq((1, "a"), (2, "b")).toDF("k", "v"), keyCol = Some("k"), partitionBy = Seq("v"))
+    val strictWrites = Seq[(GraftTable, org.apache.spark.sql.DataFrame => Long, Boolean)](
+      (t, t.append(_), true), (t, t.appendIfAbsent("tx-wide", _), true),
+      (t, t.overwrite(_), false),
+      (tp, tp.overwriteWhere(col("v") === "c", "`v` = 'c'", _), false),
+      (tp, tp.replacePartitions(_), false))
+    for ((table, strict, takesMergeSchema) <- strictWrites) {
+      val before = table.version
       val e = intercept[IllegalArgumentException] {
         strict(Seq((5000000000L, "c")).toDF("k", "v"))
       }
       assert(e.getMessage.contains("mergeSchema"), e.getMessage)
+      if (!takesMergeSchema)
+        assert(e.getMessage.contains("widenColumn") &&
+          !e.getMessage.contains("pass mergeSchema"), e.getMessage)
+      assert(table.version == before, e.getMessage)
     }
     assert(t.version == v0)
+    assert(tp.snapshot().as[(Int, String)].collect().toSet == Set((1, "a"), (2, "b")))
     // mergeSchema = true: the table column widens in the SAME commit
     t.append(Seq((5000000000L, "c")).toDF("k", "v"), mergeSchema = true)
     assert(t.schema("k").dataType == LongType)
@@ -1431,6 +1444,84 @@ class GraftTableSpec extends SparkTestBase {
       Set((2L, "b"), (3L, "c"), (4L, "d")))
   }
 
+  /** A table partitioned by `p` with one row in each of cells A and B. */
+  private def cells(loc: String, uniqueKey: Boolean = false): GraftTable =
+    GraftTable.create(spark, loc, Seq((1L, "A", "a"), (2L, "B", "b")).toDF("k", "p", "v"),
+      keyCol = Some("k"), partitionBy = Seq("p"), uniqueKey = uniqueKey)
+
+  test("replace writes rebase past an append into an untouched partition") {
+    val loc = tmp()
+    val t = cells(loc)
+    val t2 = GraftTable.at(spark, loc)
+    // the winner lands in cell B; replacing cell A never read it
+    t.onNextCommitAttempt = () => t2.append(Seq((3L, "B", "c")).toDF("k", "p", "v"))
+    t.replacePartitions(Seq((9L, "A", "z")).toDF("k", "p", "v"))
+    assert(rows3(t) == Set((9L, "A", "z"), (2L, "B", "b"), (3L, "B", "c")))
+    // overwriteWhere: a winner into the existing cell B and a cell C the
+    // read snapshot never saw (its tuple is evaluated on the retry)
+    t.onNextCommitAttempt = () =>
+      t2.append(Seq((4L, "B", "d"), (5L, "C", "e")).toDF("k", "p", "v"))
+    t.overwriteWhere(col("p") === "A", "`p` = 'A'", Seq((8L, "A", "y")).toDF("k", "p", "v"))
+    assert(rows3(t) == Set((8L, "A", "y"), (2L, "B", "b"), (3L, "B", "c"),
+      (4L, "B", "d"), (5L, "C", "e")))
+    assert(t.history.map(_.op) == Seq("create", "append", "replacePartitions",
+      "append", "overwritePartitions"))
+  }
+
+  test("replace writes fail loud when a concurrent append lands inside a replaced cell") {
+    val ops = Seq[GraftTable => Long](
+      _.replacePartitions(Seq((9L, "A", "z")).toDF("k", "p", "v")),
+      _.overwriteWhere(col("p") === "A", "`p` = 'A'", Seq((9L, "A", "z")).toDF("k", "p", "v")))
+    for (op <- ops) {
+      val loc = tmp()
+      val t = cells(loc)
+      val t2 = GraftTable.at(spark, loc)
+      // the winner's row sits in cell A, which the replace was about to
+      // drop without having read it
+      t.onNextCommitAttempt = () => t2.append(Seq((3L, "A", "c")).toDF("k", "p", "v"))
+      val e = intercept[GraftTable.ConcurrentCommitException](op(t))
+      assert(e.getMessage.contains("match predicate"), e.getMessage)
+      val re = GraftTable.at(spark, loc)
+      assert(re.history.map(_.op) == Seq("create", "append"))
+      assert(rows3(re) == Set((1L, "A", "a"), (2L, "B", "b"), (3L, "A", "c")))
+    }
+  }
+
+  test("overwrite rebases past a metadata-only analyze; a concurrent append fails it loud") {
+    val loc = tmp()
+    val t = GraftTable.create(spark, loc, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    val t2 = GraftTable.at(spark, loc)
+    // ANALYZE adds and removes no file: nothing the overwrite read changed
+    t.onNextCommitAttempt = () => t2.analyze()
+    t.overwrite(Seq((9L, "z")).toDF("k", "v"))
+    assert(rows(t) == Set((9L, "z")))
+    assert(t.history.map(_.op) == Seq("create", "analyze", "overwrite"))
+    assert(t.columnNdv.keySet == Set("k", "v"))
+    // an appended row lies in the one cell a whole-table overwrite replaces
+    t.onNextCommitAttempt = () => t2.append(Seq((3L, "c")).toDF("k", "v"))
+    val e = intercept[GraftTable.ConcurrentCommitException](
+      t.overwrite(Seq((8L, "y")).toDF("k", "v")))
+    assert(e.getMessage.contains("match predicate"), e.getMessage)
+    val re = GraftTable.at(spark, loc)
+    assert(re.history.map(_.op) == Seq("create", "analyze", "overwrite", "append"))
+    assert(rows(re) == Set((9L, "z"), (3L, "c")))
+  }
+
+  test("unique key: replacePartitions fails loud on an append into an untouched partition") {
+    val loc = tmp()
+    val t = cells(loc, uniqueKey = true)
+    val t2 = GraftTable.at(spark, loc)
+    // the probe checked key 9 against cell B before the winner's key 3
+    // landed there: like append, the replace cannot rebase past it
+    t.onNextCommitAttempt = () => t2.append(Seq((3L, "B", "c")).toDF("k", "p", "v"))
+    val e = intercept[IllegalStateException](
+      t.replacePartitions(Seq((9L, "A", "z")).toDF("k", "p", "v")))
+    assert(e.getMessage.contains("UNIQUE KEY"), e.getMessage)
+    val re = GraftTable.at(spark, loc)
+    assert(re.history.map(_.op) == Seq("create", "append"))
+    assert(rows3(re) == Set((1L, "A", "a"), (2L, "B", "b"), (3L, "B", "c")))
+  }
+
   test("vacuum reclaims only unreferenced files; current snapshot intact") {
     val t = GraftTable.create(spark, tmp(),
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), keyCol = Some("k"))
@@ -1511,6 +1602,40 @@ class GraftTableSpec extends SparkTestBase {
     assert(w == t.version && w == v + 1)
     assert(rows(t) == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
     assert(t.snapshot().count() == 4)
+  }
+
+  test("a write that gives up after a lost race deletes the files it wrote") {
+    def partFiles(loc: String): Set[String] =
+      new java.io.File(loc).listFiles().map(_.getName)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+    def live(loc: String): Set[String] =
+      GraftTable.at(spark, loc).log.snapshot().files.map(_.path).toSet
+    // a same-txn winner: the loser backs off, its own files go
+    val l1 = tmp()
+    val t1 = GraftTable.create(spark, l1, Seq((1L, "a")).toDF("k", "v"))
+    val w1 = GraftTable.at(spark, l1)
+    t1.onNextCommitAttempt = () => w1.appendIfAbsent("tx", Seq((2L, "b")).toDF("k", "v"))
+    t1.appendIfAbsent("tx", Seq((2L, "b")).toDF("k", "v"))
+    assert(rows(t1) == Set((1L, "a"), (2L, "b")))
+    assert(partFiles(l1) == live(l1), s"${partFiles(l1)} vs live ${live(l1)}")
+    // a constraint race during append: the guard throws, the files go
+    val l2 = tmp()
+    val t2 = GraftTable.create(spark, l2, Seq((1L, "a")).toDF("k", "v"))
+    val w2 = GraftTable.at(spark, l2)
+    t2.onNextCommitAttempt = () => w2.addConstraint("k_pos", "k > 0")
+    intercept[IllegalStateException](t2.append(Seq((2L, "b")).toDF("k", "v")))
+    assert(partFiles(l2) == live(l2), s"${partFiles(l2)} vs live ${live(l2)}")
+    // a deletion-vector delete losing to an overlapping delete: its add
+    // re-adds the live data file, which must survive
+    val l3 = tmp()
+    val t3 = GraftTable.create(spark, l3,
+      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v").coalesce(1))
+    val w3 = GraftTable.at(spark, l3)
+    val dataFile = live(l3)
+    t3.onNextCommitAttempt = () => w3.deleteWhere(col("k") === 1L)
+    intercept[GraftTable.ConcurrentCommitException](t3.deleteWhere(col("k") === 2L))
+    assert(live(l3) == dataFile && partFiles(l3) == dataFile, partFiles(l3))
+    assert(rows(GraftTable.at(spark, l3)) == Set((2L, "b"), (3L, "c"), (4L, "d")))
   }
 
   test("commitFiles fails the epoch loud when a schema change wins the race") {
